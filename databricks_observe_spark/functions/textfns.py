@@ -13,6 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from databricks_observe_spark.memo import memo
 from databricks_observe_spark.sources.tables import fan_out
 
 
@@ -28,11 +29,9 @@ def doc_tokens(t: dict[str, DataFrame]) -> DataFrame:
     derived from this index runs partition-parallel (no-op on a
     well-split production scan).
     """
-    if "_doc_tokens" not in t:
-        t["_doc_tokens"] = (
-            fan_out(t["documents"]).select("doc_id", F.split("text", " ").alias("w"))
-        ).localCheckpoint()
-    return t["_doc_tokens"]
+    return memo(t, "_doc_tokens", lambda: (
+        fan_out(t["documents"]).select("doc_id", F.split("text", " ").alias("w"))
+    ).localCheckpoint())
 
 
 def shingle_expr(k: int, tokens_col: str = "w") -> F.Column:

@@ -27,6 +27,7 @@ from databricks_observe_spark.functions.rounding import (
     round_half_up,
     sql_round_half_up,
 )
+from databricks_observe_spark.memo import memo
 from databricks_observe_spark.sources.catalog_model import (
     EXCLUDED_CATALOGS,
     EXCLUDED_SCHEMAS,
@@ -75,35 +76,35 @@ def tables_enriched(t: dict[str, DataFrame]) -> DataFrame:
     each consume this catalog-sized frame per observation tick — one
     build instead of a broadcast-rebuild per consumer.
     """
-    if "_tables_enriched" in t:
-        return t["_tables_enriched"]
-    info = t["information_schema_tables"].select(
-        F.col("table_catalog").alias("catalog"),
-        F.col("table_schema").alias("schema"),
-        F.col("table_name").alias("table"),
-        # F2: lower + space->underscore normalization (DA:94-97)
-        F.regexp_replace(F.lower(F.col("table_type")), " ", "_").alias("kind_raw"),
-        F.col("comment").alias("description"),
-        F.regexp_replace(F.lower(F.col("data_source_format")), " ", "_").alias("format_raw"),
-    )
-    joined = discovered_objects(t).join(
-        F.broadcast(info), on=["catalog", "schema", "table"], how="left"
-    )
-    # F3: CASE mapping delta->deltalake, unknown->'' (DA:114-119);
-    # F4/J1 defaults: missing probe -> kind 'table', format '' (DA:111-112)
-    fmt = F.coalesce(F.col("format_raw"), F.lit(""))
-    t["_tables_enriched"] = joined.select(
-        "catalog",
-        "schema",
-        "table",
-        F.coalesce(F.col("kind_raw"), F.lit("table")).alias("kind"),
-        F.when(fmt == "delta", "deltalake")
-        .when(fmt == "unknown_data_source_format", "")
-        .otherwise(fmt)
-        .alias("format"),
-        F.col("description"),
-    ).localCheckpoint()
-    return t["_tables_enriched"]
+    def build() -> DataFrame:
+        info = t["information_schema_tables"].select(
+            F.col("table_catalog").alias("catalog"),
+            F.col("table_schema").alias("schema"),
+            F.col("table_name").alias("table"),
+            # F2: lower + space->underscore normalization (DA:94-97)
+            F.regexp_replace(F.lower(F.col("table_type")), " ", "_").alias("kind_raw"),
+            F.col("comment").alias("description"),
+            F.regexp_replace(F.lower(F.col("data_source_format")), " ", "_").alias("format_raw"),
+        )
+        joined = discovered_objects(t).join(
+            F.broadcast(info), on=["catalog", "schema", "table"], how="left"
+        )
+        # F3: CASE mapping delta->deltalake, unknown->'' (DA:114-119);
+        # F4/J1 defaults: missing probe -> kind 'table', format '' (DA:111-112)
+        fmt = F.coalesce(F.col("format_raw"), F.lit(""))
+        return joined.select(
+            "catalog",
+            "schema",
+            "table",
+            F.coalesce(F.col("kind_raw"), F.lit("table")).alias("kind"),
+            F.when(fmt == "delta", "deltalake")
+            .when(fmt == "unknown_data_source_format", "")
+            .otherwise(fmt)
+            .alias("format"),
+            F.col("description"),
+        ).localCheckpoint()
+
+    return memo(t, "_tables_enriched", build)
 
 
 # F3's format-normalization CASE, built ONCE and interpolated into every
@@ -148,28 +149,28 @@ def columns_schema(t: dict[str, DataFrame]) -> DataFrame:
     tables_enriched): table_profiles and observability_report re-read
     this catalog-sized aggregate every tick.
     """
-    if "_columns_schema" in t:
-        return t["_columns_schema"]
-    cols = t["information_schema_columns"]
-    pair = F.struct(
-        F.col("ordinal_position").alias("ord"),
-        F.concat_ws(":", "column_name", "data_type").alias("nt"),
-    )
-    t["_columns_schema"] = (
-        cols.groupBy(
-            F.col("table_catalog").alias("catalog"),
-            F.col("table_schema").alias("schema"),
-            F.col("table_name").alias("table"),
+    def build() -> DataFrame:
+        cols = t["information_schema_columns"]
+        pair = F.struct(
+            F.col("ordinal_position").alias("ord"),
+            F.concat_ws(":", "column_name", "data_type").alias("nt"),
         )
-        .agg(
-            F.count(F.lit(1)).alias("n_columns"),
-            F.array_join(
-                F.transform(F.array_sort(F.collect_list(pair)), lambda s: s["nt"]), ","
-            ).alias("schema_str"),
+        return (
+            cols.groupBy(
+                F.col("table_catalog").alias("catalog"),
+                F.col("table_schema").alias("schema"),
+                F.col("table_name").alias("table"),
+            )
+            .agg(
+                F.count(F.lit(1)).alias("n_columns"),
+                F.array_join(
+                    F.transform(F.array_sort(F.collect_list(pair)), lambda s: s["nt"]), ","
+                ).alias("schema_str"),
+            )
+            .localCheckpoint()
         )
-        .localCheckpoint()
-    )
-    return t["_columns_schema"]
+
+    return memo(t, "_columns_schema", build)
 
 
 COLUMNS_SCHEMA_SQL = oracle_with_clause("information_schema_columns") + """
@@ -294,30 +295,29 @@ def _file_listing(t: dict[str, DataFrame]) -> DataFrame:
     is kept un-checkpointed so its plan stays inspectable evidence (tests
     assert the binaryFile source and the absence of a data scan).
     """
-    if "_file_listing" in t:
-        return t["_file_listing"]
-    profiled = list(TABLE_NAMES)
-    spark = t["lineitem"].sparkSession
-    # load the DIRECTORY with a glob filter, not a glob path: a glob path
-    # makes the streaming-sink metadata probe stat the literal "*.parquet"
-    # and print a benign-but-noisy FileNotFoundException stack trace
-    # (ORACLE_LOCAL_r04.log lines 4/85); a real directory stats clean
-    listing = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.parquet")
-        .load(t["_sf_dir"])
-    )
-    out = (
-        listing.select(
-            F.regexp_extract("path", "([^/]+)[.]parquet$", 1).alias("table"),
-            F.regexp_replace("path", "^file:", "").alias("path"),
-            F.col("length").alias("file_size"),
-            F.col("modificationTime").alias("mtime"),
+    def build() -> DataFrame:
+        profiled = list(TABLE_NAMES)
+        spark = t["lineitem"].sparkSession
+        # load the DIRECTORY with a glob filter, not a glob path: a glob path
+        # makes the streaming-sink metadata probe stat the literal "*.parquet"
+        # and print a benign-but-noisy FileNotFoundException stack trace
+        # (ORACLE_LOCAL_r04.log lines 4/85); a real directory stats clean
+        listing = (
+            spark.read.format("binaryFile")
+            .option("pathGlobFilter", "*.parquet")
+            .load(t["_sf_dir"])
         )
-        .filter(F.col("table").isin(profiled))
-    )
-    t["_file_listing"] = out
-    return out
+        return (
+            listing.select(
+                F.regexp_extract("path", "([^/]+)[.]parquet$", 1).alias("table"),
+                F.regexp_replace("path", "^file:", "").alias("path"),
+                F.col("length").alias("file_size"),
+                F.col("modificationTime").alias("mtime"),
+            )
+            .filter(F.col("table").isin(profiled))
+        )
+
+    return memo(t, "_file_listing", build)
 
 
 def _file_stats(t: dict[str, DataFrame]) -> DataFrame:
@@ -333,19 +333,17 @@ def _file_stats(t: dict[str, DataFrame]) -> DataFrame:
     from the binaryFile file INDEX, never a data scan (tests/test_plans.py
     asserts on it directly).
     """
-    if "_file_stats" not in t:
-        t["_file_stats"] = (
-            _file_listing(t)
-            .groupBy("table")
-            .agg(
-                F.count(F.lit(1)).alias("n_files"),
-                F.sum("file_size").alias("total_bytes"),
-                F.max("mtime").alias("max_mtime"),
-                F.min("path").alias("min_path"),
-            )
-            .localCheckpoint()
+    return memo(t, "_file_stats", lambda: (
+        _file_listing(t)
+        .groupBy("table")
+        .agg(
+            F.count(F.lit(1)).alias("n_files"),
+            F.sum("file_size").alias("total_bytes"),
+            F.max("mtime").alias("max_mtime"),
+            F.min("path").alias("min_path"),
         )
-    return t["_file_stats"]
+        .localCheckpoint()
+    ))
 
 
 _PROFILED_TABLES_SQL = ", ".join(
@@ -609,9 +607,7 @@ def _hist_vals(t: dict[str, DataFrame]) -> DataFrame:
     setup phase and steady-state :func:`column_histograms` calls measure
     derivation from the aggregate, not the table scan (round-6 verdict
     perf item 1)."""
-    if "_hist_vals" not in t:
-        t["_hist_vals"] = _hist_vals_logical(t).localCheckpoint()
-    return t["_hist_vals"]
+    return memo(t, "_hist_vals", lambda: _hist_vals_logical(t).localCheckpoint())
 
 
 def column_histograms(t: dict[str, DataFrame]) -> DataFrame:

@@ -46,6 +46,8 @@ from databricks_observe_spark.functions.vectors import (
     dot_sql_unrolled,
     norm_sql_unrolled,
 )
+from databricks_observe_spark.memo import memo
+from databricks_observe_spark.sources.tables import fan_out
 
 N_MINHASH = 16
 N_BANDS = 4
@@ -85,18 +87,14 @@ def _shingled(t: dict[str, DataFrame]) -> DataFrame:
     tokenize + shingle explode. At 100 TB this is the intermediate you
     write to storage once per corpus snapshot.
     """
-    if "_doc_shingles" not in t:
-        from databricks_observe_spark.sources.tables import fan_out
-
-        # one codegen regex pass straight off the raw text (2.4x the
-        # interpreted transform+slice lambda, bit-identical; see
-        # textfns.shingle_regex_expr)
-        t["_doc_shingles"] = (
-            fan_out(t["documents"])
-            .select("doc_id", F.explode(shingle_regex_expr(3)).alias("shingle"))
-            .localCheckpoint()
-        )
-    return t["_doc_shingles"]
+    # one codegen regex pass straight off the raw text (2.4x the
+    # interpreted transform+slice lambda, bit-identical; see
+    # textfns.shingle_regex_expr)
+    return memo(t, "_doc_shingles", lambda: (
+        fan_out(t["documents"])
+        .select("doc_id", F.explode(shingle_regex_expr(3)).alias("shingle"))
+        .localCheckpoint()
+    ))
 
 
 _SHINGLED_SQL = shingled_sql(3)
@@ -108,28 +106,24 @@ def _shingle_df(t: dict[str, DataFrame]) -> DataFrame:
     pipeline writes beside its shingle index (stop-shingle capping,
     posting-list pruning, IDF all read it). df counts OCCURRENCES (same
     as the inverted-index self-join multiplicity)."""
-    if "_shingle_df" not in t:
-        t["_shingle_df"] = (
-            _shingled(t)
-            .groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .localCheckpoint()
-        )
-    return t["_shingle_df"]
+    return memo(t, "_shingle_df", lambda: (
+        _shingled(t)
+        .groupBy("shingle")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .localCheckpoint()
+    ))
 
 
 def _shingle_sizes(t: dict[str, DataFrame]) -> DataFrame:
     """Per-document shingle counts ``(doc_id, n_shingles)``, memoized +
     materialized once per context — the size side of every Jaccard
     denominator."""
-    if "_shingle_sizes" not in t:
-        t["_shingle_sizes"] = (
-            _shingled(t)
-            .groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("n_shingles"))
-            .localCheckpoint()
-        )
-    return t["_shingle_sizes"]
+    return memo(t, "_shingle_sizes", lambda: (
+        _shingled(t)
+        .groupBy("doc_id")
+        .agg(F.count(F.lit(1)).alias("n_shingles"))
+        .localCheckpoint()
+    ))
 
 
 def _jaccard_pairs_from(t: dict[str, DataFrame], kept: DataFrame) -> DataFrame:
@@ -182,17 +176,15 @@ def ngram_jaccard_pairs(t: dict[str, DataFrame]) -> DataFrame:
     Memoized + materialized: the pair table is a stage output consumed by
     clustering and curation, not recomputed per consumer.
     """
-    if "_jaccard_pairs" in t:
-        return t["_jaccard_pairs"]
     # posting-list prefilter: shingles appearing in exactly one document
     # cannot produce a pair — dropping them shrinks the self-join input by
     # the unique-shingle mass (the majority, in any natural corpus) without
     # changing a single output row. This is the result-preserving half of
     # the stop-shingle trick; a df *upper* cap would further bound skew at
     # scale but changes results, so it stays off here.
-    shared = _shingle_df(t).filter(F.col("df") >= 2)
-    t["_jaccard_pairs"] = _jaccard_pairs_from(t, shared).localCheckpoint()
-    return t["_jaccard_pairs"]
+    return memo(t, "_jaccard_pairs", lambda: _jaccard_pairs_from(
+        t, _shingle_df(t).filter(F.col("df") >= 2)
+    ).localCheckpoint())
 
 
 NGRAM_JACCARD_PAIRS_SQL = f"""
@@ -329,16 +321,15 @@ def ngram_jaccard_pairs_capped(
     curation pipeline writes per corpus snapshot (the exact form is the
     oracle anchor; this is the production artifact).
     """
-    if max_df == MAX_SHINGLE_DF and "_jaccard_pairs_capped" in t:
-        return t["_jaccard_pairs_capped"]
-    kept = _shingle_df(t).filter(
-        (F.col("df") >= 2) & (F.col("df") <= max_df)
-    )
-    out = _jaccard_pairs_from(t, kept)
+    def pairs():
+        kept = _shingle_df(t).filter(
+            (F.col("df") >= 2) & (F.col("df") <= max_df)
+        )
+        return _jaccard_pairs_from(t, kept)
+
     if max_df != MAX_SHINGLE_DF:
-        return out
-    t["_jaccard_pairs_capped"] = out.localCheckpoint()
-    return t["_jaccard_pairs_capped"]
+        return pairs()
+    return memo(t, "_jaccard_pairs_capped", lambda: pairs().localCheckpoint())
 
 
 NGRAM_JACCARD_PAIRS_CAPPED_SQL = f"""
@@ -368,14 +359,12 @@ def minhash_signatures(t: dict[str, DataFrame]) -> DataFrame:
     this is the "write the signature table once, then join against it"
     pattern.
     """
-    if "_minhash_sig" not in t:
-        t["_minhash_sig"] = (
-            _shingled(t)
-            .groupBy("doc_id")
-            .agg(*[minhash_expr(i) for i in range(N_MINHASH)])
-            .localCheckpoint()
-        )
-    return t["_minhash_sig"]
+    return memo(t, "_minhash_sig", lambda: (
+        _shingled(t)
+        .groupBy("doc_id")
+        .agg(*[minhash_expr(i) for i in range(N_MINHASH)])
+        .localCheckpoint()
+    ))
 
 
 def minhash_lsh_pairs(t: dict[str, DataFrame]) -> DataFrame:
@@ -523,60 +512,60 @@ EMB_DIM = 64
 def _cluster_labels(t: dict[str, DataFrame]) -> DataFrame:
     """doc_id -> cluster_id (minimum reachable doc_id) via min-label
     propagation to fixpoint over the symmetrized pair edges; memoized."""
-    if "_ndc_labels" in t:
-        return t["_ndc_labels"]
-    pairs = ngram_jaccard_pairs(t).select("doc_a", "doc_b")
-    fwd = pairs
-    rev = pairs.select(
-        F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
-    )
-    edges = fwd.union(rev).localCheckpoint()
-    labels = (
-        edges.select(F.col("doc_a").alias("doc_id"))
-        .distinct()
-        .withColumn("cluster_id", F.col("doc_id"))
-        .localCheckpoint()
-    )
-    max_iters = 50
-    for _ in range(max_iters):
-        prop = (
-            edges.join(labels, on=edges.doc_b == labels.doc_id)
-            .groupBy("doc_a")
-            .agg(F.min("cluster_id").alias("nbr_min"))
+    def build() -> DataFrame:
+        pairs = ngram_jaccard_pairs(t).select("doc_a", "doc_b")
+        fwd = pairs
+        rev = pairs.select(
+            F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
         )
-        # no broadcast hint on prop: it is one row per node whose label
-        # changed this round — corpus-sized in early rounds at scale. AQE
-        # picks a broadcast join at runtime when it actually fits.
-        # The convergence flag rides IN the materialized frame: comparing
-        # the new label to the old one inside the same select means the
-        # convergence test is a filter over the checkpoint just written —
-        # not a separate labels-x-labels join job per round. Reassigning
-        # ``labels`` drops the only reference to the prior round's
-        # checkpoint, so its blocks are collectable rather than pinned
-        # for all <= max_iters rounds.
-        upd = F.least(
-            F.col("cluster_id"), F.coalesce(F.col("nbr_min"), F.col("cluster_id"))
-        )
-        new_labels = (
-            labels.join(prop, on=labels.doc_id == prop.doc_a, how="left")
-            .select(
-                "doc_id",
-                upd.alias("cluster_id"),
-                (upd < F.col("cluster_id")).alias("_changed"),
-            )
+        edges = fwd.union(rev).localCheckpoint()
+        labels = (
+            edges.select(F.col("doc_a").alias("doc_id"))
+            .distinct()
+            .withColumn("cluster_id", F.col("doc_id"))
             .localCheckpoint()
         )
-        converged = new_labels.filter(F.col("_changed")).isEmpty()
-        labels = new_labels.drop("_changed")
-        if converged:
-            break
-    else:
-        raise RuntimeError(
-            f"near-dup label propagation did not converge in {max_iters}"
-            " iterations — component diameter exceeds the cap"
-        )
-    t["_ndc_labels"] = labels
-    return labels
+        max_iters = 50
+        for _ in range(max_iters):
+            prop = (
+                edges.join(labels, on=edges.doc_b == labels.doc_id)
+                .groupBy("doc_a")
+                .agg(F.min("cluster_id").alias("nbr_min"))
+            )
+            # no broadcast hint on prop: it is one row per node whose label
+            # changed this round — corpus-sized in early rounds at scale. AQE
+            # picks a broadcast join at runtime when it actually fits.
+            # The convergence flag rides IN the materialized frame: comparing
+            # the new label to the old one inside the same select means the
+            # convergence test is a filter over the checkpoint just written —
+            # not a separate labels-x-labels join job per round. Reassigning
+            # ``labels`` drops the only reference to the prior round's
+            # checkpoint, so its blocks are collectable rather than pinned
+            # for all <= max_iters rounds.
+            upd = F.least(
+                F.col("cluster_id"), F.coalesce(F.col("nbr_min"), F.col("cluster_id"))
+            )
+            new_labels = (
+                labels.join(prop, on=labels.doc_id == prop.doc_a, how="left")
+                .select(
+                    "doc_id",
+                    upd.alias("cluster_id"),
+                    (upd < F.col("cluster_id")).alias("_changed"),
+                )
+                .localCheckpoint()
+            )
+            converged = new_labels.filter(F.col("_changed")).isEmpty()
+            labels = new_labels.drop("_changed")
+            if converged:
+                break
+        else:
+            raise RuntimeError(
+                f"near-dup label propagation did not converge in {max_iters}"
+                " iterations — component diameter exceeds the cap"
+            )
+        return labels
+
+    return memo(t, "_ndc_labels", build)
 
 
 def near_dup_clusters(t: dict[str, DataFrame]) -> DataFrame:
@@ -934,9 +923,7 @@ _SIMHASH_BANDS = [(1024, 64), (32, 32), (1, 32)]  # (divisor, modulus)
 
 def _simhash_fps(t: dict[str, DataFrame]) -> DataFrame:
     """Memoized + materialized simhash fingerprint table."""
-    if "_simhash_fps" not in t:
-        t["_simhash_fps"] = _simhash_compute(t).localCheckpoint()
-    return t["_simhash_fps"]
+    return memo(t, "_simhash_fps", lambda: _simhash_compute(t).localCheckpoint())
 
 
 def simhash_near_dup_pairs(t: dict[str, DataFrame]) -> DataFrame:
@@ -1184,17 +1171,11 @@ def _contam_grams(t: dict[str, DataFrame]) -> DataFrame:
     and tf indexes), so it lives in the declared setup phase; the one
     regex-explode pass is the only corpus-sized work in the
     contamination path."""
-    if "_contam_grams" not in t:
-        from databricks_observe_spark.sources.tables import fan_out
-
-        t["_contam_grams"] = (
-            fan_out(t["documents"])
-            .select(
-                "doc_id", F.explode(shingle_regex_expr(CONTAM_K)).alias("s")
-            )
-            .localCheckpoint()
-        )
-    return t["_contam_grams"]
+    return memo(t, "_contam_grams", lambda: (
+        fan_out(t["documents"])
+        .select("doc_id", F.explode(shingle_regex_expr(CONTAM_K)).alias("s"))
+        .localCheckpoint()
+    ))
 
 
 def _contam_eval_set(t: dict[str, DataFrame]) -> DataFrame:
@@ -1202,16 +1183,14 @@ def _contam_eval_set(t: dict[str, DataFrame]) -> DataFrame:
     decontamination pass holds fixed across corpus versions) — built from
     :func:`_contam_grams` in the same setup phase, so the steady-state
     contamination query is exactly one flag-join-and-aggregate job."""
-    if "_contam_eval_set" not in t:
-        t["_contam_eval_set"] = (
-            _contam_grams(t)
-            .filter(F.col("doc_id") % EVAL_MOD == 0)
-            .select("s")
-            .dropDuplicates(["s"])
-            .withColumn("hit", F.lit(1))
-            .localCheckpoint()
-        )
-    return t["_contam_eval_set"]
+    return memo(t, "_contam_eval_set", lambda: (
+        _contam_grams(t)
+        .filter(F.col("doc_id") % EVAL_MOD == 0)
+        .select("s")
+        .dropDuplicates(["s"])
+        .withColumn("hit", F.lit(1))
+        .localCheckpoint()
+    ))
 
 
 def contamination_check(t: dict[str, DataFrame]) -> DataFrame:
@@ -1304,7 +1283,7 @@ def _bloom_filter_words(t: dict[str, DataFrame]) -> list[int]:
     ``bit_or`` aggregate — ≤16384 (word, bits) rows ever reach the driver,
     a constant bounded by the filter geometry, never by the eval-set or
     corpus size (the house bounded-collect policy)."""
-    if "_bloom_words" not in t:
+    def build() -> list[int]:
         ev = _contam_eval_set(t)
         bits = ev.select(
             F.explode(
@@ -1324,8 +1303,9 @@ def _bloom_filter_words(t: dict[str, DataFrame]) -> list[int]:
         words = [0] * _BLOOM_WORDS
         for r in rows:
             words[r["w"]] = r["word"]
-        t["_bloom_words"] = words
-    return t["_bloom_words"]
+        return words
+
+    return memo(t, "_bloom_words", build)
 
 
 def _bloom_filter_df(t: dict[str, DataFrame]) -> DataFrame:
@@ -1337,13 +1317,14 @@ def _bloom_filter_df(t: dict[str, DataFrame]) -> DataFrame:
     child expressions, and with six references in the probe tree the
     optimizer crawls ~100k expression nodes per pass — measured 6.8x
     slower end-to-end than this broadcast form on the sf0.1 probe."""
-    if "_bloom_filter_df" not in t:
+    def build() -> DataFrame:
         spark = t["documents"].sparkSession
-        t["_bloom_filter_df"] = spark.createDataFrame(
+        return spark.createDataFrame(
             [(_bloom_filter_words(t), _POW2)],
             "bm array<bigint>, p2 array<bigint>",
         ).localCheckpoint()
-    return t["_bloom_filter_df"]
+
+    return memo(t, "_bloom_filter_df", build)
 
 
 def bloom_contamination_check(t: dict[str, DataFrame]) -> DataFrame:
@@ -1516,8 +1497,6 @@ def normalized_dedup(t: dict[str, DataFrame]) -> DataFrame:
     ``fan_out`` like the other heavy text ops — a no-op on a well-split
     production scan.
     """
-    from databricks_observe_spark.sources.tables import fan_out
-
     norm = F.trim(F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9]+", " "))
     return (
         fan_out(t["documents"])

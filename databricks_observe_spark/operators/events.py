@@ -20,6 +20,7 @@ from databricks_observe_spark.functions.rounding import (
     round_half_up,
     sql_round_half_up,
 )
+from databricks_observe_spark.memo import memo
 
 _TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 _TS_FMT_DUCK = "%Y-%m-%d %H:%M:%S.%f"
@@ -531,16 +532,17 @@ def lateness_report(t: dict[str, DataFrame]) -> DataFrame:
         "ts",
         _arrival(F.col("event_id")).alias("arrival"),
     )
-    # 1-row scalar, memoized per context (r21): the blocking factor is a
-    # pure function of the events fixture — the same ship-the-parameter
-    # stance as the ANN query set, one column-pruned scan per context
-    # instead of per call. Ctx lifetime contract applies (registry._ctx):
-    # a data refresh requires a NEW context, or this fold goes stale.
-    if "_max_arrival" not in t:
+    # 1-row scalar, memoized per context: the blocking factor is a pure
+    # function of the events fixture — the same ship-the-parameter stance
+    # as the ANN query set, one column-pruned scan per context instead of
+    # per call. The ctx lifetime contract in ``memo`` applies: a data
+    # refresh needs a NEW context.
+    def fold() -> int:
         val = base.agg(F.max("arrival")).collect()[0][0]
         # empty stream: report is empty, any blocking works
-        t["_max_arrival"] = 0 if val is None else val
-    max_arrival = t["_max_arrival"]
+        return 0 if val is None else val
+
+    max_arrival = memo(t, "_max_arrival", fold)
     ev = base.withColumn(
         # exact integer arithmetic (no double rounding at scale); DIV is
         # Spark's integral division

@@ -25,6 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from databricks_observe_spark.memo import memo
 from databricks_observe_spark.operators.catalog_ops import tables_enriched
 from databricks_observe_spark.sources.catalog_model import SKIP_ASSETS, oracle_with_clause
 
@@ -91,9 +92,7 @@ def lineage_closure(t: dict[str, DataFrame]) -> DataFrame:
     # memoized: asset_specs and topo_levels (and any future consumer in the
     # same observation tick) share one fixpoint run — the closure loop is
     # the most expensive driver-orchestrated piece of the cycle
-    if "_lineage_closure" not in t:
-        t["_lineage_closure"] = transitive_closure(t["lineage_edges"])
-    return t["_lineage_closure"]
+    return memo(t, "_lineage_closure", lambda: transitive_closure(t["lineage_edges"]))
 
 
 # DuckDB recursive CTE oracle; UNION (not UNION ALL) dedups against the

@@ -25,6 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from databricks_observe_spark.memo import memo
 from databricks_observe_spark.sources.catalog_model import oracle_with_clause
 
 _TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
@@ -261,19 +262,14 @@ def sensor_cursor_roundtrip(t: dict[str, DataFrame]) -> DataFrame:
         "state",
         F.unix_micros("ts").alias("us"),
     )
-    # 1-row cursor-cut scalar, memoized per context (r21): a pure
-    # function of the updates fixture — same ship-the-parameter stance
-    # as lateness_report's max-arrival scalar; folding it to a literal
-    # also removes the broadcast cross join from the plan. Ctx lifetime
-    # contract applies (registry._ctx): a data refresh requires a NEW
-    # context, or this fold goes stale.
-    if "_updates_mid_us" not in t:
-        t["_updates_mid_us"] = (
-            u.agg(
-                ((F.min("us") + F.max("us")) / F.lit(2)).cast("bigint").alias("mid")
-            ).collect()[0][0]
-        )
-    mid = t["_updates_mid_us"]
+    # 1-row cursor-cut scalar, memoized per context: a pure function of
+    # the updates fixture — same ship-the-parameter stance as
+    # lateness_report's max-arrival scalar; folding it to a literal also
+    # removes the broadcast cross join from the plan. The ctx lifetime
+    # contract in ``memo`` applies: a data refresh needs a NEW context.
+    mid = memo(t, "_updates_mid_us", lambda: u.agg(
+        ((F.min("us") + F.max("us")) / F.lit(2)).cast("bigint").alias("mid")
+    ).collect()[0][0])
     pre = (
         u.filter(F.col("us") <= F.lit(mid))
         .groupBy("k")

@@ -28,6 +28,7 @@ from databricks_observe_spark.functions.rounding import (
 )
 from databricks_observe_spark.functions.scoped_conf import loop_conf
 from databricks_observe_spark.functions.textfns import doc_tokens
+from databricks_observe_spark.memo import memo
 from databricks_observe_spark.sources.tables import fan_out
 
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "on")
@@ -186,25 +187,21 @@ def _char_trigrams(t: dict[str, DataFrame]) -> DataFrame:
     as one truncated trigram). The per-doc ``array_distinct`` dedup is
     map-local — no shuffle.
     """
-    if "_doc_trigrams" not in t:
-        t["_doc_trigrams"] = (
-            fan_out(t["documents"])
-            .select(
-                "doc_id",
-                "lang",
-                F.explode(
-                    F.array_distinct(
-                        F.when(F.length("text") < 3, F.array(F.col("text"))).otherwise(
-                            F.regexp_extract_all(
-                                "text", F.lit("(?s)(?=(...))"), 1
-                            )
-                        )
+    return memo(t, "_doc_trigrams", lambda: (
+        fan_out(t["documents"])
+        .select(
+            "doc_id",
+            "lang",
+            F.explode(
+                F.array_distinct(
+                    F.when(F.length("text") < 3, F.array(F.col("text"))).otherwise(
+                        F.regexp_extract_all("text", F.lit("(?s)(?=(...))"), 1)
                     )
-                ).alias("tg"),
-            )
-            .localCheckpoint()
+                )
+            ).alias("tg"),
         )
-    return t["_doc_trigrams"]
+        .localCheckpoint()
+    ))
 
 
 def _langid_profiles(t: dict[str, DataFrame]) -> DataFrame:
@@ -214,17 +211,18 @@ def _langid_profiles(t: dict[str, DataFrame]) -> DataFrame:
     grid and IVF assignment — a language-ID profile is trained once and
     applied forever, so bench.py builds it in its declared setup phase
     and the query measures scoring, not training."""
-    if "_langid_profiles" not in t:
+    def build() -> DataFrame:
         train = _char_trigrams(t).filter(F.col("doc_id") % TRAIN_MOD == 0)
         freq = train.groupBy("lang", "tg").agg(F.count(F.lit(1)).alias("df"))
         w = Window.partitionBy("lang").orderBy(F.desc("df"), F.asc("tg"))
-        t["_langid_profiles"] = (
+        return (
             freq.withColumn("rnk", F.row_number().over(w))
             .filter(F.col("rnk") <= TOP_TRIGRAMS)
             .select(F.col("lang").alias("profile_lang"), "tg")
             .localCheckpoint()
         )
-    return t["_langid_profiles"]
+
+    return memo(t, "_langid_profiles", build)
 
 
 def langid_trigram(t: dict[str, DataFrame]) -> DataFrame:
@@ -362,14 +360,13 @@ def _tfidf_tf_frame(t: dict[str, DataFrame]) -> DataFrame:
     calls (plan dumps, tests, bench) don't re-run the corpus aggregate.
     At scale this is a written table; bench.py builds it in its setup
     phase so per-query timings measure steady-state execution."""
-    if "_tfidf_tf" not in t:
-        toks = doc_tokens(t).select("doc_id", F.explode("w").alias("tok"))
-        t["_tfidf_tf"] = (
-            toks.groupBy("doc_id", "tok")
-            .agg(F.count(F.lit(1)).alias("tf"))
-            .localCheckpoint()
-        )
-    return t["_tfidf_tf"]
+    return memo(t, "_tfidf_tf", lambda: (
+        doc_tokens(t)
+        .select("doc_id", F.explode("w").alias("tok"))
+        .groupBy("doc_id", "tok")
+        .agg(F.count(F.lit(1)).alias("tf"))
+        .localCheckpoint()
+    ))
 
 
 def tfidf_keywords(t: dict[str, DataFrame]) -> DataFrame:
@@ -529,11 +526,9 @@ def _unigram_lp(t: dict[str, DataFrame]) -> DataFrame:
     artifacts. The materializer query (:func:`unigram_logprob`) still
     computes the full pipeline — this memo is the READ side.
     """
-    if "_unigram_lp" not in t:
-        t["_unigram_lp"] = (
-            unigram_logprob(t).select("doc_id", "avg_lp_micro").localCheckpoint()
-        )
-    return t["_unigram_lp"]
+    return memo(t, "_unigram_lp", lambda: (
+        unigram_logprob(t).select("doc_id", "avg_lp_micro").localCheckpoint()
+    ))
 
 
 def perplexity_buckets(t: dict[str, DataFrame]) -> DataFrame:
@@ -1619,11 +1614,9 @@ def _bpe_encodings(t: dict[str, DataFrame]) -> DataFrame:
     materializer query (:func:`bpe_apply_merges`) still computes the
     full walk — this memo is the READ side.
     """
-    if "_bpe_encodings" not in t:
-        t["_bpe_encodings"] = (
-            bpe_apply_merges(t).select("word", "n_units").localCheckpoint()
-        )
-    return t["_bpe_encodings"]
+    return memo(t, "_bpe_encodings", lambda: (
+        bpe_apply_merges(t).select("word", "n_units").localCheckpoint()
+    ))
 
 
 def tokenizer_fertility(t: dict[str, DataFrame]) -> DataFrame:
@@ -1718,37 +1711,37 @@ def _textrank_graph(t: dict[str, DataFrame]):
     Memoized in the context (at scale: a written co-occurrence table
     maintained by ingest, like the shingle/LSH/IVF indexes).
     """
-    if "_textrank_graph" in t:
-        return t["_textrank_graph"]
-    toks = doc_tokens(t)
-    pair = F.explode(
-        F.expr(
-            "transform(sequence(1, size(w) - 1),"
-            " i -> struct(element_at(w, i) AS a, element_at(w, i + 1) AS b))"
+    def build() -> tuple:
+        toks = doc_tokens(t)
+        pair = F.explode(
+            F.expr(
+                "transform(sequence(1, size(w) - 1),"
+                " i -> struct(element_at(w, i) AS a, element_at(w, i + 1) AS b))"
+            )
         )
-    )
-    directed = (
-        toks.filter(F.size("w") >= 2)
-        .select(pair.alias("p"))
-        .select(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    edges = (
-        directed.select(F.col("a").alias("u"), F.col("b").alias("v"), "w")
-        .unionByName(directed.select(F.col("b").alias("u"), F.col("a").alias("v"), "w"))
-        .groupBy("u", "v")
-        .agg(F.sum("w").alias("w"))
-    ).localCheckpoint()
-    deg = edges.groupBy("u").agg(F.sum("w").alias("wdeg")).localCheckpoint()
-    nodes = toks.select(F.explode("w").alias("tok")).distinct().localCheckpoint()
-    # the scalar vocab size is part of the graph build: counting it HERE
-    # (the declared setup phase) keeps bench steady-state honest — under
-    # a min-of-N protocol a lazily-memoized count would land only in the
-    # discarded first pass and be charged to neither phase.
-    t["_textrank_n"] = nodes.count()
-    t["_textrank_graph"] = (nodes, edges, deg)
-    return t["_textrank_graph"]
+        directed = (
+            toks.filter(F.size("w") >= 2)
+            .select(pair.alias("p"))
+            .select(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
+            .groupBy("a", "b")
+            .agg(F.count(F.lit(1)).alias("w"))
+        )
+        edges = (
+            directed.select(F.col("a").alias("u"), F.col("b").alias("v"), "w")
+            .unionByName(directed.select(F.col("b").alias("u"), F.col("a").alias("v"), "w"))
+            .groupBy("u", "v")
+            .agg(F.sum("w").alias("w"))
+        ).localCheckpoint()
+        deg = edges.groupBy("u").agg(F.sum("w").alias("wdeg")).localCheckpoint()
+        nodes = toks.select(F.explode("w").alias("tok")).distinct().localCheckpoint()
+        # the scalar vocab size is part of the graph build: counting it HERE
+        # (the declared setup phase) keeps bench steady-state honest — under
+        # a min-of-N protocol a lazily-memoized count would land only in the
+        # discarded first pass and be charged to neither phase.
+        t["_textrank_n"] = nodes.count()
+        return nodes, edges, deg
+
+    return memo(t, "_textrank_graph", build)
 
 
 def textrank_keywords(
@@ -1953,7 +1946,7 @@ def _bm25_index(t: dict[str, DataFrame]):
     the memoized tf index and memoized like the other corpus indexes
     (at scale: written with the index, maintained by ingest; bench.py
     builds them in its declared setup phase)."""
-    if "_bm25_index" not in t:
+    def build() -> tuple:
         tf = _tfidf_tf_frame(t)
         dl = (
             tf.groupBy("doc_id")
@@ -1975,8 +1968,9 @@ def _bm25_index(t: dict[str, DataFrame]):
             .join(F.broadcast(stats))
             .localCheckpoint()
         )
-        t["_bm25_index"] = (dl, df_frame, stats)
-    return t["_bm25_index"]
+        return dl, df_frame, stats
+
+    return memo(t, "_bm25_index", build)
 
 
 def bm25_scores(t: dict[str, DataFrame]) -> DataFrame:
@@ -2344,13 +2338,11 @@ def _dsir_scores(t: dict[str, DataFrame]) -> DataFrame:
     re-deriving the bucket LMs per query. Same stance as the shingle /
     LSH / IVF / k-means setup artifacts.
     """
-    if "_dsir_scores" not in t:
-        t["_dsir_scores"] = (
-            dsir_importance_weights(t)
-            .select("doc_id", "avg_lr_micro")
-            .localCheckpoint()
-        )
-    return t["_dsir_scores"]
+    return memo(t, "_dsir_scores", lambda: (
+        dsir_importance_weights(t)
+        .select("doc_id", "avg_lr_micro")
+        .localCheckpoint()
+    ))
 
 
 def _auc_terms(t: dict[str, DataFrame]) -> DataFrame:

@@ -15,6 +15,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from databricks_observe_spark.engine import prepare
+from databricks_observe_spark.memo import memo
 from databricks_observe_spark.sources.catalog_model import oracle_with_clause
 from databricks_observe_spark.streaming import state as streaming_state
 from databricks_observe_spark.operators import (
@@ -490,36 +491,15 @@ _STREAMING_QUERIES: dict[str, tuple] = {
     "streaming_drift_psi": (_streaming_drift_psi, events.DRIFT_PSI_SQL),
 }
 
-# NOT registered: streaming/state.py also carries the SAME sessionizer on
-# the successor arbitrary-state API (transformWithStateInPandas, Spark 4)
-# — same fold, same oracle. Its state-server protocol requires
-# google.protobuf, which this sandbox does not ship (same environment
-# partial as the Delta sink branch, K1); the twin is import-gated and its
-# equality test skips without protobuf rather than failing the driver.
-
 
 # ctx cache: prepare() is pure view registration, reuse across queries() calls
 _CTX: dict[tuple[int, str], dict] = {}
 
 
 def _ctx(spark: SparkSession, sf_dir: str) -> dict:
-    """Per-(session, fixture) context dict.
-
-    LIFETIME CONTRACT (r22, per r21 ADVICE): a ctx is scoped to ONE
-    immutable fixture snapshot. Every memo it accumulates — derived
-    index frames AND folded 1-row scalars (`_max_arrival` in events.py,
-    `_updates_mid_us` in runs.py) — is a pure function of that
-    snapshot; if the underlying parquet were refreshed in place, the
-    scalar memos would go silently stale against the frames (which
-    re-scan). Consumers that refresh data must build a NEW context
-    (new session or new sf_dir), never mutate the fixture under a live
-    one. The driver, bench.py and the tests all satisfy this by
-    construction (fixtures are immutable for a process lifetime).
-    """
-    key = (id(spark), sf_dir)
-    if key not in _CTX:
-        _CTX[key] = prepare(spark, sf_dir)
-    return _CTX[key]
+    """Per-(session, fixture) context dict; its lifetime contract is
+    documented on :func:`memo`."""
+    return memo(_CTX, (id(spark), sf_dir), lambda: prepare(spark, sf_dir))
 
 
 def _wrap(fn: Callable[[dict], DataFrame]) -> Callable[[SparkSession, str], DataFrame]:

@@ -1,7 +1,7 @@
 """The declared bench setup phase, shared by bench.py and
-tools/bench_vs_duckdb.py so the two harnesses can never drift apart
-(they once did: a builder added to one list but not the other silently
-charged an index build to the first timed pass of a query).
+tools/bench_vs_duckdb.py so the two harnesses cannot drift apart: a
+builder missing from one of them would charge its index build to the
+first timed pass of whichever query touches it.
 
 Every entry is a BUILD-ONCE artifact: at scale a written table (or
 trained model / long-lived runtime state) maintained by ingest, so
@@ -12,74 +12,16 @@ separately as ``setup_sec``.
 
 from __future__ import annotations
 
-import os
+from concurrent.futures import ThreadPoolExecutor
 
-# names published in bench.py's "setup" JSON field. 1:1 with the
-# builders, in builder order — `setup_builders()` returns the same
-# names keyed to their builder callables and a test pins the equality,
-# so the two can no longer drift (they did through r8: two builders had
-# no published name).
-SETUP_INDEX_NAMES = [
-    "doc_tokens", "shingle_index", "shingle_df", "shingle_sizes",
-    "simhash_fingerprints", "minhash_signatures", "lsh_buckets",
-    "char_trigrams", "tfidf_tf", "bm25_doclen_df_stats",
-    "langid_trained_profiles", "textrank_cooccurrence_graph",
-    "vector_norms", "kmeans_fixed_point", "ann_query_set",
-    "ivf_assignment", "int8_quantized_vectors", "near_dup_cluster_labels",
-    "file_listing", "semdedup_assignment", "jaccard_pairs_capped",
-    "hist_value_agg", "contam_gram_index", "contam_eval_set",
-    "dsir_score_table", "unigram_lp_table", "bpe_encoded_vocab",
-    "bloom_eval_bitmap",
-]
-
-
-# Builder dependency graph (r22, guide §2.6 "overlap independent jobs"):
-# edges name every OTHER builder whose memoized ctx keys a builder reads.
-# Derived empirically — each builder was run against a FRESH ctx and the
-# set of memo keys it created recorded; A depends on B iff A's run also
-# creates B's own keys — and pinned structurally by
-# tests/test_fixture_contract.py (key set, validity, acyclicity). The
-# topological thread pool in build_setup_indexes only overlaps builders
-# with no path between them, so no two concurrent builders ever touch
-# the same memo key: every shared key belongs to a completed dependency.
-# (No builder mutates session confs — loop_conf is query-side only — so
-# overlapping them is safe; guide §2.6's FIFO back-fill does the rest.)
-SETUP_DEPS: dict[str, list[str]] = {
-    "doc_tokens": [],
-    "shingle_index": [],
-    "shingle_df": ["shingle_index"],
-    "shingle_sizes": ["shingle_index"],
-    "simhash_fingerprints": ["doc_tokens"],
-    "minhash_signatures": ["shingle_index"],
-    "lsh_buckets": ["vector_norms"],
-    "char_trigrams": [],
-    "tfidf_tf": ["doc_tokens"],
-    "bm25_doclen_df_stats": ["doc_tokens", "tfidf_tf"],
-    "langid_trained_profiles": ["char_trigrams"],
-    "textrank_cooccurrence_graph": ["doc_tokens"],
-    "vector_norms": [],
-    "kmeans_fixed_point": ["vector_norms"],
-    "ann_query_set": ["vector_norms"],
-    "ivf_assignment": ["kmeans_fixed_point", "vector_norms"],
-    "int8_quantized_vectors": ["vector_norms"],
-    "near_dup_cluster_labels": ["shingle_df", "shingle_index", "shingle_sizes"],
-    "file_listing": [],
-    "semdedup_assignment": ["vector_norms"],
-    "jaccard_pairs_capped": ["shingle_df", "shingle_index", "shingle_sizes"],
-    "hist_value_agg": [],
-    "contam_gram_index": [],
-    "contam_eval_set": ["contam_gram_index"],
-    "dsir_score_table": ["doc_tokens", "tfidf_tf"],
-    "unigram_lp_table": ["doc_tokens", "tfidf_tf"],
-    "bpe_encoded_vocab": ["doc_tokens"],
-    "bloom_eval_bitmap": ["contam_eval_set", "contam_gram_index"],
-}
+# concurrent setup builds: a bound on in-flight driver-side submissions,
+# not on task parallelism, so it is not tuned to the local core count
+SETUP_THREADS = 8
 
 
 def setup_builders() -> dict:
-    """Published name -> builder callable, in build order. The single
-    source of truth `build_setup_indexes` iterates and the pin
-    `tests/test_fixture_contract.py` holds against SETUP_INDEX_NAMES."""
+    """Published name -> builder callable ``build(ctx)``; the keys are
+    the index names bench.py publishes."""
     from databricks_observe_spark.functions.textfns import doc_tokens
     from databricks_observe_spark.operators.catalog_ops import (
         _file_stats,
@@ -154,53 +96,29 @@ def build_setup_indexes(spark, ctx, sf_dir: str) -> None:
     long-lived runtimes (Arrow python workers, Structured Streaming
     execution threads — both persistent on a real cluster).
 
-    The builds OVERLAP (r22, guide §2.6): Spark happily runs several
-    jobs at once inside one application — the 28 index builds were only
-    sequential because this loop called them sequentially, leaving most
-    of the cluster idle through every build's straggler tail. A small
-    thread pool submits each builder the moment its ``SETUP_DEPS``
-    dependencies finish, so the next build's tasks back-fill executors
-    freed by the current build's tail. Job descriptions are thread-local,
-    so each build stays correctly labelled in the UI. The pool width is
-    a driver-side concurrency knob (``SPARK_GRAFT_SETUP_THREADS``,
-    default 8, ``1`` restores the serial build) — it bounds how many
-    independent DRIVER submissions are in flight, not task parallelism,
-    so it is not tuned to the local core count."""
-    builders = setup_builders()
-    n_threads = int(os.environ.get("SPARK_GRAFT_SETUP_THREADS", "8"))
-    if n_threads <= 1:
-        for name, build in builders.items():
+    The builds overlap: Spark runs several jobs at once inside one
+    application, so the next build's tasks back-fill executors freed by
+    the current build's straggler tail. Every builder is submitted at
+    once; builders that share an input meet in :func:`memo`, which runs
+    each index build once and makes later callers wait for it. Job
+    descriptions are thread-local, so each build stays labelled in the
+    UI. No builder may change a session conf (``loop_conf`` is
+    query-side only): confs are session-wide, so the change would leak
+    into the builds running beside it."""
+
+    def _run(name: str, build) -> None:
+        spark.sparkContext.setJobDescription(f"setup: {name}")
+        try:
             build(ctx)
-    else:
-        from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
+        finally:
+            spark.sparkContext.setJobDescription(None)
 
-        def _run(name: str, build) -> str:
-            spark.sparkContext.setJobDescription(f"setup: {name}")
-            try:
-                build(ctx)
-            finally:
-                spark.sparkContext.setJobDescription(None)
-            return name
-
-        pending = dict(builders)
-        running: dict = {}
-        done: set[str] = set()
-        with ThreadPoolExecutor(max_workers=n_threads) as pool:
-            while pending or running:
-                ready = [
-                    n for n in pending
-                    if all(d in done for d in SETUP_DEPS[n])
-                ]
-                for n in ready:
-                    running[pool.submit(_run, n, pending.pop(n))] = n
-                if not running:  # pragma: no cover - guarded by the acyclicity pin
-                    raise RuntimeError(
-                        f"setup builders deadlocked; unrunnable: {sorted(pending)}"
-                    )
-                finished, _ = wait(running, return_when=FIRST_COMPLETED)
-                for f in finished:
-                    running.pop(f)
-                    done.add(f.result())  # re-raises a failed build
+    # setup_builders is looked up at call time so a caller can wrap it
+    builders = setup_builders()
+    with ThreadPoolExecutor(max_workers=SETUP_THREADS) as pool:
+        futures = [pool.submit(_run, n, b) for n, b in builders.items()]
+        for f in futures:
+            f.result()  # re-raises a failed build
 
     # warm the Arrow python workers (long-lived on a real cluster) so
     # Arrow-path timings measure execution, not process spawn. The

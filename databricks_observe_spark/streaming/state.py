@@ -30,6 +30,7 @@ from databricks_observe_spark.functions.rounding import (
     round_half_up,
     sql_round_half_up,
 )
+from databricks_observe_spark.memo import memo
 from databricks_observe_spark.session import ensure_conf
 from databricks_observe_spark.sources.tables import normalize_events_ts
 
@@ -59,10 +60,11 @@ def stream_events(
     construction (pinned by tests/test_streaming.py's parity test).
     """
     ensure_conf(spark)
-    key = (sf_dir, glob)
-    if key not in _SCHEMA_CACHE:
-        _SCHEMA_CACHE[key] = spark.read.parquet(os.path.join(sf_dir, glob)).schema
-    schema = _SCHEMA_CACHE[key]
+    schema = memo(
+        _SCHEMA_CACHE,
+        (sf_dir, glob),
+        lambda: spark.read.parquet(os.path.join(sf_dir, glob)).schema,
+    )
     raw = (
         spark.readStream.schema(schema)
         .format("parquet")
@@ -739,155 +741,3 @@ def streaming_drift_psi_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     # grid in psi_from_counts fused the totals branch and the fill join)
     counts = spark.table(name).localCheckpoint()
     return psi_from_counts(counts)
-
-
-# --- sessionizer on the current-generation arbitrary-state API --------------
-
-
-def _protobuf_available() -> bool:
-    """transformWithState's state-server protocol speaks protobuf between
-    the JVM and a python driver worker; without google.protobuf the query
-    crashes at state-schema validation. Same environment-partial class as
-    the Delta sink (K1): the code path is real and twin-tested where the
-    dependency exists; here it is gated, not faked."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-from pyspark.sql.streaming.stateful_processor import StatefulProcessor as _StatefulProcessor
-
-
-class _SessionizeProcessor(_StatefulProcessor):
-    """``StatefulProcessor`` folding events into per-user sessions — the
-    transformWithState twin of :func:`sessionize_stream`'s
-    ``applyInPandasWithState`` fold, bit-identical semantics (same state
-    tuple, same binary-value cent rounding, same gap rule), pinned against
-    the SAME relational oracle.
-
-    Why both exist: ``applyInPandasWithState`` is the stable API this
-    engine standardized on; ``transformWithState`` is its successor
-    (named state variables, timers, TTL, state evolution) and the shape a
-    new deployment would write. Keeping the two folds oracle-equal proves
-    the operator's semantics live in the fold, not in either API's
-    batching behavior.
-    """
-
-    def init(self, handle) -> None:
-        self._sess = handle.getValueState(
-            "sess", "start_us bigint, last_us bigint, n_events bigint, sum_cents bigint"
-        )
-
-    def handleInputRows(self, key, rows, timerValues):
-        import math as _math
-
-        import pandas as _pd
-
-        (user_id,) = key
-        pdf = _pd.concat(list(rows)).sort_values("ts")
-        cur = self._sess.get()
-        if cur is not None:
-            start_us, last_us, n, cents = cur
-        else:
-            start_us = last_us = -1
-            n = cents = 0
-        closed = []
-        for ts, value in zip(pdf["ts"], pdf["value"]):
-            us = int(ts.value // 1000)  # pandas ns -> micros
-            # exact cents, rounded half-away-from-zero on the BINARY value
-            # (see sessionize_stream for why this matches the oracle)
-            c = int(_math.floor(abs(value) * 100.0 + 0.5))
-            if value < 0:
-                c = -c
-            if start_us < 0:
-                start_us, last_us, n, cents = us, us, 1, c
-            elif us - last_us >= SESSION_GAP_S * 1_000_000:
-                closed.append((user_id, start_us, n, cents))
-                start_us, last_us, n, cents = us, us, 1, c
-            else:
-                last_us, n, cents = us, n + 1, cents + c
-        self._sess.update((start_us, last_us, n, cents))
-        if closed:
-            yield _pd.DataFrame(
-                {
-                    "user_id": [r[0] for r in closed],
-                    "session_start": [
-                        _pd.Timestamp(r[1], unit="us") for r in closed
-                    ],
-                    "n_events": [r[2] for r in closed],
-                    "sum_value": [r[3] / 100.0 for r in closed],
-                }
-            )
-
-    def close(self) -> None:
-        pass
-
-
-def sessionize_tws_stream(
-    spark: SparkSession, sf_dir: str, checkpoint_dir: str, out_table: str
-) -> StreamingQuery:
-    """Per-user sessionization via ``transformWithStateInPandas`` (the
-    Spark 4 arbitrary-state API): named ValueState, ProcessingTime
-    time-mode with no timers registered — the open tail stays in state,
-    exactly like the applyInPandasWithState twin."""
-    events = stream_events(spark, sf_dir).select("user_id", "ts", "value")
-    out_schema = (
-        "user_id bigint, session_start timestamp, n_events bigint, sum_value double"
-    )
-    sessions = events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_SessionizeProcessor(),
-        outputStructType=out_schema,
-        outputMode="Append",
-        timeMode="None",
-    )
-    return (
-        sessions.writeStream.format("memory")
-        .queryName(out_table)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def streaming_sessionize_tws_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver-checkable form of the transformWithState sessionizer: run to
-    exhaustion and return every CLOSED session — same emitted set, same
-    oracle as streaming_sessionize."""
-    import tempfile
-    import uuid
-
-    if not _protobuf_available():
-        raise ImportError(
-            "transformWithStateInPandas requires google.protobuf, which "
-            "this environment does not ship; use streaming_sessionize "
-            "(applyInPandasWithState twin, identical fold and oracle)"
-        )
-    name = f"tws_q_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_twsq_")
-    with _stream_confs(
-        spark,
-        {
-            "spark.sql.streaming.noDataMicroBatches.enabled": "false",
-            # python-bound like the GroupState twin: see sessionize above
-            "spark.sql.shuffle.partitions": "16",
-        },
-    ):
-        q = sessionize_tws_stream(spark, sf_dir, ckpt, name)
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError(
-            "streaming_sessionize_tws did not finish its availableNow run "
-            "within 300s"
-        )
-    return spark.table(name).select(
-        "user_id",
-        F.date_format("session_start", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias(
-            "session_start"
-        ),
-        "n_events",
-        round_half_up("sum_value", 2).alias("sum_value"),
-    )

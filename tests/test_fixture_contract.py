@@ -110,46 +110,6 @@ def test_priority_rotation_names_all_resolve():
     assert no_oracle == {"approx_user_counts"}
 
 
-def test_setup_names_one_to_one_with_builders():
-    """bench.py publishes SETUP_INDEX_NAMES as the declared setup phase;
-    it must be exactly the builder map's keys IN ORDER (the two drifted
-    through r8: 24 published names vs 26 builders)."""
-    from databricks_observe_spark.setup_phase import (
-        SETUP_INDEX_NAMES,
-        setup_builders,
-    )
-
-    assert list(setup_builders().keys()) == SETUP_INDEX_NAMES
-
-
-def test_setup_deps_graph_is_well_formed():
-    """The overlapped setup build (r22, guide §2.6) is only race-free if
-    SETUP_DEPS names every cross-builder memo dependency: the topological
-    pool serializes exactly the (dep, dependent) pairs, so the graph must
-    cover every builder, reference only builders, and be acyclic (a cycle
-    would deadlock the pool)."""
-    from databricks_observe_spark.setup_phase import (
-        SETUP_DEPS,
-        SETUP_INDEX_NAMES,
-    )
-
-    assert sorted(SETUP_DEPS) == sorted(SETUP_INDEX_NAMES)
-    for name, deps in SETUP_DEPS.items():
-        assert set(deps) <= set(SETUP_INDEX_NAMES), (name, deps)
-        assert name not in deps, name
-    # acyclic: Kahn's peel must consume every node
-    done: set[str] = set()
-    while True:
-        ready = [
-            n for n in SETUP_DEPS
-            if n not in done and all(d in done for d in SETUP_DEPS[n])
-        ]
-        if not ready:
-            break
-        done.update(ready)
-    assert done == set(SETUP_DEPS), set(SETUP_DEPS) - done
-
-
 def test_overlapped_setup_builds_every_index(tables, spark):
     """Smoke the concurrent build end-to-end on the test fixture: every
     builder's memo key must exist afterwards and the pool must not have

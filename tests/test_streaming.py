@@ -251,30 +251,6 @@ def test_corpus_dedup_stream_exactly_once(spark, tables):
     assert got == want and len(got) > 0
 
 
-def test_sessionize_tws_matches_apply_in_pandas_twin(spark, tables):
-    # the transformWithState fold must emit the exact same closed-session
-    # set as the applyInPandasWithState fold (same state, same rounding).
-    # The successor API's state server needs google.protobuf — absent in
-    # this sandbox, the twin raises a documented ImportError instead.
-    import pytest
-
-    from databricks_observe_spark.streaming.state import _protobuf_available
-
-    if not _protobuf_available():
-        with pytest.raises(ImportError, match="google.protobuf"):
-            ST.streaming_sessionize_tws_query(spark, SF_DIR)
-        pytest.skip("google.protobuf not shipped in this environment")
-    a = {
-        tuple(r)
-        for r in ST.streaming_sessionize_query(spark, SF_DIR).collect()
-    }
-    b = {
-        tuple(r)
-        for r in ST.streaming_sessionize_tws_query(spark, SF_DIR).collect()
-    }
-    assert a == b and len(a) > 0
-
-
 def test_streaming_drift_psi_matches_batch_and_recovers_state(spark, tables):
     """The streaming monitor must equal the batch operator row-for-row
     (same bins, same integer PSI units, same oracle by construction),
