@@ -1,14 +1,5 @@
 """``mapInPandas``-compatible execution on the ``mapInArrow`` runner.
 
-Why this exists (optimization guide §4): the per-partition *pandas*
-iterator API (``DataFrame.mapInPandas``) tears down its Python worker
-after every task on Spark 4.1 — measured directly with an ``os.getpid()``
-probe, every ``mapInPandas`` job forks a fresh worker from the daemon and
-pays the full ``import pandas`` latency (~180-250 ms per pass on this
-box), while the sibling runners (``mapInArrow``, ``pandas_udf``/
-ArrowEvalPython, grouped/cogrouped ``applyInPandas``) all return their
-worker to the reuse pool (same PID across jobs, ~30-40 ms per warm pass).
-
 ``arrow_map`` keeps the operator kernels exactly as they are — iterators
 of pandas DataFrames in, iterators of pandas DataFrames out, so the
 numpy math and its IEEE accumulation order are untouched — and only
@@ -17,14 +8,14 @@ the worker (the same columnar->pandas conversion the pandas runner
 performs), and each yielded pandas frame is converted back through an
 explicitly-typed Arrow schema derived from the declared output DDL (the
 same name-matched, type-cast contract ``mapInPandas`` applies). Numeric
-results are bit-identical; the only observable difference is the worker
-lifecycle.
+results are bit-identical to ``mapInPandas``.
 
-At cluster scale the same mechanics hold: long tasks amortize the spawn
-cost better than local micro-tasks, but worker reuse still removes a
-per-task fork + library import from every Arrow stage, and the explicit
-pre-``select`` contract (pass only the columns the kernel reads) is
-unchanged.
+It buys no worker-lifecycle advantage: on Spark 4.1.2 ``mapInPandas``
+reuses its Python workers just as ``mapInArrow`` does (the same worker
+PIDs serve consecutive jobs). The fixed per-task cost both runners pay
+is the worker's zip-archive directory re-read, which
+``worker_daemon`` removes. What ``arrow_map`` adds over ``mapInPandas``
+is the output re-slicing and the strict casts described below.
 """
 
 from __future__ import annotations
@@ -55,7 +46,7 @@ def arrow_map(
     like the runners do) before conversion, mirroring ``mapInPandas``'s
     output slicing: a kernel that emits one large frame per task — e.g.
     a rescore over a whole candidate partition — otherwise produces one
-    unbounded Arrow batch on the JVM side (r21 ADVICE).
+    unbounded Arrow batch on the JVM side.
 
     Cast semantics are deliberately STRICTER than ``mapInPandas`` under
     ``convertToArrowArraySafely=false``: ``pa.array`` defaults to SAFE

@@ -3,8 +3,8 @@
 Treats media as opaque ``binary`` columns with typed metadata, per the
 100 TB design stance: the bytes never leave the executor, metadata travels
 in columns, and decode/feature-extraction runs in Arrow-batched kernels
-(``arrow_map`` — the mapInPandas contract on the worker-reusing
-mapInArrow runner) with an explicit output schema.
+(``arrow_map`` — the mapInPandas contract on the mapInArrow runner)
+with an explicit output schema.
 
 The container has no image/audio codecs, so the actual decode is STUBBED:
 ``decode_media`` raises ``NotImplementedError`` for real formats, and the

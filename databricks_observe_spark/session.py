@@ -5,6 +5,10 @@ Replaces the reference's ``spark_utils.py:3-4``
 session, tuned for the local[N] test harness while keeping settings that are
 the right defaults on a real cluster (AQE, adaptive shuffle partitions,
 Arrow-accelerated Python interop, UTC session time zone).
+
+Python workers fork from ``worker_daemon`` (``spark.python.daemon.module``),
+which keeps each task from re-reading Spark's zip archives; the conf is
+static, so only ``get_spark`` sessions get it, not foreign sessions.
 """
 
 from __future__ import annotations
@@ -25,6 +29,7 @@ def tune(builder: SparkSession.Builder) -> SparkSession.Builder:
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "databricks_observe_spark.worker_daemon")
     )
 
 

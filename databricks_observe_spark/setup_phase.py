@@ -122,10 +122,10 @@ def build_setup_indexes(spark, ctx, sf_dir: str) -> None:
 
     # warm the Arrow python workers (long-lived on a real cluster) so
     # Arrow-path timings measure execution, not process spawn. The
-    # engine's batch Python paths all run on worker-REUSING runners
-    # (mapInArrow via functions/arrowmap.py, pandas_udf, grouped/cogrouped
-    # applyInPandas — all share one worker pool), so importing the heavy
-    # libraries here pre-warms the pool every later Arrow task draws from.
+    # engine's batch Python runners (mapInArrow via functions/arrowmap.py,
+    # pandas_udf, grouped/cogrouped applyInPandas) all reuse workers from
+    # one pool, so importing the heavy libraries here pre-warms the pool
+    # every later Arrow task draws from.
     def _warm(batches):
         import numpy  # noqa: F401
         import pandas  # noqa: F401

@@ -22,6 +22,10 @@ from __future__ import annotations
 
 import contextlib
 import os
+import shutil
+import tempfile
+import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -194,9 +198,43 @@ def _stream_confs(spark: SparkSession, extra: dict[str, str] | None = None):
                 spark.conf.set(k, v)
 
 
-def _stream_partitions(spark: SparkSession):
-    """Back-compat alias: partitions-only pinning."""
-    return _stream_confs(spark)
+# A run-to-exhaustion harness whose output never flushes on watermark
+# advance cuts the trailing no-data micro-batch, which only evicts expired
+# state (0 output rows). Watermark-flushed APPEND AGGREGATIONS (tumbling)
+# must keep theirs.
+_NO_DATA_BATCHES_OFF = {"spark.sql.streaming.noDataMicroBatches.enabled": "false"}
+
+
+def _run_to_exhaustion(
+    spark: SparkSession,
+    sf_dir: str,
+    query: str,
+    stream: Callable[[SparkSession, str, str, str], StreamingQuery],
+    finish: Callable[[DataFrame], DataFrame],
+    confs: dict[str, str] | None = None,
+) -> DataFrame:
+    """Run the availableNow stream ``stream(spark, sf_dir, checkpoint_dir,
+    out_table)`` to its end under ``_stream_confs(spark, confs)`` and
+    return ``finish(spark.table(out_table))``.
+
+    The result is built before the memory sink's temp view is dropped (a
+    built DataFrame holds the sink itself, not the view name), and the
+    checkpoint directory is removed once the stream has ended, so a call
+    leaves no view and no directory behind."""
+    name = f"{query}_{uuid.uuid4().hex[:8]}"
+    ckpt = tempfile.mkdtemp(prefix=f"ckpt_{query}_")
+    try:
+        with _stream_confs(spark, confs):
+            q = stream(spark, sf_dir, ckpt, name)
+        if not q.awaitTermination(300):
+            q.stop()
+            raise TimeoutError(
+                f"{query} did not finish its availableNow run within 300s"
+            )
+        return finish(spark.table(name))
+    finally:
+        spark.catalog.dropTempView(name)
+        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def streaming_first_completed_query(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -208,30 +246,14 @@ def streaming_first_completed_query(spark: SparkSession, sf_dir: str) -> DataFra
     update) keys completed — regardless of which concurrent poll row won
     the dropDuplicates race, so it pairs with a batch SQL oracle.
     """
-    import tempfile
-    import uuid
-
-    name = f"fc_q_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_fcq_")
-    # dropDuplicatesWithinWatermark emits a key the batch it first
-    # arrives; the trailing no-data micro-batch only evicts expired state
-    # (0 output rows) — cut it for the run-to-exhaustion harness, as in
-    # streaming_click_attribution. Watermark-flushed APPEND AGGREGATIONS
-    # (tumbling) must keep theirs.
-    with _stream_confs(
-        spark, {"spark.sql.streaming.noDataMicroBatches.enabled": "false"}
-    ):
-        q = first_completed_stream(spark, sf_dir, ckpt, name)
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError(
-            "streaming_first_completed did not finish its availableNow run "
-            "within 300s — partial emitted-key set discarded"
-        )
-    return (
-        spark.table(name)
-        .select("entity_type", "entity_id", "update_id")
-        .distinct()
+    # dropDuplicatesWithinWatermark emits a key the batch it first arrives
+    return _run_to_exhaustion(
+        spark,
+        sf_dir,
+        "streaming_first_completed",
+        first_completed_stream,
+        lambda t: t.select("entity_type", "entity_id", "update_id").distinct(),
+        _NO_DATA_BATCHES_OFF,
     )
 
 
@@ -253,24 +275,18 @@ def streaming_tumbling_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     actually runs; comparing it against batch SQL pins the
     watermark-eviction boundary exactly.
     """
-    import tempfile
-    import uuid
-
-    name = f"tw_q_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_twq_")
-    with _stream_partitions(spark):
-        q = tumbling_counts_stream(spark, sf_dir, ckpt, name)
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError(
-            "streaming_tumbling did not finish its availableNow run within 300s"
-        )
-    return spark.table(name).select(
-        F.date_format("window_start", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias(
-            "window_start"
+    return _run_to_exhaustion(
+        spark,
+        sf_dir,
+        "streaming_tumbling",
+        tumbling_counts_stream,
+        lambda t: t.select(
+            F.date_format("window_start", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias(
+                "window_start"
+            ),
+            "event_type",
+            "n_events",
         ),
-        "event_type",
-        "n_events",
     )
 
 
@@ -348,29 +364,19 @@ def streaming_click_attribution_query(
 ) -> DataFrame:
     """Driver-checkable form: run the interval-join stream to exhaustion
     and return every attributed (purchase, click) pair."""
-    import tempfile
-    import uuid
-
-    name = f"ca_q_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_caq_")
     # An INNER stream-stream join emits every match in the batch that
-    # completes it and emits NOTHING on watermark advance — the trailing
-    # no-data micro-batch exists only to evict expired state (measured:
-    # ~1/3 of the run's wall, 0 output rows). Cut that dead batch here;
-    # a continuous deployment keeps it (eviction cadence matters when the
-    # stream doesn't end). Append-mode aggregations (tumbling/sessionize)
-    # MUST keep no-data batches — their output flushes on watermark.
-    with _stream_confs(
-        spark, {"spark.sql.streaming.noDataMicroBatches.enabled": "false"}
-    ):
-        q = click_attribution_stream(spark, sf_dir, ckpt, name)
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError(
-            "streaming_click_attribution did not finish its availableNow "
-            "run within 300s"
-        )
-    return spark.table(name)
+    # completes it and emits NOTHING on watermark advance (the no-data
+    # batch measured ~1/3 of the run's wall). A continuous deployment
+    # keeps no-data batches: eviction cadence matters when the stream
+    # doesn't end.
+    return _run_to_exhaustion(
+        spark,
+        sf_dir,
+        "streaming_click_attribution",
+        click_attribution_stream,
+        lambda t: t,
+        _NO_DATA_BATCHES_OFF,
+    )
 
 
 STREAMING_CLICK_ATTRIBUTION_SQL = """
@@ -524,39 +530,31 @@ def streaming_sessionize_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     session_id < MAX(session_id) per user). This pins the arbitrary-state
     operator against relational semantics, not just a row count.
     """
-    import tempfile
-    import uuid
-
-    name = f"sess_q_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_sessq_")
     # With GroupStateTimeout.NoTimeout the fold is never invoked for a
     # key that received no input rows, so a no-data micro-batch cannot
     # emit anything — the open-tail sessions stay in state either way
     # (asserted in tests). Cut the dead batch.
-    with _stream_confs(
+    return _run_to_exhaustion(
         spark,
+        sf_dir,
+        "streaming_sessionize",
+        sessionize_stream,
+        lambda t: t.select(
+            "user_id",
+            F.date_format("session_start", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias(
+                "session_start"
+            ),
+            "n_events",
+            round_half_up("sum_value", 2).alias("sum_value"),
+        ),
         {
-            "spark.sql.streaming.noDataMicroBatches.enabled": "false",
+            **_NO_DATA_BATCHES_OFF,
             # unlike the JVM-state harnesses (fewer stores = faster), the
             # Pandas fold is PYTHON-bound: partitions here set Arrow
             # worker parallelism. Measured sweep at sf0.1: 4 -> 2.3 s,
             # 8 -> 1.8 s, 16 -> 1.4 s, 32 -> 1.6 s.
             "spark.sql.shuffle.partitions": "16",
         },
-    ):
-        q = sessionize_stream(spark, sf_dir, ckpt, name)
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError(
-            "streaming_sessionize did not finish its availableNow run within 300s"
-        )
-    return spark.table(name).select(
-        "user_id",
-        F.date_format("session_start", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias(
-            "session_start"
-        ),
-        "n_events",
-        round_half_up("sum_value", 2).alias("sum_value"),
     )
 
 
@@ -634,25 +632,16 @@ def streaming_corpus_dedup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     return the accepted digest set — deterministic regardless of which
     duplicate row won the dropDuplicates race, so it pairs with a batch
     DISTINCT oracle."""
-    import tempfile
-    import uuid
-
-    name = f"cd_q_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_cdq_")
     # unwatermarked dropDuplicates emits on first arrival and never on
-    # watermark advance — the trailing no-data batch would be pure
-    # overhead, as in streaming_first_completed
-    with _stream_confs(
-        spark, {"spark.sql.streaming.noDataMicroBatches.enabled": "false"}
-    ):
-        q = corpus_dedup_stream(spark, sf_dir, ckpt, name)
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError(
-            "streaming_corpus_dedup did not finish its availableNow run "
-            "within 300s"
-        )
-    return spark.table(name).select("text_hash").distinct()
+    # watermark advance
+    return _run_to_exhaustion(
+        spark,
+        sf_dir,
+        "streaming_corpus_dedup",
+        corpus_dedup_stream,
+        lambda t: t.select("text_hash").distinct(),
+        _NO_DATA_BATCHES_OFF,
+    )
 
 
 STREAMING_CORPUS_DEDUP_SQL = """
@@ -718,26 +707,16 @@ def streaming_drift_psi_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     pins the batch/stream semantic parity the way the tumbling/sessionize
     twins do.
     """
-    import tempfile
-    import uuid
-
     from databricks_observe_spark.operators.events import psi_from_counts
 
-    name = f"dp_q_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_dpq_")
     # complete-mode aggregation re-emits full state every trigger; the
-    # trailing no-data batch would just rewrite the same table
-    with _stream_confs(
-        spark, {"spark.sql.streaming.noDataMicroBatches.enabled": "false"}
-    ):
-        q = drift_counts_stream(spark, sf_dir, ckpt, name)
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError(
-            "streaming_drift_psi did not finish its availableNow run within 300s"
-        )
-    # same checkpoint discipline as the batch operator; since r21 the
-    # PSI tail reads the tiny final state exactly ONCE (the map-exploded
-    # grid in psi_from_counts fused the totals branch and the fill join)
-    counts = spark.table(name).localCheckpoint()
-    return psi_from_counts(counts)
+    # trailing no-data batch would just rewrite the same table. The PSI
+    # tail reads the tiny checkpointed final state exactly once.
+    return _run_to_exhaustion(
+        spark,
+        sf_dir,
+        "streaming_drift_psi",
+        drift_counts_stream,
+        lambda t: psi_from_counts(t.localCheckpoint()),
+        _NO_DATA_BATCHES_OFF,
+    )

@@ -1,8 +1,7 @@
 """functions/arrowmap.py — the mapInPandas-contract-on-mapInArrow adapter.
 
-The adapter exists purely as an optimization (guide §4: the pandas
-iterator runner tears down its Python worker per task on Spark 4.1; the
-Arrow iterator runner reuses it), so the pin here is EQUIVALENCE: for a
+The adapter swaps only the transport under an unchanged kernel contract,
+so the pin here is EQUIVALENCE: for a
 kernel exercising every column shape the engine ships through it
 (bigint, int, double, array<bigint>, array<double>, string), arrow_map
 must return exactly what mapInPandas returns — values, schema, and

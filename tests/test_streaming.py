@@ -290,3 +290,23 @@ def test_streaming_drift_psi_matches_batch_and_recovers_state(spark, tables):
         sum(r[2] + r[3] for r in first)
         == tables["events"].filter(F.col("value").isNotNull()).count()
     )
+
+
+def test_run_to_exhaustion_queries_leave_no_view_or_checkpoint(spark, tables):
+    """A run-to-exhaustion query drops its memory-sink view and removes its
+    checkpoint directory, and the rows it returns survive both."""
+    import glob
+    import os
+
+    def footprint():
+        views = sum(1 for t in spark.catalog.listTables() if t.isTemporary)
+        ckpts = glob.glob(
+            os.path.join(tempfile.gettempdir(), "ckpt_streaming_first_completed_*")
+        )
+        return views, len(ckpts)
+
+    before = footprint()
+    first = ST.streaming_first_completed_query(spark, SF_DIR).collect()
+    second = ST.streaming_first_completed_query(spark, SF_DIR).collect()
+    assert footprint() == before
+    assert sorted(first) == sorted(second) and len(first) > 0
