@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from databricks_observe_spark.functions.arrowmap import arrow_map
+from databricks_observe_spark.functions.fixpoint import fixpoint
 from databricks_observe_spark.functions.rounding import (
     round_half_up,
     sql_round_half_up,
@@ -509,75 +510,56 @@ SIMHASH_FINGERPRINTS_SQL = (
 EMB_DIM = 64
 
 
-def _cluster_labels(t: dict[str, DataFrame]) -> DataFrame:
-    """doc_id -> cluster_id (minimum reachable doc_id) via min-label
-    propagation to fixpoint over the symmetrized pair edges; memoized."""
-    def build() -> DataFrame:
-        pairs = ngram_jaccard_pairs(t).select("doc_a", "doc_b")
-        fwd = pairs
-        rev = pairs.select(
-            F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
-        )
-        edges = fwd.union(rev).localCheckpoint()
-        labels = (
-            edges.select(F.col("doc_a").alias("doc_id"))
-            .distinct()
-            .withColumn("cluster_id", F.col("doc_id"))
-            .localCheckpoint()
-        )
-        max_iters = 50
-        for _ in range(max_iters):
-            prop = (
-                edges.join(labels, on=edges.doc_b == labels.doc_id)
-                .groupBy("doc_a")
-                .agg(F.min("cluster_id").alias("nbr_min"))
-            )
-            # no broadcast hint on prop: it is one row per node whose label
-            # changed this round — corpus-sized in early rounds at scale. AQE
-            # picks a broadcast join at runtime when it actually fits.
-            # The convergence flag rides IN the materialized frame: comparing
-            # the new label to the old one inside the same select means the
-            # convergence test is a filter over the checkpoint just written —
-            # not a separate labels-x-labels join job per round. Reassigning
-            # ``labels`` drops the only reference to the prior round's
-            # checkpoint, so its blocks are collectable rather than pinned
-            # for all <= max_iters rounds.
-            upd = F.least(
-                F.col("cluster_id"), F.coalesce(F.col("nbr_min"), F.col("cluster_id"))
-            )
-            new_labels = (
-                labels.join(prop, on=labels.doc_id == prop.doc_a, how="left")
-                .select(
-                    "doc_id",
-                    upd.alias("cluster_id"),
-                    (upd < F.col("cluster_id")).alias("_changed"),
-                )
-                .localCheckpoint()
-            )
-            converged = new_labels.filter(F.col("_changed")).isEmpty()
-            labels = new_labels.drop("_changed")
-            if converged:
-                break
-        else:
-            raise RuntimeError(
-                f"near-dup label propagation did not converge in {max_iters}"
-                " iterations — component diameter exceeds the cap"
-            )
-        return labels
+def connected_components(edges: DataFrame) -> DataFrame:
+    """Undirected ``(doc_a, doc_b)`` edges -> ``(doc_id, cluster_id)`` for
+    every node on an edge, labelled with the minimum doc_id it reaches.
 
-    return memo(t, "_ndc_labels", build)
+    Min-label propagation through :func:`fixpoint` (Hash-to-Min style):
+    each round a node takes the least label among itself and its
+    neighbours. Labels only ever decrease, so an unchanged
+    (count, sum(cluster_id)) means no label changed."""
+    both = edges.union(
+        edges.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
+    )
+    seed = (
+        both.select(F.col("doc_a").alias("doc_id"))
+        .distinct()
+        .withColumn("cluster_id", F.col("doc_id"))
+    )
+
+    def propagate(labels: DataFrame) -> DataFrame:
+        nbr = (
+            both.join(labels, on=both.doc_b == labels.doc_id)
+            .groupBy("doc_a")
+            .agg(F.min("cluster_id").alias("nbr_min"))
+        )
+        return labels.join(nbr, on=labels.doc_id == nbr.doc_a, how="left").select(
+            "doc_id",
+            F.least("cluster_id", F.coalesce("nbr_min", "cluster_id")).alias(
+                "cluster_id"
+            ),
+        )
+
+    return fixpoint(seed, propagate, [F.sum("cluster_id")])[0]
+
+
+def _cluster_labels(t: dict[str, DataFrame]) -> DataFrame:
+    """doc_id -> cluster_id over the near-dup pair graph; memoized."""
+    return memo(
+        t,
+        "_ndc_labels",
+        lambda: connected_components(ngram_jaccard_pairs(t).select("doc_a", "doc_b")),
+    )
 
 
 def near_dup_clusters(t: dict[str, DataFrame]) -> DataFrame:
     """Connected components over the near-duplicate pair graph: each doc
     mapped to its cluster's minimum doc_id (the canonical survivor).
 
-    Reuses the lineage fixpoint machinery (operators/lineage.py) on the
-    symmetrized pair edges — min-label propagation to convergence. This is
-    the step that turns pairwise dedup output into keep/drop decisions in
-    a real pipeline. Components here are tiny; at 100 TB the same loop
-    runs with the label frame checkpointed per round (large-scale
-    connected components a la Hash-to-Min).
+    Min-label propagation over the pair edges
+    (:func:`connected_components`, on the same fixpoint driver as the
+    lineage closure). This is the step that turns pairwise dedup output
+    into keep/drop decisions in a real pipeline.
     """
     return _cluster_labels(t).groupBy("cluster_id").agg(
         F.count(F.lit(1)).alias("cluster_size"),

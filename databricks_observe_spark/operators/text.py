@@ -26,7 +26,11 @@ from databricks_observe_spark.functions.rounding import (
     sql_nano_grid,
     sql_round_half_up,
 )
-from databricks_observe_spark.functions.scoped_conf import loop_conf
+from databricks_observe_spark.functions.fixpoint import (
+    loop_session,
+    pin_width,
+    rebind,
+)
 from databricks_observe_spark.functions.textfns import doc_tokens
 from databricks_observe_spark.memo import memo
 from databricks_observe_spark.sources.tables import fan_out
@@ -1760,59 +1764,58 @@ def textrank_keywords(
     oracle replays them exactly (unrolled CTEs).
 
     Scale: the heavy work (pair counting) is one corpus scan + one
-    shuffle; the rank frame is vocab-sized, so the iterations run under
-    ``loop_conf`` — shuffle width pinned to the measured vocab size, AQE
-    and auto-broadcast elided — and ALL of them materialize in ONE job
-    through lazy checkpoints (r21, guide §2.4: the previous form paid a
-    broadcast-build job per join plus an eager checkpoint job per
-    iteration, 12 jobs/run for vocab-sized state; now 2). Dangling/
-    isolated tokens keep the teleport mass via the left join.
+    shuffle; the rank frame is vocab-sized, so the iterations plan on a
+    :func:`loop_session` — shuffle width pinned to the measured vocab size,
+    AQE and auto-broadcast off — and ALL of them materialize in ONE job
+    through lazy checkpoints (guide §2.4). Dangling/isolated tokens keep
+    the teleport mass via the left join.
 
-    ``materialize=False`` skips the in-scope materialization so the plan
+    ``materialize=False`` skips the final materialization so the plan
     gate can inspect the full un-truncated iteration DAG.
     """
     nodes, edges, deg = _textrank_graph(t)
     n = t["_textrank_n"]  # scalar vocab size, counted in the graph build
     # same IEEE expression the oracle floors: 0.15 * 1e6 / n, then +0.5
     teleport = int(0.15 * 1000000.0 / n + 0.5)
-    # the WHOLE loop builds inside the conf scope: a lazy localCheckpoint
-    # plans its round at BUILD time, so the scope must cover the builds,
-    # not just the final action (scoped_conf module docstring)
-    with loop_conf(nodes.sparkSession, max(1, n // 200_000)):
-        r = nodes.select(
-            "tok",
-            F.floor(F.lit(1000000.0) / F.lit(float(n)) + F.lit(0.5)).alias("r"),
+    spark = nodes.sparkSession
+    # a lazy localCheckpoint plans its round when it is built, so every
+    # round is built on the loop session, not just the final action
+    loop = loop_session(spark)
+    pin_width(loop, n)
+    nodes, ed = rebind(nodes, loop), rebind(edges.join(deg, on="u"), loop)
+    r = nodes.select(
+        "tok",
+        F.floor(F.lit(1000000.0) / F.lit(float(n)) + F.lit(0.5)).alias("r"),
+    )
+    for it in range(TEXTRANK_ITERS):
+        contribs = (
+            ed.join(r, ed["u"] == r["tok"])
+            .select(
+                F.col("v").alias("tok"),
+                F.floor(
+                    F.lit(TEXTRANK_DAMPING)
+                    * F.col("w").cast("double")
+                    * F.col("r").cast("double")
+                    / F.col("wdeg").cast("double")
+                    + F.lit(0.5)
+                ).alias("c"),
+            )
+            .groupBy("tok")
+            .agg(F.sum("c").alias("c"))
         )
-        ed = edges.join(deg, on="u")
-        for it in range(TEXTRANK_ITERS):
-            contribs = (
-                ed.join(r, ed["u"] == r["tok"])
-                .select(
-                    F.col("v").alias("tok"),
-                    F.floor(
-                        F.lit(TEXTRANK_DAMPING)
-                        * F.col("w").cast("double")
-                        * F.col("r").cast("double")
-                        / F.col("wdeg").cast("double")
-                        + F.lit(0.5)
-                    ).alias("c"),
-                )
-                .groupBy("tok")
-                .agg(F.sum("c").alias("c"))
-            )
-            r = nodes.join(contribs, on="tok", how="left").select(
-                "tok",
-                (F.lit(teleport) + F.coalesce(F.col("c"), F.lit(0))).alias("r"),
-            )
-            if it < TEXTRANK_ITERS - 1:
-                # truncate recompute between iterations; LAZY — the single
-                # materializing action below computes every round in one job
-                r = r.localCheckpoint(eager=False)
-        out = r.select(F.col("tok").alias("token"), F.col("r").alias("rank_micro"))
-        if materialize:
-            # the one action of the whole power iteration
-            out = out.localCheckpoint()
-    return out
+        r = nodes.join(contribs, on="tok", how="left").select(
+            "tok",
+            (F.lit(teleport) + F.coalesce(F.col("c"), F.lit(0))).alias("r"),
+        )
+        if it < TEXTRANK_ITERS - 1:
+            # truncate recompute between iterations; LAZY — the single
+            # materializing action below computes every round in one job
+            r = r.localCheckpoint(eager=False)
+    out = r.select(F.col("tok").alias("token"), F.col("r").alias("rank_micro"))
+    if materialize:
+        # the one action of the whole power iteration
+        out = out.localCheckpoint()
+    return rebind(out, spark)
 
 
 def _textrank_sql() -> str:

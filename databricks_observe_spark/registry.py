@@ -410,36 +410,14 @@ _REGISTRY: dict[str, tuple[Callable[[dict], DataFrame], str | None]] = {
 # deterministic emitted key set; oracle-paired against the batch view) ---
 
 
-def _streaming_first_completed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _ctx(spark, sf_dir)  # ensure session confs once (cached prepare)
-    return streaming_state.streaming_first_completed_query(spark, sf_dir)
+def _streaming(
+    query: Callable[[SparkSession, str], DataFrame],
+) -> Callable[[SparkSession, str], DataFrame]:
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        _ctx(spark, sf_dir)  # ensure session confs once (cached prepare)
+        return query(spark, sf_dir)
 
-
-def _streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _ctx(spark, sf_dir)  # ensure session confs once (cached prepare)
-    return streaming_state.streaming_tumbling_query(spark, sf_dir)
-
-
-def _streaming_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _ctx(spark, sf_dir)  # ensure session confs once (cached prepare)
-    return streaming_state.streaming_click_attribution_query(spark, sf_dir)
-
-
-def _streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _ctx(spark, sf_dir)  # ensure session confs once (cached prepare)
-    return streaming_state.streaming_sessionize_query(spark, sf_dir)
-
-
-def _streaming_corpus_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _ctx(spark, sf_dir)  # ensure session confs once (cached prepare)
-    return streaming_state.streaming_corpus_dedup_query(spark, sf_dir)
-
-
-def _streaming_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _ctx(spark, sf_dir)  # ensure session confs once (cached prepare)
-    return streaming_state.streaming_drift_psi_query(spark, sf_dir)
-
-
+    return run
 
 
 # --- live-session queries (take (spark, sf_dir) directly: they introspect
@@ -461,34 +439,37 @@ _LIVE_QUERIES: dict[str, tuple] = {
 
 _STREAMING_QUERIES: dict[str, tuple] = {
     "streaming_first_completed": (
-        _streaming_first_completed,
+        _streaming(streaming_state.streaming_first_completed_query),
         oracle_with_clause("updates")
         + streaming_state.STREAMING_FIRST_COMPLETED_SQL_SUFFIX,
     ),
     "streaming_tumbling_hourly": (
-        _streaming_tumbling,
+        _streaming(streaming_state.streaming_tumbling_query),
         streaming_state.STREAMING_TUMBLING_SQL,
     ),
     "streaming_click_attribution": (
-        _streaming_click_attribution,
+        _streaming(streaming_state.streaming_click_attribution_query),
         streaming_state.STREAMING_CLICK_ATTRIBUTION_SQL,
     ),
     # the applyInPandasWithState custom sessionizer, pinned against the
     # relational gaps-and-islands oracle (closed sessions only)
     "streaming_sessionize": (
-        _streaming_sessionize,
+        _streaming(streaming_state.streaming_sessionize_query),
         streaming_state.STREAMING_SESSIONIZE_SQL,
     ),
     # exactly-once corpus-ingest dedup: state keyed by content digest,
     # emitted digest set pinned against the batch DISTINCT oracle
     "streaming_corpus_dedup": (
-        _streaming_corpus_dedup,
+        _streaming(streaming_state.streaming_corpus_dedup_query),
         streaming_state.STREAMING_CORPUS_DEDUP_SQL,
     ),
     # the drift monitor in its streaming home: complete-mode (type,bin)
     # histogram state, PSI computed off the final maintained state —
     # same oracle as the batch operator by construction
-    "streaming_drift_psi": (_streaming_drift_psi, events.DRIFT_PSI_SQL),
+    "streaming_drift_psi": (
+        _streaming(streaming_state.streaming_drift_psi_query),
+        events.DRIFT_PSI_SQL,
+    ),
 }
 
 

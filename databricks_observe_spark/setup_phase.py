@@ -102,9 +102,10 @@ def build_setup_indexes(spark, ctx, sf_dir: str) -> None:
     once; builders that share an input meet in :func:`memo`, which runs
     each index build once and makes later callers wait for it. Job
     descriptions are thread-local, so each build stays labelled in the
-    UI. No builder may change a session conf (``loop_conf`` is
-    query-side only): confs are session-wide, so the change would leak
-    into the builds running beside it."""
+    UI. Builders leave the session's confs as they are: a builder that
+    iterates plans its rounds on a child session
+    (``functions/fixpoint.py``), and ``tests/test_fixpoint.py`` lints
+    the package for conf writes."""
 
     def _run(name: str, build) -> None:
         spark.sparkContext.setJobDescription(f"setup: {name}")
@@ -141,25 +142,22 @@ def build_setup_indexes(spark, ctx, sf_dir: str) -> None:
     # warm the Structured Streaming runtime the same way (StreamExecution
     # threads, checkpoint manager, streaming codegen paths): run one
     # empty availableNow stream to exhaustion
-    import tempfile
-    import uuid
-
     from pyspark.sql import functions as F
 
     from databricks_observe_spark.streaming.state import (
-        _stream_confs,
+        _run_to_exhaustion,
         stream_events,
     )
 
-    name = f"warm_{uuid.uuid4().hex[:6]}"
-    with _stream_confs(spark):
-        q = (
+    def empty_stream(spark, sf_dir, checkpoint_dir, out_table):
+        return (
             stream_events(spark, sf_dir)
             .where(F.lit(False))
             .writeStream.format("memory")
-            .queryName(name)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_warm_"))
+            .queryName(out_table)
+            .option("checkpointLocation", checkpoint_dir)
             .trigger(availableNow=True)
             .start()
         )
-    q.awaitTermination(60)
+
+    _run_to_exhaustion(spark, sf_dir, "setup_warmup", empty_stream, lambda t: t)

@@ -1,9 +1,9 @@
 """Property-based check of the lineage closure against a pure-Python BFS.
 
-The transitive closure is the hardest custom operator (driver-side fixpoint
-loop); exercise it on arbitrary small digraphs — cycles, self-edges,
-diamonds, disconnected parts — and compare against an obviously-correct
-reference implementation.
+The transitive closure is the hardest custom operator (a path-doubling
+fixpoint loop); exercise it on arbitrary small digraphs — cycles,
+self-edges, diamonds, disconnected parts — and compare against an
+obviously-correct reference implementation.
 """
 
 from __future__ import annotations
@@ -11,7 +11,10 @@ from __future__ import annotations
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from databricks_observe_spark.operators.lineage import transitive_closure
+from databricks_observe_spark.operators.lineage import (
+    lineage_closure,
+    transitive_closure,
+)
 
 NODES = list("abcdefg")
 
@@ -44,6 +47,14 @@ def python_closure(edges: list[tuple[str, str]]) -> set[tuple[str, str]]:
     return out
 
 
+def _edges_df(spark, edges: list[tuple[str, str]]):
+    return spark.sql(
+        "SELECT * FROM (VALUES "
+        + ", ".join(f"('c','s','{d}','c','s','{s}')" for d, s in edges)
+        + ") AS t(dst_catalog,dst_schema,dst_table,src_catalog,src_schema,src_table)"
+    )
+
+
 @settings(
     max_examples=12,
     deadline=None,
@@ -51,12 +62,9 @@ def python_closure(edges: list[tuple[str, str]]) -> set[tuple[str, str]]:
 )
 @given(edges=edges_strategy)
 def test_closure_matches_python_reference(spark, edges):
-    df = spark.sql(
-        "SELECT * FROM (VALUES "
-        + ", ".join(f"('c','s','{d}','c','s','{s}')" for d, s in edges)
-        + ") AS t(dst_catalog,dst_schema,dst_table,src_catalog,src_schema,src_table)"
-    )
-    got = {(r.dst_table, r.src_table) for r in transitive_closure(df).collect()}
+    """The memoized registry entry point yields the reference closure."""
+    t = {"lineage_edges": _edges_df(spark, edges)}
+    got = {(r.dst_table, r.src_table) for r in lineage_closure(t).collect()}
     assert got == python_closure(edges)
 
 
@@ -67,19 +75,10 @@ def test_closure_matches_python_reference(spark, edges):
 )
 @given(edges=edges_strategy)
 def test_doubling_closure_equals_bfs_closure(spark, edges):
-    """Path doubling and single-hop BFS must reach the identical fixpoint
-    on arbitrary digraphs (cycles, self-edges, diamonds, disconnected) —
-    the deep variant is an optimization, never a semantic fork."""
-    from databricks_observe_spark.operators.lineage import (
-        transitive_closure_doubling,
-    )
-
-    df = spark.sql(
-        "SELECT * FROM (VALUES "
-        + ", ".join(f"('c','s','{d}','c','s','{s}')" for d, s in edges)
-        + ") AS t(dst_catalog,dst_schema,dst_table,src_catalog,src_schema,src_table)"
-    )
-    closure, rounds = transitive_closure_doubling(df)
+    """Path doubling must reach the same fixpoint as single-hop BFS on
+    arbitrary digraphs (cycles, self-edges, diamonds, disconnected), in a
+    logarithmic number of rounds."""
+    closure, rounds = transitive_closure(_edges_df(spark, edges))
     got = {(r.dst_table, r.src_table) for r in closure.collect()}
     assert got == python_closure(edges)
     assert rounds <= 5  # 7-node graph: depth <= 6 < 2^3, plus confirm rounds

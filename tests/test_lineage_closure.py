@@ -18,7 +18,7 @@ def _closure_pairs(spark, edges):
         + ") AS t(dst_catalog,dst_schema,dst_table,src_catalog,src_schema,src_table)"
     )
     return {
-        (r.dst_table, r.src_table) for r in transitive_closure(df).collect()
+        (r.dst_table, r.src_table) for r in transitive_closure(df)[0].collect()
     }
 
 
@@ -117,32 +117,29 @@ def test_deep_closure_converges_logarithmically(tables):
 
 
 def test_doubling_checkpoint_partitions_track_closure_size(tables):
-    """The round-8 review fix pinned: the MATERIALIZED closure (what every
-    doubling round scans and broadcasts) must carry the size-tracked
-    partition count, not the session shuffle width — a pre-distinct
-    coalesce alone leaves the checkpoint at the exchange's width."""
-    from databricks_observe_spark.operators.lineage import (
-        transitive_closure_doubling,
-    )
+    """The MATERIALIZED closure (what every doubling round scans) carries
+    the size-tracked partition count, not the session shuffle width."""
+    from databricks_observe_spark.functions.fixpoint import ROWS_PER_PARTITION
+    from databricks_observe_spark.operators.lineage import transitive_closure
 
-    closure, _ = transitive_closure_doubling(tables["lineage_edges_deep"])
+    closure, _ = transitive_closure(tables["lineage_edges_deep"])
     n = closure.count()
-    expect = max(1, n // 200_000)
+    expect = max(1, n // ROWS_PER_PARTITION)
     assert closure.rdd.getNumPartitions() == expect
 
 
-def test_doubling_width_repins_when_closure_outgrows_seed(spark):
-    """r22 (r21 verdict item 5 / ADVICE): the loop's pinned shuffle width
-    must TRACK the closure as it outgrows the base edge set, not stay at
-    the round-1 value. A 64-node chain's closure is 64*63/2 = 2016 pairs
-    from 63 seed edges (a 32x growth); with pairs_per_part shrunk to 500
-    the width must have re-pinned to 2016 // 500 = 4 by the final round —
-    observable as the materialized closure's partition count — while the
-    caller's session width is restored afterwards."""
-    from databricks_observe_spark.operators.lineage import (
-        transitive_closure_doubling,
-    )
+def test_doubling_width_repins_when_closure_outgrows_seed(spark, monkeypatch):
+    """The loop's shuffle width must TRACK the closure as it outgrows the
+    base edge set, not stay at the round-1 value. A 64-node chain's
+    closure is 64*63/2 = 2016 pairs from 63 seed edges (a 32x growth);
+    with the rows-per-partition constant shrunk to 500 the width must have
+    re-pinned to 2016 // 500 = 4 by the final round — observable as the
+    materialized closure's partition count — while the caller's session
+    width is never touched."""
+    from databricks_observe_spark.functions import fixpoint
+    from databricks_observe_spark.operators.lineage import transitive_closure
 
+    monkeypatch.setattr(fixpoint, "ROWS_PER_PARTITION", 500)
     edges = spark.sql(
         "SELECT * FROM (VALUES "
         + ", ".join(
@@ -152,75 +149,9 @@ def test_doubling_width_repins_when_closure_outgrows_seed(spark):
         "src_catalog,src_schema,src_table)"
     )
     prev_width = spark.conf.get("spark.sql.shuffle.partitions")
-    closure, rounds = transitive_closure_doubling(edges, pairs_per_part=500)
+    closure, rounds = transitive_closure(edges)
     n = closure.count()
     assert n == 64 * 63 // 2
     assert closure.rdd.getNumPartitions() == n // 500
     assert rounds <= 8  # O(log d) cadence intact
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev_width
-
-
-def test_loop_conf_scope_applies_inside_and_restores_after(spark):
-    """r16 drift-watch escalation pin, extended r21: the doubling loops
-    run with AQE elided AND the shuffle width pinned to the measured
-    closure size AND auto-broadcast disabled (the per-round self-join
-    must be a shuffle join inside the convergence count's job — a
-    broadcast build is its own job every round), and every session
-    setting is restored afterwards, including when the loop raises."""
-    from databricks_observe_spark.operators.lineage import (
-        _loop_conf,
-        transitive_closure_doubling,
-    )
-
-    key = "spark.sql.adaptive.enabled"
-    kp = "spark.sql.shuffle.partitions"
-    kb = "spark.sql.autoBroadcastJoinThreshold"
-    spark.conf.set(key, "true")
-    prev_p, prev_b = spark.conf.get(kp), spark.conf.get(kb)
-    with _loop_conf(spark, 3):
-        assert spark.conf.get(key) == "false"
-        assert spark.conf.get(kp) == "3"
-        assert spark.conf.get(kb) == "-1"
-    assert spark.conf.get(key) == "true"
-    assert spark.conf.get(kp) == prev_p
-    assert spark.conf.get(kb) == prev_b
-
-    # restore-on-exception
-    try:
-        with _loop_conf(spark, 3):
-            raise ValueError("boom")
-    except ValueError:
-        pass
-    assert spark.conf.get(key) == "true"
-    assert spark.conf.get(kp) == prev_p
-
-    # truly nested scopes: the inner exit restores the outer scope's values,
-    # and only the outer exit restores the caller's originals
-    spark.conf.set(key, "true")
-    with _loop_conf(spark, 5):
-        with _loop_conf(spark, 7):
-            assert spark.conf.get(kp) == "7"
-        assert spark.conf.get(kp) == "5"
-        assert spark.conf.get(key) == "false"
-    assert spark.conf.get(key) == "true"
-    assert spark.conf.get(kp) == prev_p
-
-    # a caller-set "false" is restored verbatim, not the session default
-    spark.conf.set(key, "false")
-    with _loop_conf(spark, 3):
-        pass
-    assert spark.conf.get(key) == "false"
-    spark.conf.set(key, "true")
-
-    # the real loop goes through the guard and converges with it
-    df = spark.sql(
-        "SELECT * FROM (VALUES ('c','s','b','c','s','a'), ('c','s','c','c','s','b')) "
-        "AS t(dst_catalog,dst_schema,dst_table,src_catalog,src_schema,src_table)"
-    )
-    closure, rounds = transitive_closure_doubling(df)
-    assert {(r.dst_table, r.src_table) for r in closure.collect()} == {
-        ("b", "a"),
-        ("c", "b"),
-        ("c", "a"),
-    }
-    assert spark.conf.get(key) == "true"

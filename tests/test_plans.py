@@ -464,7 +464,7 @@ def test_textrank_iterations_equi_join_vocab_state(tables):
     from databricks_observe_spark.operators import text as T
 
     # materialize=False exposes the full un-truncated iteration DAG (the
-    # registered form materializes all rounds in ONE job under loop_conf
+    # registered form materializes all rounds in ONE job on a loop session
     # — r21; the gate pins that the iteration state only ever EQUI-joins
     # the edge table: no cartesian/nested-loop blowup anywhere)
     plan = _plan(T.textrank_keywords(tables, materialize=False))

@@ -310,3 +310,24 @@ def test_run_to_exhaustion_queries_leave_no_view_or_checkpoint(spark, tables):
     second = ST.streaming_first_completed_query(spark, SF_DIR).collect()
     assert footprint() == before
     assert sorted(first) == sorted(second) and len(first) > 0
+
+
+def test_setup_warmup_stream_leaves_no_view_or_checkpoint(spark, tables, monkeypatch):
+    """The setup phase's warm-up stream goes through the same
+    run-to-exhaustion helper: with no index builders, two setup calls
+    leave the temp-view and checkpoint-directory counts unchanged."""
+    import glob
+    import os
+
+    from databricks_observe_spark import setup_phase
+
+    def footprint():
+        views = sum(1 for t in spark.catalog.listTables() if t.isTemporary)
+        ckpts = glob.glob(os.path.join(tempfile.gettempdir(), "ckpt_*"))
+        return views, len(ckpts)
+
+    monkeypatch.setattr(setup_phase, "setup_builders", dict)
+    before = footprint()
+    setup_phase.build_setup_indexes(spark, tables, SF_DIR)
+    setup_phase.build_setup_indexes(spark, tables, SF_DIR)
+    assert footprint() == before
