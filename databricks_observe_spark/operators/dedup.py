@@ -16,9 +16,9 @@ north star), each expressed as pure DataFrame ops (no UDFs):
   signature, so work is proportional to colliding candidates, not n^2.
 - ``simhash_fingerprints`` — 16-bit SimHash over token multiset; hamming
   buckets for near-dup grouping.
-- ``embedding_near_dup`` — cosine >= 0.3 pairs via block self-join on the
-  embedding table (brute force at test SF; the LSH-bucketed variant in
-  operators/similarity.py is the scale path).
+- ``embedding_near_dup`` — cosine >= 0.3 pairs via the block-tiled exact
+  pair join (functions/vectors.py:tiled_cosine_pairs);
+  ``embedding_near_dup_lsh`` is its LSH-bucketed scale path.
 
 Every hash is md5-derived so the DuckDB oracle matches bit-for-bit; minhash
 MIN runs on fixed-width hex strings (lexicographic == numeric).
@@ -44,8 +44,10 @@ from databricks_observe_spark.functions.textfns import (
     shingled_sql,
 )
 from databricks_observe_spark.functions.vectors import (
+    dot_rows,
     dot_sql_unrolled,
     norm_sql_unrolled,
+    tiled_cosine_pairs,
 )
 from databricks_observe_spark.memo import memo
 from databricks_observe_spark.sources.tables import fan_out
@@ -771,118 +773,30 @@ N_EMB_BLOCKS = 8  # block-tiled self-join granularity: B(B+1)/2 tasks
 def embedding_near_dup(t: dict[str, DataFrame]) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (cosine >= 0.3).
 
-    Exact all-pairs threshold join via a **distributed block-tiled
-    self-join**: each vector is hashed into one of B blocks, the B(B+1)/2
-    unordered block pairs become cogroup keys, and each task scores one
-    block pair. Nothing is collected to the driver and nothing
-    corpus-sized is broadcast — communication is the O(n*B) triangle-join
-    replication (pick B ~ sqrt(cluster parallelism); per-task memory is
-    2*(n/B)*dim doubles, so B also caps the working set). The LSH variant
-    in operators/similarity.py is the sub-quadratic path when approximate
-    recall is acceptable; this is the oracle-checkable exact baseline.
+    Exact all-pairs threshold join: ``tiled_cosine_pairs`` over the whole
+    corpus as one group, hashed into B = N_EMB_BLOCKS blocks. Each of the
+    B(B+1)/2 unordered block pairs is one cogroup task, so nothing is
+    collected to the driver and nothing corpus-sized is broadcast —
+    communication is the O(n*B) triangle replication (pick B ~ sqrt(cluster
+    parallelism); per-task memory is 2*(n/B)*dim doubles, so B also caps the
+    working set). The LSH variant below is the sub-quadratic path when
+    approximate recall is acceptable; this is the oracle-checkable exact
+    baseline.
 
-    Two-phase scoring inside each task (Arrow-batched cogroup
-    ``applyInPandas``; dense-vector math is the one place JVM codegen
-    loses — a 64-term dot is a >8 KB method HotSpot never JITs):
-
-    1. **BLAS prefilter**: one matmul per block pair finds candidates
-       above (threshold - 1e-6).
-    2. **Exact rescore**: survivors are re-scored with a fixed
-       left-to-right accumulation over dimensions — the same IEEE-754
-       operation order as the DuckDB oracle's unrolled SQL dot, so the
-       emitted cosines are bit-identical despite the prefilter's
-       engine-specific rounding. Norms come precomputed from the JVM
-       ``norm_unrolled`` column (same summation order).
+    Each task prefilters with a BLAS matmul and rescores the survivors with
+    ``dot_rows``, the DuckDB oracle's summation order; the norms come from
+    ``_doubled``'s pandas UDF, which sums in the same order. The emitted
+    cosines are therefore bit-identical to the SQL twin.
     """
     from databricks_observe_spark.operators.similarity import _doubled
 
-    e = _doubled(t).drop("label")
-    nb = N_EMB_BLOCKS
-    spark = e.sparkSession
-    e_blk = e.withColumn(
-        "blk", F.pmod(F.xxhash64(F.col("vec_id")), F.lit(nb)).cast("int")
+    pairs = tiled_cosine_pairs(
+        _doubled(t), F.lit(0), F.lit(N_EMB_BLOCKS), COSINE_NEAR_DUP
     )
-    # all unordered block pairs (bi <= bj), generated JVM-side
-    pairs = (
-        spark.range(nb * nb)
-        .select(
-            (F.col("id") / nb).cast("int").alias("bi"),
-            F.pmod(F.col("id"), F.lit(nb)).cast("int").alias("bj"),
-        )
-        .filter(F.col("bi") <= F.col("bj"))
-    )
-    left = e_blk.join(F.broadcast(pairs), on=F.col("blk") == F.col("bi")).select(
-        "bi", "bj", "vec_id", "v", "nrm"
-    )
-    # fresh attribute ids on the right side (self-join disambiguation)
-    e_blk_r = e_blk.select(
-        F.col("vec_id").alias("vid_r"),
-        F.col("v").alias("v_r"),
-        F.col("nrm").alias("nrm_r"),
-        F.col("blk").alias("blk_r"),
-    )
-    pairs_r = pairs.select(F.col("bi").alias("bi_r"), F.col("bj").alias("bj_r"))
-    right = (
-        e_blk_r.join(F.broadcast(pairs_r), on=F.col("blk_r") == F.col("bj_r"))
-        .select(
-            F.col("bi_r").alias("bi"),
-            F.col("bj_r").alias("bj"),
-            F.col("vid_r").alias("vec_id"),
-            F.col("v_r").alias("v"),
-            F.col("nrm_r").alias("nrm"),
-        )
-    )
-    thr_pre = COSINE_NEAR_DUP - 1e-6
-
-    def score(key, lpdf, rpdf):
-        import numpy as _np
-        import pandas as _pd
-
-        empty = _pd.DataFrame({"vec_a": _np.array([], dtype=_np.int64),
-                               "vec_b": _np.array([], dtype=_np.int64),
-                               "cosine": _np.array([], dtype=_np.float64)})
-        if len(lpdf) == 0 or len(rpdf) == 0:
-            return empty
-        lids = lpdf["vec_id"].to_numpy()
-        rids = rpdf["vec_id"].to_numpy()
-        lmat = _np.array(lpdf["v"].tolist(), dtype=_np.float64)
-        rmat = _np.array(rpdf["v"].tolist(), dtype=_np.float64)
-        lnrm = lpdf["nrm"].to_numpy()
-        rnrm = rpdf["nrm"].to_numpy()
-        sims = (lmat @ rmat.T) / _np.outer(lnrm, rnrm)
-        ai, bj = _np.nonzero(sims >= thr_pre)
-        if key[0] == key[1]:
-            # same block on both sides: each unordered pair appears twice,
-            # keep the id-ordered half
-            keep = lids[ai] < rids[bj]
-            ai, bj = ai[keep], bj[keep]
-        if len(ai) == 0:
-            return empty
-        # exact rescore: left-to-right accumulation, the oracle's op order
-        # (the per-dim products are order-symmetric, so emitting the pair
-        # id-ordered below does not change the value)
-        av, bv = lmat[ai], rmat[bj]
-        acc = av[:, 0] * bv[:, 0]
-        for d in range(1, av.shape[1]):
-            acc = acc + av[:, d] * bv[:, d]
-        cos = acc / (lnrm[ai] * rnrm[bj])
-        ok = cos >= COSINE_NEAR_DUP
-        la, rb = lids[ai][ok], rids[bj][ok]
-        return _pd.DataFrame(
-            {
-                "vec_a": _np.minimum(la, rb),
-                "vec_b": _np.maximum(la, rb),
-                "cosine": cos[ok],
-            }
-        )
-
-    scored = (
-        left.groupBy("bi", "bj")
-        .cogroup(right.groupBy("bi", "bj"))
-        .applyInPandas(score, "vec_a bigint, vec_b bigint, cosine double")
-    )
-    return scored.select(
-        "vec_a", "vec_b", round_half_up("cosine", 6).alias("cosine_r")
+    return pairs.select(
+        F.col("a").alias("vec_a"),
+        F.col("b").alias("vec_b"),
+        round_half_up("cosine", 6).alias("cosine_r"),
     )
 
 
@@ -1027,10 +941,7 @@ def embedding_near_dup_lsh(t: dict[str, DataFrame]) -> DataFrame:
                 continue
             av = _np.array(pdf["va"].tolist(), dtype=_np.float64)
             bv = _np.array(pdf["vb"].tolist(), dtype=_np.float64)
-            acc = av[:, 0] * bv[:, 0]
-            for d in range(1, av.shape[1]):
-                acc = acc + av[:, d] * bv[:, d]
-            cos = acc / (pdf["na"].to_numpy() * pdf["nb"].to_numpy())
+            cos = dot_rows(av, bv) / (pdf["na"].to_numpy() * pdf["nb"].to_numpy())
             keep = cos >= COSINE_NEAR_DUP
             yield _pd.DataFrame(
                 {

@@ -354,13 +354,20 @@ def test_semantic_dedup_output_invariant_to_block_cap(tables, monkeypatch):
     """The block-pair tiling is an execution detail: forcing every fixture
     cluster to sub-split (cap lower than any cluster size) must reproduce
     the single-block output bit-for-bit — no pair lost at block borders,
-    no cosine changed by the tiling."""
+    no cosine changed by the tiling. The same holds for the corpus-wide
+    tiling of embedding_near_dup at one block and at 13."""
     from databricks_observe_spark.operators import similarity as S
 
     base = sorted(map(tuple, S.semantic_dedup(tables).collect()))
     monkeypatch.setattr(S, "SEMDEDUP_BLOCK_CAP", 32)
     capped = sorted(map(tuple, S.semantic_dedup(tables).collect()))
     assert base == capped and base
+
+    emb_base = sorted(map(tuple, D.embedding_near_dup(tables).collect()))
+    for n_blocks in (1, 13):
+        monkeypatch.setattr(D, "N_EMB_BLOCKS", n_blocks)
+        emb = sorted(map(tuple, D.embedding_near_dup(tables).collect()))
+        assert emb == emb_base and emb_base
 
 
 def test_hash_split_stable_and_complete(tables):

@@ -246,8 +246,7 @@ def test_semantic_dedup_is_cluster_blocked(tables):
 
     plan = _plan(S.semantic_dedup(tables))
     # pairwise work happens inside per-(cluster, block-pair) pandas
-    # cogroups; no corpus-level pair join ever forms, and the block-pair
-    # table ships broadcast so data rows never shuffle for the tiling
+    # cogroups; no corpus-level pair join ever forms
     assert "FlatMapCoGroupsInPandas" in plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan

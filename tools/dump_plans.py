@@ -38,11 +38,13 @@ COMMENTARY = {
         "after a single exchange; rn = 1 filter prunes immediately."
     ),
     "embedding_near_dup": (
-        "Block-tiled exact threshold join: both sides replicate against the "
-        "broadcast 36-row block-pair table, cogroup on (bi, bj), and one "
-        "FlatMapCoGroupsInPandas scores each block pair (BLAS prefilter + "
-        "oracle-order exact rescore). Nothing corpus-sized is collected or "
-        "broadcast; no cartesian/nested-loop join anywhere."
+        "Block-tiled exact threshold join (functions/vectors.py:"
+        "tiled_cosine_pairs): each row is hashed into one of 8 blocks and "
+        "copied by a Generate (explode of a sequence) to the left side of "
+        "block pairs (k, k..7) and the right side of (0..k, k); one "
+        "FlatMapCoGroupsInPandas scores each of the 36 block pairs (BLAS "
+        "prefilter + oracle-order exact rescore). No pair table, no join; "
+        "nothing corpus-sized is collected or broadcast."
     ),
     "ann_bruteforce_topk": (
         "Single MapInArrow scan (worker-reusing runner, functions/arrowmap.py) of the checkpointed norm table against the "
@@ -112,15 +114,14 @@ COMMENTARY = {
     ),
     "semantic_dedup": (
         "SemDeDup: one Arrow E-step pass against the broadcast codebook "
-        "assigns clusters; pairwise cosines run inside per-(cluster, "
-        "block-pair) pandas cogroups (FlatMapCoGroupsInPandas) with "
-        "clusters above SEMDEDUP_BLOCK_CAP rows sub-split by hash block — "
-        "work scales with sum(cluster_size^2), per-task memory is capped, "
-        "and no corpus-level pair join ever forms. The block-pair table "
-        "ships broadcast, and when every cluster fits in one block the "
-        "pair scaffolding is skipped entirely (direct per-cluster "
-        "cogroup); the assignment table is memoized — at scale a written "
-        "table maintained beside the corpus."
+        "assigns clusters; a window over cluster counts its rows, and "
+        "tiled_cosine_pairs (the same join as embedding_near_dup) splits "
+        "each cluster into ceil(size / SEMDEDUP_BLOCK_CAP) hash blocks and "
+        "scores each (cluster, block-pair) in one FlatMapCoGroupsInPandas "
+        "task — work scales with sum(cluster_size^2), per-task memory is "
+        "capped, no corpus-level pair join ever forms, and building the "
+        "DataFrame runs no job; the assignment table is memoized — at "
+        "scale a written table maintained beside the corpus."
     ),
     "column_histograms": (
         "ANALYZE-style stats from ONE table scan: the (cid, value) "
