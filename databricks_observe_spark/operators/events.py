@@ -17,7 +17,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from databricks_observe_spark.functions.rounding import (
+    ln_micro,
+    nano_grid,
     round_half_up,
+    sql_ln_micro,
+    sql_nano_grid,
     sql_round_half_up,
 )
 from databricks_observe_spark.memo import memo
@@ -806,47 +810,50 @@ def drift_psi(t: dict[str, DataFrame]) -> DataFrame:
     them from the raw stream (SURVEY.md §2.4 extension surface).
 
     ``PSI = sum_b (p_b - q_b) * ln(p_b / q_b)`` over DRIFT_N_BINS fixed
-    value bins with Laplace +1 smoothing; the bin frame is generated
-    per type (types x bins literal cross join, broadcast-tiny) so empty
-    bins contribute their smoothed term instead of silently vanishing.
+    value bins with Laplace +1 smoothing; the bin grid is generated
+    per type so empty bins contribute their smoothed term instead of
+    silently vanishing.
 
     Scale shape: the events scan collapses in ONE map-side-combinable
-    ``(event_type, bin)`` aggregate with conditional ref/cur sums — the
-    only corpus-sized exchange; everything after is type-cardinality
-    frames and broadcast joins.
+    :func:`ref_cur_counts` histogram — the only corpus-sized exchange;
+    everything after is type-cardinality frames.
 
-    Cross-engine determinism: p and q are quantized to integer 1e-9 nano
-    shares (exact BIGINT difference), each ``ln`` input is an integer
-    grid point (the ln-site rule), and every PSI term is the exact
+    Cross-engine determinism: p and q are nano-grid shares (exact BIGINT
+    difference), ``ln`` is an ln-site (``functions/rounding.py``) taken
+    of the integer nano share itself, and every PSI term is the exact
     integer product ``diff_nano * lr_micro`` (1e-15 units). Both floors
     are monotone so the term sign always matches the diff sign and the
     sum is nonnegative; ``psi_micro`` is one exact integer division.
     """
+    # materialize the (types x bins)-sized aggregate ONCE: without the
+    # checkpoint each consumer of the PSI tail re-plans the events scan
+    counts = ref_cur_counts(t["events"], DRIFT_BIN_WIDTH, DRIFT_N_BINS)
+    return psi_from_counts(counts.localCheckpoint())
+
+
+def ref_cur_counts(events: DataFrame, width: float, n_bins: int) -> DataFrame:
+    """The ``(event_type, bin, ref_n, cur_n)`` value histogram of the
+    reference (before DRIFT_SPLIT_TS) and current windows, over
+    ``n_bins`` bins of ``width`` — the one drift histogram behind
+    :func:`drift_psi`, :func:`ks_drift` and the streaming drift monitor
+    (``events`` may be a stream). NULL values are excluded EXPLICITLY and
+    out-of-range values clamp into the edge bins (standard PSI practice)
+    — without the guard a NULL/negative value lands in a phantom bin that
+    inflates the window totals while contributing no term.
+    """
     split = F.lit(DRIFT_SPLIT_TS).cast("timestamp_ntz")
-    # NULL values are excluded EXPLICITLY and out-of-range values clamp
-    # into the edge bins (standard PSI practice) — without the guard a
-    # NULL/negative value lands in a phantom bin that inflates the
-    # window totals while contributing no term
-    ev = t["events"].filter(F.col("value").isNotNull()).select(
+    ev = events.filter(F.col("value").isNotNull()).select(
         "event_type",
         F.least(
-            F.greatest(F.floor(F.col("value") / F.lit(DRIFT_BIN_WIDTH)), F.lit(0)),
-            F.lit(DRIFT_N_BINS - 1),
+            F.greatest(F.floor(F.col("value") / F.lit(width)), F.lit(0)),
+            F.lit(n_bins - 1),
         ).alias("bin"),
         (F.col("ts") < split).cast("int").alias("is_ref"),
     )
-    # materialize the (types x bins)-sized aggregate ONCE: it feeds both
-    # the totals rollup and the grid fill, and without the checkpoint each
-    # consumer re-plans the whole events scan (4 scans measured)
-    counts = (
-        ev.groupBy("event_type", "bin")
-        .agg(
-            F.sum("is_ref").alias("ref_n"),
-            F.sum(F.lit(1) - F.col("is_ref")).alias("cur_n"),
-        )
-        .localCheckpoint()
+    return ev.groupBy("event_type", "bin").agg(
+        F.sum("is_ref").alias("ref_n"),
+        F.sum(F.lit(1) - F.col("is_ref")).alias("cur_n"),
     )
-    return psi_from_counts(counts)
 
 
 def psi_from_counts(counts: DataFrame) -> DataFrame:
@@ -860,9 +867,8 @@ def psi_from_counts(counts: DataFrame) -> DataFrame:
     # ONE per-type aggregate carries the totals AND the observed bins as
     # a bounded map (<= DRIFT_N_BINS entries), and the fixed grid then
     # explodes from a literal sequence with map lookups — no totals
-    # branch, no cross join, no fill join back onto counts (r21, guide
-    # §2.4: the old shape planned three joins and re-read the counts
-    # frame twice; this is one exchange on event_type).
+    # branch, no cross join, no fill join back onto counts: one exchange
+    # on event_type.
     per_type = counts.groupBy("event_type").agg(
         F.map_from_entries(
             F.collect_list(
@@ -892,22 +898,15 @@ def psi_from_counts(counts: DataFrame) -> DataFrame:
         F.coalesce(F.col("m")[F.col("bin")]["cur_n"], F.lit(0)).alias("cur_n"),
     )
 
-    def _nano(cnt: F.Column, total: F.Column) -> F.Column:
-        return F.greatest(
-            F.floor(
-                (cnt + F.lit(1)).cast("double")
-                / (total + F.lit(DRIFT_N_BINS)).cast("double")
-                * F.lit(1e9)
-                + F.lit(0.5)
-            ),
-            F.lit(1),
+    def _nano(cnt: str, total: str) -> F.Column:
+        return nano_grid(
+            (F.col(cnt) + F.lit(1)).cast("double")
+            / (F.col(total) + F.lit(DRIFT_N_BINS)).cast("double")
         )
 
-    p_nano = _nano(F.col("ref_n"), F.col("ref_total"))
-    q_nano = _nano(F.col("cur_n"), F.col("cur_total"))
-    lr_micro = F.floor(F.log(p_nano) * F.lit(1e6) + F.lit(0.5)) - F.floor(
-        F.log(q_nano) * F.lit(1e6) + F.lit(0.5)
-    )
+    p_nano = _nano("ref_n", "ref_total")
+    q_nano = _nano("cur_n", "cur_total")
+    lr_micro = ln_micro(p_nano) - ln_micro(q_nano)
     terms = filled.select(
         "event_type",
         "ref_n",
@@ -935,10 +934,8 @@ def _drift_nano_sql(cnt: str, total: str) -> str:
     # a DOUBLE product rounds while Spark's int64 product stays exact.
     # Casting each factor keeps the oracle's arithmetic in exact BIGINT,
     # matching Spark's integer pipeline at any drift magnitude.
-    return (
-        f"CAST(GREATEST(FLOOR(({cnt} + 1) / CAST({total} + {DRIFT_N_BINS} AS DOUBLE)"
-        f" * 1000000000.0 + 0.5), 1) AS BIGINT)"
-    )
+    share = f"({cnt} + 1) / CAST({total} + {DRIFT_N_BINS} AS DOUBLE)"
+    return f"CAST({sql_nano_grid(share)} AS BIGINT)"
 
 
 DRIFT_PSI_SQL = f"""
@@ -977,8 +974,8 @@ terms AS (
   SELECT event_type, ref_n, cur_n,
          ({_drift_nano_sql('ref_n', 'ref_total')}
           - {_drift_nano_sql('cur_n', 'cur_total')})
-         * (CAST(FLOOR(ln({_drift_nano_sql('ref_n', 'ref_total')}) * 1000000.0 + 0.5) AS BIGINT)
-            - CAST(FLOOR(ln({_drift_nano_sql('cur_n', 'cur_total')}) * 1000000.0 + 0.5) AS BIGINT))
+         * (CAST({sql_ln_micro(_drift_nano_sql('ref_n', 'ref_total'))} AS BIGINT)
+            - CAST({sql_ln_micro(_drift_nano_sql('cur_n', 'cur_total'))} AS BIGINT))
          AS term_femto
   FROM filled
 )
@@ -1011,8 +1008,8 @@ def ks_drift(t: dict[str, DataFrame]) -> DataFrame:
     the published binning contract, same stance as DRIFT_BIN_WIDTH).
 
     Scale shape: identical to :func:`drift_psi` — the events scan
-    collapses in ONE map-side-combinable ``(event_type, bin)`` aggregate
-    (the only corpus-sized exchange, shared via the same checkpoint
+    collapses in ONE map-side-combinable :func:`ref_cur_counts` histogram
+    (the only corpus-sized exchange, under the same checkpoint
     discipline); the ECDF prefix sums and the max-gap rollup run over the
     (types x KS_N_BINS) frame, which is constant-sized at any corpus
     scale, so the per-type cumulative window never sees corpus rows.
@@ -1029,27 +1026,12 @@ def ks_drift(t: dict[str, DataFrame]) -> DataFrame:
     division of identical operands is deterministic, and a boundary flip
     would need the true ratio within ~1e-10 of a 0.5 micro boundary.
     """
-    split = F.lit(DRIFT_SPLIT_TS).cast("timestamp_ntz")
-    # same NULL-exclusion + edge-bin clamp guard as drift_psi
-    ev = t["events"].filter(F.col("value").isNotNull()).select(
-        "event_type",
-        F.least(
-            F.greatest(F.floor(F.col("value") / F.lit(KS_BIN_WIDTH)), F.lit(0)),
-            F.lit(KS_N_BINS - 1),
-        ).alias("bin"),
-        (F.col("ts") < split).cast("int").alias("is_ref"),
-    )
     # same checkpoint discipline as drift_psi: the (types x bins)-sized
     # aggregate feeds both the ECDF window and the totals rollup — without
     # it each consumer re-plans the whole events scan
-    counts = (
-        ev.groupBy("event_type", "bin")
-        .agg(
-            F.sum("is_ref").alias("ref_n"),
-            F.sum(F.lit(1) - F.col("is_ref")).alias("cur_n"),
-        )
-        .localCheckpoint()
-    )
+    counts = ref_cur_counts(
+        t["events"], KS_BIN_WIDTH, KS_N_BINS
+    ).localCheckpoint()
     # the cumulative window runs per type over the fixed bin grid — a
     # constant-sized frame; missing bins contribute zero to the prefix
     # sums, so no grid fill is needed (unlike PSI's smoothed terms)
@@ -1060,9 +1042,8 @@ def ks_drift(t: dict[str, DataFrame]) -> DataFrame:
     )
     # the per-type TOTALS ride the same type-partitioned exchange as the
     # ECDF prefix sums (an unbounded frame over the constant-sized bin
-    # grid) instead of a separate aggregate branch + broadcast join — the
-    # old form re-computed the counts subtree and paid a broadcast-build
-    # job (r21, guide §2.4)
+    # grid) instead of a separate aggregate branch + broadcast join, which
+    # would re-compute the counts subtree and pay a broadcast-build job
     w_tot = Window.partitionBy("event_type")
     gaps = counts.select(
         "event_type",

@@ -22,8 +22,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from databricks_observe_spark.functions.rounding import (
+    ln_micro,
+    nano_grid,
+    pow_nano,
     round_half_up,
+    sql_ln_micro,
     sql_nano_grid,
+    sql_pow_nano,
     sql_round_half_up,
 )
 from databricks_observe_spark.functions.fixpoint import (
@@ -435,45 +440,25 @@ def unigram_logprob(t: dict[str, DataFrame]) -> DataFrame:
     computes (low average logprob = gibberish / OCR noise / wrong-language
     text; the shape of a perplexity filter without a neural LM).
 
-    Cross-engine determinism: each token's logprob ln(ctf/total) is
-    quantized to 1e-6 micro-units with binary-value rounding
-    (floor(x*1e6 + 0.5) — pure IEEE ops), then per-doc accumulation is an
-    exact INTEGER sum of tf * lp_micro, order-independent; the average is
+    Cross-engine determinism: each token's logprob ln(ctf/total) is an
+    ln-site (``functions/rounding.py``) in integer micro-units; per-doc
+    accumulation is an exact INTEGER sum of tf * lp_micro; the average is
     one fl(int)/fl(int) divide, floored back to micro-units. Plan: the
     memoized tf index joins the vocab-sized corpus-frequency aggregate
     (AQE broadcasts it when it fits), then one groupBy(doc) — two
     shuffles, nothing corpus-squared.
-
-    Transcendental guard (cross-engine): the token ratio is QUANTIZED to
-    the 1e-9 grid before ``ln`` — both engines hand the log an identical,
-    grid-discrete double drawn from a finite set (clamped to >= 1 nano so
-    a sub-grid ratio at extreme corpus scale can never reach ln(0)).
-    java.lang.Math.log and libm may still differ by 1 ulp on the same
-    input; with the input set finite, ``tests/test_text_multimodal.py``
-    VERIFIES
-    every attained grid point rounds with wide margin (>> 1 ulp of the
-    log) on the fixtures, turning the old probabilistic no-flake claim
-    into a checked one. The same scheme guards :func:`unigram_kl`.
     """
     tf = _tfidf_tf_frame(t)
     ctf = tf.groupBy("tok").agg(F.sum("tf").alias("ctf"))
     # The corpus total is a SCALAR-AGGREGATE branch over the memoized tf
-    # index, broadcast onto the scored rows (r22): the r21 form rode it
-    # as sum() OVER (PARTITION BY lit(1)) on the ctf frame, but ctf is
-    # VOCAB-sized — unbounded at the 100 TB design point — so that window
-    # funnelled every distinct token through one reducer task (the exact
-    # anti-pattern the bounded-frame windows elsewhere are scoped to
-    # avoid; r21 ADVICE). The scalar branch map-side partially aggregates
-    # (one small agg of the checkpointed index, same exact integer:
-    # sum(tf) == sum(ctf)) at the cost of one broadcast-build job.
+    # index, broadcast onto the scored rows. A sum() OVER (PARTITION BY
+    # lit(1)) on the ctf frame would funnel every distinct token —
+    # VOCAB-sized, unbounded at the 100 TB design point — through one
+    # reducer task; the scalar branch map-side partially aggregates (one
+    # small agg of the checkpointed index, same exact integer: sum(tf) ==
+    # sum(ctf)) at the cost of one broadcast-build job.
     total = tf.agg(F.sum("tf").cast("double").alias("total"))
-    r_nano = F.greatest(
-        F.floor(F.col("ctf") / F.col("total") * F.lit(1e9) + F.lit(0.5)),
-        F.lit(1),
-    )
-    lp_micro = F.floor(
-        F.log(r_nano / F.lit(1e9)) * F.lit(1000000.0) + F.lit(0.5)
-    )
+    lp_micro = ln_micro(nano_grid(F.col("ctf") / F.col("total")) / F.lit(1e9))
     scored = (
         tf.join(ctf, on="tok")
         .crossJoin(F.broadcast(total))
@@ -500,6 +485,7 @@ def unigram_logprob(t: dict[str, DataFrame]) -> DataFrame:
 # the unigram corpus-probability nano grid — shared by the logprob and
 # perplexity oracles and the boundary canary (same CTE aliases there)
 _UNIGRAM_NANO_SQL = sql_nano_grid("ctf.ctf / tot.total")
+_UNIGRAM_LP_MICRO_SQL = sql_ln_micro(f"{_UNIGRAM_NANO_SQL} / 1000000000.0")
 
 UNIGRAM_LOGPROB_SQL = f"""
 WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
@@ -508,8 +494,7 @@ ctf AS (SELECT tok, CAST(SUM(tf) AS BIGINT) AS ctf FROM tf GROUP BY tok),
 tot AS (SELECT CAST(SUM(ctf) AS DOUBLE) AS total FROM ctf),
 scored AS (
   SELECT tf.doc_id, tf.tf,
-         CAST(FLOOR(ln({_UNIGRAM_NANO_SQL}
-                       / 1000000000.0) * 1000000.0 + 0.5) AS BIGINT) AS lp_micro
+         CAST({_UNIGRAM_LP_MICRO_SQL} AS BIGINT) AS lp_micro
   FROM tf JOIN ctf ON tf.tok = ctf.tok CROSS JOIN tot
 )
 SELECT doc_id,
@@ -585,8 +570,7 @@ ctf AS (SELECT tok, CAST(SUM(tf) AS BIGINT) AS ctf FROM tf GROUP BY tok),
 tot AS (SELECT CAST(SUM(ctf) AS DOUBLE) AS total FROM ctf),
 lpterm AS (
   SELECT tf.doc_id, tf.tf,
-         CAST(FLOOR(ln({_UNIGRAM_NANO_SQL}
-                       / 1000000000.0) * 1000000.0 + 0.5) AS BIGINT) AS lp_micro
+         CAST({_UNIGRAM_LP_MICRO_SQL} AS BIGINT) AS lp_micro
   FROM tf JOIN ctf ON tf.tok = ctf.tok CROSS JOIN tot
 ),
 lp AS (
@@ -1010,36 +994,25 @@ def mixture_weights_temperature(t: dict[str, DataFrame]) -> DataFrame:
     with alpha = 0.3 — the mT5/XLM-R low-resource up-sampling rule, the
     T != 1 companion to :func:`mixture_weights`'s uniform target.
 
-    Transcendental guard (the ln-site rule): the language share p is
-    quantized to the 1e-9 grid BEFORE ``pow``, so pow's input is an
-    identical grid-discrete double on both engines, and each pow output
-    is immediately floored back to integer nano-units — the normalizing
-    SUM is exact integer arithmetic (order-independent across engines
-    and partitionings), and the attained grid points floor with margin
-    (asserted in tests/test_text_multimodal.py), so a 1-ulp libm pow
-    divergence cannot flip a unit. Output is language-cardinality-sized.
+    ``p^alpha`` is an ln-site (``functions/rounding.py``) in integer
+    nano-units, so the normalizing SUM is exact integer arithmetic.
+    Output is language-cardinality-sized.
     """
     d = t["documents"]
     # both normalizing scalars (corpus total, then the pa sum) ride the
     # language-cardinality frame as single-partition windows over its
     # bounded rows instead of two scalar-aggregate branches + broadcast
-    # cross joins — the old form re-planned the corpus scan per branch
-    # and paid two broadcast-build jobs (r21, guide §2.4); the windowed
-    # sums are the same exact integers.
+    # cross joins, which would re-plan the corpus scan per branch and pay
+    # two broadcast-build jobs; the windowed sums are the same exact
+    # integers.
     w_all = Window.partitionBy(F.lit(1))
     counts = (
         d.groupBy("lang")
         .agg(F.count(F.lit(1)).alias("n_docs"))
         .withColumn("total", F.sum("n_docs").over(w_all))
     )
-    p_nano = F.greatest(
-        F.floor(F.col("n_docs") / F.col("total") * F.lit(1e9) + F.lit(0.5)),
-        F.lit(1),
-    )
-    pa = F.floor(
-        F.pow(p_nano / F.lit(1e9), F.lit(MIXTURE_ALPHA)) * F.lit(1e9)
-        + F.lit(0.5)
-    )
+    p_nano = nano_grid(F.col("n_docs") / F.col("total"))
+    pa = pow_nano(p_nano / F.lit(1e9), MIXTURE_ALPHA)
     scored = counts.select(
         "lang", "n_docs", "total", pa.alias("pa")
     ).withColumn("pa_sum", F.sum("pa").over(w_all))
@@ -1057,15 +1030,15 @@ def mixture_weights_temperature(t: dict[str, DataFrame]) -> DataFrame:
     )
 
 
+# the mixture share nano grid — shared by the oracle and the canary
+_MIXTURE_NANO_SQL = sql_nano_grid("CAST(n_docs AS DOUBLE) / total")
+
 MIXTURE_WEIGHTS_TEMPERATURE_SQL = f"""
 WITH c AS (SELECT lang, COUNT(*) AS n_docs FROM documents GROUP BY lang),
 t AS (SELECT CAST(SUM(n_docs) AS BIGINT) AS total FROM c),
 b AS (
   SELECT lang, n_docs, total,
-         floor(power(GREATEST(floor(CAST(n_docs AS DOUBLE) / total
-                                    * 1000000000.0 + 0.5), 1)
-                     / 1000000000.0, {MIXTURE_ALPHA})
-               * 1000000000.0 + 0.5) AS pa
+         {sql_pow_nano(f"{_MIXTURE_NANO_SQL} / 1000000000.0", MIXTURE_ALPHA)} AS pa
   FROM c CROSS JOIN t
 ),
 n AS (SELECT CAST(SUM(pa) AS BIGINT) AS pa_sum FROM b)
@@ -1294,34 +1267,23 @@ def unigram_kl(t: dict[str, DataFrame]) -> DataFrame:
     shuffles (doc-term, corpus-term), both map-side combined; the corpus
     frequency side is vocab-sized -> joined without a forced broadcast.
 
-    Transcendental guard, HARDENED r09: the p/q ratio is quantized to
-    the 1e-9 grid (clamped >= 1 nano) BEFORE ``ln`` as everywhere, and —
-    new — the log is floored to the integer micro grid (``lr_micro``)
-    BEFORE the p-weighting, so the ONLY engine-variant operation
-    (``ln``) is isolated behind a floor whose attained points clear
-    their boundaries by >=2.5e5 ulp (tests/test_ln_boundary.py, both
-    fixture scales). The pico term ``floor((p*lr_micro)*1e6 + 0.5)``
-    then uses exclusively correctly-rounded IEEE ops on bit-identical
-    inputs, so it CANNOT diverge cross-engine regardless of boundary
-    proximity. The previous form floored ``p*ln(...)*1e12`` directly —
-    at sf0.01 its worst attained point sat only 1.66x the propagated
-    1-ulp error from a boundary (measured r09), i.e. one adverse libm
-    pairing from the score_auc r07/r08 failure class."""
+    ``ln(p/q)`` is an ln-site (``functions/rounding.py``), ``lr_micro``,
+    taken BEFORE the p-weighting: the pico term
+    ``floor((p*lr_micro)*1e6 + 0.5)`` then uses only correctly-rounded
+    IEEE ops on bit-identical inputs, so it cannot diverge cross-engine
+    however close it sits to a boundary."""
     # every moment derives from the memoized (doc_id, tok, tf) index —
-    # n = sum(tf) per doc, cf = sum(tf) per tok, total = sum(tf) — the
-    # same exact integers the old three corpus re-explodes computed, at
-    # the cost of two index-sized aggregates and one doc-key join
-    # (the tfidf_keywords rule: never re-explode what tf already knows).
+    # n = sum(tf) per doc, cf = sum(tf) per tok, total = sum(tf) — at the
+    # cost of two index-sized aggregates and one doc-key join (the
+    # tfidf_keywords rule: never re-explode what tf already knows).
     base = _tfidf_tf_frame(t)
     # per-doc length as a window on the index (one doc-keyed exchange,
     # BOUNDED frames — a doc's distinct tokens). The scalar grand total
-    # is a scalar-aggregate branch over the memoized index, broadcast
-    # (r22): the r21 form rode it as sum() OVER (PARTITION BY lit(1)) on
-    # the cf frame, but cf is VOCAB-sized — unbounded at 100 TB — so
-    # that window funnelled every distinct token through one reducer
-    # task (r21 ADVICE). sum(tf) over the index == sum(cf), the same
-    # exact integer, map-side partially aggregated; one broadcast-build
-    # job is the price.
+    # is a scalar-aggregate branch over the memoized index, broadcast:
+    # a sum() OVER (PARTITION BY lit(1)) on the VOCAB-sized cf frame
+    # would funnel every distinct token through one reducer task.
+    # sum(tf) over the index == sum(cf), the same exact integer, map-side
+    # partially aggregated; one broadcast-build job is the price.
     tf = base.withColumn(
         "n", F.sum("tf").over(Window.partitionBy("doc_id"))
     )
@@ -1329,17 +1291,12 @@ def unigram_kl(t: dict[str, DataFrame]) -> DataFrame:
     total_df = base.agg(F.sum("tf").alias("total"))
     p = F.col("tf").cast("double") / F.col("n")
     q = F.col("cf").cast("double") / F.col("total")
-    r_nano = F.greatest(F.floor(p / q * F.lit(1e9) + F.lit(0.5)), F.lit(1))
-    # the ln is floored to the integer micro grid FIRST (the only
-    # engine-variant op, wide-margin by test), then the pico term is
-    # pure IEEE arithmetic on bit-identical inputs: ((p * lr) * 1e6)
-    # with this exact association on both engines. floor(x + 0.5) is
-    # the round_half_up formula kept integral so the per-doc SUM is
-    # exact decimal arithmetic (no double->decimal cast, which would
-    # reintroduce the engine-specific shortest-repr conversion).
-    lr_micro = F.floor(
-        F.log(r_nano / F.lit(1e9)) * F.lit(1000000.0) + F.lit(0.5)
-    )
+    lr_micro = ln_micro(nano_grid(p / q) / F.lit(1e9))
+    # the pico term is ((p * lr) * 1e6) with this exact association on
+    # both engines. floor(x + 0.5) is the round_half_up formula kept
+    # integral so the per-doc SUM is exact decimal arithmetic (no
+    # double->decimal cast, which would reintroduce the engine-specific
+    # shortest-repr conversion).
     term_units = F.floor(
         (p * lr_micro) * F.lit(1000000.0) + F.lit(0.5)
     ).cast("decimal(38,0)")
@@ -1358,17 +1315,15 @@ def unigram_kl(t: dict[str, DataFrame]) -> DataFrame:
     )
 
 
-# ln floored to integer micro FIRST (the only engine-variant op), then
-# the pico term is ((p * lr_micro) * 1e6) — the exact association the
-# Spark twin uses, all correctly-rounded IEEE ops on identical inputs.
-# the kl p/q ratio nano grid — shared by the oracle and the canary
+# the kl p/q ratio nano grid — shared by the oracle and the canary; the
+# pico term is ((p * lr_micro) * 1e6), the association the Spark side uses
 _KL_NANO_SQL = sql_nano_grid(
     "(CAST(tf AS DOUBLE) / n) / (CAST(cf AS DOUBLE) / total)"
 )
 
-_KL_LR_MICRO_SQL = f"""CAST(FLOOR(
-                     ln({_KL_NANO_SQL}
-                        / 1000000000.0) * 1000000.0 + 0.5) AS BIGINT)"""
+_KL_LR_MICRO_SQL = (
+    f"CAST({sql_ln_micro(f'{_KL_NANO_SQL} / 1000000000.0')} AS BIGINT)"
+)
 
 _KL_TERM_UNITS_SQL = f"""CAST(floor(((CAST(tf AS DOUBLE) / n)
                      * {_KL_LR_MICRO_SQL}) * 1000000.0 + 0.5)
@@ -1983,16 +1938,16 @@ def bm25_scores(t: dict[str, DataFrame]) -> DataFrame:
     up-weight what ranks). Lucene's positive-idf form:
     ``idf = ln(1 + (N - df + 0.5)/(df + 0.5))``.
 
-    Cross-engine determinism (the unigram_logprob recipe): the idf ratio
-    quantizes to the 1e-9 grid BEFORE ``ln`` (clamped >= 1 nano), idf
-    lives in integer micro-units, each (term, doc) contribution floors
-    to integer micro-units after the tf-normalization product, and the
-    per-doc score is an exact INTEGER sum — order-independent under any
-    partitioning. Ranking ties break on doc_id.
+    Cross-engine determinism: idf is an ln-site
+    (``functions/rounding.py``) in integer micro-units, each (term, doc)
+    contribution floors to integer micro-units after the
+    tf-normalization product, and the per-doc score is an exact INTEGER
+    sum — order-independent under any partitioning. Ranking ties break
+    on doc_id.
 
     Plan: the memoized tf index joins the broadcast probe terms (tiny);
-    the (n_docs, avgdl) corpus scalars ride the df index since r21
-    (folded at setup build — no 1-row cross join at query time); the
+    the (n_docs, avgdl) corpus scalars ride the df index (folded at
+    setup build — no 1-row cross join at query time); the
     document-frequency frame is vocab-sized and the document-length
     frame is CORPUS-sized, so neither carries a broadcast hint — AQE
     broadcasts them at runtime
@@ -2009,21 +1964,11 @@ def bm25_scores(t: dict[str, DataFrame]) -> DataFrame:
         [(qid, tok) for qid, toks in BM25_QUERIES for tok in toks],
         "query_id string, tok string",
     )
-    r_nano = F.greatest(
-        F.floor(
-            (
-                F.lit(1.0)
-                + (F.col("n_docs") - F.col("df") + F.lit(0.5))
-                / (F.col("df") + F.lit(0.5))
-            )
-            * F.lit(1e9)
-            + F.lit(0.5)
-        ),
-        F.lit(1),
+    r_nano = nano_grid(
+        F.lit(1.0)
+        + (F.col("n_docs") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
     )
-    idf_micro = F.floor(
-        F.log(r_nano / F.lit(1e9)) * F.lit(1000000.0) + F.lit(0.5)
-    )
+    idf_micro = ln_micro(r_nano / F.lit(1e9))
     tfnorm = (F.col("tf") * F.lit(BM25_K1 + 1.0)) / (
         F.col("tf")
         + F.lit(BM25_K1)
@@ -2071,8 +2016,7 @@ terms AS (SELECT * FROM (VALUES {terms}) AS v(query_id, tok)),
 scored AS (
   SELECT t.query_id, tf.doc_id,
          CAST(SUM(FLOOR(
-           FLOOR(ln({_BM25_IDF_NANO_SQL}
-                     / 1000000000.0) * 1000000.0 + 0.5)
+           {sql_ln_micro(f"{_BM25_IDF_NANO_SQL} / 1000000000.0")}
            * ((tf.tf * CAST({BM25_K1 + 1.0} AS DOUBLE)) /
               (tf.tf + CAST({BM25_K1} AS DOUBLE)
                        * (CAST({1.0 - BM25_B} AS DOUBLE)
@@ -2209,12 +2153,12 @@ def dsir_importance_weights(t: dict[str, DataFrame]) -> DataFrame:
     log-ratio table broadcasts into the scoring join. No per-doc Python,
     no vocabulary-sized model state on the driver.
 
-    Transcendental guard (the package ln-site rule): each smoothed bucket
-    probability is quantized to the 1e-9 grid BEFORE ``ln``; per-doc
-    accumulation is exact integer micro-unit arithmetic, so the weight is
-    bit-identical across engines and partitionings. ``keep`` flags docs at
-    least as target-like as the raw average (log-ratio >= 0) — the
-    threshold form of the paper's resampling step, with no global sort.
+    Each smoothed bucket log-probability is an ln-site
+    (``functions/rounding.py``); per-doc accumulation is exact integer
+    micro-unit arithmetic, so the weight is bit-identical across engines
+    and partitionings. ``keep`` flags docs at least as target-like as the
+    raw average (log-ratio >= 0) — the threshold form of the paper's
+    resampling step, with no global sort.
     """
     tf = _tfidf_tf_frame(t)
     langs = t["documents"].select("doc_id", "lang")
@@ -2225,10 +2169,9 @@ def dsir_importance_weights(t: dict[str, DataFrame]) -> DataFrame:
     tfb = tf.join(langs, on="doc_id").withColumn("bucket", bucket)
     # the grand totals ride ON the bucket-count frame as a single-
     # partition window over DSIR_BUCKETS bounded rows (the pipeline.py
-    # stage-5 trick) instead of a separate global-aggregate branch: the
-    # old form re-computed the counts subtree (Catalyst does not CSE
-    # across branches) and paid a broadcast-build job for a 1-row frame
-    # (r21, guide §2.4)
+    # stage-5 trick) instead of a separate global-aggregate branch, which
+    # would re-compute the counts subtree (Catalyst does not CSE across
+    # branches) and pay a broadcast-build job for a 1-row frame
     w_all = Window.partitionBy(F.lit(1))
     counts = (
         tfb.groupBy("bucket")
@@ -2242,24 +2185,17 @@ def dsir_importance_weights(t: dict[str, DataFrame]) -> DataFrame:
         .withColumn("r_total", F.sum("r_cnt").over(w_all).cast("double"))
     )
 
-    def _lp_micro(cnt: F.Column, total: F.Column) -> F.Column:
-        p_nano = F.greatest(
-            F.floor(
-                (cnt + F.lit(1)).cast("double")
-                / (total + F.lit(float(DSIR_BUCKETS)))
-                * F.lit(1e9)
-                + F.lit(0.5)
-            ),
-            F.lit(1),
+    def _lp_micro(cnt: str, total: str) -> F.Column:
+        p = (F.col(cnt) + F.lit(1)).cast("double") / (
+            F.col(total) + F.lit(float(DSIR_BUCKETS))
         )
-        return F.floor(F.log(p_nano / F.lit(1e9)) * F.lit(1e6) + F.lit(0.5))
+        return ln_micro(nano_grid(p) / F.lit(1e9))
 
     lr = counts.select(
         "bucket",
-        (
-            _lp_micro(F.col("t_cnt"), F.col("t_total"))
-            - _lp_micro(F.col("r_cnt"), F.col("r_total"))
-        ).alias("lr_micro"),
+        (_lp_micro("t_cnt", "t_total") - _lp_micro("r_cnt", "r_total")).alias(
+            "lr_micro"
+        ),
     )
     scored = tfb.join(F.broadcast(lr), on="bucket")
     return (
@@ -2287,13 +2223,6 @@ def _dsir_nano_sql(cnt: str, total: str) -> str:
     return sql_nano_grid(f"({cnt} + 1) / ({total} + {DSIR_BUCKETS}.0)")
 
 
-def _dsir_lp_micro_sql(cnt: str, total: str) -> str:
-    return (
-        f"FLOOR(ln({_dsir_nano_sql(cnt, total)} / 1000000000.0)"
-        " * 1000000.0 + 0.5)"
-    )
-
-
 DSIR_IMPORTANCE_WEIGHTS_SQL = f"""
 WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
 tf AS (SELECT doc_id, tok, COUNT(*) AS tf FROM toks GROUP BY 1, 2),
@@ -2317,8 +2246,9 @@ totals AS (
 ),
 lr AS (
   SELECT bucket,
-         CAST({_dsir_lp_micro_sql('t_cnt', 't_total')}
-              - {_dsir_lp_micro_sql('r_cnt', 'r_total')} AS BIGINT) AS lr_micro
+         CAST({sql_ln_micro(f"{_dsir_nano_sql('t_cnt', 't_total')} / 1000000000.0")}
+              - {sql_ln_micro(f"{_dsir_nano_sql('r_cnt', 'r_total')} / 1000000000.0")}
+              AS BIGINT) AS lr_micro
   FROM counts CROSS JOIN totals
 )
 SELECT tfb.doc_id,

@@ -210,7 +210,8 @@ _REGISTRY: dict[str, tuple[Callable[[dict], DataFrame], str | None]] = {
         events.TIME_ROLLUP_MULTIGRAIN_SQL,
     ),
     # value-distribution drift monitor: per-type PSI between time windows
-    # (integer nano-share diffs, ln-site grid inputs, exact femto terms)
+    # over the shared ref/cur histogram (integer nano-share diffs, ln via
+    # the functions/rounding.py twins, exact femto terms)
     "drift_psi": (events.drift_psi, events.DRIFT_PSI_SQL),
     # two-sample Kolmogorov-Smirnov drift: max ECDF gap on a fixed fine
     # grid, pure-integer cross-product form (no smoothing, no ln sites)

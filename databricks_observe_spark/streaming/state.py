@@ -655,39 +655,20 @@ def drift_counts_stream(
     """Complete-mode ``(event_type, bin)`` ref/cur histogram over the
     event stream — the continuously-maintained state a streaming drift
     monitor alarms from (the streaming home of
-    operators/events.py:drift_psi, identical bin/split exprs by
-    construction). State is (types x bins)-bounded REGARDLESS of stream
-    volume, so complete mode rewrites a constant-sized memory table per
-    trigger; checkpoint + replay give exactly-once counts across
-    restarts for free because the aggregation is the state.
+    operators/events.py:drift_psi, built by the same
+    ``ref_cur_counts``). State is (types x bins)-bounded REGARDLESS of
+    stream volume, so complete mode rewrites a constant-sized memory
+    table per trigger; checkpoint + replay give exactly-once counts
+    across restarts for free because the aggregation is the state.
     """
     from databricks_observe_spark.operators.events import (
         DRIFT_BIN_WIDTH,
         DRIFT_N_BINS,
-        DRIFT_SPLIT_TS,
+        ref_cur_counts,
     )
 
-    events = stream_events(spark, sf_dir)
-    split = F.lit(DRIFT_SPLIT_TS).cast("timestamp_ntz")
-    # same NULL-exclusion + edge-bin clamp as the batch operator, so the
-    # two stay bit-identical under any data
-    counts = (
-        events.filter(F.col("value").isNotNull())
-        .select(
-            "event_type",
-            F.least(
-                F.greatest(
-                    F.floor(F.col("value") / F.lit(DRIFT_BIN_WIDTH)), F.lit(0)
-                ),
-                F.lit(DRIFT_N_BINS - 1),
-            ).alias("bin"),
-            (F.col("ts") < split).cast("int").alias("is_ref"),
-        )
-        .groupBy("event_type", "bin")
-        .agg(
-            F.sum("is_ref").alias("ref_n"),
-            F.sum(F.lit(1) - F.col("is_ref")).alias("cur_n"),
-        )
+    counts = ref_cur_counts(
+        stream_events(spark, sf_dir), DRIFT_BIN_WIDTH, DRIFT_N_BINS
     )
     return (
         counts.writeStream.format("memory")

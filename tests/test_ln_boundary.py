@@ -1,41 +1,38 @@
-"""ln-site boundary diagnostic (r08 verdict item 4): every
-``FLOOR(ln(x)*K + 0.5)`` grid the oracles HASH must keep its attained
-fixture points far from a rounding boundary, so a cross-engine /
-cross-libm ``ln`` divergence (the score_auc r07/r08 driver-env class)
-fails loudly here as a named test instead of silently as a red
-CORRECTNESS row.
+"""ln-site boundary diagnostic: every hashed ``ln``/``pow`` grid (the
+``ln_micro``/``pow_nano`` twins of ``functions/rounding.py`` over a
+``nano_grid`` input) must keep its attained fixture points far from a
+floor boundary, so a cross-engine / cross-libm ``ln`` or ``pow``
+divergence fails loudly here as a named test instead of silently as a
+red oracle row.
 
-Six hashed families, checked at BOTH fixture scales — sf0.001 (the
-pytest scale) and sf0.01 (the scale the driver's differential oracle
-actually runs at, which the pre-existing Spark-side margin tests in
-``test_text_multimodal.py`` / ``test_runs_events.py`` never touched):
+Seven hashed families, checked at BOTH fixture scales — sf0.001 (the
+pytest scale) and sf0.01 (the scale the differential oracle runs at):
 
 - DSIR micro grid — feeds dsir_importance_weights, score_calibration,
-  score_auc(_parts); previously the ONLY hashed ln grid with no margin
-  test anywhere.
+  score_auc(_parts).
 - unigram-logprob nano grid — also feeds perplexity_buckets.
 - drift nano grid — feeds drift_psi and streaming_drift_psi.
-- unigram-kl lr-micro grid (r09 hardened form: the ln floors to integer
-  micro BEFORE the p-weighting, so this grid is the query's ONLY
-  engine-variant site).
+- unigram-kl lr-micro grid (the ln floors to integer micro BEFORE the
+  p-weighting, so this grid is the query's ONLY engine-variant site).
 - bm25 idf grid over the probe-query tokens.
-- tfidf product-form canary (the one remaining direct tf*ln floor —
-  measured safe, kept visible).
+- mixture-temperature pow grid — feeds mixture_weights_temperature.
+- tfidf product-form canary (a site that keeps its own ``ln``: the
+  direct tf*ln floor — measured safe, kept visible).
 
 Every quantization fragment is IMPORTED from the operator modules
 (``sql_nano_grid`` compositions / ``_drift_nano_sql``) — the canary
 queries embed the byte-identical SQL text the shipped oracles use, so
 a formula change re-derives the attained grid here automatically
-instead of passing vacuously against a stale copy (r09 self-review
-finding; the CTE aliases below deliberately match each oracle's).
+instead of passing vacuously against a stale copy (the CTE aliases
+below deliberately match each oracle's).
 
-Margin rule (error-relative, house form): a 1-ulp ln error moves the
-scaled pre-floor value by at most ``|y| * 1.2e-16``; we assert every
+Margin rule (error-relative, house form): a 1-ulp ln/pow error moves
+the scaled pre-floor value by at most ``|y| * 1.2e-16``; we assert every
 attained point clears its nearest integer by > 1e4x that bound —
 four orders of magnitude above the worst plausible libm spread.
-Observed minima at HEAD: DSIR 2.6e6 ulp (sf0.001) / 2.6e7 (sf0.01);
+Observed minima: DSIR 2.6e6 ulp (sf0.001) / 2.6e7 (sf0.01);
 logprob ~4e7; drift 2.6e5 / 4.4e6; kl lr 2.5e5 / 2e6; bm25 6e8;
-tfidf 5.7e7.
+mixture pow 2e6 / 2.2e4 (the tightest family); tfidf 5.7e7.
 
 Pure DuckDB + math — no SparkSession.
 """
@@ -53,10 +50,13 @@ from databricks_observe_spark.operators.events import (
     DRIFT_SPLIT_TS,
     _drift_nano_sql,
 )
+from databricks_observe_spark.functions.rounding import sql_pow_nano
 from databricks_observe_spark.operators.text import (
     BM25_QUERIES,
+    MIXTURE_ALPHA,
     _BM25_IDF_NANO_SQL,
     _KL_NANO_SQL,
+    _MIXTURE_NANO_SQL,
     _UNIGRAM_NANO_SQL,
     _dsir_nano_sql,
     DSIR_BUCKETS,
@@ -64,7 +64,7 @@ from databricks_observe_spark.operators.text import (
 )
 
 SF_DIRS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
-MARGIN_ULP = 1e4  # asserted floor; observed minima are 2.5e5+ (above)
+MARGIN_ULP = 1e4  # asserted floor; observed minima are 2.2e4+ (above)
 
 
 def _assert_margins(ys: list[float], family: str) -> None:
@@ -196,10 +196,9 @@ FROM filled
 
 
 def test_unigram_kl_lr_micro_grid_boundary_distance(con):
-    """The r09 hardening's load-bearing fact: kl's only engine-variant
-    op is this ln grid (observed minima 2.5e5 ulp at sf0.001, 2e6 at
-    sf0.01); the pre-r09 direct p*ln*1e12 floor measured a worst
-    attained margin of only 1.66x the propagated error at sf0.01."""
+    """kl's only engine-variant op is this ln grid (observed minima 2.5e5
+    ulp at sf0.001, 2e6 at sf0.01); a direct p*ln*1e12 floor measured a
+    worst attained margin of only 1.66x the propagated error at sf0.01."""
     nanos = [
         r[0]
         for r in con.execute(
@@ -240,11 +239,27 @@ SELECT DISTINCT {_BM25_IDF_NANO_SQL} AS nano FROM d CROSS JOIN s
     _assert_margins(_ln_micro_ys(nanos), "bm25")
 
 
+def test_mixture_pow_grid_boundary_distance(con):
+    """The temperature weights floor pow(share_nano/1e9, alpha)*1e9: the
+    Python mirror must reproduce the oracle's floors, with margin."""
+    rows = con.execute(
+        f"""
+WITH c AS (SELECT lang, COUNT(*) AS n_docs FROM documents GROUP BY lang),
+t AS (SELECT CAST(SUM(n_docs) AS BIGINT) AS total FROM c),
+g AS (SELECT DISTINCT {_MIXTURE_NANO_SQL} AS nano FROM c CROSS JOIN t)
+SELECT nano, {sql_pow_nano('nano / 1000000000.0', MIXTURE_ALPHA)} AS pa FROM g
+"""
+    ).fetchall()
+    ys = [math.pow(float(n) / 1e9, MIXTURE_ALPHA) * 1e9 + 0.5 for n, _ in rows]
+    assert [math.floor(y) for y in ys] == [pa for _, pa in rows]
+    _assert_margins(ys, "mixture_pow")
+
+
 def test_tfidf_product_grid_boundary_distance(con):
     """tfidf's hashed score floors tf * ln(n_docs/df) * 1e6 directly (a
-    product-form floor like kl's pre-r09 shape) — measured safe at HEAD
-    (min 5.7e7 ulp, the tf multipliers are small and the attained set
-    tiny), so no hardening needed; this canary keeps it visible. No
+    product-form floor) — measured safe (min 5.7e7 ulp, the tf
+    multipliers are small and the attained set tiny), so no hardening
+    needed; this canary keeps it visible. No
     nano grid exists for this family (the ln input is the raw exact
     ratio), so the formula is mirrored inline from tfidf_keywords."""
     rows = con.execute(
