@@ -109,8 +109,8 @@ def run_output_lookup(t: dict[str, DataFrame]) -> DataFrame:
 
 
 def _run_output_lookup_sql() -> str:
-    from databricks_observe_spark.operators.runs import _TS_FMT_DUCK
     from databricks_observe_spark.sources.catalog_model import oracle_with_clause
+    from databricks_observe_spark.sources.tables import TS_FMT_DUCK
 
     # ORDER BY runs in a subquery over the RAW timestamp column, with
     # strftime applied outside — matching latest_update_per_entity's
@@ -119,7 +119,7 @@ def _run_output_lookup_sql() -> str:
     # fixed-width format is lexicographically order-preserving.)
     return oracle_with_clause("updates") + f"""
 SELECT entity_type, entity_id, update_id, state,
-       strftime(ts, '{_TS_FMT_DUCK}') AS ts
+       strftime(ts, '{TS_FMT_DUCK}') AS ts
 FROM (
   SELECT * FROM updates
   WHERE entity_id = (SELECT MIN(entity_id) FROM updates)

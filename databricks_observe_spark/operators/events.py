@@ -25,9 +25,7 @@ from databricks_observe_spark.functions.rounding import (
     sql_round_half_up,
 )
 from databricks_observe_spark.memo import memo
-
-_TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
-_TS_FMT_DUCK = "%Y-%m-%d %H:%M:%S.%f"
+from databricks_observe_spark.sources.tables import TS_FMT, TS_FMT_DUCK
 
 
 def event_type_stats(t: dict[str, DataFrame]) -> DataFrame:
@@ -74,7 +72,7 @@ def tumbling_hourly(t: dict[str, DataFrame]) -> DataFrame:
             F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
         )
         .select(
-            F.date_format(F.col("w.start"), _TS_FMT).alias("window_start"),
+            F.date_format(F.col("w.start"), TS_FMT).alias("window_start"),
             "event_type",
             "n_events",
             "sum_value",
@@ -83,7 +81,7 @@ def tumbling_hourly(t: dict[str, DataFrame]) -> DataFrame:
 
 
 TUMBLING_HOURLY_SQL = f"""
-SELECT strftime(time_bucket(INTERVAL 1 HOUR, ts), '{_TS_FMT_DUCK}') AS window_start,
+SELECT strftime(time_bucket(INTERVAL 1 HOUR, ts), '{TS_FMT_DUCK}') AS window_start,
        event_type,
        COUNT(*) AS n_events,
        CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
@@ -103,7 +101,7 @@ def sliding_daily(t: dict[str, DataFrame]) -> DataFrame:
             F.countDistinct("user_id").alias("n_users"),
         )
         .select(
-            F.date_format(F.col("w.start"), _TS_FMT).alias("window_start"),
+            F.date_format(F.col("w.start"), TS_FMT).alias("window_start"),
             "n_events",
             "n_users",
         )
@@ -113,7 +111,7 @@ def sliding_daily(t: dict[str, DataFrame]) -> DataFrame:
 # DuckDB oracle: expand each event into the 4 sliding windows that contain
 # it (offset cross join), then aggregate — same semantics, independent plan.
 SLIDING_DAILY_SQL = f"""
-SELECT strftime(ws, '{_TS_FMT_DUCK}') AS window_start,
+SELECT strftime(ws, '{TS_FMT_DUCK}') AS window_start,
        COUNT(*) AS n_events,
        COUNT(DISTINCT user_id) AS n_users
 FROM (
@@ -137,7 +135,7 @@ def user_sessions(t: dict[str, DataFrame]) -> DataFrame:
         )
         .select(
             "user_id",
-            F.date_format(F.col("w.start"), _TS_FMT).alias("session_start"),
+            F.date_format(F.col("w.start"), TS_FMT).alias("session_start"),
             "n_events",
             "sum_value",
         )
@@ -162,7 +160,7 @@ sessions AS (
   FROM marked
 )
 SELECT user_id,
-       strftime(MIN(ts), '{_TS_FMT_DUCK}') AS session_start,
+       strftime(MIN(ts), '{TS_FMT_DUCK}') AS session_start,
        COUNT(*) AS n_events,
        CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
 FROM sessions
@@ -314,13 +312,13 @@ def event_dedup_windowed(t: dict[str, DataFrame]) -> DataFrame:
             | (F.col("gap_us") >= DEDUP_WINDOW_S * 1_000_000)
         )
         .select("event_id", "user_id", "event_type", "ts", "value")
-        .withColumn("ts", F.date_format("ts", _TS_FMT))
+        .withColumn("ts", F.date_format("ts", TS_FMT))
     )
 
 
 EVENT_DEDUP_WINDOWED_SQL = f"""
 SELECT event_id, user_id, event_type,
-       strftime(ts, '{_TS_FMT_DUCK}') AS ts, value
+       strftime(ts, '{TS_FMT_DUCK}') AS ts, value
 FROM (
   SELECT *, epoch_us(ts) - epoch_us(lag(ts) OVER w) AS gap_us
   FROM events
@@ -718,7 +716,7 @@ def range_join_incidents(t: dict[str, DataFrame]) -> DataFrame:
             F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
         )
         .select(
-            F.date_format("w_start", _TS_FMT).alias("window_start"),
+            F.date_format("w_start", TS_FMT).alias("window_start"),
             "n_events",
             "n_users",
             "sum_value",
@@ -732,7 +730,7 @@ WITH w AS (
   FROM events
   WHERE event_type = 'error' AND value > 95
 )
-SELECT strftime(w.w_start, '{_TS_FMT_DUCK}') AS window_start,
+SELECT strftime(w.w_start, '{TS_FMT_DUCK}') AS window_start,
        COUNT(*) AS n_events,
        COUNT(DISTINCT e.user_id) AS n_users,
        CAST(SUM(CAST(e.value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
@@ -767,7 +765,7 @@ def time_rollup_multigrain(t: dict[str, DataFrame]) -> DataFrame:
     """
     ev = t["events"].select(
         F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day"),
-        F.date_format(F.date_trunc("hour", "ts"), _TS_FMT).alias("hour"),
+        F.date_format(F.date_trunc("hour", "ts"), TS_FMT).alias("hour"),
         "user_id",
         "value",
     )
@@ -781,9 +779,9 @@ def time_rollup_multigrain(t: dict[str, DataFrame]) -> DataFrame:
 
 TIME_ROLLUP_MULTIGRAIN_SQL = f"""
 SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
-       strftime(date_trunc('hour', ts), '{_TS_FMT_DUCK}') AS hour,
+       strftime(date_trunc('hour', ts), '{TS_FMT_DUCK}') AS hour,
        CAST(GROUPING(strftime(date_trunc('day', ts), '%Y-%m-%d'),
-                     strftime(date_trunc('hour', ts), '{_TS_FMT_DUCK}')) AS BIGINT)
+                     strftime(date_trunc('hour', ts), '{TS_FMT_DUCK}')) AS BIGINT)
          AS grain,
        COUNT(*) AS n_events,
        COUNT(DISTINCT user_id) AS n_users,
@@ -1216,7 +1214,7 @@ def rate_anomaly(t: dict[str, DataFrame]) -> DataFrame:
     ).cast("decimal(38,0)")
     return scored.select(
         "event_type",
-        F.date_format("h", _TS_FMT).alias("window_start"),
+        F.date_format("h", TS_FMT).alias("window_start"),
         F.col("n").cast("bigint").alias("n_events"),
         F.col("base_cnt").cast("int").alias("base_cnt"),
         F.col("base_sum").cast("bigint").alias("base_sum"),
@@ -1259,7 +1257,7 @@ scored AS (
                ROWS BETWEEN {RATE_BASELINE_HOURS} PRECEDING AND 1 PRECEDING)
 )
 SELECT event_type,
-       strftime(h, '{_TS_FMT_DUCK}') AS window_start,
+       strftime(h, '{TS_FMT_DUCK}') AS window_start,
        CAST(n AS BIGINT) AS n_events,
        CAST(base_cnt AS INT) AS base_cnt,
        CAST(base_sum AS BIGINT) AS base_sum,

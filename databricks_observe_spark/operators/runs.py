@@ -27,13 +27,11 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from databricks_observe_spark.memo import memo
 from databricks_observe_spark.sources.catalog_model import oracle_with_clause
-
-_TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
-_TS_FMT_DUCK = "%Y-%m-%d %H:%M:%S.%f"
+from databricks_observe_spark.sources.tables import TS_FMT, TS_FMT_DUCK
 
 
 def _ts_str(col: str = "ts") -> F.Column:
-    return F.date_format(F.col(col), _TS_FMT)
+    return F.date_format(F.col(col), TS_FMT)
 
 
 def latest_update_per_entity(t: dict[str, DataFrame]) -> DataFrame:
@@ -57,7 +55,7 @@ def latest_update_per_entity(t: dict[str, DataFrame]) -> DataFrame:
 
 LATEST_UPDATE_PER_ENTITY_SQL = oracle_with_clause("updates") + f"""
 SELECT entity_type, entity_id, update_id, state,
-       strftime(ts, '{_TS_FMT_DUCK}') AS ts
+       strftime(ts, '{TS_FMT_DUCK}') AS ts
 FROM (
   SELECT *, ROW_NUMBER() OVER (PARTITION BY entity_type, entity_id
                                ORDER BY ts DESC, event_id DESC) AS rn
@@ -93,7 +91,7 @@ def state_transitions(t: dict[str, DataFrame]) -> DataFrame:
 
 
 STATE_TRANSITIONS_SQL = oracle_with_clause("updates") + f"""
-SELECT entity_type, entity_id, update_id, strftime(ts, '{_TS_FMT_DUCK}') AS ts
+SELECT entity_type, entity_id, update_id, strftime(ts, '{TS_FMT_DUCK}') AS ts
 FROM (
   SELECT *, LAG(state) OVER (PARTITION BY entity_type, entity_id, update_id
                              ORDER BY ts, event_id) AS prev_state
@@ -119,7 +117,7 @@ def first_completed(t: dict[str, DataFrame]) -> DataFrame:
             "entity_type",
             "entity_id",
             "update_id",
-            F.date_format("completed_ts_raw", _TS_FMT).alias("completed_ts"),
+            F.date_format("completed_ts_raw", TS_FMT).alias("completed_ts"),
             "n_polls",
         )
     )
@@ -127,7 +125,7 @@ def first_completed(t: dict[str, DataFrame]) -> DataFrame:
 
 FIRST_COMPLETED_SQL = oracle_with_clause("updates") + f"""
 SELECT entity_type, entity_id, update_id,
-       strftime(MIN(ts), '{_TS_FMT_DUCK}') AS completed_ts,
+       strftime(MIN(ts), '{TS_FMT_DUCK}') AS completed_ts,
        COUNT(*) AS n_polls
 FROM updates
 WHERE state = 'COMPLETED'
@@ -164,7 +162,7 @@ def asof_last_error_before_purchase(t: dict[str, DataFrame]) -> DataFrame:
             "event_id",
             "user_id",
             _ts_str().alias("purchase_ts"),
-            F.date_format("last_error_ts_raw", _TS_FMT).alias("last_error_ts"),
+            F.date_format("last_error_ts_raw", TS_FMT).alias("last_error_ts"),
             (
                 F.unix_timestamp(F.col("ts")) - F.unix_timestamp(F.col("last_error_ts_raw"))
             ).alias("secs_since_error"),
@@ -174,8 +172,8 @@ def asof_last_error_before_purchase(t: dict[str, DataFrame]) -> DataFrame:
 
 ASOF_LAST_ERROR_SQL = f"""
 SELECT p.event_id, p.user_id,
-       strftime(p.ts, '{_TS_FMT_DUCK}') AS purchase_ts,
-       strftime(e.ts, '{_TS_FMT_DUCK}') AS last_error_ts,
+       strftime(p.ts, '{TS_FMT_DUCK}') AS purchase_ts,
+       strftime(e.ts, '{TS_FMT_DUCK}') AS last_error_ts,
        CAST(date_diff('second', e.ts, p.ts) AS BIGINT) AS secs_since_error
 FROM (SELECT * FROM events WHERE event_type = 'purchase') p
 ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'error') e
@@ -225,7 +223,7 @@ def signup_purchase_window(t: dict[str, DataFrame]) -> DataFrame:
 
 SIGNUP_PURCHASE_WINDOW_SQL = f"""
 SELECT s.event_id, s.user_id,
-       strftime(s.ts, '{_TS_FMT_DUCK}') AS signup_ts,
+       strftime(s.ts, '{TS_FMT_DUCK}') AS signup_ts,
        COUNT(p.ts) AS n_purchases,
        COALESCE(CAST(SUM(CAST(p.value AS DECIMAL(18,2))) AS DOUBLE), 0.0) AS purchase_value
 FROM (SELECT * FROM events WHERE event_type = 'signup') s
@@ -355,8 +353,8 @@ def scd2_history(t: dict[str, DataFrame]) -> DataFrame:
         "entity_id",
         F.col("version").cast("int").alias("version"),
         "state",
-        F.date_format("from_raw", _TS_FMT).alias("valid_from"),
-        F.date_format(F.lead("from_raw").over(w2), _TS_FMT).alias("valid_to"),
+        F.date_format("from_raw", TS_FMT).alias("valid_from"),
+        F.date_format(F.lead("from_raw").over(w2), TS_FMT).alias("valid_to"),
         F.lead("from_raw").over(w2).isNull().alias("is_current"),
         "n_polls",
     )
@@ -380,8 +378,8 @@ SCD2_HISTORY_SQL = oracle_with_clause("updates") + f"""
   FROM numbered GROUP BY 1, 2, 3
 )
 SELECT entity_type, entity_id, CAST(version AS INT) AS version, state,
-       strftime(from_raw, '{_TS_FMT_DUCK}') AS valid_from,
-       strftime(LEAD(from_raw) OVER w2, '{_TS_FMT_DUCK}') AS valid_to,
+       strftime(from_raw, '{TS_FMT_DUCK}') AS valid_from,
+       strftime(LEAD(from_raw) OVER w2, '{TS_FMT_DUCK}') AS valid_to,
        LEAD(from_raw) OVER w2 IS NULL AS is_current,
        n_polls
 FROM iv

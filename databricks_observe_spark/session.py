@@ -47,7 +47,7 @@ def ensure_conf(spark: SparkSession) -> SparkSession:
     # and AQE never touches it — the vanilla default of 200 means 200
     # state commits per micro-batch on a 32-core box. Lift ONLY the
     # vanilla default: an explicit caller pin (e.g. the streaming
-    # harness's _stream_confs, which applies before the stream maker
+    # harness's _stream_confs, which applies before stream_parquet
     # re-runs ensure_conf) must win, not be stomped back to 32.
     try:
         if spark.conf.get("spark.sql.shuffle.partitions", "200") == "200":

@@ -149,15 +149,12 @@ def build_setup_indexes(spark, ctx, sf_dir: str) -> None:
         stream_events,
     )
 
-    def empty_stream(spark, sf_dir, checkpoint_dir, out_table):
-        return (
-            stream_events(spark, sf_dir)
-            .where(F.lit(False))
-            .writeStream.format("memory")
-            .queryName(out_table)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-
-    _run_to_exhaustion(spark, sf_dir, "setup_warmup", empty_stream, lambda t: t)
+    _run_to_exhaustion(
+        spark,
+        sf_dir,
+        "setup_warmup",
+        lambda spark, sf_dir: stream_events(spark, sf_dir).where(F.lit(False)),
+        lambda t: t,
+        None,
+        "append",
+    )

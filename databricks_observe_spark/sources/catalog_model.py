@@ -16,8 +16,9 @@ truth**: the literal rows below are rendered both to Spark DataFrames
 (:func:`catalog_frames`) and to DuckDB ``VALUES`` CTE SQL
 (:func:`oracle_with_clause`), so the correctness oracle can never drift from
 the engine. The ``updates`` stream is *derived* from the ``events`` fixture by
-a pure column mapping (also rendered to both engines) so it scales with the
-scale factor instead of being a fixed literal.
+a pure column mapping (:func:`updates_of`, for the batch view and the stream
+alike, and its DuckDB twin) so it scales with the scale factor instead of
+being a fixed literal.
 """
 
 from __future__ import annotations
@@ -225,17 +226,20 @@ UPDATES_STATE_CASE = (
     "WHEN 'click' THEN 'RUNNING' WHEN 'view' THEN 'WAITING' ELSE 'FAILED' END"
 )
 
-UPDATES_SQL_SPARK = f"""
-SELECT
-  CASE WHEN user_id % 2 = 0 THEN 'pipeline' ELSE 'job' END AS entity_type,
-  CASE WHEN user_id % 2 = 0 THEN concat('pl-00', CAST(1 + ((user_id % 8) div 2) AS STRING))
-       ELSE CAST(101 + ((user_id % 6) div 2) AS STRING) END AS entity_id,
-  concat('u', CAST(event_id % 211 AS STRING)) AS update_id,
-  {UPDATES_STATE_CASE} AS state,
-  ts,
-  event_id
-FROM events
-"""
+
+def updates_of(events: DataFrame) -> DataFrame:
+    """The events -> updates mapping, for the batch ``updates`` view and
+    the completion stream alike; ``UPDATES_SQL_DUCKDB`` is its oracle."""
+    return events.selectExpr(
+        "CASE WHEN user_id % 2 = 0 THEN 'pipeline' ELSE 'job' END AS entity_type",
+        "CASE WHEN user_id % 2 = 0 THEN concat('pl-00', CAST(1 + ((user_id % 8) div 2) AS STRING))"
+        " ELSE CAST(101 + ((user_id % 6) div 2) AS STRING) END AS entity_id",
+        "concat('u', CAST(event_id % 211 AS STRING)) AS update_id",
+        f"{UPDATES_STATE_CASE} AS state",
+        "ts",
+        "event_id",
+    )
+
 
 UPDATES_SQL_DUCKDB = f"""
 SELECT
@@ -321,7 +325,7 @@ def catalog_frames(spark: SparkSession) -> dict[str, DataFrame]:
         df = spark.sql(spark_values_sql(name))
         df.createOrReplaceTempView(name)
         out[name] = df
-    updates = spark.sql(UPDATES_SQL_SPARK)
+    updates = updates_of(spark.table("events"))
     updates.createOrReplaceTempView("updates")
     out["updates"] = updates
     # catalog_objects: the SHOW CATALOGS/SCHEMAS/TABLES triple loop (S1-S3)

@@ -11,7 +11,7 @@ default. ``events.ts``'s physical parquet type has varied across fixture
 re-materializations (TIMESTAMP(NANOS) read as long, TIMESTAMP(MICROS) read
 as TIMESTAMP_NTZ) — we DETECT the layout and normalize to Spark's
 microsecond TIMESTAMP once at load so window/session operators and the
-DuckDB oracle agree (SURVEY.md §7 hard part 4; VERDICT r02 item 1).
+DuckDB oracle agree (SURVEY.md §7 hard part 4).
 """
 
 from __future__ import annotations
@@ -45,6 +45,11 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # DATATYPE_MISMATCH deep inside a query plan.
 _EVENTS_TS_TYPES = ("bigint", "timestamp", "timestamp_ntz")
 
+# The text form of every timestamp a query returns, in Spark's and in
+# DuckDB's spelling: both render microseconds, so the oracle hashes match.
+TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
+TS_FMT_DUCK = "%Y-%m-%d %H:%M:%S.%f"
+
 
 def normalize_events_ts(df: DataFrame) -> DataFrame:
     """Normalize ``events.ts`` to Spark's microsecond TIMESTAMP regardless of
@@ -72,7 +77,7 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
 
 def check_fixture_contract(tables: dict[str, DataFrame]) -> None:
     """Fail fast, with named messages, if a re-materialized fixture carries a
-    physical type the engine's operators don't expect (VERDICT r02 item 2)."""
+    physical type the engine's operators don't expect."""
     problems: list[str] = []
     ts_type = dict(tables["events"].dtypes).get("ts")
     if ts_type != "timestamp":

@@ -12,6 +12,10 @@ Reference behavior being rebuilt (SURVEY.md §2.7):
 - ST3: cron cadences -> ``trigger(processingTime=...)``; tests use
   ``availableNow`` for determinism.
 
+One harness: each ``*_stream`` builder returns a streaming DataFrame over
+``stream_parquet``, the one file source; ``start_memory`` is the one
+memory sink, and ``_run_to_exhaustion`` starts every availableNow run.
+
 Scale stance: state is keyed by (entity_type, entity_id, update_id) — bounded by live
 updates, not event volume — and the watermark lets Spark evict keys older
 than the lateness bound, so state size is O(active updates), which is what
@@ -36,7 +40,12 @@ from databricks_observe_spark.functions.rounding import (
 )
 from databricks_observe_spark.memo import memo
 from databricks_observe_spark.session import ensure_conf
-from databricks_observe_spark.sources.tables import normalize_events_ts
+from databricks_observe_spark.sources.catalog_model import updates_of
+from databricks_observe_spark.sources.tables import (
+    TS_FMT,
+    TS_FMT_DUCK,
+    normalize_events_ts,
+)
 
 TERMINAL_STATE = "COMPLETED"  # dlt_sensor.py:6
 WATERMARK = "1 hour"
@@ -49,64 +58,42 @@ WATERMARK = "1 hour"
 _SCHEMA_CACHE: dict[tuple[str, str], object] = {}
 
 
-def stream_events(
-    spark: SparkSession, sf_dir: str, glob: str = "events.parquet"
-) -> DataFrame:
-    """File-source stream over the events fixture (stands in for the REST
-    polling feed).
+def stream_parquet(spark: SparkSession, sf_dir: str, glob: str) -> DataFrame:
+    """File-source stream over the fixture files in ``sf_dir`` matching
+    ``glob`` (stands in for the REST polling feed).
 
-    The reader schema is DETECTED from a batch read of the same file rather
-    than hardcoded: a streaming file source silently coerces data to a wrong
-    declared schema (VERDICT r02 item 2 — a hardcoded ``ts bigint`` over
+    The reader schema is DETECTED from a batch read of the same files
+    rather than hardcoded: a streaming file source silently coerces data
+    to a wrong declared schema (a hardcoded ``ts bigint`` over
     micros-timestamp parquet produced garbage epochs and silently-wrong
-    windows, not an error). ts is then normalized by the exact same
-    dtype-conditional rule as the batch loader, so batch ts == stream ts by
-    construction (pinned by tests/test_streaming.py's parity test).
-    """
+    windows, not an error)."""
     ensure_conf(spark)
     schema = memo(
         _SCHEMA_CACHE,
         (sf_dir, glob),
         lambda: spark.read.parquet(os.path.join(sf_dir, glob)).schema,
     )
-    raw = (
+    return (
         spark.readStream.schema(schema)
         .format("parquet")
         .option("pathGlobFilter", glob)  # file sources want a dir
         .load(sf_dir)
     )
-    return normalize_events_ts(raw)
 
 
-def stream_updates(events: DataFrame) -> DataFrame:
-    """The same events->updates column mapping as the batch catalog model
-    (sources/catalog_model.py) — identical semantics, streaming plan."""
-    return events.select(
-        F.expr("CASE WHEN user_id % 2 = 0 THEN 'pipeline' ELSE 'job' END").alias(
-            "entity_type"
-        ),
-        F.expr(
-            "CASE WHEN user_id % 2 = 0 THEN concat('pl-00', CAST(1 + ((user_id % 8) div 2) AS STRING)) "
-            "ELSE CAST(101 + ((user_id % 6) div 2) AS STRING) END"
-        ).alias("entity_id"),
-        F.concat(F.lit("u"), (F.col("event_id") % 211).cast("string")).alias("update_id"),
-        F.expr(
-            "CASE event_type WHEN 'purchase' THEN 'COMPLETED' WHEN 'signup' THEN 'COMPLETED' "
-            "WHEN 'click' THEN 'RUNNING' WHEN 'view' THEN 'WAITING' ELSE 'FAILED' END"
-        ).alias("state"),
-        "ts",
-    )
+def stream_events(
+    spark: SparkSession, sf_dir: str, glob: str = "events.parquet"
+) -> DataFrame:
+    """The events stream, its ts normalized by the exact same
+    dtype-conditional rule as the batch loader, so batch ts == stream ts
+    by construction (pinned by tests/test_fixture_contract.py's parity
+    test)."""
+    return normalize_events_ts(stream_parquet(spark, sf_dir, glob))
 
 
-def first_completed_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    checkpoint_dir: str,
-    out_table: str,
-    glob: str = "events.parquet",
-) -> StreamingQuery:
-    """ST2 as a stream: emit each (entity, update) at most once on
-    COMPLETED, exactly the sensor-cursor dedup (dlt_sensor.py:23-41).
+def completed_updates(spark: SparkSession, sf_dir: str, glob: str) -> DataFrame:
+    """ST2's cursor dedup: each (entity, update) once, on its first
+    COMPLETED poll (dlt_sensor.py:23-41).
 
     - ``dropDuplicatesWithinWatermark`` state == the cursor map; the
       checkpoint == the persisted cursor JSON (dlt_sensor.py:43-46).
@@ -117,48 +104,37 @@ def first_completed_stream(
       assumed impossible upstream (the sensor polls at >=60 s,
       dlt_sensor.py:8) — that assumption is exactly what makes
       within-watermark dedup equivalent to the reference cursor.
-    - idempotent restart: rerunning over the same files + checkpoint emits
-      nothing new (at-most-once emission, ST4).
     """
-    updates = stream_updates(stream_events(spark, sf_dir, glob))
-    completed = (
+    updates = updates_of(stream_events(spark, sf_dir, glob)).drop("event_id")
+    return (
         updates.filter(F.col("state") == TERMINAL_STATE)
         .withWatermark("ts", WATERMARK)
         # FULL entity identity in the dedup key: the reference cursor is
         # "pid:uid" PER SENSOR TYPE — keying on entity_id alone would
         # suppress a job completion whenever a pipeline shares its id
         .dropDuplicatesWithinWatermark(["entity_type", "entity_id", "update_id"])
-        .select("entity_type", "entity_id", "update_id", "ts")
-    )
-    return (
-        completed.writeStream.format("memory")
-        .queryName(out_table)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
 
 
-def tumbling_counts_stream(
-    spark: SparkSession, sf_dir: str, checkpoint_dir: str, out_table: str
-) -> StreamingQuery:
+def first_completed_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ST2 as a stream: emit each (entity, update) at most once on
+    COMPLETED, exactly the sensor-cursor dedup (``completed_updates``).
+    Idempotent restart: rerunning over the same files + checkpoint emits
+    nothing new (at-most-once emission, ST4)."""
+    return completed_updates(spark, sf_dir, "events.parquet").select(
+        "entity_type", "entity_id", "update_id", "ts"
+    )
+
+
+def tumbling_counts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked tumbling 1-hour counts per event type — the streaming
     twin of operators/events.py:tumbling_hourly (identical window exprs)."""
-    events = stream_events(spark, sf_dir)
-    counts = (
-        events.withWatermark("ts", WATERMARK)
+    return (
+        stream_events(spark, sf_dir)
+        .withWatermark("ts", WATERMARK)
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(F.col("w.start").alias("window_start"), "event_type", "n_events")
-    )
-    return (
-        counts.writeStream.format("memory")
-        .queryName(out_table)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
 
 
@@ -205,17 +181,35 @@ def _stream_confs(spark: SparkSession, extra: dict[str, str] | None = None):
 _NO_DATA_BATCHES_OFF = {"spark.sql.streaming.noDataMicroBatches.enabled": "false"}
 
 
+def start_memory(
+    frame: DataFrame, checkpoint_dir: str, out_table: str, mode: str
+) -> StreamingQuery:
+    """Start ``frame`` as an availableNow run into the memory table
+    ``out_table`` in output mode ``mode``, checkpointed at
+    ``checkpoint_dir``."""
+    return (
+        frame.writeStream.format("memory")
+        .queryName(out_table)
+        .outputMode(mode)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def _run_to_exhaustion(
     spark: SparkSession,
     sf_dir: str,
     query: str,
-    stream: Callable[[SparkSession, str, str, str], StreamingQuery],
+    stream: Callable[[SparkSession, str], DataFrame],
     finish: Callable[[DataFrame], DataFrame],
-    confs: dict[str, str] | None = None,
+    confs: dict[str, str] | None,
+    mode: str,
 ) -> DataFrame:
-    """Run the availableNow stream ``stream(spark, sf_dir, checkpoint_dir,
-    out_table)`` to its end under ``_stream_confs(spark, confs)`` and
-    return ``finish(spark.table(out_table))``.
+    """Build ``stream(spark, sf_dir)`` and run it to its end into a memory
+    sink in output mode ``mode``, under ``_stream_confs(spark, confs)``;
+    return ``finish(spark.table(out_table))``. Every stream the engine
+    runs to exhaustion starts here.
 
     The result is built before the memory sink's temp view is dropped (a
     built DataFrame holds the sink itself, not the view name), and the
@@ -225,7 +219,7 @@ def _run_to_exhaustion(
     ckpt = tempfile.mkdtemp(prefix=f"ckpt_{query}_")
     try:
         with _stream_confs(spark, confs):
-            q = stream(spark, sf_dir, ckpt, name)
+            q = start_memory(stream(spark, sf_dir), ckpt, name, mode)
         if not q.awaitTermination(300):
             q.stop()
             raise TimeoutError(
@@ -254,6 +248,7 @@ def streaming_first_completed_query(spark: SparkSession, sf_dir: str) -> DataFra
         first_completed_stream,
         lambda t: t.select("entity_type", "entity_id", "update_id").distinct(),
         _NO_DATA_BATCHES_OFF,
+        "append",
     )
 
 
@@ -281,18 +276,18 @@ def streaming_tumbling_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         "streaming_tumbling",
         tumbling_counts_stream,
         lambda t: t.select(
-            F.date_format("window_start", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias(
-                "window_start"
-            ),
+            F.date_format("window_start", TS_FMT).alias("window_start"),
             "event_type",
             "n_events",
         ),
+        None,
+        "append",
     )
 
 
-STREAMING_TUMBLING_SQL = """
+STREAMING_TUMBLING_SQL = f"""
 WITH m AS (SELECT MAX(ts) AS maxts FROM events)
-SELECT strftime(time_bucket(INTERVAL 1 HOUR, ts), '%Y-%m-%d %H:%M:%S.%f') AS window_start,
+SELECT strftime(time_bucket(INTERVAL 1 HOUR, ts), '{TS_FMT_DUCK}') AS window_start,
        event_type,
        COUNT(*) AS n_events
 FROM events, m
@@ -304,9 +299,7 @@ HAVING time_bucket(INTERVAL 1 HOUR, ts) + INTERVAL 1 HOUR <= maxts - INTERVAL 1 
 ATTRIB_WINDOW = "2 hours"  # click lookback per purchase
 
 
-def click_attribution_stream(
-    spark: SparkSession, sf_dir: str, checkpoint_dir: str, out_table: str
-) -> StreamingQuery:
+def click_attribution_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream interval join: each purchase matched to the same
     user's clicks in the preceding 2 hours — last-touch attribution as a
     continuous pipeline.
@@ -337,7 +330,7 @@ def click_attribution_stream(
         )
         .withWatermark("p_ts", WATERMARK)
     )
-    joined = purchases.join(
+    return purchases.join(
         clicks,
         F.expr(
             f"p_user = c_user AND c_ts >= p_ts - INTERVAL {ATTRIB_WINDOW}"
@@ -348,14 +341,6 @@ def click_attribution_stream(
         "click_id",
         F.col("p_user").alias("user_id"),
         (F.unix_micros("p_ts") - F.unix_micros("c_ts")).alias("gap_us"),
-    )
-    return (
-        joined.writeStream.format("memory")
-        .queryName(out_table)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
 
 
@@ -376,6 +361,7 @@ def streaming_click_attribution_query(
         click_attribution_stream,
         lambda t: t,
         _NO_DATA_BATCHES_OFF,
+        "append",
     )
 
 
@@ -392,9 +378,7 @@ FROM events p JOIN events c
 SESSION_GAP_S = 2 * 3600  # matches operators/events.py:user_sessions
 
 
-def sessionize_stream(
-    spark: SparkSession, sf_dir: str, checkpoint_dir: str, out_table: str
-) -> StreamingQuery:
+def sessionize_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom stateful operator: per-user sessionization via
     ``applyInPandasWithState`` — the arbitrary-state API the reference's
     cursor map would need if its state didn't fit ``dropDuplicates``.
@@ -461,20 +445,12 @@ def sessionize_stream(
                 }
             )
 
-    sessions = events.groupBy("user_id").applyInPandasWithState(
+    return events.groupBy("user_id").applyInPandasWithState(
         fold,
         outputStructType=out_schema,
         stateStructType=state_schema,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    return (
-        sessions.writeStream.format("memory")
-        .queryName(out_table)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
 
 
@@ -486,16 +462,8 @@ def transition_log_stream(
     glob: str = "events.parquet",
 ) -> StreamingQuery:
     """K2-style materialization sink: append the exactly-once completion
-    log to partitioned parquet via foreachBatch (idempotent by batchId)."""
-    updates = stream_updates(stream_events(spark, sf_dir, glob))
-    completed = (
-        updates.filter(F.col("state") == TERMINAL_STATE)
-        .withWatermark("ts", WATERMARK)
-        # FULL entity identity in the dedup key: the reference cursor is
-        # "pid:uid" PER SENSOR TYPE — keying on entity_id alone would
-        # suppress a job completion whenever a pipeline shares its id
-        .dropDuplicatesWithinWatermark(["entity_type", "entity_id", "update_id"])
-    )
+    log (``completed_updates``) to partitioned parquet via foreachBatch
+    (idempotent by batchId)."""
 
     def write_batch(df: DataFrame, batch_id: int) -> None:
         # idempotent on replay: dynamic partition overwrite keyed by
@@ -512,11 +480,22 @@ def transition_log_stream(
         )
 
     return (
-        completed.writeStream.foreachBatch(write_batch)
+        completed_updates(spark, sf_dir, glob)
+        .writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
     )
+
+
+_SESSIONIZE_CONFS = {
+    **_NO_DATA_BATCHES_OFF,
+    # unlike the JVM-state harnesses (fewer stores = faster), the Pandas
+    # fold is PYTHON-bound: partitions here set Arrow worker parallelism.
+    # Measured sweep at sf0.1: 4 -> 2.3 s, 8 -> 1.8 s, 16 -> 1.4 s,
+    # 32 -> 1.6 s.
+    "spark.sql.shuffle.partitions": "16",
+}
 
 
 def streaming_sessionize_query(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -541,20 +520,12 @@ def streaming_sessionize_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         sessionize_stream,
         lambda t: t.select(
             "user_id",
-            F.date_format("session_start", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias(
-                "session_start"
-            ),
+            F.date_format("session_start", TS_FMT).alias("session_start"),
             "n_events",
             round_half_up("sum_value", 2).alias("sum_value"),
         ),
-        {
-            **_NO_DATA_BATCHES_OFF,
-            # unlike the JVM-state harnesses (fewer stores = faster), the
-            # Pandas fold is PYTHON-bound: partitions here set Arrow
-            # worker parallelism. Measured sweep at sf0.1: 4 -> 2.3 s,
-            # 8 -> 1.8 s, 16 -> 1.4 s, 32 -> 1.6 s.
-            "spark.sql.shuffle.partitions": "16",
-        },
+        _SESSIONIZE_CONFS,
+        "append",
     )
 
 
@@ -574,7 +545,7 @@ sessions AS (
 ),
 agg AS (
   SELECT user_id, session_id,
-         strftime(MIN(ts), '%Y-%m-%d %H:%M:%S.%f') AS session_start,
+         strftime(MIN(ts), '{TS_FMT_DUCK}') AS session_start,
          COUNT(*) AS n_events,
          {sql_round_half_up('CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE)', 2)} AS sum_value
   FROM sessions GROUP BY user_id, session_id
@@ -588,9 +559,7 @@ QUALIFY session_id < MAX(session_id) OVER (PARTITION BY user_id)
 # --- streaming corpus-ingest dedup (exactly-once document acceptance) -------
 
 
-def corpus_dedup_stream(
-    spark: SparkSession, sf_dir: str, checkpoint_dir: str, out_table: str
-) -> StreamingQuery:
+def corpus_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming exact dedup of a document feed: each distinct text digest
     is accepted exactly once — the continuous form of
     operators/dedup.py:exact_dedup, i.e. the dedup gate a training-corpus
@@ -605,25 +574,10 @@ def corpus_dedup_stream(
     years later), so the seen-set is genuinely append-only — at scale you
     back it with RocksDB and size state parallelism by digest cardinality.
     """
-    ensure_conf(spark)
-    schema = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).schema
-    docs = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("pathGlobFilter", "documents.parquet")
-        .load(sf_dir)
-    )
-    accepted = (
-        docs.select(F.md5("text").alias("text_hash"))
-        .dropDuplicates(["text_hash"])
-    )
     return (
-        accepted.writeStream.format("memory")
-        .queryName(out_table)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        stream_parquet(spark, sf_dir, "documents.parquet")
+        .select(F.md5("text").alias("text_hash"))
+        .dropDuplicates(["text_hash"])
     )
 
 
@@ -641,6 +595,7 @@ def streaming_corpus_dedup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         corpus_dedup_stream,
         lambda t: t.select("text_hash").distinct(),
         _NO_DATA_BATCHES_OFF,
+        "append",
     )
 
 
@@ -649,9 +604,7 @@ SELECT DISTINCT md5(text) AS text_hash FROM documents
 """
 
 
-def drift_counts_stream(
-    spark: SparkSession, sf_dir: str, checkpoint_dir: str, out_table: str
-) -> StreamingQuery:
+def drift_counts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Complete-mode ``(event_type, bin)`` ref/cur histogram over the
     event stream — the continuously-maintained state a streaming drift
     monitor alarms from (the streaming home of
@@ -667,17 +620,7 @@ def drift_counts_stream(
         ref_cur_counts,
     )
 
-    counts = ref_cur_counts(
-        stream_events(spark, sf_dir), DRIFT_BIN_WIDTH, DRIFT_N_BINS
-    )
-    return (
-        counts.writeStream.format("memory")
-        .queryName(out_table)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return ref_cur_counts(stream_events(spark, sf_dir), DRIFT_BIN_WIDTH, DRIFT_N_BINS)
 
 
 def streaming_drift_psi_query(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -700,4 +643,5 @@ def streaming_drift_psi_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         drift_counts_stream,
         lambda t: psi_from_counts(t.localCheckpoint()),
         _NO_DATA_BATCHES_OFF,
+        "complete",
     )

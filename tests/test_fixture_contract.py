@@ -20,7 +20,7 @@ from databricks_observe_spark.sources.tables import (
     load_tables,
     normalize_events_ts,
 )
-from databricks_observe_spark.streaming.state import stream_events
+from databricks_observe_spark.streaming.state import _run_to_exhaustion, stream_events
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -70,25 +70,20 @@ def test_normalize_events_ts_rejects_unknown_layout(spark):
 def test_batch_ts_equals_streaming_ts(spark, tables):
     """The streaming reader must see byte-identical timestamps to the batch
     loader on the same fixture — the r02 silent-garbage failure mode."""
-    import tempfile
-
     batch = tables["events"].agg(
         F.min("ts").alias("lo"), F.max("ts").alias("hi"), F.count("*").alias("n")
     ).collect()[0]
 
-    ckpt = tempfile.mkdtemp(prefix="ckpt_parity_")
-    q = (
-        stream_events(spark, SF_DIR)
-        .writeStream.format("memory")
-        .queryName("ts_parity_stream")
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120)
-    got = spark.table("ts_parity_stream").agg(
-        F.min("ts").alias("lo"), F.max("ts").alias("hi"), F.count("*").alias("n")
+    got = _run_to_exhaustion(
+        spark,
+        SF_DIR,
+        "ts_parity",
+        stream_events,
+        lambda t: t.agg(
+            F.min("ts").alias("lo"), F.max("ts").alias("hi"), F.count("*").alias("n")
+        ),
+        None,
+        "append",
     ).collect()[0]
     assert (got.lo, got.hi, got.n) == (batch.lo, batch.hi, batch.n)
 

@@ -1,6 +1,8 @@
 from __future__ import annotations
 
+import ast
 import tempfile
+from pathlib import Path
 
 from pyspark.sql import functions as F
 
@@ -8,16 +10,28 @@ from databricks_observe_spark.operators.runs import first_completed
 from databricks_observe_spark.streaming import state as ST
 
 SF_DIR = "/root/testdata/sf0.001"
+PACKAGE = Path(__file__).resolve().parent.parent / "databricks_observe_spark"
+# stream attribute -> the (module, top-level function) pairs that may use it
+STREAM_IO = {
+    "writeStream": {
+        ("streaming/state.py", "start_memory"),
+        ("streaming/state.py", "transition_log_stream"),
+    },
+    "readStream": {("streaming/state.py", "stream_parquet")},
+}
+
+
+def _exhaust(spark, stream, confs):
+    """Run ``stream`` to exhaustion the way the registry's queries do, and
+    return its raw memory-sink rows."""
+    return ST._run_to_exhaustion(
+        spark, SF_DIR, "test_stream", stream, lambda t: t, confs, "append"
+    ).collect()
 
 
 def test_first_completed_stream_matches_batch(spark, tables):
-    ckpt = tempfile.mkdtemp(prefix="ckpt_fc_")
-    q = ST.first_completed_stream(spark, SF_DIR, ckpt, "fc_stream")
-    q.awaitTermination(120)
-    got = {
-        (r.entity_id, r.update_id)
-        for r in spark.sql("SELECT * FROM fc_stream").collect()
-    }
+    rows = _exhaust(spark, ST.first_completed_stream, ST._NO_DATA_BATCHES_OFF)
+    got = {(r.entity_id, r.update_id) for r in rows}
     expected = {
         (r.entity_id, r.update_id) for r in first_completed(tables).collect()
     }
@@ -28,12 +42,9 @@ def test_first_completed_stream_matches_batch(spark, tables):
 
 
 def test_tumbling_stream_matches_batch(spark, tables):
-    ckpt = tempfile.mkdtemp(prefix="ckpt_tw_")
-    q = ST.tumbling_counts_stream(spark, SF_DIR, ckpt, "tw_stream")
-    q.awaitTermination(120)
     got = {
         (r.window_start, r.event_type): r.n_events
-        for r in spark.sql("SELECT * FROM tw_stream").collect()
+        for r in _exhaust(spark, ST.tumbling_counts_stream, None)
     }
     batch = (
         tables["events"]
@@ -50,9 +61,9 @@ def test_tumbling_stream_matches_batch(spark, tables):
         assert expected[k] == v
 
 
-def test_transition_log_sink_exactly_once_across_restart(spark):
-    ckpt = tempfile.mkdtemp(prefix="ckpt_log_")
-    out = tempfile.mkdtemp(prefix="translog_") + "/log"
+def test_transition_log_sink_exactly_once_across_restart(spark, tmp_path):
+    ckpt = str(tmp_path / "ck")
+    out = str(tmp_path / "log")
     q = ST.transition_log_stream(spark, SF_DIR, ckpt, out)
     q.awaitTermination(120)
     df = spark.read.parquet(out)
@@ -72,19 +83,14 @@ def test_transition_log_sink_exactly_once_across_restart(spark):
 
 
 def test_sessionize_stream_custom_state(spark, tables):
-    import tempfile as _tf
-
     from databricks_observe_spark.operators.events import user_sessions
 
-    ckpt = _tf.mkdtemp(prefix="ckpt_sess_")
-    q = ST.sessionize_stream(spark, SF_DIR, ckpt, "sess_stream")
-    q.awaitTermination(180)
     got = {
         (r.user_id, r.session_start.strftime("%Y-%m-%d %H:%M:%S.%f")): (
             r.n_events,
             round(r.sum_value, 2),
         )
-        for r in spark.sql("SELECT * FROM sess_stream").collect()
+        for r in _exhaust(spark, ST.sessionize_stream, ST._SESSIONIZE_CONFS)
     }
     batch = {
         (r.user_id, r.session_start): (r.n_events, round(r.sum_value, 2))
@@ -203,12 +209,11 @@ def test_click_attribution_stream_matches_batch(spark, tables):
     """Inner stream-stream interval joins emit on match (no watermark
     hold), so the availableNow run must equal the batch interval join
     row-for-row."""
-    ckpt = tempfile.mkdtemp(prefix="ckpt_ca_")
-    q = ST.click_attribution_stream(spark, SF_DIR, ckpt, "ca_stream")
-    assert q.awaitTermination(120)
     got = {
         (r.purchase_id, r.click_id, r.user_id, r.gap_us)
-        for r in spark.sql("SELECT * FROM ca_stream").collect()
+        for r in _exhaust(
+            spark, ST.click_attribution_stream, ST._NO_DATA_BATCHES_OFF
+        )
     }
     ev = tables["events"]
     p = ev.filter(F.col("event_type") == "purchase").select(
@@ -251,7 +256,9 @@ def test_corpus_dedup_stream_exactly_once(spark, tables):
     assert got == want and len(got) > 0
 
 
-def test_streaming_drift_psi_matches_batch_and_recovers_state(spark, tables):
+def test_streaming_drift_psi_matches_batch_and_recovers_state(
+    spark, tables, tmp_path
+):
     """The streaming monitor must equal the batch operator row-for-row
     (same bins, same integer PSI units, same oracle by construction),
     and a restart against the same checkpoint with no new data must
@@ -267,18 +274,18 @@ def test_streaming_drift_psi_matches_batch_and_recovers_state(spark, tables):
     # checkpoint recovery: run the SAME histogram stream twice against
     # one checkpoint dir; the second availableNow run sees no new files
     # and must re-emit exactly the maintained state, not double-count
-    ckpt = tempfile.mkdtemp(prefix="ckpt_dp_replay_")
+    ckpt = str(tmp_path / "ck")
     n1 = f"dp_r1_{uuid.uuid4().hex[:6]}"
     n2 = f"dp_r2_{uuid.uuid4().hex[:6]}"
-    with ST._stream_confs(
-        spark, {"spark.sql.streaming.noDataMicroBatches.enabled": "false"}
-    ):
-        q = ST.drift_counts_stream(spark, SF_DIR, ckpt, n1)
+    with ST._stream_confs(spark, ST._NO_DATA_BATCHES_OFF):
+        q = ST.start_memory(ST.drift_counts_stream(spark, SF_DIR), ckpt, n1, "complete")
         q.awaitTermination(120)
-        q = ST.drift_counts_stream(spark, SF_DIR, ckpt, n2)
+        q = ST.start_memory(ST.drift_counts_stream(spark, SF_DIR), ckpt, n2, "complete")
         q.awaitTermination(120)
     first = {tuple(r) for r in spark.table(n1).collect()}
     second = {tuple(r) for r in spark.table(n2).collect()}
+    spark.catalog.dropTempView(n1)
+    spark.catalog.dropTempView(n2)
     # a restart with no new data re-emits the recovered state (complete
     # mode) or emits nothing if the no-op batch is skipped — either way
     # it must never double-count
@@ -331,3 +338,73 @@ def test_setup_warmup_stream_leaves_no_view_or_checkpoint(spark, tables, monkeyp
     setup_phase.build_setup_indexes(spark, tables, SF_DIR)
     setup_phase.build_setup_indexes(spark, tables, SF_DIR)
     assert footprint() == before
+
+
+def stream_io_sites(tree: ast.Module) -> list[tuple[str, int, str]]:
+    """(attribute, line, top-level scope) of every ``.writeStream`` and
+    ``.readStream`` access."""
+    hits = []
+    for stmt in tree.body:
+        scope = getattr(stmt, "name", "<module>")
+        for node in ast.walk(stmt):
+            if isinstance(node, ast.Attribute) and node.attr in STREAM_IO:
+                hits.append((node.attr, node.lineno, scope))
+    return hits
+
+
+def stray_stream_io(package: Path) -> list[str]:
+    """Every stream sink or source started outside the harness."""
+    stray = []
+    for path in sorted(package.rglob("*.py")):
+        rel = path.relative_to(package).as_posix()
+        for attr, line, scope in stream_io_sites(ast.parse(path.read_text())):
+            if (rel, scope) not in STREAM_IO[attr]:
+                stray.append(f"{attr} {rel}:{line} ({scope})")
+    return stray
+
+
+def test_stream_io_only_in_harness():
+    sample = ast.parse(
+        "def f(df):\n    return df.writeStream.start()\nS = spark.readStream\n"
+    )
+    assert stream_io_sites(sample) == [
+        ("writeStream", 2, "f"),
+        ("readStream", 3, "<module>"),
+    ]
+    stray = stray_stream_io(PACKAGE)
+    assert stray == [], (
+        "start memory sinks with start_memory and file sources with "
+        "stream_parquet: " + ", ".join(stray)
+    )
+
+
+def test_warm_streaming_calls_read_no_footer(spark, tables, monkeypatch):
+    """Once each streaming query has run, a second call reads no Parquet
+    footer: every stream's reader schema comes from the memoized
+    detection in ``stream_parquet``."""
+    from pyspark.sql import DataFrameReader
+
+    from databricks_observe_spark import registry
+
+    streams = {
+        name: query
+        for name, query in registry.queries().items()
+        if name.startswith("streaming_")
+    }
+    assert len(streams) == 6
+    for query in streams.values():
+        query(spark, SF_DIR)
+
+    reads = dict.fromkeys(streams, 0)
+    current = [None]
+    parquet = DataFrameReader.parquet
+
+    def counting(self, *paths, **options):
+        reads[current[0]] += 1
+        return parquet(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", counting)
+    for name, query in streams.items():
+        current[0] = name
+        query(spark, SF_DIR)
+    assert reads == dict.fromkeys(streams, 0)
