@@ -462,7 +462,7 @@ FROM catalog_objects GROUP BY ROLLUP (catalog, schema)
 """
 
 
-def discovered_objects_live(spark, sf_dir: str, ensure: bool = True) -> DataFrame:
+def discovered_objects_live(spark, sf_dir: str) -> DataFrame:
     """S1-S3 against a LIVE session catalog (reference
     ``table_discovery.py:17-43``): enumerate actual catalog objects with
     ``SHOW`` statements instead of the fixture-derived ``catalog_objects``
@@ -479,11 +479,10 @@ def discovered_objects_live(spark, sf_dir: str, ensure: bool = True) -> DataFram
     the identical chain walks ``spark.catalog.listCatalogs()`` /
     ``SHOW SCHEMAS`` / ``SHOW TABLES`` — SHOW output is metastore-sized,
     so the frame stays broadcast-small at any corpus scale.
-    """
-    if ensure:  # registry passes ensure=False after its cached prepare()
-        from databricks_observe_spark.engine import prepare
 
-        prepare(spark, sf_dir)  # registers the global_temp views
+    The caller prepares the session first (the registry does);
+    ``sf_dir`` only completes the ``(spark, sf_dir)`` query signature.
+    """
     views = spark.sql("SHOW VIEWS IN global_temp").select(
         F.when(F.col("namespace") == "", F.lit(""))
         .otherwise(F.expr("current_catalog()"))

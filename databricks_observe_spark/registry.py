@@ -283,21 +283,21 @@ _REGISTRY: dict[str, tuple[Callable[[dict], DataFrame], str | None]] = {
         dedup.contamination_check,
         dedup.CONTAMINATION_CHECK_SQL,
     ),
-    # r8: the 100-TB Bloom-bitmap form of the eval anti-set — the oracle
+    # the 100-TB Bloom-bitmap form of the eval anti-set — the oracle
     # reproduces the filter's false positives exactly (salted-md5 bits)
     "bloom_contamination_check": (
         dedup.bloom_contamination_check,
         dedup.BLOOM_CONTAMINATION_CHECK_SQL,
     ),
-    # r8: rung 0 of the web-corpus dedup ladder — canonicalize the URL
+    # rung 0 of the web-corpus dedup ladder — canonicalize the URL
     # surface form before any content hashing
     "url_canonical_dedup": (
         dedup.url_canonical_dedup,
         dedup.URL_CANONICAL_DEDUP_SQL,
     ),
-    # r8: per-host crawl-health report off the same canonicalization chain
+    # per-host crawl-health report off the same canonicalization chain
     "url_host_stats": (dedup.url_host_stats, dedup.URL_HOST_STATS_SQL),
-    # r8: near-dup threshold sensitivity off the memoized exact pair table
+    # near-dup threshold sensitivity off the memoized exact pair table
     "dedup_threshold_sweep": (
         dedup.dedup_threshold_sweep,
         dedup.DEDUP_THRESHOLD_SWEEP_SQL,
@@ -370,12 +370,11 @@ _REGISTRY: dict[str, tuple[Callable[[dict], DataFrame], str | None]] = {
         text.DSIR_IMPORTANCE_WEIGHTS_SQL,
     ),
     # tie-aware Mann-Whitney AUC of the DSIR score vs the target-lang
-    # label (milli-grid grouping bounds the rank frame by construction);
-    # integer-only projection since r09 — auc_micro is an exact DECIMAL
-    # div, the double form was env-red in r07+r08 (see score_auc_parts)
+    # label (milli-grid grouping bounds the rank frame by construction;
+    # integer-only projection)
     "score_auc": (text.score_auc, text.SCORE_AUC_SQL),
-    # the r08-verdict localization companion: the same row MINUS the one
-    # derived column, so a green/red driver pair pins any divergence
+    # localization companion: the same row MINUS the one derived column,
+    # so a green/red pair pins any divergence to that column
     "score_auc_parts": (text.score_auc_parts, text.SCORE_AUC_PARTS_SQL),
     # reliability report: per 0.1-nat score band, target-lang rate in
     # basis points (bounded band grid, no ntile/global sort)
@@ -407,68 +406,64 @@ _REGISTRY: dict[str, tuple[Callable[[dict], DataFrame], str | None]] = {
     "image_resize": (multimodal.image_resize, multimodal.IMAGE_RESIZE_SQL),
 }
 
-# --- streaming (runs a real StreamingQuery to exhaustion, then returns the
-# deterministic emitted key set; oracle-paired against the batch view) ---
 
-
-def _streaming(
+def _prepared(
     query: Callable[[SparkSession, str], DataFrame],
 ) -> Callable[[SparkSession, str], DataFrame]:
+    """A query that takes ``(spark, sf_dir)`` itself, run after the cached
+    prepare: the session confs are set and the global_temp views exist."""
+
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        _ctx(spark, sf_dir)  # ensure session confs once (cached prepare)
+        _ctx(spark, sf_dir)
         return query(spark, sf_dir)
 
     return run
 
 
-# --- live-session queries (take (spark, sf_dir) directly: they introspect
-# the SparkSession itself, not the fixture frames) ---
-
-
-def _discovered_objects_live(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _ctx(spark, sf_dir)  # registers the global_temp views once (cached)
-    return catalog_ops.discovered_objects_live(spark, sf_dir, ensure=False)
-
-
+# live-session queries: they introspect the SparkSession itself, not the
+# fixture frames
 _LIVE_QUERIES: dict[str, tuple] = {
     "discovered_objects_live": (
-        _discovered_objects_live,
+        _prepared(catalog_ops.discovered_objects_live),
         catalog_ops.DISCOVERED_OBJECTS_LIVE_SQL,
     ),
 }
 
 
+# streaming queries: each runs a real StreamingQuery to exhaustion, then
+# returns the deterministic emitted key set; oracle-paired against the
+# batch view
 _STREAMING_QUERIES: dict[str, tuple] = {
     "streaming_first_completed": (
-        _streaming(streaming_state.streaming_first_completed_query),
+        _prepared(streaming_state.streaming_first_completed_query),
         oracle_with_clause("updates")
         + streaming_state.STREAMING_FIRST_COMPLETED_SQL_SUFFIX,
     ),
     "streaming_tumbling_hourly": (
-        _streaming(streaming_state.streaming_tumbling_query),
+        _prepared(streaming_state.streaming_tumbling_query),
         streaming_state.STREAMING_TUMBLING_SQL,
     ),
     "streaming_click_attribution": (
-        _streaming(streaming_state.streaming_click_attribution_query),
+        _prepared(streaming_state.streaming_click_attribution_query),
         streaming_state.STREAMING_CLICK_ATTRIBUTION_SQL,
     ),
     # the applyInPandasWithState custom sessionizer, pinned against the
     # relational gaps-and-islands oracle (closed sessions only)
     "streaming_sessionize": (
-        _streaming(streaming_state.streaming_sessionize_query),
+        _prepared(streaming_state.streaming_sessionize_query),
         streaming_state.STREAMING_SESSIONIZE_SQL,
     ),
     # exactly-once corpus-ingest dedup: state keyed by content digest,
     # emitted digest set pinned against the batch DISTINCT oracle
     "streaming_corpus_dedup": (
-        _streaming(streaming_state.streaming_corpus_dedup_query),
+        _prepared(streaming_state.streaming_corpus_dedup_query),
         streaming_state.STREAMING_CORPUS_DEDUP_SQL,
     ),
     # the drift monitor in its streaming home: complete-mode (type,bin)
     # histogram state, PSI computed off the final maintained state —
     # same oracle as the batch operator by construction
     "streaming_drift_psi": (
-        _streaming(streaming_state.streaming_drift_psi_query),
+        _prepared(streaming_state.streaming_drift_psi_query),
         events.DRIFT_PSI_SQL,
     ),
 }
@@ -491,144 +486,19 @@ def _wrap(fn: Callable[[dict], DataFrame]) -> Callable[[SparkSession, str], Data
     return runner
 
 
-# Driver-facing iteration order. The driver records CORRECTNESS rows for
-# the first ~50 registry entries (budget cutoff observed every round), so
-# order = verification priority.
-#
-# FRESHNESS RULE (risk-tiered — codified in r09 per the r08 verdict,
-# replacing the unsatisfiable flat "<=2 rounds" form: 145 queries / ~50
-# driver slots makes a flat 2-round cadence mathematically impossible in
-# steady state; ~3 rounds is the floor):
-#   tier 1 — rows whose CODE or ORACLE changed this round: NEXT round's
-#            head, always;
-#   tier 2 — frozen rows: newest green driver row must not age past
-#            THREE rounds;
-#   tier 3 — explicitly named deferrals (frozen code, flat SCALING
-#            class, a same-code-path sibling in the head): may slip to
-#            four rounds, at most once, named in this comment.
-#
-# Round-22 plan (OPTIMIZATION round 2). ATTESTATION CORRECTION first
-# (r21 verdict "What's wrong" item 1): the r21 comment listed
-# tables_enriched among rows "whose code paths did not change this
-# round" — that was FALSE. Its body changed in r21 (catalog_ops.py:66,
-# memoize + localCheckpoint) and asset_specs consumes the memo, so both
-# missed the tier-1 slot they were owed; both lead this head, right
-# behind the anchor. COHORT DEFINITION unchanged: "last driver-green rN"
-# is read from the CORRECTNESS_r0N.json files themselves (recomputed at
-# r22 head build: r18=22, r19=32, r20=41, r21=50).
-# (a) the smoke anchor;
-# (b) the two r21 changed-path rows that missed their tier-1 slot:
-# tables_enriched (last driver-green r18) and asset_specs (r20);
-# (c) the TWENTY-ONE remaining r18-cohort rows at their named
-# at-most-once tier-3 boundary — the hard r22 obligation from the r21
-# verdict;
-# (d) SIXTEEN r22 tier-1 rows — every query whose executable path
-# changed this round: unigram_logprob + unigram_kl (vocab total back to
-# the scalar-aggregate branch) and the _unigram_lp reader
-# perplexity_buckets; zone_map_plan (single-scan block audit);
-# lineage_closure_deep + topo_levels (dynamic loop-width re-pin); and
-# the ten arrow_map consumers (output re-slicing to maxRecordsPerBatch
-# changed every kernel's transport path): ann_bruteforce_topk,
-# ann_lsh_topk, ivf_ann_topk, ann_recall, kmeans_assign,
-# kmeans_clusters, semantic_dedup, embedding_near_dup_lsh,
-# media_features, image_resize. (The overlapped setup phase changes NO
-# query plan — builders and frames are byte-identical, only their
-# submission order overlaps — so it creates no tier-1 rows.)
-# (e) TEN r19-cohort rows fill the head to 50, picked for structural
-# diversity: streaming_sessionize (checkpointed streaming),
-# exact_dedup, tfidf_keywords, local_supplier_revenue (broadcast-dim
-# relational), user_sessions, hash_split, merge_upsert,
-# bpe_apply_merges, corpus_card, text_stats.
-#
-# Head math: 1 anchor + 2 missed-tier-1 + 21 r18-cohort + 16 tier-1 +
-# 10 r19 fill = 50 rows, the observed driver cap. After r22 no row's
-# last driver-green round is older than r19. `approx_user_counts` stays
-# pinned to the very TAIL (permanently rows-only by design).
-_PRIORITY = [
-    "flagship_us_customers",  # smoke anchor, mirrors entry()
-    # (b) the two r21 changed-path rows that missed their tier-1 slot
-    "tables_enriched",
-    "asset_specs",
-    # (c) the 21 remaining r18-cohort rows (named tier-3 boundary)
-    "column_histograms",
-    "discovered_objects",
-    "doc_fingerprints",
-    "heavy_hitter_tokens",
-    "lang_profile",
-    "langid_trigram",
-    "named_assets",
-    "normalized_dedup",
-    "object_count_rollup",
-    "percentile_sketch_accuracy",
-    "pii_redaction",
-    "range_join_incidents",
-    "skew_report",
-    "streaming_click_attribution",
-    "streaming_tumbling_hourly",
-    "time_rollup_multigrain",
-    "token_count_regex",
-    "top_orders_per_customer",
-    "user_count_accuracy",
-    "value_deciles",
-    "weighted_sample_topk",
-    # (d) r22 tier-1: changed-path rows this round
-    "unigram_logprob",
-    "unigram_kl",
-    "perplexity_buckets",
-    "zone_map_plan",
-    "lineage_closure_deep",
-    "topo_levels",
-    "ann_bruteforce_topk",
-    "ann_lsh_topk",
-    "ivf_ann_topk",
-    "ann_recall",
-    "kmeans_assign",
-    "kmeans_clusters",
-    "semantic_dedup",
-    "embedding_near_dup_lsh",
-    "media_features",
-    "image_resize",
-    # (e) ten r19-cohort rows fill to the 50-row driver cap
-    "streaming_sessionize",
-    "exact_dedup",
-    "tfidf_keywords",
-    "local_supplier_revenue",
-    "user_sessions",
-    "hash_split",
-    "merge_upsert",
-    "bpe_apply_merges",
-    "corpus_card",
-    "text_stats",
-]
-
-
-# Permanently `no_oracle` rows (engine-specific sketch values, rows-only
-# by design) — pinned to the very tail so they never consume one of the
-# driver's ~50 hash-checkable CORRECTNESS slots (they burned a head slot
-# in r04 and r07).
-_TAIL = ["approx_user_counts"]
-
-
-def _ordered_names() -> list[str]:
-    all_names = list(_REGISTRY) + list(_LIVE_QUERIES) + list(_STREAMING_QUERIES)
-    head = [n for n in _PRIORITY if n in all_names and n not in _TAIL]
-    rest = [n for n in all_names if n not in _PRIORITY and n not in _TAIL]
-    return head + rest + [n for n in _TAIL if n in all_names]
+def _all() -> dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]]:
+    """Every registration as ``name -> ((spark, sf_dir) -> DataFrame,
+    oracle_sql | None)``: registry order, with the rows-only queries (no
+    oracle) last."""
+    out = {name: (_wrap(fn), sql) for name, (fn, sql) in _REGISTRY.items()}
+    out.update(_LIVE_QUERIES)
+    out.update(_STREAMING_QUERIES)
+    return dict(sorted(out.items(), key=lambda kv: kv[1][1] is None))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    out = {name: _wrap(fn) for name, (fn, _) in _REGISTRY.items()}
-    out.update({name: fn for name, (fn, _) in _LIVE_QUERIES.items()})
-    out.update({name: fn for name, (fn, _) in _STREAMING_QUERIES.items()})
-    return {name: out[name] for name in _ordered_names()}
+    return {name: fn for name, (fn, _) in _all().items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    out = {name: sql for name, (_, sql) in _REGISTRY.items() if sql is not None}
-    out.update(
-        {name: sql for name, (_, sql) in _LIVE_QUERIES.items() if sql is not None}
-    )
-    out.update(
-        {name: sql for name, (_, sql) in _STREAMING_QUERIES.items() if sql is not None}
-    )
-    return {name: out[name] for name in _ordered_names() if name in out}
+    return {name: sql for name, (_, sql) in _all().items() if sql is not None}

@@ -1,13 +1,16 @@
 from __future__ import annotations
 
 import sys
+from typing import NamedTuple
 
 import pytest
+from pyspark.sql.types import StructType
 
 sys.path.insert(0, "/root/repo")
 
-from databricks_observe_spark.engine import prepare
+from databricks_observe_spark import registry
 from databricks_observe_spark.session import get_spark
+from tools.check_oracle import compare, oracle_con
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -20,4 +23,35 @@ def spark():
 
 @pytest.fixture(scope="session")
 def tables(spark):
-    return prepare(spark, SF_DIR)
+    """The registry's own context, so the suite and the registry walk in
+    the ``surface`` fixture build each index once per session."""
+    return registry._ctx(spark, SF_DIR)
+
+
+class Probe(NamedTuple):
+    plan: str
+    schema: StructType | None  # None when the query raised
+    rows: list
+    verdict: list[str] | None  # oracle mismatches; None for rows-only
+
+
+@pytest.fixture(scope="session")
+def surface(spark) -> dict[str, Probe]:
+    """Every registered query built once: its executed plan (read before
+    collecting), schema, collected rows and oracle verdict. Read by
+    tests/test_surface.py and tests/test_output_types.py."""
+    con = oracle_con(SF_DIR)
+    oracles = registry.oracle_sql()
+    out = {}
+    for name, query in registry.queries().items():
+        try:
+            sdf = query(spark, SF_DIR)
+            plan = sdf._jdf.queryExecution().executedPlan().toString()
+            rows = [tuple(r) for r in sdf.collect()]
+        except Exception as ex:
+            out[name] = Probe("", None, [], [f"spark error: {ex}"])
+            continue
+        verdict = compare(sdf, rows, con, oracles[name]) if name in oracles else None
+        out[name] = Probe(plan, sdf.schema, rows, verdict)
+    con.close()
+    return out

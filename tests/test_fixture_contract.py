@@ -88,15 +88,12 @@ def test_batch_ts_equals_streaming_ts(spark, tables):
     assert (got.lo, got.hi, got.n) == (batch.lo, batch.hi, batch.n)
 
 
-def test_priority_rotation_names_all_resolve():
-    """_ordered_names() silently drops unregistered _PRIORITY entries (so
-    a typo would quietly lose a driver verification slot); pin that every
-    rotation name resolves and the no-oracle tail row stays last."""
+def test_registry_order_puts_rows_only_last():
+    """Names are unique, and the one rows-only query (no oracle) comes
+    last in ``queries()``."""
     from databricks_observe_spark import registry as R
 
     qs = R.queries()
-    missing = [n for n in R._PRIORITY if n not in qs]
-    assert missing == [], missing
     names = list(qs)
     assert names[-1] == "approx_user_counts"
     assert len(names) == len(set(names))

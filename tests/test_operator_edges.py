@@ -1,9 +1,10 @@
-"""Edge-path pins for the r21 optimization rewrites.
+"""Edge semantics of rewritten operators that the oracle fixtures cannot
+reach.
 
-Each rewrite proved bulk equivalence through the differential oracle;
-these tests pin the EDGE semantics the oracle fixtures cannot reach —
-the paths where the restructured plans had to reproduce the old forms'
-behavior by explicit construction rather than by shared shape.
+The differential oracle proves each operator's bulk equivalence; these
+tests pin the edge paths where a restructured plan reproduces the plain
+form's behaviour by explicit construction rather than by shared shape:
+empty inputs, duplicate rows and missing bins.
 """
 
 from __future__ import annotations
@@ -14,7 +15,7 @@ from databricks_observe_spark.operators import catalog_ops as C
 
 
 def test_table_profiles_empty_table_still_yields_zero_row(tables):
-    """The fused single-aggregate count form (r21) loses empty tables at
+    """The fused single-aggregate count form loses empty tables at
     the groupBy; the static-name left join + coalesce must restore the
     reference COUNT(*) semantics: an empty table still profiles with
     row_count = 0."""
@@ -27,7 +28,7 @@ def test_table_profiles_empty_table_still_yields_zero_row(tables):
 
 
 def test_lsh_dedup_recall_sum_form_matches_left_semi_multiplicity(spark):
-    """The single-pass union+aggregate form (r21) replaced a left-semi
+    """The single-pass union+aggregate form replaced a left-semi
     join; n_hit must count EXACT-side rows that have >=1 candidate match
     — duplicate exact rows count per occurrence, duplicate candidate
     rows never multiply, and empty inputs coalesce to 0 (the vacuous
@@ -72,7 +73,7 @@ def test_lsh_dedup_recall_sum_form_matches_left_semi_multiplicity(spark):
 
 
 def test_psi_map_grid_fills_missing_bins(spark):
-    """psi_from_counts' map-exploded grid (r21) must cover every bin of
+    """psi_from_counts' map-exploded grid must cover every bin of
     the fixed grid with zero-filled counts — identical totals to the old
     cross-join + left-join fill, and one output row per type."""
     from databricks_observe_spark.operators.events import psi_from_counts

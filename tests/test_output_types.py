@@ -1,32 +1,15 @@
-"""Registry-wide output-type lint (r09 verdict task 3).
+"""Output types of every registered query, read off the one registry walk.
 
-The only driver hash failures in rounds 7-9 were ``score_auc`` /
-``score_auc_parts`` — and the r09 localization run pinned the cause to
-their output TYPE, not their values: ``auc_num2`` was the single
-DECIMAL-typed output column in the whole 146-query registry, and the
-driver's order-insensitive hasher canonicalizes Spark
-``DecimalType(38,0)`` and DuckDB ``DECIMAL(38,0)`` differently. The
-values were bit-identical; the type alone diverged the hash.
-
-This lint turns that lesson into a permanent gate over EVERY hashed
-projection the driver sees:
-
-- **No DecimalType anywhere** (top-level or nested) — decimal arithmetic
-  is fine INTERNALLY (the AUC pair's 2*U envelope needs DECIMAL(38,0)
-  past ~3e9 docs), but the hashed output must cast down to BIGINT.
-- **No unaudited DoubleType/FloatType**: every float output column must
-  be in the explicit allowlist below, each entry either a raw fixture
-  column (events.value is double in the parquet) or a value produced by
-  the round-half-up-on-a-fixed-grid idiom that has already been
-  driver-green. A NEW float column fails the lint until it is audited
-  (is it grid-quantized? does the oracle compute it identically?) and
-  added here deliberately. Stale entries fail too (exact set equality),
-  so the allowlist cannot rot into a dead list.
-
-The walk is the real thing — it builds every registered query's
-DataFrame at sf0.001 (including the six streaming queries, which run
-their availableNow micro-batches to completion) and inspects the
-resulting schemas recursively, exactly the frames the driver hashes.
+The session-scoped ``surface`` fixture (``tests/conftest.py``) records
+each query's output schema, the batch and live queries as built and the
+six streaming queries as their memory sinks emit them. Each test below
+asserts, over its half of the registry: no DecimalType anywhere in an
+output (DuckDB's ``.df()`` renders DECIMAL(38,0) as float64 while
+Spark's ``toPandas`` yields Decimal objects: identical values, diverging
+hashes); the float columns are exactly that half of ``FLOAT_ALLOWLIST``
+(a stale entry fails too); and no output nests arrays or maps deeper
+than the oracle's classifier inspects (``_CLS_MAX_DEPTH``). A query that
+raised is named by the oracle test in ``tests/test_surface.py``.
 """
 
 from __future__ import annotations
@@ -42,19 +25,14 @@ from pyspark.sql.types import (
 )
 
 from databricks_observe_spark import registry as R
-
-# single-source the fixture path: the live/streaming walks below must
-# lint the SAME dataset the session-scoped `tables`/`spark` fixtures use
-from tests.conftest import SF_DIR
+from tools.check_oracle import _CLS_MAX_DEPTH
 
 # (query, column-path) pairs allowed to be float/double. Audit trail:
 # "fixture" = carries the raw events.value double straight through;
 # "rounded" = the round-half-up / fixed-denominator idiom (the value is
 # an exact small-integer ratio representable in a double, so both
 # engines produce the identical bit pattern); "ratio" = quotient of two
-# exact integers computed with the same operand order on both engines —
-# all of these have driver-green history (CORRECTNESS r06-r10; r10 was
-# the first fully-green round, 145/145 hash-checkable cumulative).
+# exact integers computed with the same operand order on both engines.
 FLOAT_ALLOWLIST: frozenset[tuple[str, str]] = frozenset(
     {
         # -- fixture passthrough: the parquet column itself is double
@@ -70,9 +48,9 @@ FLOAT_ALLOWLIST: frozenset[tuple[str, str]] = frozenset(
         ("top_balance_per_nation", "c_acctbal"),
         ("top_orders_per_customer", "o_totalprice"),
         ("user_value_zscores", "value"),
-        # -- sums/avgs of fixture doubles, driver-green r06-r09 (the
-        # hasher's float canonicalization tolerates them; TPC-H money
-        # sums agree across engines at fixture scale)
+        # -- sums/avgs of fixture doubles (the hasher's float
+        # canonicalization tolerates them; TPC-H money sums agree across
+        # engines at fixture scale)
         ("event_type_stats", "avg_value"),
         ("event_type_stats", "sum_value"),
         ("events_cube", "sum_value"),
@@ -140,9 +118,7 @@ FLOAT_ALLOWLIST: frozenset[tuple[str, str]] = frozenset(
         # IEEE754 division is correctly rounded, and both engines divide
         # the same two exact operands in the same order, so the bit
         # pattern is deterministic even though the quotient is neither
-        # small nor grid-quantized. Driver-green in both of its driver-
-        # head rounds (r06 and r09, per CORRECTNESS_r06/r09.json) and in
-        # every local strict-oracle run since.
+        # small nor grid-quantized.
         ("weighted_sample_topk", "aes_key"),
         # -- round-half-up-on-a-fixed-grid idiom (the *_r suffix: the
         # value is k/10^d for small k, exactly representable or within
@@ -172,115 +148,60 @@ FLOAT_ALLOWLIST: frozenset[tuple[str, str]] = frozenset(
         ("tokenizer_fertility", "fertility_r"),
         ("unigram_kl", "kl_r"),
         ("unimax_allocation", "epochs_r"),
-        # -- rows-only tail (never hashed — engine-specific HLL
-        # accuracy report); listed so the walk stays total
+        # -- rows-only (never hashed — engine-specific HLL accuracy
+        # report)
         ("approx_user_counts", "rel_error"),
     }
 )
 
 
-def _walk(dt: DataType, path: str):
-    """Yield (path, kind) for every decimal/float leaf, nested included."""
-    if isinstance(dt, DecimalType):
-        yield path, "decimal"
-    elif isinstance(dt, (DoubleType, FloatType)):
-        yield path, "float"
-    elif isinstance(dt, ArrayType):
-        yield from _walk(dt.elementType, path + "[]")
+def _leaves(dt: DataType, path: str, depth: int = 0):
+    """Yield (path, type, array/map nesting depth) for every leaf."""
+    if isinstance(dt, ArrayType):
+        yield from _leaves(dt.elementType, path + "[]", depth + 1)
     elif isinstance(dt, MapType):
-        yield from _walk(dt.keyType, path + ".key")
-        yield from _walk(dt.valueType, path + ".val")
+        yield from _leaves(dt.keyType, path + ".key", depth + 1)
+        yield from _leaves(dt.valueType, path + ".val", depth + 1)
     elif isinstance(dt, StructType):
         for f in dt.fields:
-            yield from _walk(f.dataType, path + "." + f.name)
+            yield from _leaves(f.dataType, path + "." + f.name, depth)
+    else:
+        yield path, dt, depth
 
 
-def _lint(name: str, schema: StructType, decimals: list, floats: set):
-    for f in schema.fields:
-        for path, kind in _walk(f.dataType, f.name):
-            if kind == "decimal":
-                decimals.append((name, path))
-            else:
-                floats.add((name, path))
 
-
-def test_batch_registry_output_types(spark, tables):
-    """Every batch + live query's hashed projection: no DecimalType,
-    floats exactly the audited allowlist (schema-only — nothing runs
-    beyond the memoized setup artifacts the suite builds anyway)."""
-    decimals: list = []
-    floats: set = set()
-    for name, (fn, _sql) in R._REGISTRY.items():
-        _lint(name, fn(tables).schema, decimals, floats)
-    for name, (fn, _sql) in R._LIVE_QUERIES.items():
-        _lint(name, fn(spark, SF_DIR).schema, decimals, floats)
-    assert decimals == [], f"DecimalType output (the score_auc class): {decimals}"
-    batch_allowed = {
-        (q, c) for q, c in FLOAT_ALLOWLIST if not q.startswith("streaming_")
+def _lint(surface, names: set[str]) -> None:
+    leaves = [
+        (name, path, dt, depth)
+        for name, p in surface.items()
+        if name in names and p.schema is not None
+        for f in p.schema.fields
+        for path, dt, depth in _leaves(f.dataType, f.name)
+    ]
+    decimals = [(n, path) for n, path, dt, _ in leaves if isinstance(dt, DecimalType)]
+    assert decimals == [], f"DecimalType output: {decimals}"
+    floats = {
+        (n, path) for n, path, dt, _ in leaves if isinstance(dt, (DoubleType, FloatType))
     }
-    assert floats == batch_allowed, (
-        f"unaudited float columns: {sorted(floats - batch_allowed)}; "
-        f"stale allowlist entries: {sorted(batch_allowed - floats)}"
+    allowed = {(q, c) for q, c in FLOAT_ALLOWLIST if q in names}
+    assert floats == allowed, (
+        f"unaudited float columns: {sorted(floats - allowed)}; "
+        f"stale allowlist entries: {sorted(allowed - floats)}"
     )
+    deep = [(n, path, d) for n, path, _, d in leaves if d > _CLS_MAX_DEPTH]
+    assert deep == [], f"nested deeper than _CLS_MAX_DEPTH={_CLS_MAX_DEPTH}: {deep}"
 
 
-def test_streaming_registry_output_types(spark):
-    """Same gate over the six streaming queries — each runs its
-    availableNow micro-batches to completion (~12 s total at sf0.001)
-    and the emitted memory-sink frame is linted, i.e. the exact frame
-    the driver hashes."""
-    decimals: list = []
-    floats: set = set()
-    for name, (fn, _sql) in R._STREAMING_QUERIES.items():
-        _lint(name, fn(spark, SF_DIR).schema, decimals, floats)
-    assert decimals == [], f"DecimalType output (the score_auc class): {decimals}"
-    stream_allowed = {
-        (q, c) for q, c in FLOAT_ALLOWLIST if q.startswith("streaming_")
-    }
-    assert floats == stream_allowed, (
-        f"unaudited float columns: {sorted(floats - stream_allowed)}; "
-        f"stale allowlist entries: {sorted(stream_allowed - floats)}"
-    )
+def test_batch_registry_output_types(surface):
+    """Every batch and live query."""
+    _lint(surface, set(R.queries()) - set(R._STREAMING_QUERIES))
 
 
-def test_auc_pair_pandas_surface_is_int64_on_both_engines(tables):
-    """The demonstrated r07-r09 divergence mechanism, pinned shut: for a
-    DECIMAL(38,0) column DuckDB's ``.df()`` converts to float64
-    (``78724.0``) while Spark's ``toPandas`` yields an object column of
-    ``Decimal('78724')`` — identical values, diverging pandas
-    canonicalization, exactly the driver's rows+schema-green/hash-red
-    signature. The BIGINT projection must land BOTH engines on int64 on
-    that same surface."""
-    import duckdb
-
-    from databricks_observe_spark.operators.text import (
-        SCORE_AUC_PARTS_SQL,
-        SCORE_AUC_SQL,
-        score_auc,
-        score_auc_parts,
-    )
-
-    for df in (score_auc(tables), score_auc_parts(tables)):
-        pdf = df.toPandas()
-        assert all(str(dt) == "int64" for dt in pdf.dtypes), pdf.dtypes
-
-    con = duckdb.connect()
-    for t in ("documents",):
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS "
-            f"SELECT * FROM '{SF_DIR}/{t}.parquet'"
-        )
-    for sql in (SCORE_AUC_SQL, SCORE_AUC_PARTS_SQL):
-        ddf = con.execute(sql).df()
-        assert all(str(dt) == "int64" for dt in ddf.dtypes), ddf.dtypes
+def test_streaming_registry_output_types(surface):
+    """The six streaming queries: the exact frames their memory sinks emit."""
+    _lint(surface, set(R._STREAMING_QUERIES))
 
 
-def test_registry_walk_is_total():
-    """The two lint tests above must between them see every registered
-    query — if a new registration family is added beside _REGISTRY /
-    _LIVE_QUERIES / _STREAMING_QUERIES, this fails until the lint
-    covers it."""
-    covered = (
-        set(R._REGISTRY) | set(R._LIVE_QUERIES) | set(R._STREAMING_QUERIES)
-    )
-    assert covered == set(R.queries())
+def test_allowlist_names_only_registered_queries():
+    """The two halves above cover ``FLOAT_ALLOWLIST`` between them."""
+    assert {q for q, _ in FLOAT_ALLOWLIST} <= set(R.queries())

@@ -1,0 +1,117 @@
+"""The whole registry, checked in one walk.
+
+The session-scoped ``surface`` fixture (``tests/conftest.py``) builds
+every registered query's frame once at sf0.001 (the six streaming
+queries run their availableNow micro-batches to completion) and
+records, from that one frame, its executed plan (read before
+collecting), its schema, its collected rows and its verdict against the
+DuckDB oracle (``tools/check_oracle.py:compare``). Walking
+``registry.queries()`` is total by construction: a new registration is
+checked the moment it is registered. Two tests here assert on the walk
+(``tests/test_output_types.py`` lints its output types):
+
+- **Oracle.** Every query matches its oracle; a failure lists every
+  failing query.
+- **Plan shape.** Each operator in ``PLAN_ALLOWLIST`` appears in exactly
+  the queries listed for it. A new occurrence fails until it is audited
+  and listed with its reason; a stale entry fails too, so the allowlist
+  cannot rot into a dead list.
+"""
+
+from __future__ import annotations
+
+from tests.conftest import SF_DIR
+from tools.check_oracle import oracle_con
+
+
+# operator (as it prints in an executed plan) -> the queries allowed to
+# contain it, each with why. Measured on the sf0.001 fixture.
+PLAN_ALLOWLIST: dict[str, dict[str, str]] = {
+    "CartesianProduct": {},
+    "BroadcastNestedLoopJoin": {
+        "bloom_contamination_check": "the one-row Bloom bitmap fans onto every probe gram",
+        "bpe_apply_merges": "the one-row merge-table array fans onto the distinct words",
+        "corpus_card": "the one-row distinct-text count joins the one-row rollup",
+        "dedup_threshold_sweep": "two theta joins of the 10-row threshold grid onto bucket counts",
+        "skew_report": "the one-row total/median stats join the 10 top keys",
+        "tfidf_keywords": "the one-row corpus document count joins the scored rows",
+        "unigram_kl": "the one-row corpus token total joins the scored rows",
+        "unigram_logprob": "the one-row corpus token total joins the scored rows",
+        "vocab_coverage": "the one-row kth-frequency cut and the one-row total",
+    },
+    "SortMergeJoin": {
+        "ann_recall": "ground truth LEFT-joins the candidates; both scale with the queries",
+        "curated_corpus": "anti-join on the dropped near-dups, corpus-sized on duplicated data",
+        "merge_upsert": "MERGE is one full-outer join on the key, which cannot broadcast",
+        "perplexity_buckets": "docs join the per-(lang, score) tercile table, score-value-sized",
+        "topo_levels": "every node LEFT-joins its level; both sides are node-sized",
+    },
+    "Exchange SinglePartition": {
+        "corpus_card": "two one-row aggregates (rollup, distinct texts), combined map-side",
+        "curation_pipeline_e2e": "min over the per-lang counts, one row per lang",
+        "dsir_importance_weights": "corpus totals over the 256-row bucket table",
+        "expectations_report": "the one-row pass/fail aggregate, combined map-side",
+        "funnel_conversion": "the one-row funnel totals, combined map-side",
+        "lateness_report": "the prefix max over block maxima, one row per block",
+        "lsh_dedup_recall": "the one-row recall counts, combined map-side",
+        "mixture_weights": "the corpus total over the per-lang counts",
+        "mixture_weights_temperature": "the corpus total over the per-lang counts",
+        "rate_anomaly": "global hour bounds over the per-type min/max",
+        "run_output_lookup": "the one-row probe key, combined map-side",
+        "score_auc": "the rank window over the bounded milli-score grid",
+        "score_auc_parts": "the rank window over the bounded milli-score grid",
+        "sensor_cursor_roundtrip": "collects the per-key cursor into its one map row",
+        "skew_report": "the one-row total/median stats, combined map-side",
+        "stratified_sample": "min over the per-lang counts, one row per lang",
+        "tfidf_keywords": "the one-row corpus document count",
+        "unigram_kl": "the one-row corpus token total, combined map-side",
+        "unigram_logprob": "the one-row corpus token total, combined map-side",
+        "unimax_allocation": "the budget waterfill windows over the per-lang frame",
+        "vocab_coverage": "the cumulative window over the ~100 top tokens, and the total",
+    },
+}
+
+
+def test_every_query_matches_its_oracle(surface):
+    failing = {name: p.verdict for name, p in surface.items() if p.verdict}
+    assert not failing, f"{len(failing)} queries fail their oracle:\n" + "\n".join(
+        f"{name}: " + "; ".join(v[:3]) for name, v in failing.items()
+    )
+
+
+
+def test_plan_shape(surface):
+    problems = []
+    for op, allowed in PLAN_ALLOWLIST.items():
+        got = {name for name, p in surface.items() if op in p.plan}
+        if got - set(allowed):
+            problems.append(f"{op} in unlisted queries: {sorted(got - set(allowed))}")
+        if set(allowed) - got:
+            problems.append(f"stale {op} entries: {sorted(set(allowed) - got)}")
+    assert problems == [], "\n".join(problems)
+
+
+
+def test_auc_pair_pandas_surface_is_int64_on_both_engines(tables):
+    """The decimal divergence mechanism, pinned shut: for a
+    DECIMAL(38,0) column DuckDB's ``.df()`` converts to float64
+    (``78724.0``) while Spark's ``toPandas`` yields an object column of
+    ``Decimal('78724')`` — identical values, diverging pandas
+    canonicalization, so rows and schema match while the hash differs.
+    The BIGINT projection must land BOTH engines on int64 on
+    that same surface."""
+    from databricks_observe_spark.operators.text import (
+        SCORE_AUC_PARTS_SQL,
+        SCORE_AUC_SQL,
+        score_auc,
+        score_auc_parts,
+    )
+
+    for df in (score_auc(tables), score_auc_parts(tables)):
+        pdf = df.toPandas()
+        assert all(str(dt) == "int64" for dt in pdf.dtypes), pdf.dtypes
+
+    con = oracle_con(SF_DIR)
+    for sql in (SCORE_AUC_SQL, SCORE_AUC_PARTS_SQL):
+        ddf = con.execute(sql).df()
+        assert all(str(dt) == "int64" for dt in ddf.dtypes), ddf.dtypes

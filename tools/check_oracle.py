@@ -1,56 +1,37 @@
 """Local differential oracle check — mimics the driver's CORRECTNESS gate.
 
-Runs every ``queries()`` entry on Spark at sf0.01 and its ``oracle_sql()``
-twin on DuckDB over the same parquet, then compares row count, column-name
-set, and an order-insensitive exact value comparison (columns sorted by
-name, rows sorted). Strict: floats must match bit-for-bit — the engine is
-built to produce exact decimal-derived doubles.
+Runs every ``queries()`` entry on Spark (sf0.01 by default) and its
+``oracle_sql()`` twin on DuckDB over the same parquet; :func:`compare`
+holds the whole per-query comparison, which the ``surface`` fixture in
+``tests/conftest.py`` runs over the registry at sf0.001 in every tier-1 run:
 
-Since r10 it ALSO compares the pandas conversion surface
-(``sdf.toPandas()`` vs ``con.execute(sql).df()`` dtype classes): the
-r07-r09 ``score_auc`` driver divergence reproduced ONLY there — DuckDB's
-``.df()`` renders DECIMAL(38,0) as float64 while Spark's ``toPandas``
-yields object/Decimal, identical values notwithstanding — and the
-collect/Arrow comparisons this tool previously ran were blind to it
-(both engines surface decimal128 in Arrow, so the type classes matched).
-A pandas-surface mismatch is a FAIL even when every value matches.
+- column-name set and per-column type representation class (an Arrow
+  DECIMAL from a DuckDB HUGEINT differs from Spark's int64 even when the
+  values agree);
+- row count, then an order-insensitive exact value comparison (columns
+  sorted by name, rows sorted). Strict: floats must match bit-for-bit —
+  the engine is built to produce exact decimal-derived doubles;
+- the pandas conversion surface (``sdf.toPandas()`` vs
+  ``con.execute(sql).df()`` dtype classes). DuckDB's ``.df()`` renders
+  DECIMAL(38,0) as float64 while Spark's ``toPandas`` yields
+  object/Decimal; the Arrow comparison above is blind to it (both
+  engines surface decimal128 there). A pandas-surface mismatch is a FAIL
+  even when every value matches.
 
-r11 hardening (ADVICE.md): object columns classify over a bounded
-SAMPLE of cells (not the first cell only) and list-like cells recurse
-into element types, so mixed-type columns and nested element
-divergence (list-of-Decimal vs list-of-float) cannot evade the gate;
-``--surface-limit`` optionally bounds the conversion cost at larger
-scale factors (see its help text for why full stays the default at
-sf0.01).
+Sampling contract: object columns classify over a bounded, evenly spaced
+sample of cells (``_sample_idx``: first and final cell always included,
+the full budget spent, every unsampled gap bounded), and list-like cells
+recurse into their element types, sampled the same way, up to
+``_CLS_MAX_DEPTH`` nesting levels. A divergence confined below that cap
+classifies identically on both engines, so the output-type test in
+``tests/test_output_types.py`` fails any registered query whose output nests
+arrays or maps deeper than ``_CLS_MAX_DEPTH``.
 
-r12 hardening (r11 VERDICT + ADVICE): both sample levels are strided
-AND always include the final item (a ceil-step stride skips up to
-step-1 trailing cells, and the old list-element sample was a head
-slice — either could hide a tail-only divergence, e.g. the last slot
-of a long embedding list or a lone divergent final cell); list
-recursion is depth-capped at ``_CLS_MAX_DEPTH`` so a pathological
-self-referential cell cannot recurse forever.
+``--surface-limit`` optionally bounds the conversion cost at larger scale
+factors; it samples each engine's rows independently, so it must never
+become the default (see its help text).
 
-r13 hardening (r12 ADVICE): both strides were FLOOR-step + budget cap
-(ceil-step could spend as little as half the stated budget).
-
-r14 hardening (r13 ADVICE): the floor-stride + cap traded the budget
-problem for a SPAN problem — for budget < len < 2*budget the step was 1,
-so the capped sample was literally the head `budget` items plus the
-final item, leaving a contiguous unsampled tail block of up to ~half the
-column (the exact sort-order-correlated tail region the gate's own
-rationale names as the likeliest landing spot). Both levels now sample
-via ``_sample_idx``: evenly SPACED indices that always include the first
-and last item, spend the full budget (exactly ``budget`` distinct
-indices whenever len >= budget), and bound every contiguous unsampled
-gap at ceil((len-1)/(budget-1)) items.
-
-STANDING RULE: ``_CLS_MAX_DEPTH`` (=3) must be raised IN THE SAME
-COMMIT as any new registry query whose result nests lists deeper than
-3 levels (today's deepest shape is 2); a divergence confined below the
-cap classifies identically on both engines and evades this gate.
-
-Usage: python tools/check_oracle.py [name ...] [--sf DIR]
+Usage: python tools/check_oracle.py [name ...] [--sf DIR] [--vanilla]
 """
 
 from __future__ import annotations
@@ -115,6 +96,8 @@ def _norm_arrow_type(t: pa.DataType) -> str:
 # enough that a mixed-type column cannot hide behind its first cell
 _CLS_CELL_SAMPLE = 1024
 _CLS_ELEM_SAMPLE = 8
+
+
 def _sample_idx(n: int, budget: int) -> list:
     """Evenly spaced sample indices over ``range(n)``.
 
@@ -127,49 +110,33 @@ def _sample_idx(n: int, budget: int) -> list:
     - SPANS the range: no contiguous unsampled gap exceeds
       ceil((n-1)/(budget-1)) items.
 
-    This replaces the r13 floor-stride + cap, which for
-    budget < n < 2*budget had step 1 and so sampled the head ``budget``
-    items plus the final item — a contiguous unsampled TAIL block of up
-    to ~half the column, the exact sort-order-correlated region the
-    gate's rationale calls the likeliest landing spot for a divergence
-    (r13 ADVICE). A divergence confined to the <= ceil((n-1)/(budget-1))
-    unsampled interior items between consecutive sampled indices can
-    still evade — inherent to any bounded-budget sample.
+    A divergence confined to the unsampled interior items between
+    consecutive sampled indices can still evade — inherent to any
+    bounded-budget sample.
     """
     if n <= budget:
         return list(range(n))
     if budget <= 1:
-        # degenerate budget (r14 ADVICE: the linear map below divides by
-        # budget-1); keep the first-and-last invariant as far as the
-        # budget allows — [0] for budget 1, [] for budget <= 0
+        # degenerate budget (the linear map below divides by budget-1);
+        # keep the first-and-last invariant as far as the budget allows
+        # — [0] for budget 1, [] for budget <= 0
         return [0][: max(budget, 0)]
     return sorted({i * (n - 1) // (budget - 1) for i in range(budget)})
 
 
 # list-nesting levels classified before truncating: bounds recursion so
-# a pathological self-referential cell cannot loop forever (r11 ADVICE:
-# the previous form was depth-unbounded while its docstring said "one
-# level"); 3 levels cover every shape the registry emits (deepest is
-# list<struct-as-tuple<scalar>>) with headroom
+# a pathological self-referential cell cannot loop forever;
+# tests/test_output_types.py fails any registered output nested deeper
 _CLS_MAX_DEPTH = 3
 
 
 def _cell_cls(v, _depth: int = 0) -> str:
     """Representation class of ONE cell, recursing into list-likes up to
-    ``_CLS_MAX_DEPTH`` nesting levels (r10 ADVICE: a list-of-Decimal vs
-    list-of-float split — the exact divergence class this gate exists
-    for, one nesting level down — must not collapse to an
-    undifferentiated 'list').
-
-    r11/r14 hardening: the per-level element sample is EVENLY SPACED
-    across the whole list via ``_sample_idx`` — it always includes the
-    first and FINAL element (a tail-only element-type divergence, e.g.
-    the last slot of a 384-dim embedding list, evaded the pre-r11
-    head-slice sample), spends the full ``_CLS_ELEM_SAMPLE`` budget
-    whenever the list is at least that long, and leaves no contiguous
-    unsampled run longer than ceil((len-1)/(budget-1)) elements. A
-    divergence confined to unsampled interior elements can still evade
-    — inherent to any bounded-budget sample."""
+    ``_CLS_MAX_DEPTH`` nesting levels: a list-of-Decimal vs list-of-float
+    split must not collapse to an undifferentiated 'list'. The per-level
+    element sample is evenly spaced across the whole list
+    (``_sample_idx``), so the first and final elements are always
+    classified."""
     import datetime as _dt
     import decimal as _dec
 
@@ -232,18 +199,9 @@ def _pandas_cls(series) -> str:
         nn = series.dropna()
         if len(nn) == 0:
             return "object-empty"
-        # EVENLY SPACED sample, not a head slice: a divergence
-        # correlated with sort order (the canon sort puts high keys
-        # last) must not land exclusively in an unexamined tail. The
-        # full _CLS_CELL_SAMPLE budget is always spent when the column
-        # is at least that long, the FIRST and FINAL cells are always
-        # examined (a lone divergent LAST cell is the most likely
-        # landing spot for a sort-order-correlated divergence), and no
-        # contiguous unsampled run exceeds ceil((len-1)/(budget-1))
-        # cells — see _sample_idx for why the r13 floor-stride + cap
-        # form failed the span property. A divergence confined to the
-        # unsampled interior cells between consecutive sampled indices
-        # can still evade — inherent to any bounded-budget sample.
+        # evenly spaced, not a head slice: a divergence correlated with
+        # sort order (the canon sort puts high keys last) must not land
+        # in an unexamined tail — see _sample_idx
         cells = list(nn.iloc[_sample_idx(len(nn), _CLS_CELL_SAMPLE)])
         classes = {_cell_cls(v) for v in cells}
         # merge element-unknown list cells into a typed list class when
@@ -263,9 +221,8 @@ def _surface_match(a: str, b: str, sampled: bool = False) -> bool:
 
     Strict equality in FULL mode (the sf0.01 gate default): an all-null
     object column vs an all-NaT datetime64 column (None vs NaT) is a
-    real rendering divergence on the pandas surface and must FAIL, as
-    it did before r11. The 'object-empty'/'list<?>' wildcard applies
-    ONLY in sampled (--surface-limit) mode, where an empty class is a
+    real rendering divergence on the pandas surface and must FAIL. The
+    'object-empty'/'list<?>' wildcard applies ONLY in sampled (--surface-limit) mode, where an empty class is a
     sampling artifact — each engine limited a different row subset — not
     evidence about the full column."""
     if a == b:
@@ -297,6 +254,67 @@ def canon_rows(cols, rows):
     return [cols[i] for i in order], out
 
 
+def oracle_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per fixture table under ``sf_dir``."""
+    from databricks_observe_spark.sources.tables import TABLE_NAMES
+
+    con = duckdb.connect()
+    for t in TABLE_NAMES:
+        con.execute(
+            f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
+        )
+    return con
+
+
+def compare(sdf, srows: list, con, sql: str, surface_limit: int = 0) -> list[str]:
+    """Every way the Spark frame ``sdf`` (collected as ``srows``) differs
+    from the oracle ``sql`` on ``con``; empty when they match. Checks the
+    column set and type classes, the row count, the exact values, then the
+    pandas surface (``surface_limit`` > 0 bounds its conversion to that
+    many rows per engine)."""
+    try:
+        tbl = con.execute(sql).arrow()
+    except Exception as ex:
+        return [f"duckdb error: {ex}"]
+    ocols = tbl.column_names
+    orows = list(zip(*[c.to_pylist() for c in tbl.columns])) if tbl.num_columns else []
+    sc, sr = canon_rows(sdf.columns, srows)
+    oc, orr = canon_rows(ocols, orows)
+    styp = {c: _norm_spark_dtype(re.sub(r"\s", "", d)) for c, d in sdf.dtypes}
+    otyp = {c: _norm_arrow_type(tbl.schema.field(i).type) for i, c in enumerate(ocols)}
+    status = []
+    if sc != oc:
+        status.append(f"schema spark={sc} duck={oc}")
+    else:
+        mism = {c: (styp[c], otyp[c]) for c in sc if styp.get(c) != otyp.get(c)}
+        if mism:
+            status.append(f"typerep spark-vs-duck {mism}")
+    if len(sr) != len(orr):
+        status.append(f"rowcount spark={len(sr)} duck={len(orr)}")
+    if not status and sr != orr:
+        ndiff = sum(1 for a, b in zip(sr, orr) if a != b)
+        status.append(f"values differ ({ndiff}/{len(sr)} rows)")
+        a, b = next((a, b) for a, b in zip(sr, orr) if a != b)
+        status.append(f"  spark={a!r}\n  duck ={b!r}")
+    if status:
+        return status
+    try:
+        if surface_limit > 0:
+            pdf = sdf.limit(surface_limit).toPandas()
+            ddf = con.execute(f"SELECT * FROM ({sql}) LIMIT {surface_limit}").df()
+        else:
+            pdf = sdf.toPandas()
+            ddf = con.execute(sql).df()
+    except Exception as ex:  # surface the conversion error itself
+        return [f"pandas-surface error: {ex}"]
+    pmism = {}
+    for c in pdf.columns:
+        pc, dc = _pandas_cls(pdf[c]), _pandas_cls(ddf[c])
+        if not _surface_match(pc, dc, sampled=surface_limit > 0):
+            pmism[c] = (pc, dc)
+    return [f"pandas-surface {pmism}"] if pmism else []
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="*")
@@ -326,8 +344,8 @@ def main() -> int:
         "(Reusing the already-fetched Arrow table instead was rejected: "
         "Arrow's to_pandas renders DECIMAL as object-of-Decimal where "
         "DuckDB's .df() renders float64 — it would NOT reproduce the "
-        ".df() surface this check exists to compare.) CONSTRAINT (r11 "
-        "ADVICE): sampled mode must never become the gate default as "
+        ".df() surface this check exists to compare.) CONSTRAINT: "
+        "sampled mode must never become the gate default as "
         "long as the two samples are unordered; if it ever is promoted, "
         "both samples must first be ordered identically (reuse the "
         "canon_rows sort keys) before limiting.",
@@ -350,20 +368,12 @@ def main() -> int:
     qs, oracles = e.queries(), e.oracle_sql()
     names = args.names or list(qs)
 
-    con = duckdb.connect()
-    from databricks_observe_spark.sources.tables import TABLE_NAMES
-
-    for t in TABLE_NAMES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{args.sf}/{t}.parquet'"
-        )
-
+    con = oracle_con(args.sf)
     failures = []
     for name in names:
         t0 = time.time()
         try:
             sdf = qs[name](spark, args.sf)
-            scols = sdf.columns
             srows = [tuple(r) for r in sdf.collect()]
         except Exception as ex:
             print(f"FAIL {name}: spark error: {ex}")
@@ -372,66 +382,12 @@ def main() -> int:
         if name not in oracles:
             print(f"ok?  {name}: rows-only ({len(srows)} rows, {time.time()-t0:.1f}s)")
             continue
-        try:
-            res = con.execute(oracles[name])
-            tbl = res.arrow()
-            ocols = tbl.column_names
-            orows = [
-                tuple(row) for row in zip(*[c.to_pylist() for c in tbl.columns])
-            ] if tbl.num_columns else []
-        except Exception as ex:
-            print(f"FAIL {name}: duckdb error: {ex}")
-            failures.append(name)
-            continue
-        sc, sr = canon_rows(scols, srows)
-        oc, orr = canon_rows(ocols, orows)
-        styp = {c: _norm_spark_dtype(re.sub(r"\s", "", d)) for c, d in sdf.dtypes}
-        otyp = {
-            c: _norm_arrow_type(tbl.schema.field(i).type) for i, c in enumerate(ocols)
-        }
-        status = []
-        if sc != oc:
-            status.append(f"schema spark={sc} duck={oc}")
-        else:
-            mism = {c: (styp[c], otyp[c]) for c in sc if styp.get(c) != otyp.get(c)}
-            if mism:
-                status.append(f"typerep spark-vs-duck {mism}")
-        if len(sr) != len(orr):
-            status.append(f"rowcount spark={len(sr)} duck={len(orr)}")
-        if not status and sr != orr:
-            ndiff = sum(1 for a, b in zip(sr, orr) if a != b)
-            status.append(f"values differ ({ndiff}/{len(sr)} rows)")
-            for a, b in zip(sr, orr):
-                if a != b:
-                    status.append(f"  spark={a!r}\n  duck ={b!r}")
-                    break
-        if not status:
-            # pandas conversion surface — the one the r07-r09 score_auc
-            # driver divergence actually lived on (see module docstring)
-            try:
-                if args.surface_limit > 0:
-                    pdf = sdf.limit(args.surface_limit).toPandas()
-                    ddf = con.execute(
-                        f"SELECT * FROM ({oracles[name]}) LIMIT "
-                        f"{args.surface_limit}"
-                    ).df()
-                else:
-                    pdf = sdf.toPandas()
-                    ddf = con.execute(oracles[name]).df()
-                pmism = {}
-                for c in pdf.columns:
-                    pc, dc = _pandas_cls(pdf[c]), _pandas_cls(ddf[c])
-                    if not _surface_match(pc, dc, sampled=args.surface_limit > 0):
-                        pmism[c] = (pc, dc)
-                if pmism:
-                    status.append(f"pandas-surface {pmism}")
-            except Exception as ex:  # surface the conversion error itself
-                status.append(f"pandas-surface error: {ex}")
+        status = compare(sdf, srows, con, oracles[name], args.surface_limit)
         if status:
             print(f"FAIL {name}: " + "; ".join(status[:3]))
             failures.append(name)
         else:
-            print(f"PASS {name} ({len(sr)} rows, {time.time()-t0:.1f}s)")
+            print(f"PASS {name} ({len(srows)} rows, {time.time()-t0:.1f}s)")
     print(f"\n{len(names)-len(failures)}/{len(names)} passed")
     return 1 if failures else 0
 
