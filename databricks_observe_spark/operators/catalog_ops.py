@@ -71,8 +71,8 @@ def tables_enriched(t: dict[str, DataFrame]) -> DataFrame:
     The info side is broadcast (metastore-sized); missing probe defaults
     reproduce DA:110-120: kind='table', format=''.
 
-    Memoized + materialized per context (r21, the lineage_closure
-    sharing rule): table_profiles, observability_report and asset_specs
+    Memoized + materialized per context (the lineage_closure sharing
+    rule): table_profiles, observability_report and asset_specs
     each consume this catalog-sized frame per observation tick — one
     build instead of a broadcast-rebuild per consumer.
     """
@@ -145,7 +145,7 @@ def columns_schema(t: dict[str, DataFrame]) -> DataFrame:
     Order-stable: sorts the collected (ordinal, name:type) pairs before
     joining into a string (SURVEY.md §7 hard part 3).
 
-    Memoized + materialized per context (r21, same sharing rule as
+    Memoized + materialized per context (same sharing rule as
     tables_enriched): table_profiles and observability_report re-read
     this catalog-sized aggregate every tick.
     """
@@ -196,7 +196,7 @@ def table_profiles(t: dict[str, DataFrame]) -> DataFrame:
     # ONE aggregation over the union of name-tagged scans instead of N
     # independent global aggregates: each per-table agg plans its own
     # exchange, which under AQE materializes as its own Spark job — N
-    # scheduling floors for N metadata-cheap counts (r21, guide §2.4).
+    # scheduling floors for N metadata-cheap counts.
     # The union aggregates map-side (one partial row per table per task)
     # through a single exchange. The left join from the static name list
     # restores the reference/oracle semantics the old global aggs gave
@@ -604,8 +604,7 @@ def _hist_vals(t: dict[str, DataFrame]) -> DataFrame:
     written table maintained alongside ingest (the same contract as
     ``doc_tokens`` or the shingle index), so it lives in the declared
     setup phase and steady-state :func:`column_histograms` calls measure
-    derivation from the aggregate, not the table scan (round-6 verdict
-    perf item 1)."""
+    derivation from the aggregate, not the table scan."""
     return memo(t, "_hist_vals", lambda: _hist_vals_logical(t).localCheckpoint())
 
 
@@ -1061,7 +1060,7 @@ def observability_report(t: dict[str, DataFrame]) -> DataFrame:
     # one probe pass instead of three of each; the sub-joins inside the
     # build side carry explicit broadcast hints (not just Catalyst size
     # estimates for aggregate outputs, which can exceed the threshold and
-    # silently plan SortMergeJoins inside the build — r8 ADVICE), and the
+    # silently plan SortMergeJoins inside the build), and the
     # plan gate in test_plans.py pins zero SortMergeJoins
     side = files.join(F.broadcast(drift), on="table").join(
         F.broadcast(bins), on="table"

@@ -465,7 +465,7 @@ def simhash_fingerprints(t: dict[str, DataFrame]) -> DataFrame:
     declares "simhash_fingerprints" as a written table, every other
     simhash consumer reads the memo, and the old form re-ran the full
     vote pass per call while the identical frame sat materialized
-    (r21; same stance as ngram_jaccard_pairs returning its pair memo)."""
+    (same stance as ngram_jaccard_pairs returning its pair memo)."""
     return _simhash_fps(t)
 
 
@@ -554,6 +554,16 @@ def _cluster_labels(t: dict[str, DataFrame]) -> DataFrame:
     )
 
 
+def near_dup_dropped(t: dict[str, DataFrame]) -> DataFrame:
+    """``doc_id`` of every non-canonical near-dup cluster member: the
+    documents near-dup survivorship drops."""
+    return (
+        _cluster_labels(t)
+        .filter(F.col("doc_id") != F.col("cluster_id"))
+        .select("doc_id")
+    )
+
+
 def near_dup_clusters(t: dict[str, DataFrame]) -> DataFrame:
     """Connected components over the near-duplicate pair graph: each doc
     mapped to its cluster's minimum doc_id (the canonical survivor).
@@ -623,11 +633,7 @@ def curated_corpus(t: dict[str, DataFrame]) -> DataFrame:
     exact_canon = exact_dedup(t).select(
         F.col("canonical_doc_id").alias("doc_id")
     )
-    dropped = (
-        _cluster_labels(t)
-        .filter(F.col("doc_id") != F.col("cluster_id"))
-        .select("doc_id")
-    )
+    dropped = near_dup_dropped(t)
     # no broadcast hint on the dropped side: it holds every non-canonical
     # near-dup member, which on a heavily duplicated corpus (the exact
     # case a dedup pipeline targets) is corpus-scale. AQE broadcasts the
@@ -1086,36 +1092,62 @@ def _contam_eval_set(t: dict[str, DataFrame]) -> DataFrame:
     ))
 
 
+def train_split(d: DataFrame) -> DataFrame:
+    """The training rows of ``d``: everything outside the held-out eval
+    set (doc_id % EVAL_MOD == 0)."""
+    return d.filter(F.col("doc_id") % EVAL_MOD != 0)
+
+
+# DuckDB twin of train_split's predicate
+_TRAIN_SQL = f"doc_id % {EVAL_MOD} <> 0"
+
+
+def contam_counts(t: dict[str, DataFrame]) -> DataFrame:
+    """``(doc_id, n_shingles, n_overlap)`` for every training document: its
+    distinct word-``CONTAM_K``-gram count and how many of those grams the
+    held-out eval set also holds.
+
+    Read off the setup-phase :func:`_contam_grams` index (at 100 TB a
+    written decontamination gram table maintained with ingest). The eval
+    gram set is small by construction, so it broadcasts: each train gram
+    is flagged map-side by a broadcast LEFT join, pruned against the
+    eval set before anything shuffles, and ONE map-side-combined per-doc
+    aggregate produces both counts from the flagged stream. No gram row
+    is shuffled and there is no hits-to-sizes join: the only exchange is
+    the doc_id aggregate over per-task partials."""
+    flagged = train_split(_contam_grams(t)).join(
+        F.broadcast(_contam_eval_set(t)), on="s", how="left"
+    )
+    return flagged.groupBy("doc_id").agg(
+        F.count(F.lit(1)).alias("n_shingles"),
+        F.count("hit").alias("n_overlap"),
+    )
+
+
+# DuckDB twin of contam_counts (a self-contained query, used as a subquery)
+_CONTAM_COUNTS_SQL = f"""
+WITH csh AS ({shingled_sql(CONTAM_K)}),
+cev AS (SELECT DISTINCT shingle FROM csh WHERE doc_id % {EVAL_MOD} = 0)
+SELECT doc_id, COUNT(*) AS n_shingles, COUNT(cev.shingle) AS n_overlap
+FROM csh LEFT JOIN cev ON csh.shingle = cev.shingle
+WHERE {_TRAIN_SQL}
+GROUP BY doc_id
+"""
+
+
 def contamination_check(t: dict[str, DataFrame]) -> DataFrame:
     """Train/eval decontamination report: word-4-gram overlap between each
     training document and a held-out eval set (doc_id % 13 == 0), the
     benchmark-leakage check run before a pretraining corpus ships
     (GPT-3 appendix C / PaLM use the same n-gram-collision form).
 
-    The eval shingle set is small by construction, so it broadcasts —
-    each train gram is flagged map-side by a broadcast LEFT join (the
-    "prune against the broadcast eval-gram set before anything shuffles"
-    form, round-6 verdict perf item 2), and ONE map-side-combined per-doc
-    aggregate produces both the total shingle count and the overlap count
-    from the flagged stream. No gram row is shuffled twice and there is
-    no hits-to-sizes join: the only exchange in the plan is the doc_id
-    aggregate over per-task partials. The gram expansion itself is the
-    setup-phase :func:`_contam_grams` index (at 100 TB a written
-    decontamination gram table maintained with ingest), so steady-state
-    runs measure the flag-and-aggregate, not the regex explode. Only
-    training docs with at least one colliding 4-gram are reported (the
-    actionable rows).
+    The counts are :func:`contam_counts`, so steady-state runs measure
+    the flag-and-aggregate, not the regex explode. Only training docs
+    with at least one colliding 4-gram are reported (the actionable
+    rows).
     """
-    sh = _contam_grams(t)
-    ev = _contam_eval_set(t)
-    train = sh.filter(F.col("doc_id") % EVAL_MOD != 0)
-    flagged = train.join(F.broadcast(ev), on="s", how="left")
     return (
-        flagged.groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_shingles"),
-            F.count("hit").alias("n_overlap"),
-        )
+        contam_counts(t)
         .filter(F.col("n_overlap") > 0)
         .select(
             "doc_id",
@@ -1129,18 +1161,10 @@ def contamination_check(t: dict[str, DataFrame]) -> DataFrame:
 
 
 CONTAMINATION_CHECK_SQL = f"""
-WITH sh AS ({shingled_sql(CONTAM_K)}),
-ev AS (SELECT DISTINCT s.shingle FROM sh s WHERE s.doc_id % {EVAL_MOD} = 0),
-train AS (SELECT * FROM sh WHERE doc_id % {EVAL_MOD} <> 0),
-sizes AS (SELECT doc_id, COUNT(*) AS n_shingles FROM train GROUP BY doc_id),
-hits AS (
-  SELECT doc_id, COUNT(*) AS n_overlap
-  FROM train SEMI JOIN ev ON train.shingle = ev.shingle
-  GROUP BY doc_id
-)
 SELECT doc_id, n_shingles, n_overlap,
        {sql_round_half_up('n_overlap * 1.0 / n_shingles', 6)} AS overlap_frac
-FROM hits JOIN sizes USING (doc_id)
+FROM ({_CONTAM_COUNTS_SQL})
+WHERE n_overlap > 0
 """
 
 
@@ -1244,8 +1268,7 @@ def bloom_contamination_check(t: dict[str, DataFrame]) -> DataFrame:
     combined per-doc aggregate — nothing gram- or eval-sized ever joins
     or shuffles.
     """
-    sh = _contam_grams(t)
-    probe = sh.filter(F.col("doc_id") % EVAL_MOD != 0).crossJoin(
+    probe = train_split(_contam_grams(t)).crossJoin(
         F.broadcast(_bloom_filter_df(t))
     )
 
@@ -1292,7 +1315,7 @@ evbits AS (
   UNION SELECT {_bloom_bit_sql('shingle', _BLOOM_TAGS[1])} FROM ev
   UNION SELECT {_bloom_bit_sql('shingle', _BLOOM_TAGS[2])} FROM ev
 ),
-train AS (SELECT doc_id, shingle FROM sh WHERE doc_id % {EVAL_MOD} <> 0),
+train AS (SELECT doc_id, shingle FROM sh WHERE {_TRAIN_SQL}),
 probe AS (
   SELECT shingle,
          {_bloom_bit_sql('shingle', _BLOOM_TAGS[0])} AS b0,
@@ -1373,27 +1396,31 @@ FROM batch b LEFT JOIN base ON b.h = base.h JOIN firsts f ON b.h = f.h
 # --- normalization dedup (near-exact variants) ------------------------------
 
 
+def _norm_hash() -> F.Column:
+    """md5 of the normalized ``text``: lowercased, every non-alphanumeric
+    run collapsed to ONE space, trimmed — the standard
+    punctuation-insensitive canonical form, in one fused regex pass
+    (regex CPU dominates the normalized-dedup stage, and one automaton
+    pass over each text is half the work of strip-then-collapse)."""
+    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9]+", " "))
+    return F.md5(norm)
+
+
 def normalized_dedup(t: dict[str, DataFrame]) -> DataFrame:
-    """Normalization-based near-exact dedup: lowercase, strip non-
-    alphanumerics, collapse whitespace, THEN hash — the cheap first rung
-    of the dedup ladder real pipelines run before any fuzzy method (it
-    catches case/punctuation/whitespace variants exact_dedup misses, at
+    """Normalization-based near-exact dedup: hash the :func:`_norm_hash`
+    canonical form — the cheap first rung of the dedup ladder real
+    pipelines run before any fuzzy method (it catches
+    case/punctuation/whitespace variants exact_dedup misses, at
     exact_dedup's cost: one shuffle on a 16-byte digest).
 
     canonical = min doc_id per normalized digest; ``n_variants`` > 1 rows
-    are the removable near-exact duplicates. The normalization is ONE
-    fused regex pass (every non-alphanumeric run collapses to a single
-    space — the standard punctuation-insensitive canonical form) instead
-    of strip-then-collapse: regex CPU dominates this operator, and one
-    automaton pass over each text is half the work of two. Still
-    CPU-bound, so the under-split fixture scan routes through
-    ``fan_out`` like the other heavy text ops — a no-op on a well-split
-    production scan.
+    are the removable near-exact duplicates. Still CPU-bound, so the
+    under-split fixture scan routes through ``fan_out`` like the other
+    heavy text ops — a no-op on a well-split production scan.
     """
-    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9]+", " "))
     return (
         fan_out(t["documents"])
-        .select("doc_id", F.md5(norm).alias("norm_hash"))
+        .select("doc_id", _norm_hash().alias("norm_hash"))
         .groupBy("norm_hash")
         .agg(
             F.min("doc_id").alias("canonical_doc_id"),
@@ -1409,6 +1436,20 @@ SELECT md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))) AS norm_ha
 FROM documents
 GROUP BY 1
 """
+
+
+def normalized_survivors(docs: DataFrame, *cols) -> DataFrame:
+    """The canonical document of each normalized digest — the min doc_id,
+    as in :func:`normalized_dedup` — as ``(doc_id, *cols)`` rows. ``cols``
+    are evaluated before the one digest shuffle, so a caller that needs
+    only derived per-doc columns never shuffles the text."""
+    w = Window.partitionBy("norm_hash").orderBy("doc_id")
+    return (
+        docs.select("doc_id", *cols, _norm_hash().alias("norm_hash"))
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .drop("rn", "norm_hash")
+    )
 
 
 # --- URL canonicalization dedup (rung 0 of the web-corpus dedup ladder) ------
@@ -1494,8 +1535,8 @@ _URL_TRACKED_QUERY_RE = "(^|&)" + _URL_TRACKING_PARAMS
 # The lazy ^[^#]*? prefix pins the match before the fragment — an
 # unanchored \?([^#]*) would let a '?' INSIDE the fragment parse as a
 # query when no real query exists, leaking fragment content into the
-# canonical URL (caught in the round-8 review; the randomized
-# differential test generates exactly that shape).
+# canonical URL (the randomized differential test generates exactly that
+# shape).
 _URL_QUERY_RE = r"^[^#]*?\?([^#]*)"
 
 
@@ -1779,10 +1820,10 @@ def source_overlap_matrix(t: dict[str, DataFrame]) -> DataFrame:
     matrix and the denominators — no second walk over the gram frame.
     Integer basis points, zero floats until the report divide.
     """
-    # digest-keyed shuffles (r21, guide §2.3 + the duplicated_spans
-    # discipline): the distinct and the gram fold shuffle the 16-byte
-    # md5 of the gram, never the gram TEXT — same equality classes, a
-    # fraction of the bytes per row at any corpus scale
+    # digest-keyed shuffles (the duplicated_spans discipline): the
+    # distinct and the gram fold shuffle the 16-byte md5 of the gram,
+    # never the gram TEXT — same equality classes, a fraction of the
+    # bytes per row at any corpus scale
     sg = (
         _shingled(t)
         .join(t["documents"].select("doc_id", "source"), on="doc_id")
@@ -1813,8 +1854,8 @@ def source_overlap_matrix(t: dict[str, DataFrame]) -> DataFrame:
     # the denominator |grams(a)| is the DIAGONAL of the matrix, picked
     # per src_a row group by a window over the source^2-sized frame —
     # one chain instead of a checkpointed split + broadcast join back
-    # (r21, guide §2.4: the frame is bounded by source-cardinality^2, so
-    # the window sees dozens of rows at any corpus scale). A src_a with
+    # (the frame is bounded by source-cardinality^2, so the window sees
+    # dozens of rows at any corpus scale). A src_a with
     # any pair row always has its diagonal (its gram set contains it).
     return (
         matrix.withColumn(
@@ -1921,7 +1962,7 @@ def lsh_dedup_recall(t: dict[str, DataFrame]) -> DataFrame:
     corpus re-scan. Empty ground truth reads as vacuous recall 10000.
     """
     # ONE pass instead of three global aggregates + a semi join + two
-    # broadcast joins (r21, guide §2.4): tag each memoized pair set,
+    # broadcast joins: tag each memoized pair set,
     # union, group once per pair, then a single global aggregate reads
     # all three counts. n_hit = sum(n_e) over pairs present on both
     # sides, which is exactly the left-semi multiplicity of the old
@@ -2014,9 +2055,8 @@ def duplicated_spans(t: dict[str, DataFrame]) -> DataFrame:
     (1) rolling windows generated SHUFFLE-FREE from the memoized token
     index: per document, ``transform(sequence(...), i -> md5(concat_ws(
     slice(w, i, SPAN_K))))`` emits every full window in one map-side
-    pass (r21, guide §2.4 — the previous posexplode + doc-keyed window
-    formulation shuffled and sorted every token position first; the
-    gram multiset is identical, position by position);
+    pass (a posexplode + doc-keyed window formulation would shuffle and
+    sort every token position first, for the identical gram multiset);
     (2) cross-document flag per gram as ``min(doc_id) < max(doc_id)``
     — exactly the >= 2-distinct-docs predicate (within-doc repeats give
     min == max), and min/max partial-aggregate MAP-SIDE, so a

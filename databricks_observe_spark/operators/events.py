@@ -1163,8 +1163,8 @@ def rate_anomaly(t: dict[str, DataFrame]) -> DataFrame:
     )
     # the GLOBAL hour bounds ride the per-type aggregate as a single-
     # partition window over the (n_types)-sized frame instead of a
-    # separate scalar branch + broadcast cross join (r21, guide §2.4 —
-    # one fewer recompute of counts and one fewer broadcast-build job)
+    # separate scalar branch + broadcast cross join (one fewer recompute
+    # of counts and one fewer broadcast-build job)
     w_all = Window.partitionBy(F.lit(1))
     grid = (
         counts.groupBy("event_type")

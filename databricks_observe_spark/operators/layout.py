@@ -264,9 +264,9 @@ def zone_map_plan(t: dict[str, DataFrame]) -> DataFrame:
     instead of computing them — this operator is the sizing for that
     layout, run on the column the files would be clustered by.
 
-    r22 (guide §2.3/§2.4): the predicates are LITERALS, so the audit no
-    longer cross-joins them onto the scan (which multiplied the corpus
-    scan and the pre-exchange rows by the predicate count): ONE
+    The predicates are LITERALS, so the audit does not cross-join them
+    onto the scan (which would multiply the corpus scan and the
+    pre-exchange rows by the predicate count): ONE
     per-block aggregate carries a conditional-sum column per predicate,
     and the (predicate, block) rows explode from a literal struct array
     AFTER aggregation — same exact integers, one scan instead of three,

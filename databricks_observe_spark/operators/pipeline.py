@@ -1,69 +1,66 @@
 """End-to-end curation pipeline — the composed form of the corpus
 curation stages, as ONE DataFrame DAG.
 
-The individual operators (normalized dedup, near-dup clustering, quality
-filter, contamination check, stratified sampling, sequence packing) are
-each registered and oracle-checked on their own; this module proves they
-COMPOSE: one job, shared scans, no redundant shuffles — the shape a real
-training-data pipeline actually ships. Reference anchor: the E2/E3
+Each stage is the standalone operator's own stage function (and each
+oracle stage its own SQL fragment), so a stage's thresholds, hash and
+window live in one module and the pipeline cannot drift from the
+registered, oracle-checked operator. Reference anchor: the E2/E3
 pipeline assets (``assets/dlt_assets.py:136-188``,
 ``assets/customer_assets.py:8-28``), whose rebuild rule (SURVEY.md §1.3)
 is "one declarative job, not N chained jobs".
 
 Stage order (each stage consumes the previous stage's survivors):
 
-1. normalized-hash dedup survivorship (subsumes exact dedup: an exact
-   duplicate is also a normalized duplicate) — first survivor by doc_id
-   per normalized digest
-2. near-duplicate cluster survivorship — non-canonical members of the
-   n-gram-Jaccard clusters drop (labels are the memoized setup-phase
-   index, a written table at scale)
-3. quality gate — the quality_filter keep predicate inline (pure
-   row-level conjunction, fuses into the scan)
-4. decontamination — the held-out eval set (doc_id % EVAL_MOD == 0)
-   leaves the corpus, and any train doc whose word-4-gram overlap with
-   the eval set exceeds half its shingles drops. Contamination is a
-   per-doc property of the RAW text, so the contaminated-id set is a
-   side branch off the raw scan (the filters commute) — the main path
-   never recomputes, it anti-joins two broadcast id sets
-5. language-stratified downsample — per-language counts of the CLEAN
-   corpus (not the raw one: each stage feeds the next), md5-bucket
-   content-stable keep decision in exact integer arithmetic
-6. sequence packing — per-language running-token-sum bins over the
-   sampled survivors; the per-bin rollup is the pipeline's output
+1. normalized-hash dedup survivorship (``dedup.normalized_survivors``;
+   subsumes exact dedup: an exact duplicate is also a normalized
+   duplicate). The per-doc signals (``text.signal_cols``) are derived in
+   the same projection, so the digest shuffle carries no text.
+2. near-duplicate cluster survivorship (``dedup.near_dup_dropped``, off
+   the memoized setup-phase cluster labels)
+3. quality gate (``text.reject_reason`` is NULL; a row-local predicate)
+4. decontamination — the held-out eval set leaves the corpus
+   (``dedup.train_split``), and any train doc whose word-4-gram overlap
+   with the eval set exceeds half its shingles drops. The counts are
+   ``dedup.contam_counts`` over the setup-phase gram indexes; the
+   main path anti-joins the broadcast contaminated-id set
+5. language-stratified downsample of the CLEAN corpus
+   (``text.stratified_keep``: per-language counts of the stage-4
+   survivors, not of the raw corpus)
+6. sequence packing (``text.pack_bins``) over the sampled survivors; the
+   per-bin rollup is the pipeline's output
 
-Scale shape: the corpus-sized path is ONE linear flow with exactly three
-corpus-sized shuffles (normalized digest, contamination shingle
-aggregate on the side branch, packing language window); every join on
-the main path broadcasts a small side (dropped cluster members,
-contaminated ids, language counts). The plan gate
-(tests/test_plans.py) pins the exchange budget and the no-sort-merge-join
-property.
+Scale shape: the corpus-sized path is ONE linear flow with two
+corpus-sized shuffles (the normalized digest and the packing language
+window); the contaminated-id side is one map-side-combined doc_id
+aggregate over the gram index, and every join on the main path
+broadcasts a small side (dropped cluster members, contaminated ids,
+language counts). The plan gate (tests/test_plans.py) pins the exchange
+budget and the no-sort-merge-join property.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
-from databricks_observe_spark.functions.rounding import (
-    round_half_up,
-    sql_round_half_up,
-)
-from databricks_observe_spark.functions.textfns import shingle_regex_expr
 from databricks_observe_spark.operators.dedup import (
-    CONTAM_K,
-    EVAL_MOD,
-    JACCARD_THRESHOLD,
-    _SHINGLED_SQL,
-    _cluster_labels,
+    NORMALIZED_DEDUP_SQL,
+    _CONTAM_COUNTS_SQL,
+    _LABELS_CTES_SQL,
+    _TRAIN_SQL,
+    contam_counts,
+    near_dup_dropped,
+    normalized_survivors,
+    train_split,
 )
 from databricks_observe_spark.operators.text import (
-    MAX_STOPWORD_RATIO,
-    MIN_TOKENS,
-    MIN_TTR,
-    PACK_TARGET,
-    STOPWORDS,
-    _STOP_LIST_SQL,
+    _REJECT_REASON_SQL,
+    _SIGNALS_SQL,
+    pack_bins,
+    pack_bins_sql,
+    reject_reason,
+    signal_cols,
+    stratified_keep,
+    stratified_keep_sql,
 )
 from databricks_observe_spark.sources.tables import fan_out
 
@@ -84,77 +81,15 @@ def curation_pipeline_e2e(
     gate can inspect the full un-truncated DAG (every join broadcast, no
     sort-merge fallback anywhere in the composition).
     """
-    docs = fan_out(t["documents"])
-    toks = F.split(F.col("text"), " ")
-    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9]+", " "))
-    stop_hits = F.size(F.filter(toks, lambda x: x.isin(*STOPWORDS)))
-    bucket = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 6), 16, 10
-    ).cast("bigint") % 1000000
-    base = docs.select(
-        "doc_id",
-        "lang",
-        "source",
-        F.md5(norm).alias("norm_hash"),
-        F.size(toks).alias("n_tokens"),
-        (F.size(F.array_distinct(toks)) / F.size(toks)).alias("ttr"),
-        (stop_hits / F.size(toks)).alias("stopword_ratio"),
-        bucket.alias("bucket"),
-    )
-
-    # stage 1: normalized-dedup survivorship (one shuffle on the digest)
-    w_norm = Window.partitionBy("norm_hash").orderBy("doc_id")
-    s1 = (
-        base.withColumn("rn", F.row_number().over(w_norm))
-        .filter(F.col("rn") == 1)
-        .drop("rn", "norm_hash")
-    )
-
-    # stage 2: near-dup cluster survivorship (broadcast anti on the
-    # non-canonical member set — small by construction)
-    nd_dropped = (
-        _cluster_labels(t)
-        .filter(F.col("doc_id") != F.col("cluster_id"))
-        .select("doc_id")
-    )
-    s2 = s1.join(F.broadcast(nd_dropped), on="doc_id", how="left_anti")
-
-    # stage 3: quality gate (row-local predicate, same thresholds and
-    # expressions as quality_filter)
-    s3 = s2.filter(
-        (F.col("n_tokens") >= MIN_TOKENS)
-        & (F.col("ttr") >= MIN_TTR)
-        & (F.col("stopword_ratio") <= MAX_STOPWORD_RATIO)
-    )
-
-    # stage 4: decontamination — side branch off the RAW scan (per-doc
-    # property; commutes with the row filters above). Digest-keyed (r21,
-    # guide §2.3): the eval-set dedup shuffle and the broadcast flagging
-    # join carry the 16-byte md5 of the 4-gram, never the gram TEXT —
-    # same equality classes (and the same discipline as
-    # duplicated_spans / source_overlap_matrix), a fraction of the
-    # bytes at corpus scale
-    sh = docs.select(
-        "doc_id", F.explode(shingle_regex_expr(CONTAM_K)).alias("g")
-    ).select("doc_id", F.unhex(F.md5("g")).alias("s"))
-    ev = (
-        sh.filter(F.col("doc_id") % EVAL_MOD == 0)
-        .select("s")
-        .dropDuplicates(["s"])
-        .withColumn("hit", F.lit(1))
-    )
+    s1 = normalized_survivors(fan_out(t["documents"]), "lang", *signal_cols())
+    s2 = s1.join(F.broadcast(near_dup_dropped(t)), on="doc_id", how="left_anti")
+    s3 = s2.filter(reject_reason().isNull())
     contaminated = (
-        sh.filter(F.col("doc_id") % EVAL_MOD != 0)
-        .join(F.broadcast(ev), on="s", how="left")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_shingles"),
-            F.count("hit").alias("n_overlap"),
-        )
+        contam_counts(t)
         .filter(F.col("n_overlap") * CONTAM_DROP_NUM > F.col("n_shingles"))
         .select("doc_id")
     )
-    s4 = s3.filter(F.col("doc_id") % EVAL_MOD != 0).join(
+    s4 = train_split(s3).join(
         F.broadcast(contaminated), on="doc_id", how="left_anti"
     )
     # the clean survivor frame feeds two consumers (the language counts
@@ -165,135 +100,26 @@ def curation_pipeline_e2e(
     # curation and packing phases.
     if checkpoint:
         s4 = s4.localCheckpoint()
-
-    # stage 5: language-stratified downsample of the clean corpus. The
-    # min count rides ON the counts frame (a single-partition window over
-    # language-cardinality rows — bounded) instead of a separate scalar
-    # branch, so one broadcast join replaces a join + cross join.
-    counts = (
-        s4.groupBy("lang")
-        .agg(F.count(F.lit(1)).alias("n_lang"))
-        .withColumn(
-            "min_count",
-            F.min("n_lang").over(Window.partitionBy(F.lit(1))),
-        )
-    )
-    s5 = s4.join(F.broadcast(counts), on="lang").filter(
-        F.col("bucket") * F.col("n_lang") < F.col("min_count") * F.lit(1000000)
-    )
-
-    # stage 6: sequence packing over the sampled survivors; the final
-    # rollup needs no new exchange (grouping keys contain the window's
-    # partition key)
-    w_pack = (
-        Window.partitionBy("lang")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    binned = s5.withColumn(
-        "bin_id",
-        F.floor(
-            (F.sum("n_tokens").over(w_pack) - F.col("n_tokens")) / PACK_TARGET
-        ),
-    )
-    return binned.groupBy("lang", "bin_id").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_tokens").cast("bigint").alias("total_tokens"),
-        F.min("doc_id").alias("first_doc"),
-        F.max("doc_id").alias("last_doc"),
-        round_half_up(F.sum("n_tokens") / F.lit(float(PACK_TARGET)), 6).alias(
-            "fill_ratio"
-        ),
-    )
+    return pack_bins(stratified_keep(s4))
 
 
 CURATION_PIPELINE_E2E_SQL = f"""
-WITH RECURSIVE tokd AS (
-  SELECT doc_id, lang, source, text, string_split(text, ' ') AS toks
-  FROM documents
+WITH RECURSIVE {_LABELS_CTES_SQL},
+signals AS (
+  SELECT doc_id, lang, {_SIGNALS_SQL}
+  FROM (SELECT *, string_split(text, ' ') AS toks FROM documents)
 ),
-base AS (
-  SELECT doc_id, lang, source,
-         md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))) AS norm_hash,
-         len(toks) AS n_tokens,
-         len(list_distinct(toks)) * 1.0 / len(toks) AS ttr,
-         len(list_filter(toks, x -> list_contains({_STOP_LIST_SQL}, x))) * 1.0
-           / len(toks) AS stopword_ratio,
-         ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 6))::BIGINT % 1000000
-           AS bucket
-  FROM tokd
+clean AS (
+  SELECT * FROM signals
+  WHERE doc_id IN (SELECT canonical_doc_id FROM ({NORMALIZED_DEDUP_SQL}))
+    AND doc_id NOT IN (SELECT doc_id FROM labels WHERE doc_id <> cluster_id)
+    AND {_REJECT_REASON_SQL} IS NULL
+    AND {_TRAIN_SQL}
+    AND doc_id NOT IN (
+      SELECT doc_id FROM ({_CONTAM_COUNTS_SQL})
+      WHERE n_overlap * {CONTAM_DROP_NUM} > n_shingles
+    )
 ),
-s1 AS (
-  SELECT * FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY norm_hash ORDER BY doc_id) AS rn
-    FROM base
-  ) WHERE rn = 1
-),
-sh AS ({_SHINGLED_SQL}),
-sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-),
-pairs AS (
-  SELECT doc_a, doc_b FROM inter
-  JOIN sizes sa ON doc_a = sa.doc_id JOIN sizes sb ON doc_b = sb.doc_id
-  WHERE n_common * 1.0 / (sa.n + sb.n - n_common) >= {JACCARD_THRESHOLD}
-),
-edges AS (SELECT doc_a, doc_b FROM pairs UNION SELECT doc_b, doc_a FROM pairs),
-reach AS (
-  SELECT doc_a AS doc_id, doc_b AS other FROM edges
-  UNION
-  SELECT r.doc_id, e.doc_b FROM reach r JOIN edges e ON r.other = e.doc_a
-),
-labels AS (
-  SELECT doc_id, LEAST(doc_id, MIN(other)) AS cluster_id FROM reach GROUP BY doc_id
-),
-nd_dropped AS (SELECT doc_id FROM labels WHERE doc_id <> cluster_id),
-s3 AS (
-  SELECT * FROM s1
-  WHERE doc_id NOT IN (SELECT doc_id FROM nd_dropped)
-    AND n_tokens >= {MIN_TOKENS} AND ttr >= {MIN_TTR}
-    AND stopword_ratio <= {MAX_STOPWORD_RATIO}
-),
-csh AS (
-  SELECT DISTINCT doc_id,
-         array_to_string(toks[i.i : i.i + {CONTAM_K - 1}], ' ') AS shingle
-  FROM tokd
-  CROSS JOIN LATERAL (
-    SELECT unnest(range(1, greatest(len(toks) - {CONTAM_K - 2}, 2))) AS i
-  ) i
-),
-ev AS (SELECT DISTINCT shingle FROM csh WHERE doc_id % {EVAL_MOD} = 0),
-contaminated AS (
-  SELECT doc_id FROM (
-    SELECT c.doc_id, COUNT(*) AS n_shingles, COUNT(e.shingle) AS n_overlap
-    FROM (SELECT * FROM csh WHERE doc_id % {EVAL_MOD} <> 0) c
-    LEFT JOIN ev e ON c.shingle = e.shingle
-    GROUP BY c.doc_id
-  ) WHERE n_overlap * {CONTAM_DROP_NUM} > n_shingles
-),
-s4 AS (
-  SELECT * FROM s3
-  WHERE doc_id % {EVAL_MOD} <> 0
-    AND doc_id NOT IN (SELECT doc_id FROM contaminated)
-),
-c AS (SELECT lang, COUNT(*) AS n_lang FROM s4 GROUP BY lang),
-m AS (SELECT MIN(n_lang) AS min_count FROM c),
-s5 AS (
-  SELECT s4.* FROM s4 JOIN c ON s4.lang = c.lang CROSS JOIN m
-  WHERE bucket * c.n_lang < m.min_count * 1000000
-),
-binned AS (
-  SELECT *, CAST(floor((SUM(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
-                         ROWS UNBOUNDED PRECEDING) - n_tokens)
-                 / {PACK_TARGET}) AS BIGINT) AS bin_id
-  FROM s5
-)
-SELECT lang, bin_id, COUNT(*) AS n_docs,
-       CAST(SUM(n_tokens) AS BIGINT) AS total_tokens,
-       MIN(doc_id) AS first_doc, MAX(doc_id) AS last_doc,
-       {sql_round_half_up(f'SUM(n_tokens) / {float(PACK_TARGET)}', 6)} AS fill_ratio
-FROM binned GROUP BY lang, bin_id
+sampled AS ({stratified_keep_sql('clean')})
+{pack_bins_sql('sampled')}
 """

@@ -77,7 +77,7 @@ def _compact_ckpt(df: DataFrame) -> DataFrame:
     materialized corpus at test SF is a few thousand rows — re-reading it
     as 32 micro-partitions makes every downstream Arrow pass pay 32 task
     launches + 32 worker round-trips for microseconds of math each
-    (optimization guide §2.2/§6: fewer, larger tasks once data is small).
+    (fewer, larger tasks once data is small).
     Partition count derives from the MEASURED row count (one partition
     per ~100k vectors, floor 1, never above the build's own width), so a
     genuinely large corpus keeps its parallelism — nothing is tuned to

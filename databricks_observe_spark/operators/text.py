@@ -46,34 +46,50 @@ TRAIN_MOD = 2  # even doc_id -> training half
 TOP_TRIGRAMS = 40
 
 
-def text_stats(t: dict[str, DataFrame]) -> DataFrame:
+def signal_cols() -> list[F.Column]:
+    """The per-doc quality signals ``n_tokens``, ``ttr`` and
+    ``stopword_ratio`` over the whitespace tokens of ``text``: the columns
+    :func:`reject_reason` thresholds. ``text_stats`` reports them and the
+    curation pipeline carries them through its dedup shuffle."""
     toks = F.split(F.col("text"), " ")
     stop_hits = F.size(F.filter(toks, lambda x: x.isin(*STOPWORDS)))
+    return [
+        F.size(toks).alias("n_tokens"),
+        (F.size(F.array_distinct(toks)) / F.size(toks)).alias("ttr"),
+        (stop_hits / F.size(toks)).alias("stopword_ratio"),
+    ]
+
+
+def text_stats(t: dict[str, DataFrame]) -> DataFrame:
+    toks = F.split(F.col("text"), " ")
+    n_tokens, ttr, stopword_ratio = signal_cols()
     return t["documents"].select(
         "doc_id",
         "lang",
         "source",
         F.length("text").alias("n_chars"),
-        F.size(toks).alias("n_tokens"),
+        n_tokens,
         F.size(F.array_distinct(toks)).alias("n_types"),
-        (F.size(F.array_distinct(toks)) / F.size(toks)).alias("ttr"),
+        ttr,
         ((F.length("text") - F.size(toks) + 1) / F.size(toks)).alias("avg_token_len"),
-        (stop_hits / F.size(toks)).alias("stopword_ratio"),
+        stopword_ratio,
     )
 
 
 _STOP_LIST_SQL = "[" + ", ".join(f"'{w}'" for w in STOPWORDS) + "]"
+# DuckDB twin of signal_cols over a ``toks`` list column
+_SIGNALS_SQL = f"""len(toks) AS n_tokens,
+       len(list_distinct(toks)) * 1.0 / len(toks) AS ttr,
+       len(list_filter(toks, x -> list_contains({_STOP_LIST_SQL}, x))) * 1.0 / len(toks)
+         AS stopword_ratio"""
 
 TEXT_STATS_SQL = f"""
 WITH d AS (SELECT *, string_split(text, ' ') AS toks FROM documents)
 SELECT doc_id, lang, source,
        length(text) AS n_chars,
-       len(toks) AS n_tokens,
        len(list_distinct(toks)) AS n_types,
-       len(list_distinct(toks)) * 1.0 / len(toks) AS ttr,
        (length(text) - len(toks) + 1) * 1.0 / len(toks) AS avg_token_len,
-       len(list_filter(toks, x -> list_contains({_STOP_LIST_SQL}, x))) * 1.0 / len(toks)
-         AS stopword_ratio
+       {_SIGNALS_SQL}
 FROM d
 """
 
@@ -341,8 +357,8 @@ def heavy_hitter_tokens(t: dict[str, DataFrame]) -> DataFrame:
     # orderBy().limit(k) plans as TakeOrderedAndProject: each task keeps its
     # local top-20, the driver merges 20-row heaps — the full vocab (billions
     # of tokens at 100 TB) never funnels through one reducer. Ranking then
-    # runs a window over the 20 surviving rows only (VERDICT r02 item 3; the
-    # old global row_number() window was a single-reducer over the vocab).
+    # runs a window over the 20 surviving rows only (a global row_number()
+    # window would be a single reducer over the whole vocab).
     top = df.orderBy(F.desc("doc_freq"), F.asc("tok")).limit(20)
     w = Window.orderBy(F.desc("doc_freq"), F.asc("tok"))
     return top.select(
@@ -393,9 +409,9 @@ def tfidf_keywords(t: dict[str, DataFrame]) -> DataFrame:
     Rounding is :func:`round_half_up` (``floor(x*1e6+0.5)/1e6`` on BOTH
     engines) — pure IEEE arithmetic over the bit-identical score, so the
     rounded value (and hence the rnk ordering) cannot diverge even at
-    0.5e-6 boundaries. This closed the package-wide ``F.round(double, n)``
-    vs engine-rounding latent class flagged in the round-6 verdict; every
-    oracle pair in the package now uses the shared helper.
+    0.5e-6 boundaries, where ``F.round(double, n)`` and the engines' own
+    rounding can disagree; every oracle pair in the package uses the
+    shared helper.
     """
     docs = t["documents"]
     n_docs = docs.agg(F.count(F.lit(1)).cast("double").alias("n_docs"))
@@ -636,20 +652,32 @@ MIN_TTR = 0.35
 MAX_STOPWORD_RATIO = 0.6
 
 
-def quality_filter(t: dict[str, DataFrame]) -> DataFrame:
-    """Curation-pipeline keep/drop decision over the text_stats signals.
-
-    First-match reject reason (too_short -> low_diversity ->
-    stopword_heavy) mirrors how a real filter chain reports; the CASE
-    order is part of the contract and the oracle replays it exactly.
-    One corpus scan — the stats projection fuses into the filter.
-    """
-    s = text_stats(t)
-    reason = (
+def reject_reason() -> F.Column:
+    """The quality keep rule over the :func:`signal_cols` columns: the
+    first failed check (too_short -> low_diversity -> stopword_heavy),
+    NULL for a kept doc. The CASE order is part of the contract and the
+    oracle replays it exactly."""
+    return (
         F.when(F.col("n_tokens") < MIN_TOKENS, F.lit("too_short"))
         .when(F.col("ttr") < MIN_TTR, F.lit("low_diversity"))
         .when(F.col("stopword_ratio") > MAX_STOPWORD_RATIO, F.lit("stopword_heavy"))
     )
+
+
+# DuckDB twin of reject_reason
+_REJECT_REASON_SQL = f"""CASE WHEN n_tokens < {MIN_TOKENS} THEN 'too_short'
+            WHEN ttr < {MIN_TTR} THEN 'low_diversity'
+            WHEN stopword_ratio > {MAX_STOPWORD_RATIO} THEN 'stopword_heavy'
+       END"""
+
+
+def quality_filter(t: dict[str, DataFrame]) -> DataFrame:
+    """Curation-pipeline keep/drop decision over the text_stats signals,
+    with the first-match reject reason a real filter chain reports.
+    One corpus scan — the stats projection fuses into the filter.
+    """
+    s = text_stats(t)
+    reason = reject_reason()
     return s.select(
         "doc_id",
         "lang",
@@ -663,21 +691,8 @@ def quality_filter(t: dict[str, DataFrame]) -> DataFrame:
 
 QUALITY_FILTER_SQL = f"""
 WITH d AS (SELECT *, string_split(text, ' ') AS toks FROM documents),
-s AS (
-  SELECT doc_id, lang,
-         len(toks) AS n_tokens,
-         len(list_distinct(toks)) * 1.0 / len(toks) AS ttr,
-         len(list_filter(toks, x -> list_contains({_STOP_LIST_SQL}, x))) * 1.0 / len(toks)
-           AS stopword_ratio
-  FROM d
-),
-r AS (
-  SELECT *, CASE WHEN n_tokens < {MIN_TOKENS} THEN 'too_short'
-                 WHEN ttr < {MIN_TTR} THEN 'low_diversity'
-                 WHEN stopword_ratio > {MAX_STOPWORD_RATIO} THEN 'stopword_heavy'
-            END AS reject_reason
-  FROM s
-)
+s AS (SELECT doc_id, lang, {_SIGNALS_SQL} FROM d),
+r AS (SELECT *, {_REJECT_REASON_SQL} AS reject_reason FROM s)
 SELECT doc_id, lang, n_tokens, {sql_round_half_up('ttr', 6)} AS ttr_r,
        {sql_round_half_up('stopword_ratio', 6)} AS stopword_ratio_r,
        CAST(reject_reason IS NULL AS INT) AS keep, reject_reason
@@ -748,20 +763,13 @@ FROM cnt GROUP BY doc_id
 PACK_TARGET = 2048  # tokens per packed training sequence
 
 
-def sequence_packing(t: dict[str, DataFrame]) -> DataFrame:
-    """Deterministic sequence-packing plan: concatenate documents per
-    language in doc_id order and cut every PACK_TARGET tokens; a document
-    lands in the bin where its first token falls.
-
-    This is the contiguous-fill packing a pretraining tokenizer pipeline
-    runs before writing fixed-length sample files. The cumulative sum is a
-    per-language window (partition-parallel, exact integer arithmetic);
-    the per-bin rollup shows fill efficiency. At 100 TB the window runs
-    per language shard — no global ordering is ever required.
-    """
-    d = t["documents"].select(
-        "doc_id", "lang", F.size(F.split("text", " ")).alias("n_tokens")
-    )
+def pack_bins(d: DataFrame) -> DataFrame:
+    """Cut each language's ``(doc_id, lang, n_tokens)`` stream, in doc_id
+    order, every PACK_TARGET tokens and roll the bins up; a document
+    lands in the bin where its first token falls. The cumulative sum is
+    a per-language window (partition-parallel, exact integer
+    arithmetic), and the rollup's grouping keys contain the window's
+    partition key, so it adds no exchange."""
     w = (
         Window.partitionBy("lang")
         .orderBy("doc_id")
@@ -782,21 +790,40 @@ def sequence_packing(t: dict[str, DataFrame]) -> DataFrame:
     )
 
 
-SEQUENCE_PACKING_SQL = f"""
-WITH d AS (
-  SELECT doc_id, lang, len(string_split(text, ' ')) AS n_tokens FROM documents
-),
-binned AS (
-  SELECT *, CAST(floor((SUM(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
-                         ROWS UNBOUNDED PRECEDING) - n_tokens)
-                 / {PACK_TARGET}) AS BIGINT) AS bin_id
-  FROM d
-)
-SELECT lang, bin_id, COUNT(*) AS n_docs,
+def pack_bins_sql(src: str) -> str:
+    """DuckDB twin of :func:`pack_bins` over the table or CTE ``src``."""
+    return f"""SELECT lang, bin_id, COUNT(*) AS n_docs,
        CAST(SUM(n_tokens) AS BIGINT) AS total_tokens,
        MIN(doc_id) AS first_doc, MAX(doc_id) AS last_doc,
        {sql_round_half_up(f'SUM(n_tokens) / {float(PACK_TARGET)}', 6)} AS fill_ratio
-FROM binned GROUP BY lang, bin_id
+FROM (
+  SELECT *, CAST(floor((SUM(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
+                         ROWS UNBOUNDED PRECEDING) - n_tokens)
+                 / {PACK_TARGET}) AS BIGINT) AS bin_id
+  FROM {src}
+) binned
+GROUP BY lang, bin_id"""
+
+
+def sequence_packing(t: dict[str, DataFrame]) -> DataFrame:
+    """Deterministic sequence-packing plan: :func:`pack_bins` over the
+    whole corpus — the contiguous-fill packing a pretraining tokenizer
+    pipeline runs before writing fixed-length sample files. The per-bin
+    rollup shows fill efficiency. At 100 TB the window runs per language
+    shard — no global ordering is ever required.
+    """
+    return pack_bins(
+        t["documents"].select(
+            "doc_id", "lang", F.size(F.split("text", " ")).alias("n_tokens")
+        )
+    )
+
+
+SEQUENCE_PACKING_SQL = f"""
+WITH d AS (
+  SELECT doc_id, lang, len(string_split(text, ' ')) AS n_tokens FROM documents
+)
+{pack_bins_sql('d')}
 """
 
 
@@ -813,7 +840,7 @@ def vocab_coverage(t: dict[str, DataFrame]) -> DataFrame:
     window. cum_freq for a surviving row depends only on rows ranked above
     it — all of which also survive the prune — so the result is exact while
     the single-reducer window input is ~{VOCAB_TOP} rows (+ boundary ties)
-    instead of a billions-of-tokens vocab (VERDICT r02 item 3)."""
+    instead of a billions-of-tokens vocab."""
     toks = doc_tokens(t).select(F.explode("w").alias("tok"))
     freq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("freq"))
     total = freq.agg(F.sum("freq").cast("double").alias("total"))
@@ -955,8 +982,8 @@ def mixture_weights(t: dict[str, DataFrame]) -> DataFrame:
     (broadcast-small at any corpus scale)."""
     d = t["documents"]
     # (total, n_langs) ride the language-cardinality frame as single-
-    # partition windows (r21, guide §2.4 — no scalar branch, no
-    # broadcast cross join; same exact integers)
+    # partition windows (no scalar branch, no broadcast cross join; same
+    # exact integers)
     w_all = Window.partitionBy(F.lit(1))
     counts = (
         d.groupBy("lang")
@@ -1089,7 +1116,7 @@ def unimax_allocation(t: dict[str, DataFrame]) -> DataFrame:
     )
     # (total, n_langs) ride the checkpointed language frame as single-
     # partition windows over its bounded rows — no scalar-aggregate
-    # branch, no broadcast-build job (r21, guide §2.4; exact integers)
+    # branch, no broadcast-build job (exact integers)
     w_all0 = Window.partitionBy(F.lit(1))
     base = counts.select(
         "lang",
@@ -1123,7 +1150,7 @@ def unimax_allocation(t: dict[str, DataFrame]) -> DataFrame:
     )
     # water level (k, s_k) rides the same frame as single-partition
     # windows — the frame already flows through an unpartitioned window
-    # (w_pfx), so these add no exchange (r21, guide §2.4)
+    # (w_pfx), so these add no exchange
     leveled = flagged.withColumn(
         "k", F.sum("capped").over(w_all0)
     ).withColumn(
@@ -1206,10 +1233,12 @@ FROM flagged CROSS JOIN level
 """
 
 
-def stratified_sample(t: dict[str, DataFrame]) -> DataFrame:
-    """Language-balanced downsample: every language is cut to ~the smallest
-    language's size by a content-stable md5 bucket — reproducible across
-    runs, engines and partitionings (df.sample() is none of those).
+def stratified_keep(d: DataFrame) -> DataFrame:
+    """The rows of ``d`` (``doc_id``, ``lang``, ...) a language-balanced
+    downsample keeps, plus their ``bucket``: every language is cut to ~the
+    smallest language's size by a content-stable md5 bucket of doc_id —
+    reproducible across runs, engines and partitionings (df.sample() is
+    none of those).
 
     The keep decision is the exact integer comparison
     ``bucket * n_lang < min_count * 10^6``, so no float rate ever enters
@@ -1218,12 +1247,10 @@ def stratified_sample(t: dict[str, DataFrame]) -> DataFrame:
     1/4294 (~0.02%) — 6 hex chars would leave buckets below 777216
     over-represented by a full 6.25% (16^6 / 10^6 = 16.78), visibly
     skewing the keep rate above the intended min_count/n_lang. The
-    per-lang counts side is language-cardinality-sized -> broadcast."""
-    d = t["documents"]
-    # min_count rides the language-cardinality frame as a single-
-    # partition window over its bounded rows (the pipeline.py stage-5
-    # trick) — one broadcast join instead of a scalar branch + cross
-    # join (r21, guide §2.4)
+    per-lang counts side is language-cardinality-sized, so it broadcasts,
+    and min_count rides it as a single-partition window over its bounded
+    rows: one broadcast join instead of a scalar branch plus a cross
+    join."""
     counts = (
         d.groupBy("lang")
         .agg(F.count(F.lit(1)).alias("n_lang"))
@@ -1240,18 +1267,31 @@ def stratified_sample(t: dict[str, DataFrame]) -> DataFrame:
         .filter(
             F.col("bucket") * F.col("n_lang") < F.col("min_count") * F.lit(1000000)
         )
-        .select("doc_id", "lang", "source", "bucket")
     )
 
 
-STRATIFIED_SAMPLE_SQL = """
-WITH c AS (SELECT lang, COUNT(*) AS n_lang FROM documents GROUP BY lang),
-m AS (SELECT MIN(n_lang) AS min_count FROM c)
-SELECT doc_id, d.lang, source,
-       ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 1000000 AS bucket
-FROM documents d JOIN c ON d.lang = c.lang CROSS JOIN m
-WHERE ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 1000000 * c.n_lang
-      < m.min_count * 1000000
+_BUCKET_SQL = "('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 1000000"
+
+
+def stratified_keep_sql(src: str) -> str:
+    """DuckDB twin of :func:`stratified_keep` over the table or CTE
+    ``src``: its rows plus ``bucket``."""
+    return f"""SELECT d.*, {_BUCKET_SQL} AS bucket
+FROM {src} d
+JOIN (
+  SELECT lang, COUNT(*) AS n_lang, MIN(COUNT(*)) OVER () AS min_count
+  FROM {src} GROUP BY lang
+) c ON d.lang = c.lang
+WHERE {_BUCKET_SQL} * c.n_lang < c.min_count * 1000000"""
+
+
+def stratified_sample(t: dict[str, DataFrame]) -> DataFrame:
+    """Language-balanced downsample of the corpus (:func:`stratified_keep`)."""
+    return stratified_keep(t["documents"]).select("doc_id", "lang", "source", "bucket")
+
+
+STRATIFIED_SAMPLE_SQL = f"""
+SELECT doc_id, lang, source, bucket FROM ({stratified_keep_sql('documents')})
 """
 
 
@@ -1722,7 +1762,7 @@ def textrank_keywords(
     shuffle; the rank frame is vocab-sized, so the iterations plan on a
     :func:`loop_session` — shuffle width pinned to the measured vocab size,
     AQE and auto-broadcast off — and ALL of them materialize in ONE job
-    through lazy checkpoints (guide §2.4). Dangling/isolated tokens keep
+    through lazy checkpoints. Dangling/isolated tokens keep
     the teleport mass via the left join.
 
     ``materialize=False`` skips the final materialization so the plan
@@ -1917,8 +1957,8 @@ def _bm25_index(t: dict[str, DataFrame]):
         ).localCheckpoint()
         # the (n_docs, avgdl) scalars ride ON the vocab-sized df frame
         # (one setup-time broadcast) so the scoring query needs no 1-row
-        # cross join — that join cost a broadcast-build job per run
-        # (r21, guide §2.4); a real index stores these scalars in its
+        # cross join — that join cost a broadcast-build job per run; a
+        # real index stores these scalars in its
         # header for the same reason
         df_frame = (
             tf.groupBy("tok")
@@ -2291,8 +2331,7 @@ def _auc_terms(t: dict[str, DataFrame]) -> DataFrame:
     once the corpus passes ~3e9 docs (2*U is O(P*N)); decimal sums are
     exact and order-independent on both engines up to 1e38. No doubles
     touch the output, so the frame hashes identically on any
-    engine/libm/platform combination (the r07/r08 driver divergence
-    class).
+    engine/libm/platform combination.
 
     Scale shape: the scores come from the memoized written score table
     (:func:`_dsir_scores` — the selection pipeline materializes it
@@ -2340,22 +2379,16 @@ def _auc_terms(t: dict[str, DataFrame]) -> DataFrame:
 
 def score_auc_parts(t: dict[str, DataFrame]) -> DataFrame:
     """The integer-only Mann-Whitney parts (``n_pos``, ``n_neg``,
-    ``auc_num2``) — the localization companion the r08 verdict
-    prescribed: this row and :func:`score_auc` differ ONLY in the final
-    derived column, so a green/red driver pair pins any cross-engine
+    ``auc_num2``): this row and :func:`score_auc` differ ONLY in the
+    final derived column, so a pair of results pins any cross-engine
     divergence to one projection. See :func:`_auc_terms` for semantics
     and the scale argument.
 
-    r10: the hashed projection is all-BIGINT. The r09 localization run
-    showed BOTH rows red at the driver while bit-identical locally, with
-    ``auc_num2`` the only DECIMAL-typed output column in the whole
-    146-query registry. The divergence mechanism was then REPRODUCED
-    locally on the pandas conversion path: for ``DECIMAL(38,0)``,
-    DuckDB's ``.df()`` converts to float64 (``78724.0``) while Spark's
+    The hashed projection is all-BIGINT. For ``DECIMAL(38,0)``, DuckDB's
+    ``.df()`` converts to float64 (``78724.0``) while Spark's
     ``toPandas`` yields an object column of ``Decimal('78724')`` — any
     hasher that canonicalizes pandas values diverges on the identical
-    number (collect/Arrow paths agree; pandas is the one that splits,
-    matching the rows+schema-green/hash-red driver signature exactly).
+    number (collect/Arrow paths agree; pandas is the one that splits).
     With BIGINT both engines land on int64. So the DECIMAL(38,0)
     envelope stays INTERNAL to :func:`_auc_terms` (where it is
     load-bearing: 2*U is O(P*N) and exceeds int64 past ~3e9 docs) and
@@ -2381,15 +2414,15 @@ def score_auc(t: dict[str, DataFrame]) -> DataFrame:
     ``auc_num2 / (2*P*N)``, computed as ONE exact integer floor-division
     ``(1000000*auc_num2 + P*N) div (2*P*N)`` in DECIMAL(38,0) (adding
     ``P*N`` is adding exactly 0.5 ulp of the micro grid, so floor = half
-    up). NO double arithmetic anywhere: the float form of this row was
-    red in the r07 AND r08 driver environments while passing the local
-    differential check bit-for-bit, so the double is retired from the
-    hashed projection entirely (its display form, ``auc_micro / 1e6``,
+    up). NO double arithmetic anywhere: a float form of this row can
+    hash differently across engine environments even where the local
+    differential check passes bit-for-bit, so the hashed projection
+    carries no double (its display form, ``auc_micro / 1e6``,
     is pinned in ``tests/test_text_multimodal.py``). Exact while
     ``1e6 * P * N < 1e38`` — i.e. up to ~1e16 documents per class.
 
-    r10: ``auc_num2`` is output as BIGINT (see :func:`score_auc_parts`
-    for the driver-hasher rationale; the DECIMAL(38,0) arithmetic stays
+    ``auc_num2`` is output as BIGINT (see :func:`score_auc_parts` for
+    the pandas-hasher rationale; the DECIMAL(38,0) arithmetic stays
     internal). ``auc_micro`` was already BIGINT — Spark's ``div``
     (IntegralDivide) returns LONG even on decimal operands.
 
@@ -2443,9 +2476,9 @@ parts AS (
 )
 """
 
-# r10: hashed projections are all-BIGINT on both engines — the DECIMAL/
+# hashed projections are all-BIGINT on both engines — the DECIMAL/
 # HUGEINT envelope stays internal to the CTE arithmetic (see
-# score_auc_parts docstring for the driver-hasher rationale).
+# score_auc_parts docstring for the pandas-hasher rationale).
 SCORE_AUC_PARTS_SQL = f"""
 {_AUC_TERMS_SQL}
 SELECT n_pos, n_neg, CAST(auc_num2 AS BIGINT) AS auc_num2 FROM parts

@@ -8,7 +8,10 @@ Arrow-accelerated Python interop, UTC session time zone).
 
 Python workers fork from ``worker_daemon`` (``spark.python.daemon.module``),
 which keeps each task from re-reading Spark's zip archives; the conf is
-static, so only ``get_spark`` sessions get it, not foreign sessions.
+static, so only ``get_spark`` sessions get it, not foreign sessions. The
+workers import that module from this package's parent directory, which the
+session puts on their ``PYTHONPATH``: a script that found the package
+through its own ``sys.path`` would otherwise start workers that cannot.
 """
 
 from __future__ import annotations
@@ -16,6 +19,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def tune(builder: SparkSession.Builder) -> SparkSession.Builder:
@@ -30,6 +35,7 @@ def tune(builder: SparkSession.Builder) -> SparkSession.Builder:
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.python.daemon.module", "databricks_observe_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
 
 
@@ -60,7 +66,7 @@ def ensure_conf(spark: SparkSession) -> SparkSession:
         ("spark.sql.execution.arrow.pyspark.enabled", "true"),
         ("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024)),
         # Compatibility fallback only: IF a fixture is re-materialized with
-        # TIMESTAMP(NANOS) (round-1 layout), this makes it readable as BIGINT
+        # TIMESTAMP(NANOS) (an older layout), this makes it readable as BIGINT
         # instead of a hard reader error; sources/tables.normalize_events_ts
         # dtype-detects and converts either layout. No-op for the current
         # micros fixtures.

@@ -1,12 +1,13 @@
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 from typing import NamedTuple
 
 import pytest
 from pyspark.sql.types import StructType
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from databricks_observe_spark import registry
 from databricks_observe_spark.session import get_spark

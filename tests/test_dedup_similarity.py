@@ -527,6 +527,68 @@ def test_curation_pipeline_e2e_stage_invariants(tables):
     assert sum(r.total_tokens for r in rows) <= cap
 
 
+def test_curation_pipeline_e2e_equals_its_stages_rebuilt(tables):
+    """The pipeline's rows, rebuilt in Python from the standalone
+    operators' collected outputs: normalized-dedup canonicals, near-dup
+    cluster survivors, the quality keep flag, the contamination counts
+    under the pipeline's drop rule plus the eval holdout, an 8-hex md5
+    stratified keep over the clean per-language counts, and packing at
+    PACK_TARGET."""
+    import hashlib
+    import math
+    from collections import Counter, defaultdict
+
+    from databricks_observe_spark.operators import text as T
+    from databricks_observe_spark.operators.pipeline import (
+        CONTAM_DROP_NUM,
+        curation_pipeline_e2e,
+    )
+
+    canon = {r.canonical_doc_id for r in D.normalized_dedup(tables).collect()}
+    nd_dropped = {
+        r.doc_id for r in D._cluster_labels(tables).collect() if r.doc_id != r.cluster_id
+    }
+    contaminated = {
+        r.doc_id
+        for r in D.contamination_check(tables).collect()
+        if r.n_overlap * CONTAM_DROP_NUM > r.n_shingles
+    }
+    clean = {
+        r.doc_id: (r.lang, r.n_tokens)
+        for r in T.quality_filter(tables).collect()
+        if r.keep == 1
+        and r.doc_id in canon
+        and r.doc_id not in nd_dropped
+        and r.doc_id % D.EVAL_MOD != 0
+        and r.doc_id not in contaminated
+    }
+    n_lang = Counter(lang for lang, _ in clean.values())
+    min_count = min(n_lang.values())
+
+    def bucket(doc_id):
+        return int(hashlib.md5(str(doc_id).encode()).hexdigest()[:8], 16) % 10**6
+
+    streams = defaultdict(list)
+    for doc_id in sorted(clean):
+        lang, n = clean[doc_id]
+        if bucket(doc_id) * n_lang[lang] < min_count * 10**6:
+            streams[lang].append((doc_id, n))
+    want = set()
+    for lang, docs in streams.items():
+        bins, cum = defaultdict(list), 0
+        for doc_id, n in docs:
+            bins[cum // T.PACK_TARGET].append((doc_id, n))
+            cum += n
+        for bin_id, members in bins.items():
+            total = sum(n for _, n in members)
+            fill = math.floor(total / T.PACK_TARGET * 1e6 + 0.5) / 1e6
+            want.add(
+                (lang, bin_id, len(members), total, members[0][0], members[-1][0], fill)
+            )
+    got = {tuple(r) for r in curation_pipeline_e2e(tables).collect()}
+    assert got == want
+
+
 def test_lsh_dedup_recall_counts_are_consistent(tables):
     (r,) = D.lsh_dedup_recall(tables).collect()
     exact = {(x.doc_a, x.doc_b) for x in D.ngram_jaccard_pairs(tables).collect()}

@@ -5,9 +5,13 @@ fork from the engine daemon."""
 from __future__ import annotations
 
 import importlib
+import os
+import subprocess
 import sys
+import textwrap
 import zipfile
 import zipimport
+from pathlib import Path
 
 import pytest
 
@@ -102,3 +106,36 @@ def test_get_spark_workers_fork_from_the_engine_daemon(spark):
 
     rows = spark.range(8, numPartitions=2).mapInArrow(probe, "module string")
     assert {r.module for r in rows.collect()} == {worker_daemon.__name__}
+
+
+def test_workers_import_the_daemon_without_pythonpath(tmp_path):
+    """A script that finds the package only through its own ``sys.path``,
+    run from another directory with ``PYTHONPATH`` unset, still gets
+    Python workers that can import the engine daemon."""
+    root = Path(__file__).resolve().parent.parent
+    script = tmp_path / "one_arrow_map.py"
+    script.write_text(textwrap.dedent(f"""
+        import sys
+
+        sys.path.insert(0, {str(root)!r})
+
+        from databricks_observe_spark.functions.arrowmap import arrow_map
+        from databricks_observe_spark.session import get_spark
+
+        spark = get_spark("worker-import-path")
+        df = arrow_map(spark.range(4, numPartitions=2), lambda it: it, "id long")
+        print(sorted(r.id for r in df.collect()))
+        spark.stop()
+    """))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g")
+    run = subprocess.run(
+        [sys.executable, str(script)],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert run.returncode == 0, run.stderr[-3000:]
+    assert run.stdout.strip().splitlines()[-1] == "[0, 1, 2, 3]"

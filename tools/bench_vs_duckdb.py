@@ -16,10 +16,13 @@ refresh the measured table in BASELINE.md).
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 import time
 
 import duckdb
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def main() -> int:
@@ -28,7 +31,7 @@ def main() -> int:
     ap.add_argument("--md", action="store_true")
     args = ap.parse_args()
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     import __spark_entry__ as e
     from databricks_observe_spark.session import get_spark
     from databricks_observe_spark.sources.tables import TABLE_NAMES

@@ -38,12 +38,15 @@ from __future__ import annotations
 
 import argparse
 import math
+import os
 import re
 import sys
 import time
 
 import duckdb
 import pyarrow as pa
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _norm_spark_dtype(dt: str) -> str:
@@ -352,7 +355,7 @@ def main() -> int:
     )
     args = ap.parse_args()
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     import __spark_entry__ as e
 
     if args.vanilla:

@@ -1,13 +1,16 @@
 """Regenerate PLANS.md: formatted physical plans for representative queries.
 
-Usage: python tools/dump_plans.py  (writes /root/repo/PLANS.md)
+Usage: python tools/dump_plans.py  (writes PLANS.md at the repo root)
 """
 
 from __future__ import annotations
 
 import contextlib
 import io
+import os
 import sys
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 COMMENTARY = {
     "flagship_us_customers": (
@@ -293,16 +296,17 @@ COMMENTARY = {
         "in the plan at all."
     ),
     "curation_pipeline_e2e": (
-        "The six-stage curation DAG as ONE job: a single projection "
-        "derives every per-row signal (normalized digest, token stats, "
-        "sample bucket) from one scan; the corpus-sized path is linear "
-        "through the digest window, broadcast anti-joins (cluster tails, "
-        "contaminated ids), the quality predicate, the broadcast "
-        "lang-counts join, and the packing window; the contamination id "
-        "set is a side branch off the raw scan. The clean survivor frame "
-        "(ids + stats, no text) materializes once so no consumer replays "
-        "the curation subtree — plan-gated to <=4 exchanges in this "
-        "shipped form and broadcast-only joins throughout."
+        "The six-stage curation DAG as ONE job, each stage the "
+        "standalone operator's own stage function: a single projection "
+        "derives the normalized digest and the token signals from one "
+        "scan; the corpus-sized path is linear through the digest "
+        "window, broadcast anti-joins (cluster tails, contaminated ids), "
+        "the quality predicate, the broadcast lang-counts join, and the "
+        "packing window; the contaminated-id set aggregates the "
+        "setup-phase gram index. The clean survivor frame (ids + stats, "
+        "no text) materializes once so no consumer replays the curation "
+        "subtree — plan-gated to <=4 exchanges in this shipped form and "
+        "broadcast-only joins throughout."
     ),
     "observability_report": (
         "The reference's whole 15-minute observe tick in one job: the "
@@ -520,7 +524,7 @@ COMMENTARY = {
 
 
 def main() -> None:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     import __spark_entry__ as e
     from databricks_observe_spark.session import get_spark
 
@@ -553,7 +557,7 @@ def main() -> None:
         if scans:
             out += ["", scans.strip()]
         out += ["```", ""]
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print("wrote PLANS.md")
 

@@ -27,6 +27,7 @@ import os
 import subprocess
 import sys
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SFS = ["sf0.001", "sf0.01", "sf0.1"]
 
 
@@ -37,7 +38,7 @@ def run_bench(sf: str) -> dict:
         SPARK_GRAFT_BENCH_ALL="1",  # full registered surface, not headline
     )
     out = subprocess.run(
-        [sys.executable, "/root/repo/bench.py"],
+        [sys.executable, os.path.join(ROOT, "bench.py")],
         env=env,
         capture_output=True,
         text=True,
@@ -68,7 +69,7 @@ def classify(growth: float) -> str:
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--out", default="/root/repo/SCALING.md")
+    ap.add_argument("--out", default=os.path.join(ROOT, "SCALING.md"))
     args = ap.parse_args()
 
     results = {sf: run_bench(sf) for sf in SFS}
