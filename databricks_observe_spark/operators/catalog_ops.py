@@ -330,7 +330,8 @@ def _file_stats(t: dict[str, DataFrame]) -> DataFrame:
     the right steady-state cost for metadata an ingest pipeline would keep
     in its catalog at scale. The un-checkpointed :func:`_file_listing`
     underneath remains the plan-level evidence that storage metadata comes
-    from the binaryFile file INDEX, never a data scan (tests/test_plans.py
+    from the binaryFile file INDEX, never a data scan
+    (tests/test_plans.py::test_storage_metadata_reads_file_index_not_data
     asserts on it directly).
     """
     return memo(t, "_file_stats", lambda: (

@@ -34,8 +34,9 @@ corpus-sized shuffles (the normalized digest and the packing language
 window); the contaminated-id side is one map-side-combined doc_id
 aggregate over the gram index, and every join on the main path
 broadcasts a small side (dropped cluster members, contaminated ids,
-language counts). The plan gate (tests/test_plans.py) pins the exchange
-budget and the no-sort-merge-join property.
+language counts). The plan gate
+(tests/test_plans.py::test_curation_pipeline_e2e_composes_without_redundant_shuffles)
+pins the exchange budget and the no-sort-merge-join property.
 """
 
 from __future__ import annotations

@@ -284,11 +284,11 @@ FROM orders GROUP BY o_orderpriority
 def top_balance_per_nation(t: dict[str, DataFrame]) -> DataFrame:
     """Correlated scalar subquery — written as the user would write it,
     decorrelated by Catalyst into an aggregate + join (SURVEY §4
-    "subquery decorrelation ... free when applicable"; plan asserted in
-    tests/test_plans.py). The passed frame binds via spark.sql's
-    DataFrame substitution — NOT a session temp view, so a caller's own
-    frames dict resolves to the caller's data, never to whatever views
-    the session last registered."""
+    "subquery decorrelation ... free when applicable"; plan asserted by
+    tests/test_plans.py::test_correlated_subquery_decorrelates). The passed frame
+    binds via spark.sql's DataFrame substitution — NOT a session temp
+    view, so a caller's own frames dict resolves to the caller's data,
+    never to whatever views the session last registered."""
     spark = t["customer"].sparkSession
     return spark.sql(
         """

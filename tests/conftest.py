@@ -12,6 +12,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from databricks_observe_spark import registry
 from databricks_observe_spark.session import get_spark
 from tools.check_oracle import compare, oracle_con
+from tools.dump_plans import executed_plan
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -40,14 +41,15 @@ class Probe(NamedTuple):
 def surface(spark) -> dict[str, Probe]:
     """Every registered query built once: its executed plan (read before
     collecting), schema, collected rows and oracle verdict. Read by
-    tests/test_surface.py and tests/test_output_types.py."""
+    tests/test_surface.py, tests/test_output_types.py and
+    tests/test_plans.py."""
     con = oracle_con(SF_DIR)
     oracles = registry.oracle_sql()
     out = {}
     for name, query in registry.queries().items():
         try:
             sdf = query(spark, SF_DIR)
-            plan = sdf._jdf.queryExecution().executedPlan().toString()
+            plan = executed_plan(sdf)
             rows = [tuple(r) for r in sdf.collect()]
         except Exception as ex:
             out[name] = Probe("", None, [], [f"spark error: {ex}"])

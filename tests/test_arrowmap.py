@@ -76,10 +76,10 @@ def test_arrow_map_empty_input(spark):
 
 
 def test_arrow_map_reslices_large_output_frames(spark):
-    """r22 (r21 ADVICE): a kernel that emits ONE big frame per task must
-    not produce one unbounded Arrow batch — arrow_map re-slices output
-    frames to spark.sql.execution.arrow.maxRecordsPerBatch, mirroring
-    mapInPandas's output slicing, with identical results."""
+    """A kernel that emits ONE big frame per task must not produce one
+    unbounded Arrow batch — arrow_map re-slices output frames to
+    spark.sql.execution.arrow.maxRecordsPerBatch, mirroring mapInPandas's
+    output slicing, with identical results."""
 
     def _one_big_frame():
         def kernel(batches):

@@ -1,42 +1,28 @@
 """Pin the differential-gate classifier (tools/check_oracle.py).
 
-The pandas-surface classifier IS part of the correctness gate since r10
-(the r07-r09 score_auc divergence lived on that surface), and r11
-hardened it per ADVICE.md plus the round's self-review. These tests pin
-the hardened behaviors so a future refactor cannot silently re-open
-them:
+The pandas-surface classifier is part of the correctness gate: the
+score_auc decimal-vs-float divergence lived on that surface while rows
+and schema matched. These tests pin its behaviours so a refactor cannot
+silently re-open them:
 
-- mixed-type object columns classify over a STRIDED sample (a tail-only
-  divergence past the cell budget was demonstrably invisible to both
-  the r10 first-cell form and a naive head-slice sample);
+- mixed-type object columns classify over an evenly spaced sample of the
+  cells (a divergence only in the tail is invisible to a first-cell or a
+  head-slice sample);
 - list-like cells recurse one level into element types (list-of-Decimal
-  vs list-of-float must NOT collapse to an undifferentiated 'list');
-- the empty-class wildcard applies ONLY in --surface-limit sampled mode
+  vs list-of-float must not collapse to an undifferentiated 'list'), over
+  an evenly spaced element sample;
+- both samples come from _sample_idx: the full budget and the full span,
+  first and last index always included, max contiguous gap
+  ceil((len-1)/(budget-1)). A ceil-step stride can spend half the budget
+  and skip up to step-1 trailing cells; a floor-step stride capped at the
+  budget leaves a contiguous unsampled tail block of up to about half the
+  column for budget < len < 2*budget, the sort-order-correlated region
+  where a divergence most likely lands;
+- list recursion is depth-capped (_CLS_MAX_DEPTH), so a self-referential
+  cell terminates instead of recursing forever;
+- the empty-class wildcard applies only in --surface-limit sampled mode
   (full mode stays strict: None-vs-NaT on an all-null column is a real
-  rendering divergence and must fail, exactly as pre-r11).
-
-r12 additions (r11 VERDICT "What's wrong" #1 + ADVICE):
-- the list-ELEMENT sample is strided and includes the final element (a
-  divergent type in the tail of a long list — past index 8 under the
-  old head slice — must be caught);
-- the cell-level strided sample explicitly includes the FINAL cell (a
-  ceil-step stride skips up to step-1 trailing cells: a lone divergent
-  cell at index 1501 of a 1502-row column fell off-stride);
-- list recursion is depth-capped (_CLS_MAX_DEPTH) so a self-referential
-  cell terminates instead of recursing forever.
-
-r13 additions (r12 ADVICE): both strides became FLOOR-step + budget cap
-— ceil-step could spend as little as half the stated budget, leaving
-interior indices unsampled that the budget was sized to cover.
-
-r14 additions (r13 ADVICE): floor-stride + cap fixed the budget but
-broke the SPAN — for budget < len < 2*budget the step was 1, so the
-sample was literally the head `budget` items plus the final item: a
-contiguous unsampled TAIL block of up to ~half the column, the exact
-sort-order-correlated region the gate's rationale names as the
-likeliest divergence landing spot. Both levels now use _sample_idx
-(evenly spaced indices): full budget AND full span, first/last always
-included, max contiguous gap ceil((len-1)/(budget-1)).
+  rendering divergence and must fail).
 
 Pure-pandas unit tests — no SparkSession, no DuckDB, sub-second.
 """
@@ -63,7 +49,7 @@ class TestSampleIdx:
         assert _sample_idx(1024, 1024) == list(range(1024))
 
     def test_full_budget_and_span_and_gap_bound(self):
-        # the r13 ADVICE failure zone budget < n < 2*budget, plus exact
+        # the head-block zone budget < n < 2*budget, plus exact
         # multiples, off-by-ones, and a 100x-budget column
         for budget in (8, 1024):
             for n in (
@@ -81,10 +67,10 @@ class TestSampleIdx:
                 assert max_gap <= math.ceil((n - 1) / (budget - 1)), (n, budget)
 
     def test_degenerate_budget_no_zero_division(self):
-        # r14 ADVICE: the linear map divides by budget-1, so budget=1
-        # with n > budget raised ZeroDivisionError (call sites only use
-        # 8 and 1024 today, but the guard keeps the helper total). A
-        # 1-index budget cannot include both ends; it keeps index 0.
+        # the linear map divides by budget-1, so budget=1 with
+        # n > budget would raise ZeroDivisionError (call sites use 8 and
+        # 1024; the guard keeps the helper total). A 1-index budget
+        # cannot include both ends; it keeps index 0.
         assert _sample_idx(5, 1) == [0]
         assert _sample_idx(2, 1) == [0]
         assert _sample_idx(5, 0) == []
@@ -94,9 +80,10 @@ class TestSampleIdx:
         assert _sample_idx(0, 1) == []
 
     def test_r13_head_concentration_gone(self):
-        # the r13 form for n=1500, budget=1024 sampled cells 0..1023 +
-        # 1499: indices 1024..1498 formed one contiguous unsampled
-        # block of 475 cells. The evenly spaced sample reaches them.
+        # a floor-stride+cap sample for n=1500, budget=1024 is cells
+        # 0..1023 + 1499: indices 1024..1498 form one contiguous
+        # unsampled block of 475 cells. The evenly spaced sample reaches
+        # them.
         idx = _sample_idx(1500, 1024)
         assert any(1024 <= j <= 1498 for j in idx)
         assert max(b - a for a, b in zip(idx, idx[1:])) <= 2
@@ -133,9 +120,9 @@ class TestCellCls:
         assert _cell_cls([None, 1.0]) == "list<float>"
 
     def test_list_tail_element_divergence_caught(self):
-        # r11 VERDICT #1: a divergent element type appearing only PAST
-        # index 8 of a long list evaded the old head-slice element
-        # sample (the tail of a 384-dim embedding is the real case)
+        # a divergent element type appearing only PAST index 8 of a
+        # long list evades a head-slice element sample (the tail of a
+        # 384-dim embedding is the real case)
         v = [1.0] * 383 + [Decimal("1")]
         assert _cell_cls(v) == "list<decimal,float>"
         # ...and the final element is included BY CONSTRUCTION in the
@@ -145,10 +132,10 @@ class TestCellCls:
         assert _cell_cls(v2) == "list<decimal,float>"
 
     def test_elem_sample_spans_the_r13_failure_zone(self):
-        # r13 ADVICE: for budget < len < 2*budget the floor-stride+cap
-        # sample was the head `budget` elements plus the final one —
-        # len 12, budget 8 sampled indices 0..7 + 11, so a divergent
-        # element at index 9 evaded. _sample_idx(12, 8) =
+        # for budget < len < 2*budget a floor-stride+cap sample is the
+        # head `budget` elements plus the final one — len 12, budget 8
+        # samples indices 0..7 + 11, so a divergent element at index 9
+        # evades. _sample_idx(12, 8) =
         # {0,1,3,4,6,7,9,11}: full budget, spans the list, catches it.
         assert _sample_idx(12, 8) == [0, 1, 3, 4, 6, 7, 9, 11]
         v = [1.0] * 9 + [Decimal("1")] + [1.0] * 2
@@ -161,7 +148,7 @@ class TestCellCls:
         assert _cell_cls([[1.0]]) == "list<list<float>>"
         assert _cell_cls([[[1.0]]]) == "list<list<list<float>>>"
         assert _cell_cls([[[[1.0]]]]) == "list<list<list<list<...>>>>"
-        # a self-referential cell terminates (the pre-r12 form looped)
+        # a self-referential cell terminates
         v = [1.0]
         v.append(v)
         assert "list" in _cell_cls(v)
@@ -179,8 +166,8 @@ class TestPandasCls:
         assert _pandas_cls(s) == "decimal"
 
     def test_nested_element_divergence_detected(self):
-        # the ADVICE.md scenario: list-of-Decimal (Spark) vs
-        # list-of-float (DuckDB) must yield DIFFERENT classes
+        # list-of-Decimal (Spark) vs list-of-float (DuckDB) must yield
+        # DIFFERENT classes
         spark_like = pd.Series([[Decimal("1")], [Decimal("2")]], dtype=object)
         duck_like = pd.Series([[1.0], [2.0]], dtype=object)
         assert _pandas_cls(spark_like) == "list<decimal>"
@@ -193,23 +180,22 @@ class TestPandasCls:
 
     def test_tail_only_divergence_caught_by_strided_sample(self):
         # 1500 Decimals then ONE float: a head-slice sample of 1024 cells
-        # (and the r10 first-cell form) both said 'decimal'
+        # and a first-cell classifier both say 'decimal'
         s = pd.Series([Decimal("1")] * 1500 + [1.0], dtype=object)
         assert _pandas_cls(s) == "mixed{decimal,float}"
 
     def test_final_cell_divergence_caught(self):
-        # r11 ADVICE scenario, pinned across every sampler since: a
-        # lone divergent LAST cell (len 1502) — the most likely landing
+        # a lone divergent LAST cell (len 1502) — the most likely landing
         # spot for a sort-order-correlated divergence — is always
         # examined (_sample_idx always includes index n-1)
         s = pd.Series([Decimal("1")] * 1501 + [1.0], dtype=object)
         assert _pandas_cls(s) == "mixed{decimal,float}"
 
     def test_cell_budget_fully_spent(self):
-        # r12 ADVICE: ceil-step spent as little as half the cell budget
-        # — len 1025, budget 1024 -> ceil step 2 sampled only the 513
+        # a ceil-step stride spends as little as half the cell budget
+        # — len 1025, budget 1024 -> ceil step 2 samples only the 513
         # even indices, so a divergent cell at an odd NON-final index
-        # (513) evaded. _sample_idx(1025, 1024) = {0..1022, 1024}: the
+        # (513) evades. _sample_idx(1025, 1024) = {0..1022, 1024}: the
         # full 1024-index budget, and 513 is sampled.
         cells = [Decimal("1")] * 1025
         cells[513] = 1.0
@@ -217,9 +203,9 @@ class TestPandasCls:
         assert _pandas_cls(s) == "mixed{decimal,float}"
 
     def test_r13_unsampled_tail_block_divergence_caught(self):
-        # the r13 ADVICE medium, verbatim: len 1500, budget 1024 ->
-        # floor step 1, so the r13 sample was cells 0..1023 + 1499 and
-        # a divergent cell anywhere in 1024..1498 evaded. Index 1200
+        # len 1500, budget 1024 -> floor step 1, so a floor-stride+cap
+        # sample is cells 0..1023 + 1499 and a divergent cell anywhere
+        # in 1024..1498 evades. Index 1200
         # sits mid-block and is on the evenly spaced sample
         # (_sample_idx(1500, 1024) contains 1200); gap bound 2.
         cells = [Decimal("1")] * 1500
@@ -228,11 +214,11 @@ class TestPandasCls:
         assert _pandas_cls(s) == "mixed{decimal,float}"
 
     def test_r12_regression_case_still_caught(self):
-        # the r13 ADVICE's regression example: a divergent cell at
-        # index 1500 of a 2000-cell column was sampled by the r12
-        # ceil-stride, evaded the r13 floor-stride+cap (head block +
-        # final only reaches 1023 then 1999), and is sampled again by
-        # the evenly spaced scheme (1500 in _sample_idx(2000, 1024))
+        # a divergent cell at index 1500 of a 2000-cell column: a
+        # ceil-stride samples it, a floor-stride+cap sample misses it
+        # (head block + final reaches only 1023 then 1999), and the
+        # evenly spaced scheme samples it (1500 in
+        # _sample_idx(2000, 1024))
         assert 1500 in _sample_idx(2000, 1024)
         cells = [Decimal("1")] * 2000
         cells[1500] = 1.0
@@ -251,7 +237,7 @@ class TestPandasCls:
 
 class TestSurfaceMatch:
     def test_full_mode_is_strict(self):
-        # pre-r11 strictness preserved at the gate default: an all-null
+        # strict at the gate default: an all-null
         # object column vs a concrete class is a FAIL (None vs NaT is a
         # real pandas-surface rendering divergence)
         assert not _surface_match("object-empty", "ts")

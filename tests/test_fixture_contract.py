@@ -1,8 +1,8 @@
-"""Fixture-drift smoke tests (VERDICT r02 item 2).
+"""Fixture-drift smoke tests.
 
-Round 2 was zeroed because the driver re-materialized the fixtures with a
-different physical parquet type for ``events.ts`` (timestamp[us] instead of
-nanos-read-as-long) and the loader assumed the old layout. These tests pin
+A re-materialized fixture can change the physical parquet type of
+``events.ts`` (timestamp[us] instead of nanos-read-as-long); a loader that
+assumes one layout then reads garbage or fails deep in a plan. These tests pin
 the contract: the loader must DETECT any layout in the accepted set, batch
 and streaming reads must agree exactly, and an unknown layout must fail with
 a named error instead of a Catalyst type mismatch deep in a plan.
@@ -47,8 +47,8 @@ def test_fixture_contract(spark):
 
 
 def test_normalize_events_ts_accepts_both_layouts(spark):
-    """bigint-nanos (round-1 layout) and native timestamp (round-2 layout)
-    normalize to the same instants."""
+    """bigint-nanos and native-timestamp layouts normalize to the same
+    instants."""
     ns = 1_704_067_200_000_000_000  # 2024-01-01T00:00:00Z in nanos
     as_long = spark.createDataFrame([(ns,), (ns + 3_600_000_000_000,)], "ts bigint")
     as_ts = spark.createDataFrame(
@@ -69,7 +69,7 @@ def test_normalize_events_ts_rejects_unknown_layout(spark):
 
 def test_batch_ts_equals_streaming_ts(spark, tables):
     """The streaming reader must see byte-identical timestamps to the batch
-    loader on the same fixture — the r02 silent-garbage failure mode."""
+    loader on the same fixture — a layout mismatch reads silent garbage."""
     batch = tables["events"].agg(
         F.min("ts").alias("lo"), F.max("ts").alias("hi"), F.count("*").alias("n")
     ).collect()[0]

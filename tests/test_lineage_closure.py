@@ -130,7 +130,7 @@ def test_doubling_checkpoint_partitions_track_closure_size(tables):
 
 def test_doubling_width_repins_when_closure_outgrows_seed(spark, monkeypatch):
     """The loop's shuffle width must TRACK the closure as it outgrows the
-    base edge set, not stay at the round-1 value. A 64-node chain's
+    base edge set, not stay at the first iteration's value. A 64-node chain's
     closure is 64*63/2 = 2016 pairs from 63 seed edges (a 32x growth);
     with the rows-per-partition constant shrunk to 500 the width must have
     re-pinned to 2016 // 500 = 4 by the final round — observable as the

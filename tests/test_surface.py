@@ -7,8 +7,9 @@ records, from that one frame, its executed plan (read before
 collecting), its schema, its collected rows and its verdict against the
 DuckDB oracle (``tools/check_oracle.py:compare``). Walking
 ``registry.queries()`` is total by construction: a new registration is
-checked the moment it is registered. Two tests here assert on the walk
-(``tests/test_output_types.py`` lints its output types):
+checked the moment it is registered. Three tests here assert on the walk
+(``tests/test_output_types.py`` lints its output types, and
+``tests/test_plans.py`` checks each named plan claim against it):
 
 - **Oracle.** Every query matches its oracle; a failure lists every
   failing query.
@@ -16,12 +17,22 @@ checked the moment it is registered. Two tests here assert on the walk
   the queries listed for it. A new occurrence fails until it is audited
   and listed with its reason; a stale entry fails too, so the allowlist
   cannot rot into a dead list.
+- **Plan table.** Every query's plan matches its row of
+  ``tests/plan_table.json`` (``tools/dump_plans.py:plan_row``), and each
+  row's exchange, SinglePartition-exchange and Python-node totals equal
+  the benchmark's own plan reader (``perfbench.layers.plan_counters``).
+  A failure lists each changed query with the changed keys only; after
+  reviewing the change, ``python tools/dump_plans.py`` rewrites the table.
 """
 
 from __future__ import annotations
 
+import re
+
+from perfbench.layers import plan_counters
 from tests.conftest import SF_DIR
 from tools.check_oracle import oracle_con
+from tools.dump_plans import plan_row, read_table, row_changes
 
 
 # operator (as it prints in an executed plan) -> the queries allowed to
@@ -90,6 +101,39 @@ def test_plan_shape(surface):
             problems.append(f"stale {op} entries: {sorted(set(allowed) - got)}")
     assert problems == [], "\n".join(problems)
 
+
+
+def _totals(row: dict[str, int]) -> dict[str, int]:
+    """A row's totals in ``plan_counters`` terms."""
+    return {
+        "exchanges": sum(
+            n for k, n in row.items() if k.startswith(("Exchange ", "BroadcastExchange"))
+        ),
+        "single_partition_exchanges": row.get("Exchange SinglePartition", 0),
+        "python_nodes": sum(
+            n for k, n in row.items() if re.search("InPandas|InArrow|EvalPython", k)
+        ),
+    }
+
+
+def test_plan_table(surface):
+    table = read_table()
+    problems = [f"{name}: no row" for name in sorted(surface.keys() - table.keys())]
+    problems += [
+        f"{name}: row names no registered query"
+        for name in sorted(table.keys() - surface.keys())
+    ]
+    for name in sorted(surface.keys() & table.keys()):
+        row = plan_row(surface[name].plan)
+        if row != table[name]:
+            problems.append(f"{name}: {row_changes(table[name], row)}")
+        totals, counters = _totals(row), plan_counters(surface[name].plan)
+        if totals != counters:
+            problems.append(f"{name}: row totals {totals} != plan_counters {counters}")
+    assert not problems, (
+        f"{len(problems)} plan table problems:\n" + "\n".join(problems)
+        + "\nregenerate: python tools/dump_plans.py"
+    )
 
 
 def test_auc_pair_pandas_surface_is_int64_on_both_engines(tables):

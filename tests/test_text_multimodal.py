@@ -303,7 +303,7 @@ def test_unigram_log_rounding_margins_verified(tables):
 
     logprob: lp_micro = floor(ln(r_nano/1e9)*1e6 + 0.5); a 1-ulp log
     error moves the argument by ~|ln|*1.1e-16*1e6 < 1e-8, so a 1e-3
-    floor-boundary distance is a >1e5x margin. kl (r09 form): the same
+    floor-boundary distance is a >1e5x margin. kl: the same
     micro ln grid over kl's r_nano set — the downstream pico term is
     pure IEEE arithmetic on bit-identical inputs and needs no margin.
     Both families are also checked at sf0.01 (the driver scale) in
@@ -335,13 +335,13 @@ def test_unigram_log_rounding_margins_verified(tables):
         assert min(v, 1.0 - v) > 1e-3, rn
 
     # --- unigram_kl r_nano ln-grid points ---
-    # Since the r09 hardening the ONLY engine-variant op in the kl term
-    # is ln(r_nano/1e9) floored to integer micro (lr_micro); the pico
-    # term ((p*lr_micro)*1e6) is pure IEEE arithmetic on bit-identical
-    # inputs and cannot diverge, so the margin check moves to the ln
-    # grid itself (the pre-r09 direct p*ln*1e12 floor measured a worst
-    # attained margin of only 1.66x the propagated error at sf0.01 —
-    # one adverse libm pairing from a hash flip).
+    # The ONLY engine-variant op in the kl term is ln(r_nano/1e9)
+    # floored to integer micro (lr_micro); the pico term
+    # ((p*lr_micro)*1e6) is pure IEEE arithmetic on bit-identical
+    # inputs and cannot diverge, so the margin check is on the ln grid
+    # itself (a direct p*ln*1e12 floor has a worst attained margin of
+    # only 1.66x the propagated error at sf0.01 — one adverse libm
+    # pairing from a hash flip).
     rns = (
         tf.join(cf, on="tok")
         .select(
@@ -818,11 +818,11 @@ def test_score_auc_matches_python_recompute(tables):
     )
     # the retired float form (auc_r) is pinned here as the display form.
     # Tolerance of ONE micro-unit: the reference value below is computed
-    # in double arithmetic (exactly the boundary-unsafe form the r09
-    # change retired), so on a future fixture whose exact quotient sits
-    # within a double-rounding of a k+0.5 boundary the DOUBLE side may
-    # flip — the exact integer auc_micro is the authoritative one and is
-    # already pinned bit-exactly above (r09 self-review finding).
+    # in double arithmetic (exactly the boundary-unsafe form the integer
+    # auc_micro replaced), so on a future fixture whose exact quotient
+    # sits within a double-rounding of a k+0.5 boundary the DOUBLE side
+    # may flip — the exact integer auc_micro is the authoritative one and
+    # is already pinned bit-exactly above.
     assert (
         abs(got.auc_micro - math.floor(num2 / (2.0 * n_pos * n_neg) * 1e6 + 0.5))
         <= 1
@@ -843,15 +843,14 @@ def test_score_auc_matches_python_recompute(tables):
 
 
 def test_score_auc_type_envelope(tables):
-    """r10 type contract for the AUC pair (the r07-r09 driver-red class):
-    the HASHED projections are all-BIGINT — auc_num2 was the only
-    DECIMAL-typed output column in the registry and exactly the only
-    hash failure — while the 2*U arithmetic INSIDE _auc_terms stays
-    DECIMAL(38,0) (load-bearing past ~3e9 docs where O(P*N) exceeds
-    int64). Also pins the overflow-behavior difference the r09 ADVICE
-    flagged: a breach of the int64 output envelope would surface as a
-    NULL under non-ANSI Spark (vs DuckDB's loud HUGEINT error), so
-    assert non-null and the 2*P*N < 2^63 safety margin explicitly."""
+    """Type contract for the AUC pair: the HASHED projections are
+    all-BIGINT — auc_num2 was the only DECIMAL-typed output column in the
+    registry and exactly the only hash failure — while the 2*U arithmetic
+    INSIDE _auc_terms stays DECIMAL(38,0) (load-bearing past ~3e9 docs
+    where O(P*N) exceeds int64). Also pins an overflow-behavior
+    difference: a breach of the int64 output envelope would surface as a
+    NULL under non-ANSI Spark (vs DuckDB's loud HUGEINT error), so assert
+    non-null and the 2*P*N < 2^63 safety margin explicitly."""
     from pyspark.sql.types import DecimalType, LongType
 
     from databricks_observe_spark.operators.text import (
