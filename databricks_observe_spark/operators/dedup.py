@@ -20,6 +20,10 @@ north star), each expressed as pure DataFrame ops (no UDFs):
   pair join (functions/vectors.py:tiled_cosine_pairs);
   ``embedding_near_dup_lsh`` is its LSH-bucketed scale path.
 
+functions/banding.py is the one candidate layer: the MinHash, SimHash and
+embedding LSH pairs are its band memberships and banded self-join, each
+verified here, and ``lsh_dedup_recall`` is its recall count.
+
 Every hash is md5-derived so the DuckDB oracle matches bit-for-bit; minhash
 MIN runs on fixed-width hex strings (lexicographic == numeric).
 """
@@ -29,6 +33,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from databricks_observe_spark.functions.arrowmap import arrow_map
+from databricks_observe_spark.functions.banding import (
+    band_candidates,
+    band_members,
+    recall_counts,
+)
 from databricks_observe_spark.functions.fixpoint import fixpoint
 from databricks_observe_spark.functions.rounding import (
     round_half_up,
@@ -373,40 +382,22 @@ def minhash_signatures(t: dict[str, DataFrame]) -> DataFrame:
 def minhash_lsh_pairs(t: dict[str, DataFrame]) -> DataFrame:
     """Banded-LSH candidate pairs with estimated Jaccard.
 
-    Signatures -> (band_idx, band signature) rows via explode -> ONE
-    self-join keyed on (band_idx, bsig) -> distinct candidates -> estimate
-    = matching components / 16. A single shuffle replaces the naive
-    one-join-per-band union; work stays proportional to colliding
-    candidates, not n^2.
+    Each band's key is the concatenation of its 4 signature components;
+    the candidates are the distinct pairs sharing one band
+    (``band_candidates``: one self-join, not one join per band), and the
+    estimate is matching components / 16. Work stays proportional to
+    colliding candidates, not n^2.
     """
     sig = minhash_signatures(t)
-    bands = sig.select(
+    members = band_members(
+        sig,
         "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.concat(
-                            *[
-                                F.col(f"mh{b * ROWS_PER_BAND + r}")
-                                for r in range(ROWS_PER_BAND)
-                            ]
-                        ).alias("bsig"),
-                    )
-                    for b in range(N_BANDS)
-                ]
-            )
-        ).alias("bs"),
-    ).select("doc_id", "bs.band", "bs.bsig")
-    left = bands.select(F.col("doc_id").alias("doc_a"), "band", "bsig")
-    right = bands.select(F.col("doc_id").alias("doc_b"), "band", "bsig")
-    candidates = (
-        left.join(right, on=["band", "bsig"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
+        [
+            (b, F.concat(*[F.col(f"mh{b * ROWS_PER_BAND + r}") for r in range(ROWS_PER_BAND)]))
+            for b in range(N_BANDS)
+        ],
     )
+    candidates = band_candidates(members, "doc_a", "doc_b").distinct()
     siga = sig.select(
         F.col("doc_id").alias("doc_a"), *[F.col(f"mh{i}").alias(f"a{i}") for i in range(N_MINHASH)]
     )
@@ -462,9 +453,8 @@ MINHASH_LSH_PAIRS_SQL = (
 def simhash_fingerprints(t: dict[str, DataFrame]) -> DataFrame:
     """16-bit SimHash per document — the registered query returns the
     memoized fingerprint index (``_simhash_fps``): the setup phase
-    declares "simhash_fingerprints" as a written table, every other
-    simhash consumer reads the memo, and the old form re-ran the full
-    vote pass per call while the identical frame sat materialized
+    declares "simhash_fingerprints" as a written table and every simhash
+    consumer reads the memo, so the vote pass runs once per context
     (same stance as ngram_jaccard_pairs returning its pair memo)."""
     return _simhash_fps(t)
 
@@ -839,46 +829,24 @@ def simhash_near_dup_pairs(t: dict[str, DataFrame]) -> DataFrame:
     simhash dedup runs: fingerprint table (one shuffle), banded candidate
     join (one shuffle on 8-byte band keys), constant-time verify.
     """
-    fps = _simhash_fps(t)
     # carry the (16-bit) fingerprint THROUGH the band rows: the hamming
     # verify then runs inline on the join output — no candidate-sized
     # distinct, no join back to the fingerprint table. The distinct runs
     # last, on verified pairs only (a pair can agree on several bands).
-    bands = fps.select(
-        F.col("doc_id"),
-        F.col("simhash"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        ((F.col("simhash") / F.lit(div)).cast("bigint") % F.lit(mod)).alias(
-                            "val"
-                        ),
-                    )
-                    for i, (div, mod) in enumerate(_SIMHASH_BANDS)
-                ]
-            )
-        ).alias("b"),
-    ).select(
-        "doc_id", "simhash", F.col("b.band").alias("band"), F.col("b.val").alias("val")
-    )
-    right = bands.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("simhash").alias("fp_b"),
-        F.col("band").alias("band_b"),
-        F.col("val").alias("val_b"),
+    members = band_members(
+        _simhash_fps(t),
+        "doc_id",
+        [
+            (i, (F.col("simhash") / F.lit(div)).cast("bigint") % F.lit(mod))
+            for i, (div, mod) in enumerate(_SIMHASH_BANDS)
+        ],
+        carry=("simhash",),
     )
     return (
-        bands.join(
-            right,
-            on=(F.col("band") == F.col("band_b"))
-            & (F.col("val") == F.col("val_b"))
-            & (F.col("doc_id") < F.col("doc_b")),
-        )
-        .withColumn("hamming", F.expr("CAST(bit_count(simhash ^ fp_b) AS INT)"))
+        band_candidates(members, "doc_a", "doc_b")
+        .withColumn("hamming", F.expr("CAST(bit_count(simhash_a ^ simhash_b) AS INT)"))
         .filter(F.col("hamming") <= SIMHASH_HAM_MAX)
-        .select(F.col("doc_id").alias("doc_a"), "doc_b", "hamming")
+        .select("doc_a", "doc_b", "hamming")
         .distinct()
     )
 
@@ -906,34 +874,10 @@ def embedding_near_dup_lsh(t: dict[str, DataFrame]) -> DataFrame:
     reporting LSH recall semantics (pairs in no common bucket are out of
     scope for BOTH engines).
     """
-    from databricks_observe_spark.operators.similarity import N_TABLES, _bucketed
+    from databricks_observe_spark.operators.similarity import _bucketed, _emb_members
 
     e = _bucketed(t)
-    member = F.explode(
-        F.array(
-            *[
-                F.struct(F.lit(i).alias("tbl"), F.col(f"bucket{i}").alias("bkt"))
-                for i in range(N_TABLES)
-            ]
-        )
-    ).alias("m")
-    mem = e.select("vec_id", member).select(
-        "vec_id", F.col("m.tbl").alias("tbl"), F.col("m.bkt").alias("bkt")
-    )
-    cand = (
-        mem.join(
-            mem.select(
-                F.col("vec_id").alias("vec_b"),
-                F.col("tbl").alias("tbl_b"),
-                F.col("bkt").alias("bkt_b"),
-            ),
-            on=(F.col("tbl") == F.col("tbl_b"))
-            & (F.col("bkt") == F.col("bkt_b"))
-            & (F.col("vec_id") < F.col("vec_b")),
-        )
-        .select(F.col("vec_id").alias("vec_a"), "vec_b")
-        .distinct()
-    )
+    cand = band_candidates(_emb_members(t), "vec_a", "vec_b").distinct()
     ea = e.select(F.col("vec_id").alias("vec_a"), F.col("v").alias("va"), F.col("nrm").alias("na"))
     eb = e.select(F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"), F.col("nrm").alias("nb"))
     paired = cand.join(ea, on="vec_a").join(eb, on="vec_b")
@@ -1957,60 +1901,26 @@ def lsh_dedup_recall(t: dict[str, DataFrame]) -> DataFrame:
     index. One row: pair counts and integer basis-point recall/precision
     (a true pair counts as found when LSH banding surfaced it at all).
 
-    Both sides are the memoized indexes (shingle table, signatures) —
-    the eval costs two tiny pair-set aggregates and a semi join, never a
-    corpus re-scan. Empty ground truth reads as vacuous recall 10000.
+    Both sides are the memoized indexes (shingle table, signatures), and
+    ``recall_counts`` reads all three counts in one pass over the two pair
+    sets, never a corpus re-scan. Empty ground truth reads as vacuous
+    recall 10000.
     """
-    # ONE pass instead of three global aggregates + a semi join + two
-    # broadcast joins: tag each memoized pair set,
-    # union, group once per pair, then a single global aggregate reads
-    # all three counts. n_hit = sum(n_e) over pairs present on both
-    # sides, which is exactly the left-semi multiplicity of the old
-    # form (cand-side duplicates never multiply — nothing joins).
-    exact = ngram_jaccard_pairs(t).select(
-        "doc_a", "doc_b", F.lit(1).alias("e"), F.lit(0).alias("c")
+    counts = recall_counts(
+        ngram_jaccard_pairs(t), minhash_lsh_pairs(t), ("doc_a", "doc_b")
     )
-    cand = minhash_lsh_pairs(t).select(
-        "doc_a", "doc_b", F.lit(0).alias("e"), F.lit(1).alias("c")
-    )
-    per_pair = (
-        exact.union(cand)
-        .groupBy("doc_a", "doc_b")
-        .agg(F.sum("e").alias("n_e"), F.sum("c").alias("n_c"))
-    )
-    return (
-        per_pair.agg(
-            # coalesce: a global SUM over zero groups is NULL where the
-            # old COUNT(*) aggregates returned 0 — keep the empty-corpus
-            # row identical (vacuous recall 10000 path)
-            F.coalesce(F.sum("n_e"), F.lit(0).cast("bigint")).alias(
-                "n_true_pairs"
-            ),
-            F.coalesce(F.sum("n_c"), F.lit(0).cast("bigint")).alias(
-                "n_candidate_pairs"
-            ),
-            F.coalesce(
-                F.sum(
-                    F.when(
-                        (F.col("n_e") > 0) & (F.col("n_c") > 0), F.col("n_e")
-                    ).otherwise(F.lit(0))
-                ),
-                F.lit(0).cast("bigint"),
-            ).alias("n_hit"),
-        )
-        .select(
-            "n_true_pairs",
-            "n_candidate_pairs",
-            "n_hit",
-            F.expr(
-                "CASE WHEN n_true_pairs = 0 THEN CAST(10000 AS BIGINT)"
-                " ELSE (n_hit * 10000) DIV n_true_pairs END"
-            ).alias("recall_bp"),
-            F.expr(
-                "CASE WHEN n_candidate_pairs = 0 THEN CAST(10000 AS BIGINT)"
-                " ELSE (n_hit * 10000) DIV n_candidate_pairs END"
-            ).alias("precision_bp"),
-        )
+    return counts.select(
+        F.col("n_true").alias("n_true_pairs"),
+        F.col("n_found").alias("n_candidate_pairs"),
+        "n_hit",
+        F.expr(
+            "CASE WHEN n_true = 0 THEN CAST(10000 AS BIGINT)"
+            " ELSE (n_hit * 10000) DIV n_true END"
+        ).alias("recall_bp"),
+        F.expr(
+            "CASE WHEN n_found = 0 THEN CAST(10000 AS BIGINT)"
+            " ELSE (n_hit * 10000) DIV n_found END"
+        ).alias("precision_bp"),
     )
 
 

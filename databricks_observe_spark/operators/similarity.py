@@ -14,17 +14,21 @@
   key at scale). Recall vs brute force is gated at >= 0.6 in
   tests/test_dedup_similarity.py (measures ~0.72).
 - ``ivf_ann_topk`` — IVF-flat probes against a broadcast codebook.
+- ``ann_recall`` — recall@5 of the LSH index against brute force.
 - ``kmeans_assign`` / ``kmeans_clusters`` — one E-step, then a
   bit-reproducible fixed-point Lloyd loop.
 - ``semantic_dedup`` — SemDeDup: exact within-cluster cosine pairs through
   the block-tiled ``tiled_cosine_pairs`` join.
 
-Hyperplanes are literal constants (functions/vectors.py:hyperplanes)
-embedded in both plans. All dense-vector math (norms, bucket signs,
-cosines, squared distances) runs in Arrow-batched pandas through the numpy
-kernels of functions/vectors.py, which sum over dimensions in the same
-IEEE order as the DuckDB oracle's unrolled SQL, so buckets, cosines and
-distances agree bit-for-bit while nothing ever enters the JVM's >8 KB-method
+Bucket memberships, probe keys and recall counts come from
+functions/banding.py, the one candidate layer shared with the dedup LSH
+operators. Hyperplanes are literal constants
+(functions/vectors.py:hyperplanes) embedded in both plans. All
+dense-vector math (norms, bucket signs, cosines, squared distances) runs
+in Arrow-batched pandas through the numpy kernels of
+functions/vectors.py, which sum over dimensions in the same IEEE order
+as the DuckDB oracle's unrolled SQL, so buckets, cosines and distances
+agree bit-for-bit while nothing ever enters the JVM's >8 KB-method
 interpreted-codegen regime. Cosine order ties are broken by vec_id for
 determinism.
 """
@@ -36,6 +40,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
 from databricks_observe_spark.functions.arrowmap import arrow_map
+from databricks_observe_spark.functions.banding import (
+    band_members,
+    recall_counts,
+)
 from databricks_observe_spark.functions.rounding import (
     round_half_up,
     sql_round_half_up,
@@ -149,7 +157,7 @@ def _query_set_bc(t: dict[str, DataFrame]):
             .collect()
         )
         q_ids = np.array([r.vec_id for r in rows], dtype=np.int64)
-        q_mat = np.array([r.v for r in rows], dtype=np.float64)
+        q_mat = np.array([r.v for r in rows], dtype=np.float64).reshape(-1, DIM)
         q_nrm = np.array([r.nrm for r in rows], dtype=np.float64)
         return e.sparkSession.sparkContext.broadcast((q_ids, q_mat, q_nrm))
 
@@ -286,6 +294,16 @@ def _bucketed(t: dict[str, DataFrame]) -> DataFrame:
     return memo(t, "_emb_buckets", build)
 
 
+def _emb_members(t: dict[str, DataFrame]) -> DataFrame:
+    """``(vec_id, band, key)``: each vector's bucket in every hash table,
+    the table index as the band. Lazy on purpose: one Generate over the
+    checkpointed ``_bucketed`` index, read by ``ann_lsh_topk`` and
+    ``dedup.embedding_near_dup_lsh``."""
+    return band_members(
+        _bucketed(t), "vec_id", [(i, F.col(f"bucket{i}")) for i in range(N_TABLES)]
+    )
+
+
 def lsh_bucket_stats(t: dict[str, DataFrame]) -> DataFrame:
     """Vectors per LSH bucket (table 0) — the partition-pruning histogram."""
     return (
@@ -366,48 +384,18 @@ def ann_lsh_topk(t: dict[str, DataFrame]) -> DataFrame:
     ann_bruteforce_topk for recall (the quality/efficiency trade;
     tests/test_dedup_similarity.py gates the recall floor)."""
     e = _bucketed(t)
-    # explode each vector's (table_idx, bucket) memberships so the
-    # multi-table OR becomes ONE equi-join on (table_idx, bucket) — a
-    # single shuffle-free broadcast probe instead of a join per table
-    member = F.explode(
-        F.array(
-            *[
-                F.struct(F.lit(i).alias("tbl"), F.col(f"bucket{i}").alias("bkt"))
-                for i in range(N_TABLES)
-            ]
-        )
-    ).alias("m")
-    e_exp = e.select("vec_id", "v", "nrm", member).select(
-        "vec_id", "v", "nrm", F.col("m.tbl").alias("tbl"), F.col("m.bkt").alias("bkt")
-    )
-    # query side: (table, probe-bucket) for the home bucket + 1-bit flips
-    q_member = F.explode(
-        F.array(
-            *[
-                F.struct(F.lit(i).alias("tbl"), p.alias("bkt"))
-                for i in range(N_TABLES)
-                for p in _probe_exprs(f"bucket{i}")
-            ]
-        )
-    ).alias("m")
-    q_exp = (
-        e.filter(F.col("vec_id") < N_QUERIES)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"),
-            F.col("nrm").alias("qnrm"),
-            q_member,
-        )
-        .select(
-            "query_id", "qv", "qnrm",
-            F.col("m.tbl").alias("tbl"), F.col("m.bkt").alias("bkt"),
-        )
-    )
+    # query side: (table, probe bucket) for the home bucket + 1-bit flips,
+    # so the multi-table OR is ONE broadcast equi-join on (band, key)
+    probes = band_members(
+        e.filter(F.col("vec_id") < N_QUERIES),
+        "vec_id",
+        [(i, p) for i in range(N_TABLES) for p in _probe_exprs(f"bucket{i}")],
+    ).select(F.col("vec_id").alias("query_id"), "band", "key")
     # candidate ids only through the dedup shuffle (8-byte keys, not
     # 512-byte vectors); vectors re-attached afterwards via broadcast
     cand_ids = (
-        e_exp.select("vec_id", "tbl", "bkt")
-        .join(F.broadcast(q_exp.select("query_id", "tbl", "bkt")), on=["tbl", "bkt"])
+        _emb_members(t)
+        .join(F.broadcast(probes), on=["band", "key"])
         .filter(F.col("vec_id") != F.col("query_id"))
         .select("query_id", "vec_id")
         .dropDuplicates(["query_id", "vec_id"])
@@ -502,7 +490,7 @@ def _centroids_bc(t: dict[str, DataFrame]):
         )
         rows.sort(key=lambda r: r.vec_id)
         c_ids = np.array([r.vec_id for r in rows], dtype=np.int64)
-        c_mat = np.array([r.v for r in rows], dtype=np.float64)
+        c_mat = np.array([r.v for r in rows], dtype=np.float64).reshape(-1, DIM)
         c_nrm = np.array([r.nrm for r in rows], dtype=np.float64)
         return e.sparkSession.sparkContext.broadcast((c_ids, c_mat, c_nrm))
 
@@ -1224,20 +1212,16 @@ def ann_recall(t: dict[str, DataFrame]) -> DataFrame:
     neighbors the LSH index returned, in integer basis points.
 
     Composition of the two existing operators (the index path and the
-    exact path share the memoized norm table), joined on (query_id,
-    neighbor_id). Ground truth drives the LEFT join so a catastrophic
-    0-recall query still appears as a row.
+    exact path share the memoized norm table), counted per query by
+    ``recall_counts`` on (query_id, neighbor_id). A catastrophic 0-recall
+    query still has its ground-truth row; a query with no ground truth
+    has none.
     """
     truth = ann_bruteforce_topk(t).select("query_id", "neighbor_id")
-    got = (
-        ann_lsh_topk(t)
-        .select("query_id", "neighbor_id")
-        .withColumn("hit", F.lit(1))
-    )
+    found = ann_lsh_topk(t).select("query_id", "neighbor_id")
     return (
-        truth.join(got, on=["query_id", "neighbor_id"], how="left")
-        .groupBy("query_id")
-        .agg(F.sum(F.coalesce(F.col("hit"), F.lit(0))).alias("n_hit"))
+        recall_counts(truth, found, ("query_id", "neighbor_id"), by=("query_id",))
+        .filter(F.col("n_true") > 0)
         .select(
             "query_id",
             "n_hit",

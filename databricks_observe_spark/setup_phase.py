@@ -73,10 +73,10 @@ def setup_builders() -> dict:
         "langid_trained_profiles": _langid_profiles,
         "textrank_cooccurrence_graph": _textrank_graph,
         "vector_norms": _doubled,
-        "kmeans_fixed_point": _centroids_bc,
+        "ivf_codebook": _centroids_bc,
         "ann_query_set": _query_set_bc,
         "ivf_assignment": _ivf_assigned,
-        "int8_quantized_vectors": _quantized,
+        "kmeans_fixed_point_grid": _quantized,
         "near_dup_cluster_labels": _cluster_labels,
         "file_listing": _file_stats,
         "semdedup_assignment": _semdedup_assigned,

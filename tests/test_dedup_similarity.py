@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from databricks_observe_spark.operators import dedup as D, similarity as S
@@ -464,6 +465,27 @@ def test_ann_recall_matches_ground_truth_overlap(tables):
         assert r.recall_bp == r.n_hit * 10000 // S.TOP_K
     # the multi-table multiprobe index is gated at >= 0.6 mean recall
     assert sum(r.n_hit for r in rows) / (len(rows) * S.TOP_K) >= 0.6
+
+
+@pytest.mark.parametrize(
+    "op",
+    [
+        S.ann_bruteforce_topk,
+        S.ann_lsh_topk,
+        S.ivf_ann_topk,
+        S.ann_recall,
+        D.embedding_near_dup,
+        D.embedding_near_dup_lsh,
+        S.lsh_bucket_stats,
+    ],
+    ids=lambda op: op.__name__,
+)
+def test_vector_operators_on_empty_embeddings(tables, op):
+    """An empty corpus has no queries, codebook, buckets or pairs: every
+    vector operator returns 0 rows, as its SQL twin does."""
+    fresh = {k: v for k, v in tables.items() if not k.startswith("_")}
+    fresh["embeddings"] = tables["embeddings"].limit(0)
+    assert op(fresh).collect() == []
 
 
 def test_int8_quantize_error_within_half_step(tables):

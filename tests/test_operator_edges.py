@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from databricks_observe_spark.functions.banding import recall_counts
 from databricks_observe_spark.operators import catalog_ops as C
 
 
@@ -28,48 +29,28 @@ def test_table_profiles_empty_table_still_yields_zero_row(tables):
 
 
 def test_lsh_dedup_recall_sum_form_matches_left_semi_multiplicity(spark):
-    """The single-pass union+aggregate form replaced a left-semi
-    join; n_hit must count EXACT-side rows that have >=1 candidate match
-    — duplicate exact rows count per occurrence, duplicate candidate
-    rows never multiply, and empty inputs coalesce to 0 (the vacuous
-    recall path divides by n_true only when it is nonzero)."""
+    """``recall_counts`` (the tally behind lsh_dedup_recall and ann_recall)
+    counts n_hit as the EXACT-side rows that have >=1 candidate match —
+    duplicate exact rows count per occurrence, duplicate candidate rows
+    never multiply, and empty inputs coalesce to 0 (the vacuous recall
+    path divides by n_true only when it is nonzero)."""
     exact = spark.createDataFrame(
         [(1, 2), (1, 2), (3, 4)], "doc_a bigint, doc_b bigint"
     )
     cand = spark.createDataFrame(
         [(1, 2), (1, 2), (1, 2), (5, 6)], "doc_a bigint, doc_b bigint"
     )
+    pair = ("doc_a", "doc_b")
 
-    def sum_form(e_df, c_df):
-        e = e_df.select("doc_a", "doc_b", F.lit(1).alias("e"), F.lit(0).alias("c"))
-        c = c_df.select("doc_a", "doc_b", F.lit(0).alias("e"), F.lit(1).alias("c"))
-        per_pair = (
-            e.union(c)
-            .groupBy("doc_a", "doc_b")
-            .agg(F.sum("e").alias("n_e"), F.sum("c").alias("n_c"))
-        )
-        return per_pair.agg(
-            F.coalesce(F.sum("n_e"), F.lit(0).cast("bigint")).alias("n_true"),
-            F.coalesce(F.sum("n_c"), F.lit(0).cast("bigint")).alias("n_cand"),
-            F.coalesce(
-                F.sum(
-                    F.when(
-                        (F.col("n_e") > 0) & (F.col("n_c") > 0), F.col("n_e")
-                    ).otherwise(F.lit(0))
-                ),
-                F.lit(0).cast("bigint"),
-            ).alias("n_hit"),
-        ).first()
-
-    got = sum_form(exact, cand)
+    got = recall_counts(exact, cand, pair).first()
     semi = exact.join(cand, on=["doc_a", "doc_b"], how="left_semi").count()
     assert got.n_true == exact.count() == 3
-    assert got.n_cand == cand.count() == 4
+    assert got.n_found == cand.count() == 4
     assert got.n_hit == semi == 2
 
     empty = spark.createDataFrame([], "doc_a bigint, doc_b bigint")
-    vac = sum_form(empty, empty)
-    assert (vac.n_true, vac.n_cand, vac.n_hit) == (0, 0, 0)
+    vac = recall_counts(empty, empty, pair).first()
+    assert (vac.n_true, vac.n_found, vac.n_hit) == (0, 0, 0)
 
 
 def test_psi_map_grid_fills_missing_bins(spark):

@@ -51,7 +51,6 @@ PLAN_ALLOWLIST: dict[str, dict[str, str]] = {
         "vocab_coverage": "the one-row kth-frequency cut and the one-row total",
     },
     "SortMergeJoin": {
-        "ann_recall": "ground truth LEFT-joins the candidates; both scale with the queries",
         "curated_corpus": "anti-join on the dropped near-dups, corpus-sized on duplicated data",
         "merge_upsert": "MERGE is one full-outer join on the key, which cannot broadcast",
         "perplexity_buckets": "docs join the per-(lang, score) tercile table, score-value-sized",
