@@ -126,8 +126,8 @@ def main() -> None:
     spark = get_spark("bench")
     qs = queries()
     # --all (or SPARK_GRAFT_BENCH_ALL=1): sweep EVERY registered query
-    # instead of the headline set — used by tools/scale_sweep.py for the
-    # full-surface growth audit. Default driver behavior is unchanged.
+    # instead of the headline set, for a full-surface timing. Default
+    # driver behavior is unchanged.
     if "--all" in sys.argv[1:] or os.environ.get("SPARK_GRAFT_BENCH_ALL"):
         names = list(qs)
     else:
@@ -198,8 +198,8 @@ def main() -> None:
     # `compact: true` is the structural discriminator between the two
     # lines (the full line above carries `queries` instead) — consumers
     # must select by KEY, never by line position: the driver tail-parses
-    # the last line, tools/scale_sweep.py selects the line with a
-    # `queries` map, and json.loads-the-whole-stdout was never supported.
+    # the last line, a full-map reader selects the line with a `queries`
+    # map, and json.loads-the-whole-stdout was never supported.
     compact = {
         "metric": "headline_queries_total_wall",
         "compact": True,
@@ -225,8 +225,8 @@ def main() -> None:
     # always parse, and the omitted tail rows are floor-bound sub-0.3 s
     # entries. Subset keys are inserted slowest-first, so consumers can
     # also read it as a ranked slow-list. The FULL map still prints above
-    # (first line) for tools/scale_sweep.py and humans; no entry was
-    # removed or renamed there.
+    # (first line) for full-map readers and humans; no entry was removed
+    # or renamed there.
     budget = 1900
     subset: dict[str, float] = {}
     for qname, qsec in sorted(timings.items(), key=lambda kv: (-kv[1], kv[0])):

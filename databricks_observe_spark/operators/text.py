@@ -1885,12 +1885,13 @@ def fuzzy_match_probe(t: dict[str, DataFrame]) -> DataFrame:
         .select("doc_id", F.substring("text", 1, FUZZY_PREFIX_LEN).alias("p"))
         .collect()
     )
+    # typed: an empty corpus has no probes, and array() alone is VOID-typed
     probe_arr = F.array(
         *[
             F.struct(F.lit(int(r.doc_id)).alias("probe_id"), F.lit(r.p).alias("p"))
             for r in sorted(probes, key=lambda r: r.doc_id)
         ]
-    )
+    ).cast("array<struct<probe_id:int,p:string>>")
     exploded = docs.select(
         "doc_id",
         F.substring("text", 1, FUZZY_PREFIX_LEN).alias("prefix"),

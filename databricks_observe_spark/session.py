@@ -23,15 +23,26 @@ from pyspark.sql import SparkSession
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+# The runtime-settable engine defaults: tune puts them on our own sessions'
+# builder, ensure_conf on a session someone else created.
+ENGINE_CONF = (
+    ("spark.sql.session.timeZone", "UTC"),
+    ("spark.sql.adaptive.enabled", "true"),
+    ("spark.sql.execution.arrow.pyspark.enabled", "true"),
+    ("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024)),
+    # TIMESTAMP(NANOS) reads as bigint, as sources/tables.footer_schema
+    # declares it; normalize_events_ts converts it (no-op for micros data)
+    ("spark.sql.legacy.parquet.nanosAsLong", "true"),
+)
+
+
 def tune(builder: SparkSession.Builder) -> SparkSession.Builder:
     """Apply engine defaults to a builder (also used on foreign sessions)."""
+    for key, value in ENGINE_CONF:
+        builder = builder.config(key, value)
     return (
-        builder.config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        builder.config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.python.daemon.module", "databricks_observe_spark.worker_daemon")
@@ -60,18 +71,7 @@ def ensure_conf(spark: SparkSession) -> SparkSession:
             spark.conf.set("spark.sql.shuffle.partitions", "32")
     except Exception:
         pass
-    for key, value in (
-        ("spark.sql.session.timeZone", "UTC"),
-        ("spark.sql.adaptive.enabled", "true"),
-        ("spark.sql.execution.arrow.pyspark.enabled", "true"),
-        ("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024)),
-        # Compatibility fallback only: IF a fixture is re-materialized with
-        # TIMESTAMP(NANOS) (an older layout), this makes it readable as BIGINT
-        # instead of a hard reader error; sources/tables.normalize_events_ts
-        # dtype-detects and converts either layout. No-op for the current
-        # micros fixtures.
-        ("spark.sql.legacy.parquet.nanosAsLong", "true"),
-    ):
+    for key, value in ENGINE_CONF:
         try:
             spark.conf.set(key, value)
         except Exception:

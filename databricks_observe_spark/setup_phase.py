@@ -1,7 +1,7 @@
-"""The declared bench setup phase, shared by bench.py and
-tools/bench_vs_duckdb.py so the two harnesses cannot drift apart: a
-builder missing from one of them would charge its index build to the
-first timed pass of whichever query touches it.
+"""The declared bench setup phase, shared by bench.py and perfbench's
+setup phase so the two harnesses cannot drift apart: a builder missing
+from one of them would charge its index build to the first timed pass of
+whichever query touches it.
 
 Every entry is a BUILD-ONCE artifact: at scale a written table (or
 trained model / long-lived runtime state) maintained by ingest, so

@@ -4,21 +4,28 @@ Stands in for the reference's remote scans — ``spark.read.table`` at
 ``assets/customer_assets.py:11`` (S7) and the information_schema scans at
 ``assets/dlt_assets.py:87-91,159-166`` (S4/S5) — as local parquet reads.
 
-Design notes for scale (SURVEY.md §4): these are plain ``spark.read.parquet``
-scans, so Catalyst pushes predicates and prunes columns into the parquet
-reader for every downstream operator; nothing here collects or caches by
-default. ``events.ts``'s physical parquet type has varied across fixture
-re-materializations (TIMESTAMP(NANOS) read as long, TIMESTAMP(MICROS) read
-as TIMESTAMP_NTZ) — we DETECT the layout and normalize to Spark's
-microsecond TIMESTAMP once at load so window/session operators and the
-DuckDB oracle agree (SURVEY.md §7 hard part 4).
+Like the reference, which never scans data to learn a shape, the batch
+loader and ``streaming/state.py:stream_parquet`` read with the schema of the
+parquet footer (``footer_schema``): nothing here collects, caches or runs a
+job, and Catalyst pushes predicates and prunes columns into the parquet
+reader for every downstream operator (SURVEY.md §4). ``events.ts``'s
+physical type has varied across fixture re-materializations
+(TIMESTAMP(NANOS) read as long, TIMESTAMP(MICROS) read as TIMESTAMP_NTZ) —
+we DETECT the layout and normalize to Spark's microsecond TIMESTAMP once
+at load so window/session operators and the DuckDB oracle agree
+(SURVEY.md §7 hard part 4).
 """
 
 from __future__ import annotations
 
+import glob
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import StructType
 
 from databricks_observe_spark.session import ensure_conf
 
@@ -37,18 +44,30 @@ TABLE_NAMES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Physical types we accept per contract-critical column. The fixtures are
-# driver-generated and have been re-materialized with different physical
-# types across rounds (ts: timestamp[ns]-read-as-long, then timestamp[us]);
-# the loader DETECTS the layout instead of assuming one, and anything
-# outside this set fails with a named error instead of a Catalyst
-# DATATYPE_MISMATCH deep inside a query plan.
+# The events.ts layouts the loader detects (see the module docstring); any
+# other fails with a named error, not a DATATYPE_MISMATCH deep in a plan.
 _EVENTS_TS_TYPES = ("bigint", "timestamp", "timestamp_ntz")
 
 # The text form of every timestamp a query returns, in Spark's and in
 # DuckDB's spelling: both render microseconds, so the oracle hashes match.
 TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 TS_FMT_DUCK = "%Y-%m-%d %H:%M:%S.%f"
+
+
+def footer_schema(path: str) -> StructType:
+    """The schema Spark infers for the parquet file ``path`` (or for the
+    first file, by name, the glob ``path`` matches), read from its footer
+    on the driver: no job, whatever the file's size. Zone-less timestamps
+    map to ``timestamp_ntz`` and TIMESTAMP(NANOS) to ``bigint``, as the
+    session's ``nanosAsLong`` setting reads them."""
+    arrow = pq.read_schema(min(glob.glob(path), default=path))
+    fields = [
+        f.with_type(pa.int64())
+        if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
+        else f
+        for f in arrow
+    ]
+    return from_arrow_schema(pa.schema(fields), prefer_timestamp_ntz=True)
 
 
 def normalize_events_ts(df: DataFrame) -> DataFrame:
@@ -95,11 +114,13 @@ def check_fixture_contract(tables: dict[str, DataFrame]) -> None:
     else:
         # dimension drift would silently break every unrolled 64-term
         # vector expression (similarity oracles are generated for DIM=64):
-        # one LIMIT-1 probe fails loudly instead
-        row = tables["embeddings"].select("embedding").limit(1).collect()
-        if row and len(row[0][0]) != 64:
+        # the first value, read from one column chunk, fails loudly instead
+        path = os.path.join(tables["_sf_dir"], "embeddings.parquet")
+        batches = pq.ParquetFile(path).iter_batches(batch_size=1, columns=["embedding"])
+        dims = next((len(b.column(0)[0]) for b in batches if b.num_rows), 64)
+        if dims != 64:
             problems.append(
-                f"embeddings.embedding has {len(row[0][0])} dims, engine "
+                f"embeddings.embedding has {dims} dims, engine "
                 "vector expressions are generated for 64"
             )
     required = {
@@ -149,7 +170,7 @@ def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, 
     out["_sf_dir"] = sf_dir  # for file-index reads (catalog_ops)
     for name in TABLE_NAMES:
         path = os.path.join(sf_dir, f"{name}.parquet")
-        df = spark.read.parquet(path)
+        df = spark.read.schema(footer_schema(path)).parquet(path)
         if name == "events":
             df = normalize_events_ts(df)
         df.createOrReplaceTempView(name)

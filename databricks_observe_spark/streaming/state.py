@@ -38,43 +38,31 @@ from databricks_observe_spark.functions.rounding import (
     round_half_up,
     sql_round_half_up,
 )
-from databricks_observe_spark.memo import memo
 from databricks_observe_spark.session import ensure_conf
 from databricks_observe_spark.sources.catalog_model import updates_of
 from databricks_observe_spark.sources.tables import (
     TS_FMT,
     TS_FMT_DUCK,
+    footer_schema,
     normalize_events_ts,
 )
 
 TERMINAL_STATE = "COMPLETED"  # dlt_sensor.py:6
 WATERMARK = "1 hour"
 
-# Detected reader schemas per (sf_dir, glob): the detection is a batch
-# footer read whose result cannot change within a session (fixtures are
-# immutable); memoizing it removes one file-listing job from EVERY
-# stream start without weakening the detect-don't-assume rule — the
-# first stream of a session still detects.
-_SCHEMA_CACHE: dict[tuple[str, str], object] = {}
-
 
 def stream_parquet(spark: SparkSession, sf_dir: str, glob: str) -> DataFrame:
     """File-source stream over the fixture files in ``sf_dir`` matching
     ``glob`` (stands in for the REST polling feed).
 
-    The reader schema is DETECTED from a batch read of the same files
-    rather than hardcoded: a streaming file source silently coerces data
-    to a wrong declared schema (a hardcoded ``ts bigint`` over
-    micros-timestamp parquet produced garbage epochs and silently-wrong
-    windows, not an error)."""
+    The reader schema is DETECTED from the files' parquet footer, as the
+    batch loader's is, rather than hardcoded: a streaming file source
+    silently coerces data to a wrong declared schema (a hardcoded
+    ``ts bigint`` over micros-timestamp parquet produced garbage epochs
+    and silently-wrong windows, not an error)."""
     ensure_conf(spark)
-    schema = memo(
-        _SCHEMA_CACHE,
-        (sf_dir, glob),
-        lambda: spark.read.parquet(os.path.join(sf_dir, glob)).schema,
-    )
     return (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(footer_schema(os.path.join(sf_dir, glob)))
         .format("parquet")
         .option("pathGlobFilter", glob)  # file sources want a dir
         .load(sf_dir)

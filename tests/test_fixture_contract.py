@@ -10,19 +10,43 @@ a named error instead of a Catalyst type mismatch deep in a plan.
 
 from __future__ import annotations
 
+import glob
+import shutil
+from pathlib import Path
+
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
 
+from databricks_observe_spark.engine import prepare
 from databricks_observe_spark.sources.tables import (
     TABLE_NAMES,
     check_fixture_contract,
+    footer_schema,
     load_tables,
     normalize_events_ts,
 )
 from databricks_observe_spark.streaming.state import _run_to_exhaustion, stream_events
 
 SF_DIR = "/root/testdata/sf0.001"
+FIXTURE_FILES = sorted(
+    glob.glob("/root/testdata/*/*.parquet")
+    + glob.glob(str(Path(__file__).resolve().parent.parent / "perfbench/data/*/*.parquet"))
+)
+
+
+@pytest.fixture
+def fixture_copy(spark, tmp_path):
+    """A copy of the test fixture in a directory no context has used. The
+    loader re-registers the session's (global) temp views over the copy,
+    so they are pointed back at the test fixture afterwards."""
+    copy = tmp_path / "sf"
+    shutil.copytree(SF_DIR, copy)
+    yield copy
+    load_tables(spark, SF_DIR)
 
 
 def test_fixture_contract(spark):
@@ -86,6 +110,37 @@ def test_batch_ts_equals_streaming_ts(spark, tables):
         "append",
     ).collect()[0]
     assert (got.lo, got.hi, got.n) == (batch.lo, batch.hi, batch.n)
+
+
+def test_footer_schema_equals_spark_inference(tables, spark):
+    """The footer mapping is the schema Spark infers, on every table of
+    every fixture directory (``tables`` sets the session's confs)."""
+    assert len(FIXTURE_FILES) >= 4 * len(TABLE_NAMES)
+    for path in FIXTURE_FILES:
+        assert footer_schema(path) == spark.read.parquet(path).schema, path
+
+
+def test_nanos_events_normalize_to_the_micros_instants(spark, tables, fixture_copy):
+    """An ``events`` file whose ts is TIMESTAMP(NANOS) loads as bigint and
+    normalizes to the same instants as the micros original."""
+    events = pq.read_table(fixture_copy / "events.parquet")
+    ns = events.set_column(
+        events.schema.get_field_index("ts"), "ts", events["ts"].cast(pa.timestamp("ns"))
+    )
+    pq.write_table(ns, fixture_copy / "events.parquet")
+    assert footer_schema(str(fixture_copy / "events.parquet"))["ts"].dataType == LongType()
+
+    got = load_tables(spark, str(fixture_copy))["events"].select("event_id", "ts")
+    want = tables["events"].select("event_id", "ts")
+    assert sorted(got.collect()) == sorted(want.collect())
+
+
+def test_prepare_runs_no_job(spark, tables, fixture_copy):
+    """Preparing a directory no context has used runs no Spark job."""
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    prepare(spark, str(fixture_copy))
+    assert set(tracker.getJobIdsForGroup()) - before == set()
 
 
 def test_registry_order_puts_rows_only_last():

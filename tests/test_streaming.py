@@ -380,8 +380,8 @@ def test_stream_io_only_in_harness():
 
 def test_warm_streaming_calls_read_no_footer(spark, tables, monkeypatch):
     """Once each streaming query has run, a second call reads no Parquet
-    footer: every stream's reader schema comes from the memoized
-    detection in ``stream_parquet``."""
+    through Spark: every stream's reader schema comes from the file's
+    footer (``sources/tables.footer_schema``), read on the driver."""
     from pyspark.sql import DataFrameReader
 
     from databricks_observe_spark import registry

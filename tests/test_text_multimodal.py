@@ -427,6 +427,14 @@ def test_fuzzy_match_probe_is_reflexively_consistent(tables):
     assert expected_zero <= got_zero
 
 
+def test_fuzzy_match_probe_on_empty_documents(tables):
+    """An empty corpus has no probes and no matches: 0 rows, as its SQL
+    twin's cross join with an empty probe set gives."""
+    fresh = {k: v for k, v in tables.items() if not k.startswith("_")}
+    fresh["documents"] = tables["documents"].limit(0)
+    assert T.fuzzy_match_probe(fresh).collect() == []
+
+
 def test_bm25_ranks_are_contract_shaped(tables):
     from databricks_observe_spark.operators import text as T
 
