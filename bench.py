@@ -136,17 +136,13 @@ def main() -> None:
     # warmup: JVM + parquet footer reads
     qs[names[0]](spark, SF_DIR).count()
 
-    # SETUP (timed separately, reported as setup_sec): build the shared
-    # derived indexes — tokenized corpus, shingle/trigram/tf indexes,
-    # vector norms + LSH buckets + IVF assignment + fixed-point grid. At
-    # scale every one of these is a WRITTEN table maintained by ingest,
-    # so per-query timings below measure steady-state query execution;
-    # the one-time build cost stays visible in setup_sec rather than
-    # being charged to whichever query happens to touch an index first.
-    # NOTE: later per-query numbers also benefit from intermediates
-    # memoized by earlier queries in the same ctx (e.g. near_dup_clusters
-    # reuses the pair table ngram_jaccard_pairs materialized); the
-    # setup+queries total is the honest cross-query wall figure.
+    # SETUP (timed separately, reported as setup_sec): build every derived
+    # index the operators declare with ``memo.index`` (``setup_builders``
+    # reads those declarations). At scale every one of these is a WRITTEN
+    # table maintained by ingest, so per-query timings below measure
+    # steady-state query execution; the one-time build cost stays visible
+    # in setup_sec rather than being charged to whichever query happens
+    # to touch an index first.
     from databricks_observe_spark.registry import _ctx
     from databricks_observe_spark.setup_phase import (
         build_setup_indexes,
@@ -189,17 +185,14 @@ def main() -> None:
         "sf": sf_val,
     }
     print(json.dumps(out))
-    # LAST stdout line = a compact (<1.9 kB) machine-readable summary. The
-    # driver archives only the final ~2 kB of stdout and parses the last
-    # line; the full per-query map above overflows that window (BENCH_r07
-    # recorded parsed=null), so the authoritative totals repeat here in a
-    # line that always fits. `ex_kmeans_sec` excludes the one row whose
-    # DuckDB oracle is variance-prone (see BASELINE.md's dual ratios).
-    # `compact: true` is the structural discriminator between the two
-    # lines (the full line above carries `queries` instead) — consumers
-    # must select by KEY, never by line position: the driver tail-parses
-    # the last line, a full-map reader selects the line with a `queries`
-    # map, and json.loads-the-whole-stdout was never supported.
+    # LAST stdout line = a compact (<1.9 kB) machine-readable summary: the
+    # bench caller keeps only the final ~2 kB of stdout and parses its last
+    # line, which the full per-query map above overflows, so the totals
+    # repeat here in a line that always fits. `ex_kmeans_sec` excludes the
+    # one row whose DuckDB oracle is variance-prone (see BASELINE.md's dual
+    # ratios).
+    # `compact: true` tells the two lines apart; consumers select by key,
+    # never by line position.
     compact = {
         "metric": "headline_queries_total_wall",
         "compact": True,
@@ -213,20 +206,11 @@ def main() -> None:
             sorted(timings.items(), key=lambda kv: -kv[1])[:8]
         ),
     }
-    # r22: the driver archives only the final ~2000 BYTES of stdout and
-    # its PERF per-query comparison reads `queries` from the line it
-    # parses there — which the full map above never reaches (the 93 query
-    # names alone are ~1.9 kB, so no ordering makes the complete map fit;
-    # r21's PERF recorded per_query={} for exactly this reason). The
-    # compact line therefore now ALSO carries the largest SLOWEST-FIRST
-    # subset of the per-query map that keeps the whole line inside the
-    # capture window: the heavy queries — the only ones whose per-query
-    # regression/scaling signal rises above the per-job scheduling floor —
-    # always parse, and the omitted tail rows are floor-bound sub-0.3 s
-    # entries. Subset keys are inserted slowest-first, so consumers can
-    # also read it as a ranked slow-list. The FULL map still prints above
-    # (first line) for full-map readers and humans; no entry was removed
-    # or renamed there.
+    # The caller's per-query comparison reads `queries` from that last
+    # line, and the 93 query names alone are ~1.9 kB, so the compact line
+    # carries the largest slowest-first subset of the map that keeps the
+    # line inside the window: the heavy queries always parse, and the
+    # omitted rows are floor-bound sub-0.3 s entries.
     budget = 1900
     subset: dict[str, float] = {}
     for qname, qsec in sorted(timings.items(), key=lambda kv: (-kv[1], kv[0])):

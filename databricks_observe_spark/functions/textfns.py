@@ -13,10 +13,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from databricks_observe_spark.memo import memo
+from databricks_observe_spark.memo import index
 from databricks_observe_spark.sources.tables import fan_out
 
 
+@index("doc_tokens")
 def doc_tokens(t: dict[str, DataFrame]) -> DataFrame:
     """Materialized (doc_id, w: array<string>) token frame, memoized in the
     context so every shingle/fingerprint/tf-idf consumer shares one pass.
@@ -29,9 +30,9 @@ def doc_tokens(t: dict[str, DataFrame]) -> DataFrame:
     derived from this index runs partition-parallel (no-op on a
     well-split production scan).
     """
-    return memo(t, "_doc_tokens", lambda: (
+    return (
         fan_out(t["documents"]).select("doc_id", F.split("text", " ").alias("w"))
-    ).localCheckpoint())
+    ).localCheckpoint()
 
 
 def shingle_expr(k: int, tokens_col: str = "w") -> F.Column:

@@ -1,7 +1,14 @@
-"""Build-once memos on a context dict, safe under concurrent callers."""
+"""Build-once memos on a context dict, safe under concurrent callers.
+
+Every derived index of the engine is declared once, with :func:`index`:
+the decorator memoizes the builder under its published name and records
+it in :data:`INDEXES`, the table the setup phase builds from. Context
+keys that start with ``_`` are derived; the rest are fixture tables.
+"""
 
 from __future__ import annotations
 
+import functools
 import threading
 from collections.abc import Callable, Hashable
 from concurrent.futures import Future
@@ -9,6 +16,9 @@ from typing import Any
 
 _LOCK = threading.Lock()
 _IN_FLIGHT: dict[tuple[int, Hashable], tuple[Future, int]] = {}
+
+# published index name -> memoized builder ``build(t)``, in declaration order
+INDEXES: dict[str, Callable[[dict], Any]] = {}
 
 
 def memo(t: dict, key: Hashable, build: Callable[[], Any]) -> Any:
@@ -56,3 +66,27 @@ def memo(t: dict, key: Hashable, build: Callable[[], Any]) -> Any:
         del _IN_FLIGHT[slot]
     fut.set_result(value)
     return value
+
+
+def index(name: str) -> Callable:
+    """Declare ``fn(t)`` as the builder of the derived index ``name``.
+
+    The returned callable runs ``memo(t, "_" + name, lambda: fn(t))``, so
+    every caller of one context shares one build, and it is recorded in
+    :data:`INDEXES` under ``name``: declaring a builder is what makes the
+    setup phase build it."""
+
+    def declare(fn: Callable[[dict], Any]) -> Callable[[dict], Any]:
+        # two builders under one key would each read the other's value
+        if name in INDEXES:
+            raise ValueError(f"index {name!r} is declared twice")
+        key = "_" + name
+
+        @functools.wraps(fn)
+        def build(t: dict) -> Any:
+            return memo(t, key, lambda: fn(t))
+
+        INDEXES[name] = build
+        return build
+
+    return declare

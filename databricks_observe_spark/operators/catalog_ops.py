@@ -27,7 +27,7 @@ from databricks_observe_spark.functions.rounding import (
     round_half_up,
     sql_round_half_up,
 )
-from databricks_observe_spark.memo import memo
+from databricks_observe_spark.memo import index
 from databricks_observe_spark.sources.catalog_model import (
     EXCLUDED_CATALOGS,
     EXCLUDED_SCHEMAS,
@@ -64,6 +64,7 @@ WHERE lower(catalog) NOT IN ('') AND lower(schema) NOT IN ('information_schema')
 """
 
 
+@index("tables_enriched")
 def tables_enriched(t: dict[str, DataFrame]) -> DataFrame:
     """J1 + F2/F3/F4: discovered objects left-joined to information_schema,
     with the reference's kind/format/description derivations.
@@ -76,35 +77,32 @@ def tables_enriched(t: dict[str, DataFrame]) -> DataFrame:
     each consume this catalog-sized frame per observation tick — one
     build instead of a broadcast-rebuild per consumer.
     """
-    def build() -> DataFrame:
-        info = t["information_schema_tables"].select(
-            F.col("table_catalog").alias("catalog"),
-            F.col("table_schema").alias("schema"),
-            F.col("table_name").alias("table"),
-            # F2: lower + space->underscore normalization (DA:94-97)
-            F.regexp_replace(F.lower(F.col("table_type")), " ", "_").alias("kind_raw"),
-            F.col("comment").alias("description"),
-            F.regexp_replace(F.lower(F.col("data_source_format")), " ", "_").alias("format_raw"),
-        )
-        joined = discovered_objects(t).join(
-            F.broadcast(info), on=["catalog", "schema", "table"], how="left"
-        )
-        # F3: CASE mapping delta->deltalake, unknown->'' (DA:114-119);
-        # F4/J1 defaults: missing probe -> kind 'table', format '' (DA:111-112)
-        fmt = F.coalesce(F.col("format_raw"), F.lit(""))
-        return joined.select(
-            "catalog",
-            "schema",
-            "table",
-            F.coalesce(F.col("kind_raw"), F.lit("table")).alias("kind"),
-            F.when(fmt == "delta", "deltalake")
-            .when(fmt == "unknown_data_source_format", "")
-            .otherwise(fmt)
-            .alias("format"),
-            F.col("description"),
-        ).localCheckpoint()
-
-    return memo(t, "_tables_enriched", build)
+    info = t["information_schema_tables"].select(
+        F.col("table_catalog").alias("catalog"),
+        F.col("table_schema").alias("schema"),
+        F.col("table_name").alias("table"),
+        # F2: lower + space->underscore normalization (DA:94-97)
+        F.regexp_replace(F.lower(F.col("table_type")), " ", "_").alias("kind_raw"),
+        F.col("comment").alias("description"),
+        F.regexp_replace(F.lower(F.col("data_source_format")), " ", "_").alias("format_raw"),
+    )
+    joined = discovered_objects(t).join(
+        F.broadcast(info), on=["catalog", "schema", "table"], how="left"
+    )
+    # F3: CASE mapping delta->deltalake, unknown->'' (DA:114-119);
+    # F4/J1 defaults: missing probe -> kind 'table', format '' (DA:111-112)
+    fmt = F.coalesce(F.col("format_raw"), F.lit(""))
+    return joined.select(
+        "catalog",
+        "schema",
+        "table",
+        F.coalesce(F.col("kind_raw"), F.lit("table")).alias("kind"),
+        F.when(fmt == "delta", "deltalake")
+        .when(fmt == "unknown_data_source_format", "")
+        .otherwise(fmt)
+        .alias("format"),
+        F.col("description"),
+    ).localCheckpoint()
 
 
 # F3's format-normalization CASE, built ONCE and interpolated into every
@@ -138,6 +136,7 @@ TABLES_ENRICHED_SQL = (
 )
 
 
+@index("columns_schema")
 def columns_schema(t: dict[str, DataFrame]) -> DataFrame:
     """S5 + A3: one grouped pass over information_schema.columns replaces the
     reference's query-per-table loop (DA:159-166).
@@ -149,28 +148,25 @@ def columns_schema(t: dict[str, DataFrame]) -> DataFrame:
     tables_enriched): table_profiles and observability_report re-read
     this catalog-sized aggregate every tick.
     """
-    def build() -> DataFrame:
-        cols = t["information_schema_columns"]
-        pair = F.struct(
-            F.col("ordinal_position").alias("ord"),
-            F.concat_ws(":", "column_name", "data_type").alias("nt"),
+    cols = t["information_schema_columns"]
+    pair = F.struct(
+        F.col("ordinal_position").alias("ord"),
+        F.concat_ws(":", "column_name", "data_type").alias("nt"),
+    )
+    return (
+        cols.groupBy(
+            F.col("table_catalog").alias("catalog"),
+            F.col("table_schema").alias("schema"),
+            F.col("table_name").alias("table"),
         )
-        return (
-            cols.groupBy(
-                F.col("table_catalog").alias("catalog"),
-                F.col("table_schema").alias("schema"),
-                F.col("table_name").alias("table"),
-            )
-            .agg(
-                F.count(F.lit(1)).alias("n_columns"),
-                F.array_join(
-                    F.transform(F.array_sort(F.collect_list(pair)), lambda s: s["nt"]), ","
-                ).alias("schema_str"),
-            )
-            .localCheckpoint()
+        .agg(
+            F.count(F.lit(1)).alias("n_columns"),
+            F.array_join(
+                F.transform(F.array_sort(F.collect_list(pair)), lambda s: s["nt"]), ","
+            ).alias("schema_str"),
         )
-
-    return memo(t, "_columns_schema", build)
+        .localCheckpoint()
+    )
 
 
 COLUMNS_SCHEMA_SQL = oracle_with_clause("information_schema_columns") + """
@@ -277,6 +273,7 @@ def table_files_meta(t: dict[str, DataFrame]) -> DataFrame:
     )
 
 
+@index("file_index")
 def _file_listing(t: dict[str, DataFrame]) -> DataFrame:
     """One row per fixture parquet FILE via the ``binaryFile`` source — a
     file-INDEX read (directory listing + stat), never a data scan.
@@ -295,31 +292,29 @@ def _file_listing(t: dict[str, DataFrame]) -> DataFrame:
     is kept un-checkpointed so its plan stays inspectable evidence (tests
     assert the binaryFile source and the absence of a data scan).
     """
-    def build() -> DataFrame:
-        profiled = list(TABLE_NAMES)
-        spark = t["lineitem"].sparkSession
-        # load the DIRECTORY with a glob filter, not a glob path: a glob path
-        # makes the streaming-sink metadata probe stat the literal "*.parquet"
-        # and print a benign-but-noisy FileNotFoundException stack trace
-        # (ORACLE_LOCAL_r04.log lines 4/85); a real directory stats clean
-        listing = (
-            spark.read.format("binaryFile")
-            .option("pathGlobFilter", "*.parquet")
-            .load(t["_sf_dir"])
+    profiled = list(TABLE_NAMES)
+    spark = t["lineitem"].sparkSession
+    # load the DIRECTORY with a glob filter, not a glob path: a glob path
+    # makes the streaming-sink metadata probe stat the literal "*.parquet"
+    # and print a benign-but-noisy FileNotFoundException stack trace
+    # (ORACLE_LOCAL_r04.log lines 4/85); a real directory stats clean
+    listing = (
+        spark.read.format("binaryFile")
+        .option("pathGlobFilter", "*.parquet")
+        .load(t["_sf_dir"])
+    )
+    return (
+        listing.select(
+            F.regexp_extract("path", "([^/]+)[.]parquet$", 1).alias("table"),
+            F.regexp_replace("path", "^file:", "").alias("path"),
+            F.col("length").alias("file_size"),
+            F.col("modificationTime").alias("mtime"),
         )
-        return (
-            listing.select(
-                F.regexp_extract("path", "([^/]+)[.]parquet$", 1).alias("table"),
-                F.regexp_replace("path", "^file:", "").alias("path"),
-                F.col("length").alias("file_size"),
-                F.col("modificationTime").alias("mtime"),
-            )
-            .filter(F.col("table").isin(profiled))
-        )
-
-    return memo(t, "_file_listing", build)
+        .filter(F.col("table").isin(profiled))
+    )
 
 
+@index("file_listing")
 def _file_stats(t: dict[str, DataFrame]) -> DataFrame:
     """Per-table file-index aggregate (10 rows: file count, total bytes,
     newest mtime, first path), memoized + materialized once per context.
@@ -334,7 +329,7 @@ def _file_stats(t: dict[str, DataFrame]) -> DataFrame:
     (tests/test_plans.py::test_storage_metadata_reads_file_index_not_data
     asserts on it directly).
     """
-    return memo(t, "_file_stats", lambda: (
+    return (
         _file_listing(t)
         .groupBy("table")
         .agg(
@@ -344,7 +339,7 @@ def _file_stats(t: dict[str, DataFrame]) -> DataFrame:
             F.min("path").alias("min_path"),
         )
         .localCheckpoint()
-    ))
+    )
 
 
 _PROFILED_TABLES_SQL = ", ".join(
@@ -599,6 +594,7 @@ def _hist_vals_logical(t: dict[str, DataFrame]) -> DataFrame:
     )
 
 
+@index("hist_value_agg")
 def _hist_vals(t: dict[str, DataFrame]) -> DataFrame:
     """Memoized materialization of :func:`_hist_vals_logical` — the
     ANALYZE value-aggregate intermediate. At 100 TB this is a build-once
@@ -606,7 +602,7 @@ def _hist_vals(t: dict[str, DataFrame]) -> DataFrame:
     ``doc_tokens`` or the shingle index), so it lives in the declared
     setup phase and steady-state :func:`column_histograms` calls measure
     derivation from the aggregate, not the table scan."""
-    return memo(t, "_hist_vals", lambda: _hist_vals_logical(t).localCheckpoint())
+    return _hist_vals_logical(t).localCheckpoint()
 
 
 def column_histograms(t: dict[str, DataFrame]) -> DataFrame:
@@ -796,8 +792,11 @@ def schema_drift(t: dict[str, DataFrame]) -> DataFrame:
     real observer runs — per column: ``match`` / ``type_drift`` /
     ``missing_in_catalog`` (storage has a column the catalog doesn't) /
     ``missing_in_storage`` (catalog declares a column storage lost).
-    TESTDATA.md documents a REAL historical drift this would have caught
-    (events.ts re-materialized from ns-as-BIGINT to TIMESTAMP).
+    Types compare by storage class, the same on both engines: every
+    timestamp unit (and ``timestamp_ntz``) is the one class "timestamp",
+    so a re-materialization that only changes the unit (TIMESTAMP(NANOS)
+    to TIMESTAMP(MICROS)) reports ``match``, while a change of class
+    (a timestamp stored as int64) reports ``type_drift``.
 
     Both sides are catalog-sized METADATA (bounded by table count x
     column count, never data size): the actual side is 10 pyarrow

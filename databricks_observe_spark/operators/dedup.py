@@ -58,7 +58,7 @@ from databricks_observe_spark.functions.vectors import (
     norm_sql_unrolled,
     tiled_cosine_pairs,
 )
-from databricks_observe_spark.memo import memo
+from databricks_observe_spark.memo import index
 from databricks_observe_spark.sources.tables import fan_out
 
 N_MINHASH = 16
@@ -91,6 +91,7 @@ FROM documents GROUP BY md5(text)
 """
 
 
+@index("shingle_index")
 def _shingled(t: dict[str, DataFrame]) -> DataFrame:
     """Exploded (doc_id, shingle) frame, memoized + materialized once.
 
@@ -102,40 +103,42 @@ def _shingled(t: dict[str, DataFrame]) -> DataFrame:
     # one codegen regex pass straight off the raw text (2.4x the
     # interpreted transform+slice lambda, bit-identical; see
     # textfns.shingle_regex_expr)
-    return memo(t, "_doc_shingles", lambda: (
+    return (
         fan_out(t["documents"])
         .select("doc_id", F.explode(shingle_regex_expr(3)).alias("shingle"))
         .localCheckpoint()
-    ))
+    )
 
 
 _SHINGLED_SQL = shingled_sql(3)
 
 
+@index("shingle_df")
 def _shingle_df(t: dict[str, DataFrame]) -> DataFrame:
     """Shingle document-frequency table ``(shingle, df)``, memoized +
     materialized once per context — the corpus statistic every text
     pipeline writes beside its shingle index (stop-shingle capping,
     posting-list pruning, IDF all read it). df counts OCCURRENCES (same
     as the inverted-index self-join multiplicity)."""
-    return memo(t, "_shingle_df", lambda: (
+    return (
         _shingled(t)
         .groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("df"))
         .localCheckpoint()
-    ))
+    )
 
 
+@index("shingle_sizes")
 def _shingle_sizes(t: dict[str, DataFrame]) -> DataFrame:
     """Per-document shingle counts ``(doc_id, n_shingles)``, memoized +
     materialized once per context — the size side of every Jaccard
     denominator."""
-    return memo(t, "_shingle_sizes", lambda: (
+    return (
         _shingled(t)
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_shingles"))
         .localCheckpoint()
-    ))
+    )
 
 
 def _jaccard_pairs_from(t: dict[str, DataFrame], kept: DataFrame) -> DataFrame:
@@ -180,6 +183,7 @@ JOIN sizes sb ON doc_b = sb.doc_id
 WHERE n_common * 1.0 / (sa.n + sb.n - n_common) >= {JACCARD_THRESHOLD}"""
 
 
+@index("jaccard_pairs")
 def ngram_jaccard_pairs(t: dict[str, DataFrame]) -> DataFrame:
     """Exact shingle-Jaccard near-duplicate pairs (>= 0.5).
 
@@ -194,9 +198,9 @@ def ngram_jaccard_pairs(t: dict[str, DataFrame]) -> DataFrame:
     # changing a single output row. This is the result-preserving half of
     # the stop-shingle trick; a df *upper* cap would further bound skew at
     # scale but changes results, so it stays off here.
-    return memo(t, "_jaccard_pairs", lambda: _jaccard_pairs_from(
+    return _jaccard_pairs_from(
         t, _shingle_df(t).filter(F.col("df") >= 2)
-    ).localCheckpoint())
+    ).localCheckpoint()
 
 
 NGRAM_JACCARD_PAIRS_SQL = f"""
@@ -327,21 +331,26 @@ def ngram_jaccard_pairs_capped(
     per element, losing to the whole-stage-codegen hash self-join even
     though it saves a shuffle. The join form stays.
 
-    Memoized + materialized exactly like the exact twin's
-    ``_jaccard_pairs`` (default cap only — a caller-supplied cap returns
-    an unmemoized plan): at 100 TB this IS the candidate-pair table the
-    curation pipeline writes per corpus snapshot (the exact form is the
-    oracle anchor; this is the production artifact).
+    The default cap reads the declared index :func:`_jaccard_pairs_capped`;
+    a caller-supplied cap returns an unmemoized plan.
     """
-    def pairs():
-        kept = _shingle_df(t).filter(
-            (F.col("df") >= 2) & (F.col("df") <= max_df)
-        )
-        return _jaccard_pairs_from(t, kept)
-
     if max_df != MAX_SHINGLE_DF:
-        return pairs()
-    return memo(t, "_jaccard_pairs_capped", lambda: pairs().localCheckpoint())
+        return _capped_pairs(t, max_df)
+    return _jaccard_pairs_capped(t)
+
+
+def _capped_pairs(t: dict[str, DataFrame], max_df: int) -> DataFrame:
+    kept = _shingle_df(t).filter((F.col("df") >= 2) & (F.col("df") <= max_df))
+    return _jaccard_pairs_from(t, kept)
+
+
+@index("jaccard_pairs_capped")
+def _jaccard_pairs_capped(t: dict[str, DataFrame]) -> DataFrame:
+    """The default-cap pairs, materialized exactly like the exact twin's:
+    at 100 TB this IS the candidate-pair table the curation pipeline
+    writes per corpus snapshot (the exact form is the oracle anchor; this
+    is the production artifact)."""
+    return _capped_pairs(t, MAX_SHINGLE_DF).localCheckpoint()
 
 
 NGRAM_JACCARD_PAIRS_CAPPED_SQL = f"""
@@ -361,6 +370,7 @@ inter AS (
 """
 
 
+@index("minhash_signatures")
 def minhash_signatures(t: dict[str, DataFrame]) -> DataFrame:
     """16-component MinHash signature per document, one aggregation pass.
 
@@ -371,12 +381,12 @@ def minhash_signatures(t: dict[str, DataFrame]) -> DataFrame:
     this is the "write the signature table once, then join against it"
     pattern.
     """
-    return memo(t, "_minhash_sig", lambda: (
+    return (
         _shingled(t)
         .groupBy("doc_id")
         .agg(*[minhash_expr(i) for i in range(N_MINHASH)])
         .localCheckpoint()
-    ))
+    )
 
 
 def minhash_lsh_pairs(t: dict[str, DataFrame]) -> DataFrame:
@@ -450,17 +460,11 @@ MINHASH_LSH_PAIRS_SQL = (
 )
 
 
+@index("simhash_fingerprints")
 def simhash_fingerprints(t: dict[str, DataFrame]) -> DataFrame:
-    """16-bit SimHash per document — the registered query returns the
-    memoized fingerprint index (``_simhash_fps``): the setup phase
-    declares "simhash_fingerprints" as a written table and every simhash
-    consumer reads the memo, so the vote pass runs once per context
-    (same stance as ngram_jaccard_pairs returning its pair memo)."""
-    return _simhash_fps(t)
-
-
-def _simhash_compute(t: dict[str, DataFrame]) -> DataFrame:
-    """16-bit SimHash per document over the token multiset.
+    """16-bit SimHash per document over the token multiset, materialized:
+    the registered query is the declared fingerprint index, so every
+    simhash consumer reads one vote pass per context.
 
     Bit b of md5's first 4 hex chars votes +1/-1 weighted by token
     occurrences; fingerprint packs the sign bits. Integer arithmetic only.
@@ -481,7 +485,7 @@ def _simhash_compute(t: dict[str, DataFrame]) -> DataFrame:
         F.when(F.col(f"v{b}") > 0, F.lit(2 ** (15 - b))).otherwise(F.lit(0))
         for b in range(16)
     )
-    return votes.select("doc_id", fp.cast("bigint").alias("simhash"))
+    return votes.select("doc_id", fp.cast("bigint").alias("simhash")).localCheckpoint()
 
 
 SIMHASH_FINGERPRINTS_SQL = (
@@ -535,13 +539,10 @@ def connected_components(edges: DataFrame) -> DataFrame:
     return fixpoint(seed, propagate, [F.sum("cluster_id")])[0]
 
 
+@index("near_dup_cluster_labels")
 def _cluster_labels(t: dict[str, DataFrame]) -> DataFrame:
-    """doc_id -> cluster_id over the near-dup pair graph; memoized."""
-    return memo(
-        t,
-        "_ndc_labels",
-        lambda: connected_components(ngram_jaccard_pairs(t).select("doc_a", "doc_b")),
-    )
+    """doc_id -> cluster_id over the near-dup pair graph."""
+    return connected_components(ngram_jaccard_pairs(t).select("doc_a", "doc_b"))
 
 
 def near_dup_dropped(t: dict[str, DataFrame]) -> DataFrame:
@@ -813,11 +814,6 @@ SIMHASH_HAM_MAX = 2
 _SIMHASH_BANDS = [(1024, 64), (32, 32), (1, 32)]  # (divisor, modulus)
 
 
-def _simhash_fps(t: dict[str, DataFrame]) -> DataFrame:
-    """Memoized + materialized simhash fingerprint table."""
-    return memo(t, "_simhash_fps", lambda: _simhash_compute(t).localCheckpoint())
-
-
 def simhash_near_dup_pairs(t: dict[str, DataFrame]) -> DataFrame:
     """Near-duplicate pairs by SimHash hamming distance <= 2.
 
@@ -834,7 +830,7 @@ def simhash_near_dup_pairs(t: dict[str, DataFrame]) -> DataFrame:
     # distinct, no join back to the fingerprint table. The distinct runs
     # last, on verified pairs only (a pair can agree on several bands).
     members = band_members(
-        _simhash_fps(t),
+        simhash_fingerprints(t),
         "doc_id",
         [
             (i, (F.col("simhash") / F.lit(div)).cast("bigint") % F.lit(mod))
@@ -1007,6 +1003,7 @@ CONTAM_K = 4  # n-gram width for eval-overlap checking
 EVAL_MOD = 13  # doc_id % EVAL_MOD == 0 -> held-out eval set
 
 
+@index("contam_gram_index")
 def _contam_grams(t: dict[str, DataFrame]) -> DataFrame:
     """Memoized ``(doc_id, s)`` word-``CONTAM_K``-gram expansion of the
     corpus — the decontamination gram index. Build-once by contract (at
@@ -1014,26 +1011,27 @@ def _contam_grams(t: dict[str, DataFrame]) -> DataFrame:
     and tf indexes), so it lives in the declared setup phase; the one
     regex-explode pass is the only corpus-sized work in the
     contamination path."""
-    return memo(t, "_contam_grams", lambda: (
+    return (
         fan_out(t["documents"])
         .select("doc_id", F.explode(shingle_regex_expr(CONTAM_K)).alias("s"))
         .localCheckpoint()
-    ))
+    )
 
 
+@index("contam_eval_set")
 def _contam_eval_set(t: dict[str, DataFrame]) -> DataFrame:
     """Memoized DISTINCT eval-side gram set (the benchmark n-grams a real
     decontamination pass holds fixed across corpus versions) — built from
     :func:`_contam_grams` in the same setup phase, so the steady-state
     contamination query is exactly one flag-join-and-aggregate job."""
-    return memo(t, "_contam_eval_set", lambda: (
+    return (
         _contam_grams(t)
         .filter(F.col("doc_id") % EVAL_MOD == 0)
         .select("s")
         .dropDuplicates(["s"])
         .withColumn("hit", F.lit(1))
         .localCheckpoint()
-    ))
+    )
 
 
 def train_split(d: DataFrame) -> DataFrame:
@@ -1138,37 +1136,36 @@ def _bloom_bit(scol: F.Column, tag: str) -> F.Column:
     )
 
 
+@index("bloom_eval_words")
 def _bloom_filter_words(t: dict[str, DataFrame]) -> list[int]:
-    """Memoized eval-set Bloom bitmap: ``_BLOOM_WORDS`` int64 words built
+    """The eval-set Bloom bitmap: ``_BLOOM_WORDS`` int64 words built
     from :func:`_contam_eval_set` with ONE distinct-bits pass and a
     ``bit_or`` aggregate — ≤16384 (word, bits) rows ever reach the driver,
     a constant bounded by the filter geometry, never by the eval-set or
     corpus size (the house bounded-collect policy)."""
-    def build() -> list[int]:
-        ev = _contam_eval_set(t)
-        bits = ev.select(
-            F.explode(
-                F.array(*[_bloom_bit(F.col("s"), tag) for tag in _BLOOM_TAGS])
-            ).alias("bit")
-        ).distinct()
-        pow2 = F.lit(_POW2)
-        rows = (
-            bits.select(
-                F.floor(F.col("bit") / 64).cast("int").alias("w"),
-                F.get(pow2, (F.col("bit") % 64).cast("int")).alias("m"),
-            )
-            .groupBy("w")
-            .agg(F.bit_or("m").alias("word"))
-            .collect()
+    ev = _contam_eval_set(t)
+    bits = ev.select(
+        F.explode(
+            F.array(*[_bloom_bit(F.col("s"), tag) for tag in _BLOOM_TAGS])
+        ).alias("bit")
+    ).distinct()
+    pow2 = F.lit(_POW2)
+    rows = (
+        bits.select(
+            F.floor(F.col("bit") / 64).cast("int").alias("w"),
+            F.get(pow2, (F.col("bit") % 64).cast("int")).alias("m"),
         )
-        words = [0] * _BLOOM_WORDS
-        for r in rows:
-            words[r["w"]] = r["word"]
-        return words
+        .groupBy("w")
+        .agg(F.bit_or("m").alias("word"))
+        .collect()
+    )
+    words = [0] * _BLOOM_WORDS
+    for r in rows:
+        words[r["w"]] = r["word"]
+    return words
 
-    return memo(t, "_bloom_words", build)
 
-
+@index("bloom_eval_bitmap")
 def _bloom_filter_df(t: dict[str, DataFrame]) -> DataFrame:
     """The built filter as a ONE-ROW relation ``(bm array<bigint>,
     p2 array<bigint>)`` — Spark's idiomatic scalar channel for shipping a
@@ -1178,14 +1175,11 @@ def _bloom_filter_df(t: dict[str, DataFrame]) -> DataFrame:
     child expressions, and with six references in the probe tree the
     optimizer crawls ~100k expression nodes per pass — measured 6.8x
     slower end-to-end than this broadcast form on the sf0.1 probe."""
-    def build() -> DataFrame:
-        spark = t["documents"].sparkSession
-        return spark.createDataFrame(
-            [(_bloom_filter_words(t), _POW2)],
-            "bm array<bigint>, p2 array<bigint>",
-        ).localCheckpoint()
-
-    return memo(t, "_bloom_filter_df", build)
+    spark = t["documents"].sparkSession
+    return spark.createDataFrame(
+        [(_bloom_filter_words(t), _POW2)],
+        "bm array<bigint>, p2 array<bigint>",
+    ).localCheckpoint()
 
 
 def bloom_contamination_check(t: dict[str, DataFrame]) -> DataFrame:

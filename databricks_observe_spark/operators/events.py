@@ -24,7 +24,7 @@ from databricks_observe_spark.functions.rounding import (
     sql_nano_grid,
     sql_round_half_up,
 )
-from databricks_observe_spark.memo import memo
+from databricks_observe_spark.memo import index
 from databricks_observe_spark.sources.tables import TS_FMT, TS_FMT_DUCK
 
 
@@ -510,6 +510,27 @@ def _arrival(col):
     return col + F.lit(40) * (col % 5)
 
 
+def _arrivals(t: dict[str, DataFrame]) -> DataFrame:
+    """Events with their synthetic arrival order (:func:`_arrival`)."""
+    return t["events"].select(
+        "event_id",
+        "event_type",
+        "ts",
+        _arrival(F.col("event_id")).alias("arrival"),
+    )
+
+
+@index("events_max_arrival")
+def _max_arrival(t: dict[str, DataFrame]) -> int:
+    """The largest arrival id, which sizes lateness_report's blocks: a
+    1-row scalar and a pure function of the events fixture — the same
+    ship-the-parameter stance as the ANN query set, one column-pruned
+    scan per context instead of per call. An empty stream gives 0: its
+    report is empty, and any blocking works."""
+    val = _arrivals(t).agg(F.max("arrival")).collect()[0][0]
+    return 0 if val is None else val
+
+
 def lateness_report(t: dict[str, DataFrame]) -> DataFrame:
     """Event-time lateness histogram — the measurement that SIZES a
     watermark: for each event, how far its event time lags the maximum
@@ -528,24 +549,8 @@ def lateness_report(t: dict[str, DataFrame]) -> DataFrame:
     anywhere — the only collect is the 1-row max-arrival scalar. DuckDB
     replays it as one global window — same semantics, independent plan.
     """
-    base = t["events"].select(
-        "event_id",
-        "event_type",
-        "ts",
-        _arrival(F.col("event_id")).alias("arrival"),
-    )
-    # 1-row scalar, memoized per context: the blocking factor is a pure
-    # function of the events fixture — the same ship-the-parameter stance
-    # as the ANN query set, one column-pruned scan per context instead of
-    # per call. The ctx lifetime contract in ``memo`` applies: a data
-    # refresh needs a NEW context.
-    def fold() -> int:
-        val = base.agg(F.max("arrival")).collect()[0][0]
-        # empty stream: report is empty, any blocking works
-        return 0 if val is None else val
-
-    max_arrival = memo(t, "_max_arrival", fold)
-    ev = base.withColumn(
+    max_arrival = _max_arrival(t)
+    ev = _arrivals(t).withColumn(
         # exact integer arithmetic (no double rounding at scale); DIV is
         # Spark's integral division
         "blk",

@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from databricks_observe_spark.functions.fixpoint import fixpoint
-from databricks_observe_spark.memo import memo
+from databricks_observe_spark.memo import index
 from databricks_observe_spark.operators.catalog_ops import tables_enriched
 from databricks_observe_spark.sources.catalog_model import SKIP_ASSETS, oracle_with_clause
 
@@ -73,11 +73,12 @@ def transitive_closure(edges: DataFrame) -> tuple[DataFrame, int]:
     return fixpoint(base_edges(edges), double)
 
 
+@index("lineage_closure")
 def lineage_closure(t: dict[str, DataFrame]) -> DataFrame:
-    # memoized: asset_specs and topo_levels (and any future consumer in the
-    # same observation tick) share one fixpoint run — the closure loop is
-    # the most expensive driver-orchestrated piece of the cycle
-    return memo(t, "_lineage_closure", lambda: transitive_closure(t["lineage_edges"])[0])
+    # a declared index: asset_specs and topo_levels (and any future consumer
+    # in the same observation tick) share one fixpoint run — the closure
+    # loop is the most expensive driver-orchestrated piece of the cycle
+    return transitive_closure(t["lineage_edges"])[0]
 
 
 # DuckDB recursive CTE oracle; UNION (not UNION ALL) dedups against the
@@ -106,12 +107,10 @@ def lineage_closure_deep(t: dict[str, DataFrame]) -> DataFrame:
     """G1 at depth: the full closure of the ~100-deep synthetic lineage
     graph (sources/catalog_model.py:LINEAGE_EDGES_DEEP) — the stress query
     that PROVES the doubling cadence scales logarithmically with depth
-    instead of assuming it. The round count is logged and kept on the
-    context (``_deep_closure_rounds``) for the cadence test."""
+    instead of assuming it. The round count is logged."""
     import logging
 
     closure, rounds = transitive_closure(t["lineage_edges_deep"])
-    t["_deep_closure_rounds"] = rounds
     logging.getLogger(__name__).info(
         "lineage_closure_deep converged in %d doubling rounds", rounds
     )

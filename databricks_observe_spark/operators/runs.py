@@ -25,7 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from databricks_observe_spark.memo import memo
+from databricks_observe_spark.memo import index
 from databricks_observe_spark.sources.catalog_model import oracle_with_clause
 from databricks_observe_spark.sources.tables import TS_FMT, TS_FMT_DUCK
 
@@ -233,6 +233,28 @@ GROUP BY s.event_id, s.user_id, s.ts
 """
 
 
+def _cursor_updates(t: dict[str, DataFrame]) -> DataFrame:
+    """``(k, state, us)``: the updates stream keyed as the sensor cursor
+    keys it (``"pid:uid"``), event time in epoch micros."""
+    return t["updates"].select(
+        F.concat_ws(":", "entity_id", "update_id").alias("k"),
+        "state",
+        F.unix_micros("ts").alias("us"),
+    )
+
+
+@index("updates_mid_us")
+def _updates_mid_us(t: dict[str, DataFrame]) -> int:
+    """The cursor-cut instant: the midpoint of the updates' event times.
+    A 1-row scalar and a pure function of the updates fixture — the same
+    ship-the-parameter stance as lateness_report's max-arrival scalar;
+    folding it to a literal also removes the broadcast cross join from
+    the plan."""
+    return _cursor_updates(t).agg(
+        ((F.min("us") + F.max("us")) / F.lit(2)).cast("bigint").alias("mid")
+    ).collect()[0][0]
+
+
 def sensor_cursor_roundtrip(t: dict[str, DataFrame]) -> DataFrame:
     """F7: the sensor cursor as data — JSON map serialize/parse round-trip.
 
@@ -255,19 +277,8 @@ def sensor_cursor_roundtrip(t: dict[str, DataFrame]) -> DataFrame:
     the one-row collect_list mirrors the sensor's single cursor document.
     The two groupBys shuffle 16-byte keys, never the event payload.
     """
-    u = t["updates"].select(
-        F.concat_ws(":", "entity_id", "update_id").alias("k"),
-        "state",
-        F.unix_micros("ts").alias("us"),
-    )
-    # 1-row cursor-cut scalar, memoized per context: a pure function of
-    # the updates fixture — same ship-the-parameter stance as
-    # lateness_report's max-arrival scalar; folding it to a literal also
-    # removes the broadcast cross join from the plan. The ctx lifetime
-    # contract in ``memo`` applies: a data refresh needs a NEW context.
-    mid = memo(t, "_updates_mid_us", lambda: u.agg(
-        ((F.min("us") + F.max("us")) / F.lit(2)).cast("bigint").alias("mid")
-    ).collect()[0][0])
+    u = _cursor_updates(t)
+    mid = _updates_mid_us(t)
     pre = (
         u.filter(F.col("us") <= F.lit(mid))
         .groupBy("k")

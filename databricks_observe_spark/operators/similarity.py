@@ -58,7 +58,7 @@ from databricks_observe_spark.functions.vectors import (
     sq_dist_sql_unrolled,
     tiled_cosine_pairs,
 )
-from databricks_observe_spark.memo import memo
+from databricks_observe_spark.memo import index
 from databricks_observe_spark.sources.tables import fan_out
 
 N_QUERIES = 10  # vec_id < 10 are the query vectors
@@ -100,6 +100,7 @@ def _compact_ckpt(df: DataFrame) -> DataFrame:
     return ckpt.coalesce(sized) if sized < parts else ckpt
 
 
+@index("vector_norms")
 def _doubled(t: dict[str, DataFrame]) -> DataFrame:
     """Raw double vector ``v`` + precomputed scalar L2 norm ``nrm``.
 
@@ -111,27 +112,24 @@ def _doubled(t: dict[str, DataFrame]) -> DataFrame:
     costs ~20 s before falling back to interpretation. Materialized
     (localCheckpoint) and memoized per context: every similarity/dedup
     operator shares one build (at scale: one written table)."""
-    def build() -> DataFrame:
-        from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
-        @pandas_udf("double")
-        def _norm_udf(v: pd.Series) -> pd.Series:
-            import numpy as _np
+    @pandas_udf("double")
+    def _norm_udf(v: pd.Series) -> pd.Series:
+        import numpy as _np
 
-            mat = _np.array(v.tolist(), dtype=_np.float64)
-            return pd.Series(_np.sqrt(dot_rows(mat, mat)))
+        mat = _np.array(v.tolist(), dtype=_np.float64)
+        return pd.Series(_np.sqrt(dot_rows(mat, mat)))
 
-        return _compact_ckpt(
-            fan_out(t["embeddings"])
-            .select(
-                "vec_id",
-                F.col("embedding").cast("array<double>").alias("v"),
-                "label",
-            )
-            .select("vec_id", "v", _norm_udf("v").alias("nrm"), "label")
+    return _compact_ckpt(
+        fan_out(t["embeddings"])
+        .select(
+            "vec_id",
+            F.col("embedding").cast("array<double>").alias("v"),
+            "label",
         )
-
-    return memo(t, "_emb_norms", build)
+        .select("vec_id", "v", _norm_udf("v").alias("nrm"), "label")
+    )
 
 
 # shared oracle CTE: raw vectors + norms
@@ -141,27 +139,25 @@ _E_SQL = (
 )
 
 
+@index("ann_query_set")
 def _query_set_bc(t: dict[str, DataFrame]):
     """Broadcast (ids, matrix, norms) of the N_QUERIES query vectors.
 
     The query SET is a constant-sized parameter (10 rows) — collecting and
     broadcasting it is the legitimate "ship the query to the data" move at
     any scale, unlike collecting the corpus side. Memoized per context."""
-    def build():
-        import numpy as np
+    import numpy as np
 
-        e = _doubled(t)
-        rows = (
-            e.filter(F.col("vec_id") < N_QUERIES)
-            .select("vec_id", "v", "nrm")
-            .collect()
-        )
-        q_ids = np.array([r.vec_id for r in rows], dtype=np.int64)
-        q_mat = np.array([r.v for r in rows], dtype=np.float64).reshape(-1, DIM)
-        q_nrm = np.array([r.nrm for r in rows], dtype=np.float64)
-        return e.sparkSession.sparkContext.broadcast((q_ids, q_mat, q_nrm))
-
-    return memo(t, "_ann_queries_bc", build)
+    e = _doubled(t)
+    rows = (
+        e.filter(F.col("vec_id") < N_QUERIES)
+        .select("vec_id", "v", "nrm")
+        .collect()
+    )
+    q_ids = np.array([r.vec_id for r in rows], dtype=np.int64)
+    q_mat = np.array([r.v for r in rows], dtype=np.float64).reshape(-1, DIM)
+    q_nrm = np.array([r.nrm for r in rows], dtype=np.float64)
+    return e.sparkSession.sparkContext.broadcast((q_ids, q_mat, q_nrm))
 
 
 def ann_bruteforce_topk(t: dict[str, DataFrame]) -> DataFrame:
@@ -249,6 +245,7 @@ def _bucket_sql(vec_col: str, planes=None) -> str:
     return " || ".join(parts)
 
 
+@index("lsh_buckets")
 def _bucketed(t: dict[str, DataFrame]) -> DataFrame:
     """_doubled + materialized bucket ids for every hash table.
 
@@ -259,39 +256,36 @@ def _bucketed(t: dict[str, DataFrame]) -> DataFrame:
     alternative (8 unrolled 64-term dot expressions) costs seconds of
     janino compilation for methods HotSpot never JITs. Materialized once
     (at scale: partition columns of the written index table)."""
-    def build() -> DataFrame:
-        import numpy as np
-        from pyspark.sql.functions import pandas_udf
+    import numpy as np
+    from pyspark.sql.functions import pandas_udf
 
-        planes_np = [np.array(planes, dtype=np.float64) for planes in TABLES_PLANES]
+    planes_np = [np.array(planes, dtype=np.float64) for planes in TABLES_PLANES]
 
-        @pandas_udf("b0 string, b1 string")
-        def _buckets_udf(v: pd.Series) -> pd.DataFrame:
-            import numpy as _np
+    @pandas_udf("b0 string, b1 string")
+    def _buckets_udf(v: pd.Series) -> pd.DataFrame:
+        import numpy as _np
 
-            mat = _np.array(v.tolist(), dtype=_np.float64)
-            out = {}
-            for ti, planes in enumerate(planes_np):
-                bits = None
-                for plane in planes:
-                    b = _np.where(dot_rows(mat, plane[None, :]) >= 0, "1", "0")
-                    bits = b if bits is None else _np.char.add(bits, b)
-                out[f"b{ti}"] = bits
-            return pd.DataFrame(out)
+        mat = _np.array(v.tolist(), dtype=_np.float64)
+        out = {}
+        for ti, planes in enumerate(planes_np):
+            bits = None
+            for plane in planes:
+                b = _np.where(dot_rows(mat, plane[None, :]) >= 0, "1", "0")
+                bits = b if bits is None else _np.char.add(bits, b)
+            out[f"b{ti}"] = bits
+        return pd.DataFrame(out)
 
-        e = _doubled(t).withColumn("_b", _buckets_udf("v"))
-        return _compact_ckpt(
-            e.select(
-                "vec_id",
-                "v",
-                "nrm",
-                "label",
-                F.col("_b.b0").alias("bucket0"),
-                F.col("_b.b1").alias("bucket1"),
-            )
+    e = _doubled(t).withColumn("_b", _buckets_udf("v"))
+    return _compact_ckpt(
+        e.select(
+            "vec_id",
+            "v",
+            "nrm",
+            "label",
+            F.col("_b.b0").alias("bucket0"),
+            F.col("_b.b1").alias("bucket1"),
         )
-
-    return memo(t, "_emb_buckets", build)
+    )
 
 
 def _emb_members(t: dict[str, DataFrame]) -> DataFrame:
@@ -466,6 +460,7 @@ QUALIFY rank <= {TOP_K}
 NPROBE = 3  # inverted lists probed per query
 
 
+@index("ivf_codebook")
 def _centroids_bc(t: dict[str, DataFrame]):
     """Broadcast (ids, matrix, norms) of the coarse centroids.
 
@@ -477,26 +472,24 @@ def _centroids_bc(t: dict[str, DataFrame]):
     set is the small constant side: collecting and broadcasting it is the
     legitimate "ship the codebook to the data" move at any scale. Memoized
     per context."""
-    def build():
-        import numpy as np
+    import numpy as np
 
-        e = _doubled(t)
-        w = Window.partitionBy("label").orderBy("vec_id")
-        rows = (
-            e.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select("vec_id", "v", "nrm")
-            .collect()
-        )
-        rows.sort(key=lambda r: r.vec_id)
-        c_ids = np.array([r.vec_id for r in rows], dtype=np.int64)
-        c_mat = np.array([r.v for r in rows], dtype=np.float64).reshape(-1, DIM)
-        c_nrm = np.array([r.nrm for r in rows], dtype=np.float64)
-        return e.sparkSession.sparkContext.broadcast((c_ids, c_mat, c_nrm))
-
-    return memo(t, "_ivf_centroids_bc", build)
+    e = _doubled(t)
+    w = Window.partitionBy("label").orderBy("vec_id")
+    rows = (
+        e.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .select("vec_id", "v", "nrm")
+        .collect()
+    )
+    rows.sort(key=lambda r: r.vec_id)
+    c_ids = np.array([r.vec_id for r in rows], dtype=np.int64)
+    c_mat = np.array([r.v for r in rows], dtype=np.float64).reshape(-1, DIM)
+    c_nrm = np.array([r.nrm for r in rows], dtype=np.float64)
+    return e.sparkSession.sparkContext.broadcast((c_ids, c_mat, c_nrm))
 
 
+@index("ivf_assignment")
 def _ivf_assigned(t: dict[str, DataFrame]) -> DataFrame:
     """Corpus vectors + their IVF list id (nearest centroid by cosine,
     ties -> centroid id asc), materialized once per context.
@@ -506,37 +499,34 @@ def _ivf_assigned(t: dict[str, DataFrame]) -> DataFrame:
     nprobe partitions instead of the corpus. Cosines use fixed
     left-to-right accumulation — the oracle's exact IEEE op order — so
     assignments match bit-for-bit."""
-    def build() -> DataFrame:
-        bc = _centroids_bc(t)
+    bc = _centroids_bc(t)
 
-        def assign(batches):
-            import numpy as _np
-            import pandas as _pd
+    def assign(batches):
+        import numpy as _np
+        import pandas as _pd
 
-            c_ids, c_mat, c_nrm = bc.value
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                mat = _np.array(pdf["v"].tolist(), dtype=_np.float64)
-                nrm = pdf["nrm"].to_numpy()
-                cos = dot_outer(c_mat, mat) / _np.outer(c_nrm, nrm)
-                # argmax with tie -> lowest centroid id: centroids are in
-                # id order, and argmax returns the first maximal index
-                best = _np.argmax(cos, axis=0)
-                out = pdf[["vec_id", "v", "nrm", "label"]].copy()
-                out["list_id"] = c_ids[best]
-                yield out
+        c_ids, c_mat, c_nrm = bc.value
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            mat = _np.array(pdf["v"].tolist(), dtype=_np.float64)
+            nrm = pdf["nrm"].to_numpy()
+            cos = dot_outer(c_mat, mat) / _np.outer(c_nrm, nrm)
+            # argmax with tie -> lowest centroid id: centroids are in
+            # id order, and argmax returns the first maximal index
+            best = _np.argmax(cos, axis=0)
+            out = pdf[["vec_id", "v", "nrm", "label"]].copy()
+            out["list_id"] = c_ids[best]
+            yield out
 
-        return _compact_ckpt(
-            arrow_map(
-                _doubled(t).select("vec_id", "v", "nrm", "label"),
-                assign,
-                "vec_id bigint, v array<double>, nrm double, label int,"
-                " list_id bigint",
-            )
+    return _compact_ckpt(
+        arrow_map(
+            _doubled(t).select("vec_id", "v", "nrm", "label"),
+            assign,
+            "vec_id bigint, v array<double>, nrm double, label int,"
+            " list_id bigint",
         )
-
-    return memo(t, "_ivf_assign", build)
+    )
 
 
 def ivf_ann_topk(t: dict[str, DataFrame]) -> DataFrame:
@@ -704,13 +694,14 @@ def _init_centroid_rows(frame: DataFrame, col: str, dtype="float64"):
     return np.array([r[col] for r in rows], dtype=np.dtype(dtype))
 
 
+@index("kmeans_init_codebook")
 def _init_centroids(t: dict[str, DataFrame]):
     """Deterministic double-precision init codebook
     (:func:`_init_centroid_rows` over the doubled corpus). Memoized per
     context: the selection is a pure function of the checkpointed corpus,
     and kmeans_assign / semantic_dedup / the Lloyd loop each need it — one
     ORDER BY/LIMIT collect job instead of one per caller."""
-    return memo(t, "_kmeans_init_d", lambda: _init_centroid_rows(_doubled(t), "v"))
+    return _init_centroid_rows(_doubled(t), "v")
 
 
 def kmeans_assign(t: dict[str, DataFrame]) -> DataFrame:
@@ -759,13 +750,14 @@ KMEANS_GRID = 1_000_000.0
 INERTIA_GRID = 1_000_000_000.0
 
 
+@index("kmeans_fixed_point_grid")
 def _quantized(t: dict[str, DataFrame]) -> DataFrame:
     """(vec_id, vqi array<bigint>, vq array<double>, label): embeddings on
     the 1e-6 fixed-point grid, memoized per context.
 
     ``vqi`` (micro-units, exact integers) feeds the M-step sums; ``vq``
     (= vqi/1e6, identical doubles in both engines) feeds distances."""
-    return memo(t, "_kmeans_q", lambda: _compact_ckpt(
+    return _compact_ckpt(
         _doubled(t)
         .select("vec_id", "v", "label")
         .withColumn(
@@ -774,7 +766,7 @@ def _quantized(t: dict[str, DataFrame]) -> DataFrame:
         )
         .withColumn("vq", F.transform("vqi", lambda i: i / F.lit(KMEANS_GRID)))
         .select("vec_id", "vqi", "vq", "label")
-    ))
+    )
 
 
 def kmeans_clusters(t: dict[str, DataFrame]) -> DataFrame:
@@ -905,14 +897,15 @@ def kmeans_clusters(t: dict[str, DataFrame]) -> DataFrame:
     )
 
 
+@index("kmeans_init_codebook_grid")
 def _init_centroids_q(t: dict[str, DataFrame]):
     """K lowest vec_ids' QUANTIZED vectors (int micro-units) as the
     deterministic init — :func:`_init_centroid_rows` (the one selection
     rule) on the fixed-point grid both engines reproduce exactly.
     Memoized per context (same rationale as :func:`_init_centroids`)."""
-    return memo(t, "_kmeans_init_q", lambda: _init_centroid_rows(
+    return _init_centroid_rows(
         _quantized(t), "vqi", dtype="int64"
-    ))
+    )
 
 
 def _kmeans_clusters_sql() -> str:
@@ -1024,24 +1017,22 @@ SEMDEDUP_COS = 0.4
 SEMDEDUP_BLOCK_CAP = 4096
 
 
+@index("semdedup_assignment")
 def _semdedup_assigned(t: dict[str, DataFrame]) -> DataFrame:
     """The k-means cluster-assignment table feeding SemDeDup, memoized +
     materialized once per context — it feeds the per-cluster count and
     both cogroup sides, and at scale it is a WRITTEN assignment table maintained
     alongside the embedding corpus (same build-once character as the IVF
     assignment `_ivf_assigned`); bench setup accounts it there."""
-    def build() -> DataFrame:
-        e = _doubled(t)
-        bc = e.sparkSession.sparkContext.broadcast(_init_centroids(t))
-        return _compact_ckpt(
-            arrow_map(
-                e.select("vec_id", "v", "nrm", "label"),
-                _sq_dist_assign_with_payload(bc),
-                "vec_id bigint, v array<double>, nrm double, label int, cluster int",
-            )
+    e = _doubled(t)
+    bc = e.sparkSession.sparkContext.broadcast(_init_centroids(t))
+    return _compact_ckpt(
+        arrow_map(
+            e.select("vec_id", "v", "nrm", "label"),
+            _sq_dist_assign_with_payload(bc),
+            "vec_id bigint, v array<double>, nrm double, label int, cluster int",
         )
-
-    return memo(t, "_semdedup_assigned", build)
+    )
 
 
 def semantic_dedup(t: dict[str, DataFrame]) -> DataFrame:

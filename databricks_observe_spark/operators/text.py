@@ -37,7 +37,7 @@ from databricks_observe_spark.functions.fixpoint import (
     rebind,
 )
 from databricks_observe_spark.functions.textfns import doc_tokens
-from databricks_observe_spark.memo import memo
+from databricks_observe_spark.memo import index
 from databricks_observe_spark.sources.tables import fan_out
 
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "on")
@@ -198,6 +198,7 @@ FROM rollup CROSS JOIN uniq
 """
 
 
+@index("char_trigrams")
 def _char_trigrams(t: dict[str, DataFrame]) -> DataFrame:
     """Distinct (doc_id, lang, tg) character-trigram frame, memoized +
     materialized once per context — the index both langid branches read.
@@ -212,7 +213,7 @@ def _char_trigrams(t: dict[str, DataFrame]) -> DataFrame:
     as one truncated trigram). The per-doc ``array_distinct`` dedup is
     map-local — no shuffle.
     """
-    return memo(t, "_doc_trigrams", lambda: (
+    return (
         fan_out(t["documents"])
         .select(
             "doc_id",
@@ -226,9 +227,10 @@ def _char_trigrams(t: dict[str, DataFrame]) -> DataFrame:
             ).alias("tg"),
         )
         .localCheckpoint()
-    ))
+    )
 
 
+@index("langid_trained_profiles")
 def _langid_profiles(t: dict[str, DataFrame]) -> DataFrame:
     """The TRAINED language-ID model: top-{TOP_TRIGRAMS} trigrams per
     language by document frequency in the training half (ties -> trigram
@@ -236,18 +238,15 @@ def _langid_profiles(t: dict[str, DataFrame]) -> DataFrame:
     grid and IVF assignment — a language-ID profile is trained once and
     applied forever, so bench.py builds it in its declared setup phase
     and the query measures scoring, not training."""
-    def build() -> DataFrame:
-        train = _char_trigrams(t).filter(F.col("doc_id") % TRAIN_MOD == 0)
-        freq = train.groupBy("lang", "tg").agg(F.count(F.lit(1)).alias("df"))
-        w = Window.partitionBy("lang").orderBy(F.desc("df"), F.asc("tg"))
-        return (
-            freq.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= TOP_TRIGRAMS)
-            .select(F.col("lang").alias("profile_lang"), "tg")
-            .localCheckpoint()
-        )
-
-    return memo(t, "_langid_profiles", build)
+    train = _char_trigrams(t).filter(F.col("doc_id") % TRAIN_MOD == 0)
+    freq = train.groupBy("lang", "tg").agg(F.count(F.lit(1)).alias("df"))
+    w = Window.partitionBy("lang").orderBy(F.desc("df"), F.asc("tg"))
+    return (
+        freq.withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= TOP_TRIGRAMS)
+        .select(F.col("lang").alias("profile_lang"), "tg")
+        .localCheckpoint()
+    )
 
 
 def langid_trigram(t: dict[str, DataFrame]) -> DataFrame:
@@ -379,19 +378,20 @@ FROM df QUALIFY rnk <= 20
 """
 
 
+@index("tfidf_tf")
 def _tfidf_tf_frame(t: dict[str, DataFrame]) -> DataFrame:
     """(doc_id, tok, tf) — one tokenize pass feeds both tf and df;
     memoized in the ctx like the other checkpointed indexes so repeated
     calls (plan dumps, tests, bench) don't re-run the corpus aggregate.
     At scale this is a written table; bench.py builds it in its setup
     phase so per-query timings measure steady-state execution."""
-    return memo(t, "_tfidf_tf", lambda: (
+    return (
         doc_tokens(t)
         .select("doc_id", F.explode("w").alias("tok"))
         .groupBy("doc_id", "tok")
         .agg(F.count(F.lit(1)).alias("tf"))
         .localCheckpoint()
-    ))
+    )
 
 
 def tfidf_keywords(t: dict[str, DataFrame]) -> DataFrame:
@@ -522,6 +522,7 @@ FROM scored GROUP BY doc_id
 """
 
 
+@index("unigram_lp_table")
 def _unigram_lp(t: dict[str, DataFrame]) -> DataFrame:
     """Memoized (doc_id, avg_lp_micro) quality-score frame — the written
     per-doc score table a CCNet-style pipeline materializes once per
@@ -531,9 +532,7 @@ def _unigram_lp(t: dict[str, DataFrame]) -> DataFrame:
     artifacts. The materializer query (:func:`unigram_logprob`) still
     computes the full pipeline — this memo is the READ side.
     """
-    return memo(t, "_unigram_lp", lambda: (
-        unigram_logprob(t).select("doc_id", "avg_lp_micro").localCheckpoint()
-    ))
+    return unigram_logprob(t).select("doc_id", "avg_lp_micro").localCheckpoint()
 
 
 def perplexity_buckets(t: dict[str, DataFrame]) -> DataFrame:
@@ -1604,6 +1603,7 @@ WHERE wk.pos > length(wk.word)
 """
 
 
+@index("bpe_encoded_vocab")
 def _bpe_encodings(t: dict[str, DataFrame]) -> DataFrame:
     """Memoized (word, n_units) encoded-vocabulary frame — the written
     artifact a tokenizer pipeline materializes once per (corpus, merge
@@ -1613,9 +1613,7 @@ def _bpe_encodings(t: dict[str, DataFrame]) -> DataFrame:
     materializer query (:func:`bpe_apply_merges`) still computes the
     full walk — this memo is the READ side.
     """
-    return memo(t, "_bpe_encodings", lambda: (
-        bpe_apply_merges(t).select("word", "n_units").localCheckpoint()
-    ))
+    return bpe_apply_merges(t).select("word", "n_units").localCheckpoint()
 
 
 def tokenizer_fertility(t: dict[str, DataFrame]) -> DataFrame:
@@ -1701,8 +1699,10 @@ TEXTRANK_DAMPING = 0.85
 TEXTRANK_ITERS = 3
 
 
+@index("textrank_cooccurrence_graph")
 def _textrank_graph(t: dict[str, DataFrame]):
-    """(nodes, edges, deg) of the corpus token co-occurrence graph.
+    """(nodes, edges, deg, n) of the corpus token co-occurrence graph,
+    ``n`` the vocabulary size.
 
     Edges = adjacent-token pairs summed over the corpus, symmetrized;
     one shuffle keyed on the pair. The graph is vocab-sized — at 100 TB
@@ -1710,37 +1710,33 @@ def _textrank_graph(t: dict[str, DataFrame]):
     Memoized in the context (at scale: a written co-occurrence table
     maintained by ingest, like the shingle/LSH/IVF indexes).
     """
-    def build() -> tuple:
-        toks = doc_tokens(t)
-        pair = F.explode(
-            F.expr(
-                "transform(sequence(1, size(w) - 1),"
-                " i -> struct(element_at(w, i) AS a, element_at(w, i + 1) AS b))"
-            )
+    toks = doc_tokens(t)
+    pair = F.explode(
+        F.expr(
+            "transform(sequence(1, size(w) - 1),"
+            " i -> struct(element_at(w, i) AS a, element_at(w, i + 1) AS b))"
         )
-        directed = (
-            toks.filter(F.size("w") >= 2)
-            .select(pair.alias("p"))
-            .select(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-            .groupBy("a", "b")
-            .agg(F.count(F.lit(1)).alias("w"))
-        )
-        edges = (
-            directed.select(F.col("a").alias("u"), F.col("b").alias("v"), "w")
-            .unionByName(directed.select(F.col("b").alias("u"), F.col("a").alias("v"), "w"))
-            .groupBy("u", "v")
-            .agg(F.sum("w").alias("w"))
-        ).localCheckpoint()
-        deg = edges.groupBy("u").agg(F.sum("w").alias("wdeg")).localCheckpoint()
-        nodes = toks.select(F.explode("w").alias("tok")).distinct().localCheckpoint()
-        # the scalar vocab size is part of the graph build: counting it HERE
-        # (the declared setup phase) keeps bench steady-state honest — under
-        # a min-of-N protocol a lazily-memoized count would land only in the
-        # discarded first pass and be charged to neither phase.
-        t["_textrank_n"] = nodes.count()
-        return nodes, edges, deg
-
-    return memo(t, "_textrank_graph", build)
+    )
+    directed = (
+        toks.filter(F.size("w") >= 2)
+        .select(pair.alias("p"))
+        .select(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
+        .groupBy("a", "b")
+        .agg(F.count(F.lit(1)).alias("w"))
+    )
+    edges = (
+        directed.select(F.col("a").alias("u"), F.col("b").alias("v"), "w")
+        .unionByName(directed.select(F.col("b").alias("u"), F.col("a").alias("v"), "w"))
+        .groupBy("u", "v")
+        .agg(F.sum("w").alias("w"))
+    ).localCheckpoint()
+    deg = edges.groupBy("u").agg(F.sum("w").alias("wdeg")).localCheckpoint()
+    nodes = toks.select(F.explode("w").alias("tok")).distinct().localCheckpoint()
+    # the scalar vocab size is part of the graph build: counting it HERE
+    # (the declared setup phase) keeps bench steady-state honest — under
+    # a min-of-N protocol a lazily-memoized count would land only in the
+    # discarded first pass and be charged to neither phase.
+    return nodes, edges, deg, nodes.count()
 
 
 def textrank_keywords(
@@ -1767,9 +1763,15 @@ def textrank_keywords(
 
     ``materialize=False`` skips the final materialization so the plan
     gate can inspect the full un-truncated iteration DAG.
+
+    An empty corpus has no vocabulary and so no ranks: 0 rows, as the
+    oracle's empty ``nodes`` CTE gives.
     """
-    nodes, edges, deg = _textrank_graph(t)
-    n = t["_textrank_n"]  # scalar vocab size, counted in the graph build
+    nodes, edges, deg, n = _textrank_graph(t)
+    if n == 0:
+        return nodes.select(
+            F.col("tok").alias("token"), F.lit(0).cast("bigint").alias("rank_micro")
+        )
     # same IEEE expression the oracle floors: 0.15 * 1e6 / n, then +0.5
     teleport = int(0.15 * 1000000.0 / n + 0.5)
     spark = nodes.sparkSession
@@ -1938,6 +1940,7 @@ BM25_QUERIES = (
 )
 
 
+@index("bm25_doclen_df_stats")
 def _bm25_index(t: dict[str, DataFrame]):
     """(dl, df, corpus-stats) — the statistics every BM25 index stores
     alongside its postings: per-document token length, per-term document
@@ -1945,31 +1948,28 @@ def _bm25_index(t: dict[str, DataFrame]):
     the memoized tf index and memoized like the other corpus indexes
     (at scale: written with the index, maintained by ingest; bench.py
     builds them in its declared setup phase)."""
-    def build() -> tuple:
-        tf = _tfidf_tf_frame(t)
-        dl = (
-            tf.groupBy("doc_id")
-            .agg(F.sum("tf").alias("dl"))
-            .localCheckpoint()
-        )
-        stats = dl.agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
-        ).localCheckpoint()
-        # the (n_docs, avgdl) scalars ride ON the vocab-sized df frame
-        # (one setup-time broadcast) so the scoring query needs no 1-row
-        # cross join — that join cost a broadcast-build job per run; a
-        # real index stores these scalars in its
-        # header for the same reason
-        df_frame = (
-            tf.groupBy("tok")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .join(F.broadcast(stats))
-            .localCheckpoint()
-        )
-        return dl, df_frame, stats
-
-    return memo(t, "_bm25_index", build)
+    tf = _tfidf_tf_frame(t)
+    dl = (
+        tf.groupBy("doc_id")
+        .agg(F.sum("tf").alias("dl"))
+        .localCheckpoint()
+    )
+    stats = dl.agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
+    ).localCheckpoint()
+    # the (n_docs, avgdl) scalars ride ON the vocab-sized df frame
+    # (one setup-time broadcast) so the scoring query needs no 1-row
+    # cross join — that join cost a broadcast-build job per run; a
+    # real index stores these scalars in its
+    # header for the same reason
+    df_frame = (
+        tf.groupBy("tok")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .join(F.broadcast(stats))
+        .localCheckpoint()
+    )
+    return dl, df_frame, stats
 
 
 def bm25_scores(t: dict[str, DataFrame]) -> DataFrame:
@@ -2304,6 +2304,7 @@ GROUP BY tfb.doc_id
 """
 
 
+@index("dsir_score_table")
 def _dsir_scores(t: dict[str, DataFrame]) -> DataFrame:
     """Memoized (doc_id, avg_lr_micro) DSIR score frame — the written
     table the selection step of a real pipeline materializes once per
@@ -2312,11 +2313,11 @@ def _dsir_scores(t: dict[str, DataFrame]) -> DataFrame:
     re-deriving the bucket LMs per query. Same stance as the shingle /
     LSH / IVF / k-means setup artifacts.
     """
-    return memo(t, "_dsir_scores", lambda: (
+    return (
         dsir_importance_weights(t)
         .select("doc_id", "avg_lr_micro")
         .localCheckpoint()
-    ))
+    )
 
 
 def _auc_terms(t: dict[str, DataFrame]) -> DataFrame:

@@ -1,5 +1,10 @@
 from __future__ import annotations
 
+import shutil
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from databricks_observe_spark.operators import catalog_ops as C
@@ -156,6 +161,31 @@ def test_schema_drift_statuses_on_synthetic_drift(tables, spark):
     assert rows[("region", "r_regionkey")] == "type_drift"
     assert rows[("region", "r_ghost")] == "missing_in_storage"
     assert rows[("region", "r_name")] == "missing_in_catalog"
+
+
+@pytest.mark.parametrize(
+    "ts_type, status", [(pa.int64(), "type_drift"), (pa.timestamp("ns"), "match")]
+)
+def test_schema_drift_compares_storage_classes(tables, tmp_path, ts_type, status):
+    """Types compare by storage class on both engines: ``events.ts``
+    stored as int64 drifts from its declared timestamp, while a
+    TIMESTAMP(NANOS) re-materialization is still a timestamp."""
+    from tests.conftest import SF_DIR
+    from tools.check_oracle import compare, oracle_con
+
+    copy = tmp_path / "sf"
+    shutil.copytree(SF_DIR, copy)
+    events = pq.read_table(copy / "events.parquet")
+    ts = events.schema.get_field_index("ts")
+    pq.write_table(
+        events.set_column(ts, "ts", events["ts"].cast(ts_type)), copy / "events.parquet"
+    )
+    t2 = dict(tables)
+    t2["_sf_dir"] = str(copy)
+    sdf = C.schema_drift(t2)
+    rows = sdf.collect()
+    assert {(r.table, r.column): r.status for r in rows}[("events", "ts")] == status
+    assert compare(sdf, rows, oracle_con(str(copy)), C.SCHEMA_DRIFT_SQL) == []
 
 
 def test_expectations_report_counts_partition_rows(tables):

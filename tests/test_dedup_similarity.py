@@ -626,10 +626,7 @@ def test_lsh_dedup_recall_counts_are_consistent(tables):
 def test_lsh_dedup_recall_vacuous_on_pairless_corpus(spark, tables):
     """Empty ground truth (no doc pair shares a single shingle) must read
     as vacuous recall 10000, not a divide-by-zero or a 0."""
-    t2 = dict(tables)
-    for k in ("_doc_shingles", "_shingle_df", "_shingle_sizes",
-              "_jaccard_pairs", "_minhash_sig", "_doc_tokens"):
-        t2.pop(k, None)
+    t2 = {k: v for k, v in tables.items() if not k.startswith("_")}
     t2["documents"] = spark.createDataFrame(
         [
             (1, "alpha beta gamma delta epsilon", "en", "s", 10),
@@ -647,9 +644,7 @@ def test_lsh_dedup_recall_vacuous_on_pairless_corpus(spark, tables):
 def test_duplicated_spans_flags_verbatim_runs_only(spark, tables):
     """A 15-token run copied verbatim across two docs is flagged in both;
     a doc sharing vocabulary but no 15-token run is not flagged."""
-    t2 = dict(tables)
-    for k in ("_doc_tokens",):
-        t2.pop(k, None)
+    t2 = {k: v for k, v in tables.items() if not k.startswith("_")}
     span = " ".join(f"tok{i}" for i in range(15))
     t2["documents"] = spark.createDataFrame(
         [

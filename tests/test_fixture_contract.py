@@ -159,21 +159,15 @@ def test_registry_order_puts_rows_only_last():
 
 def test_overlapped_setup_builds_every_index(tables, spark):
     """Smoke the concurrent build end-to-end on the test fixture: every
-    builder's memo key must exist afterwards and the pool must not have
-    raced a dependency (a missing key or an exception would surface
-    here). Uses the session ctx, so later tests reuse the same memos."""
-    from databricks_observe_spark.setup_phase import build_setup_indexes
+    declared index must exist afterwards, under its published name, and
+    the pool must not have raced a dependency (a missing key or an
+    exception would surface here). Uses the session ctx, so later tests
+    reuse the same memos."""
+    from databricks_observe_spark.setup_phase import (
+        build_setup_indexes,
+        setup_builders,
+    )
 
-    build_setup_indexes(spark, tables, "/root/testdata/sf0.001")
-    for key in (
-        "_doc_tokens", "_doc_shingles", "_shingle_df", "_shingle_sizes",
-        "_simhash_fps", "_minhash_sig", "_emb_buckets", "_doc_trigrams",
-        "_tfidf_tf", "_bm25_index", "_langid_profiles", "_textrank_graph",
-        "_textrank_n", "_emb_norms",
-        "_ivf_centroids_bc", "_ann_queries_bc", "_ivf_assign", "_kmeans_q",
-        "_ndc_labels", "_file_stats", "_semdedup_assigned",
-        "_jaccard_pairs_capped", "_hist_vals", "_contam_grams",
-        "_contam_eval_set", "_dsir_scores", "_unigram_lp",
-        "_bpe_encodings", "_bloom_filter_df",
-    ):
-        assert key in tables, key
+    build_setup_indexes(spark, tables, SF_DIR)
+    missing = ["_" + name for name in setup_builders() if "_" + name not in tables]
+    assert missing == []

@@ -92,11 +92,13 @@ def test_deep_closure_converges_logarithmically(tables):
     the side inputs, and the cycle."""
     import math
 
-    from databricks_observe_spark.operators.lineage import lineage_closure_deep
+    from databricks_observe_spark.operators.lineage import transitive_closure
     from databricks_observe_spark.sources.catalog_model import DEEP_CHAIN_LEN
 
-    rows = lineage_closure_deep(tables).collect()
-    rounds = tables["_deep_closure_rounds"]
+    # lineage_closure_deep is this closure; its rows meet the oracle in the
+    # surface walk
+    closure, rounds = transitive_closure(tables["lineage_edges_deep"])
+    rows = closure.collect()
     assert rounds <= math.ceil(math.log2(DEEP_CHAIN_LEN + 4)) + 1, rounds
 
     up = {}

@@ -1,6 +1,9 @@
-"""``memo`` contract (Spark-free) and the lint that keeps every derived
+"""``memo`` contract (Spark-free) and the lints that keep every derived
 index on it: a hand-rolled ``if "_k" not in t: t["_k"] = ...`` memo has
-no in-flight guard, so two concurrent setup builders could both run it."""
+no in-flight guard, so two concurrent setup builders could both run it;
+an operator that calls ``memo`` itself, or writes a ``_`` key on the
+context, builds something the setup phase never sees, because the setup
+phase builds what ``@index`` declares."""
 
 import random
 import re
@@ -11,7 +14,7 @@ from pathlib import Path
 
 import pytest
 
-from databricks_observe_spark.memo import memo
+from databricks_observe_spark.memo import INDEXES, index, memo
 
 PACKAGE = Path(__file__).resolve().parent.parent / "databricks_observe_spark"
 
@@ -20,6 +23,22 @@ PACKAGE = Path(__file__).resolve().parent.parent / "databricks_observe_spark"
 HAND_ROLLED = re.compile(
     r'if "_\w+" (?:not )?in t\b(?:(?!\n\S).)*?\bt\[[^\]\n]+\]\s*=(?!=)', re.S
 )
+MEMO_CALL = re.compile(r"\bmemo\(")
+# a write of a derived (`_`-prefixed) key on any dict: `x["_k"] = ...`
+DERIVED_WRITE = re.compile(r'\b\w+\["_\w+"\]\s*=(?!=)')
+# the loader records its fixture directory; it is an input, not an index
+DERIVED_WRITE_ALLOWED = {('sources/tables.py', 'out["_sf_dir"] =')}
+
+
+def _scan(pattern: re.Pattern, paths) -> list[tuple[str, int, str]]:
+    """``(path relative to the package, line, match)`` of every match."""
+    hits = []
+    for path in sorted(paths):
+        text = path.read_text()
+        for m in pattern.finditer(text):
+            line = text.count("\n", 0, m.start()) + 1
+            hits.append((str(path.relative_to(PACKAGE)), line, m.group(0)))
+    return hits
 
 
 def _wait_blocked(threads, timeout=10.0):
@@ -159,10 +178,41 @@ def test_self_dependent_build_raises_instead_of_deadlocking():
 def test_no_hand_rolled_memo_in_package():
     assert HAND_ROLLED.search('    if "_x" not in t:\n        t["_x"] = f()\n')
     assert HAND_ROLLED.search('    if "_x" in t:\n        return t["_x"]\n    t["_x"] = f()\n')
-    hits = []
-    for path in sorted(PACKAGE.rglob("*.py")):
-        text = path.read_text()
-        for m in HAND_ROLLED.finditer(text):
-            line = text.count("\n", 0, m.start()) + 1
-            hits.append(f"{path.relative_to(PACKAGE.parent)}:{line}")
-    assert hits == [], "route these through memo(t, key, build): " + ", ".join(hits)
+    hits = _scan(HAND_ROLLED, PACKAGE.rglob("*.py"))
+    assert hits == [], "declare these with @index(name): " + repr(hits)
+
+
+def test_operators_declare_indexes_instead_of_calling_memo():
+    paths = [*PACKAGE.glob("operators/*.py"), *PACKAGE.glob("functions/*.py")]
+    assert len(paths) > 10
+    hits = _scan(MEMO_CALL, paths)
+    assert hits == [], "declare these with @index(name): " + repr(hits)
+
+
+def test_no_derived_key_written_outside_memo():
+    assert DERIVED_WRITE.search('        t["_n"] = nodes.count()\n')
+    assert not DERIVED_WRITE.search('    if t["_n"] == 0:\n')
+    hits = [
+        h for h in _scan(DERIVED_WRITE, PACKAGE.rglob("*.py"))
+        if (h[0], h[2]) not in DERIVED_WRITE_ALLOWED
+    ]
+    assert hits == [], "return these from an @index builder: " + repr(hits)
+
+
+def test_index_memoizes_under_its_published_name():
+    calls = []
+
+    @index("test_memo_probe")
+    def probe(t):
+        calls.append(1)
+        return object()
+
+    try:
+        t: dict = {}
+        assert probe(t) is probe(t) is t["_test_memo_probe"]
+        assert calls == [1]
+        assert INDEXES["test_memo_probe"] is probe
+        with pytest.raises(ValueError, match="declared twice"):
+            index("test_memo_probe")(lambda t: None)
+    finally:
+        del INDEXES["test_memo_probe"]

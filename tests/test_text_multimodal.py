@@ -370,12 +370,11 @@ def test_unigram_log_rounding_margins_verified(tables):
 def test_bpe_pair_counts_weighted_by_word_frequency(tables, spark):
     from databricks_observe_spark.operators import text as T
 
-    t2 = dict(tables)
+    t2 = {k: v for k, v in tables.items() if not k.startswith("_")}
     t2["documents"] = spark.createDataFrame(
         [(1, "ab ab cd"), (2, "ab x")],  # 'x' too short for a pair
         "doc_id bigint, text string",
     )
-    t2.pop("_doc_tokens", None)
     rows = {(r.left_sym, r.right_sym): r.pair_count for r in T.bpe_pair_counts(t2).collect()}
     # 'ab' occurs 3 times -> pair (a,b)=3 ; 'cd' once -> (c,d)=1
     assert rows == {("a", "b"): 3, ("c", "d"): 1}
@@ -435,6 +434,25 @@ def test_fuzzy_match_probe_on_empty_documents(tables):
     assert T.fuzzy_match_probe(fresh).collect() == []
 
 
+def test_textrank_keywords_on_empty_documents(tables):
+    """An empty corpus has no vocabulary and so no ranks: 0 rows, in the
+    types its oracle gives over an empty ``documents`` view."""
+    from tests.conftest import SF_DIR
+    from tools.check_oracle import compare, oracle_con
+
+    fresh = {k: v for k, v in tables.items() if not k.startswith("_")}
+    fresh["documents"] = tables["documents"].limit(0)
+    sdf = T.textrank_keywords(fresh)
+    rows = sdf.collect()
+    con = oracle_con(SF_DIR)
+    con.execute(
+        f"CREATE OR REPLACE VIEW documents AS"
+        f" SELECT * FROM '{SF_DIR}/documents.parquet' LIMIT 0"
+    )
+    assert rows == []
+    assert compare(sdf, rows, con, T.TEXTRANK_KEYWORDS_SQL) == []
+
+
 def test_bm25_ranks_are_contract_shaped(tables):
     from databricks_observe_spark.operators import text as T
 
@@ -457,12 +475,9 @@ def test_bm25_favors_term_density(spark, tables):
     mentions them once among filler, under the same corpus stats."""
     from databricks_observe_spark.operators import text as T
 
-    t2 = dict(tables)
-    # drop every memoized corpus index the tf frame chain could reuse —
-    # they point at the REAL corpus, not the synthetic one below
-    t2.pop("_tfidf_tf", None)
-    t2.pop("_doc_tokens", None)
-    t2.pop("_bm25_index", None)
+    # no derived index: they point at the REAL corpus, not the synthetic
+    # one below
+    t2 = {k: v for k, v in tables.items() if not k.startswith("_")}
     filler = "alpha beta gamma delta " * 10
     t2["documents"] = spark.createDataFrame(
         [
