@@ -2422,6 +2422,8 @@ def score_auc(t: dict[str, DataFrame]) -> DataFrame:
     carries no double (its display form, ``auc_micro / 1e6``,
     is pinned in ``tests/test_text_multimodal.py``). Exact while
     ``1e6 * P * N < 1e38`` — i.e. up to ~1e16 documents per class.
+    A corpus with one class (``P * N = 0``) has no pair to rank, so
+    ``auc_micro`` is NULL on both engines (the divisor is ``NULLIF``-ed).
 
     ``auc_num2`` is output as BIGINT (see :func:`score_auc_parts` for
     the pandas-hasher rationale; the DECIMAL(38,0) arithmetic stays
@@ -2443,8 +2445,8 @@ def score_auc(t: dict[str, DataFrame]) -> DataFrame:
         F.expr(
             "CAST(CAST(1000000 AS DECIMAL(38,0)) * auc_num2"
             " + CAST(n_pos AS DECIMAL(38,0)) * n_neg AS DECIMAL(38,0))"
-            " div CAST(CAST(2 AS DECIMAL(38,0)) * n_pos * n_neg"
-            " AS DECIMAL(38,0))"
+            " div NULLIF(CAST(CAST(2 AS DECIMAL(38,0)) * n_pos * n_neg"
+            " AS DECIMAL(38,0)), 0)"
         ).alias("auc_micro"),
     )
 
@@ -2493,7 +2495,7 @@ SCORE_AUC_SQL = f"""
 SELECT n_pos, n_neg, CAST(auc_num2 AS BIGINT) AS auc_num2,
        CAST((1000000 * CAST(auc_num2 AS HUGEINT)
                + CAST(n_pos AS HUGEINT) * n_neg)
-            // (2 * CAST(n_pos AS HUGEINT) * n_neg) AS BIGINT) AS auc_micro
+            // NULLIF(2 * CAST(n_pos AS HUGEINT) * n_neg, 0) AS BIGINT) AS auc_micro
 FROM parts
 """
 

@@ -6,15 +6,21 @@ Reference behavior being rebuilt (SURVEY.md §2.7):
   ``job_discovery.py:37-55``) -> micro-batch trigger cadence.
 - ST2: the completion sensor's cursor — a JSON map ``"pid:uid" -> state``
   persisted across ticks (``sensors/dlt_sensor.py:12-46``) -> streaming
-  ``dropDuplicates`` keyed on (entity_type, entity_id, update_id) with the checkpoint as
-  the cursor. Exactly-once across restarts comes from checkpoint + replay
-  (tested by re-running the same source against the same checkpoint).
+  ``dropDuplicates`` keyed on (entity_type, entity_id, update_id) with the
+  checkpoint as the cursor. The sensor keeps that cursor across ticks: one
+  checkpoint and one append-only parquet log per (session, fixture dir,
+  glob), so a tick reads only the feed files it has not seen and costs
+  O(new input), not O(history). Exactly-once across restarts comes from
+  checkpoint + replay (tested by re-running the same source against the
+  same checkpoint).
 - ST3: cron cadences -> ``trigger(processingTime=...)``; tests use
   ``availableNow`` for determinism.
 
 One harness: each ``*_stream`` builder returns a streaming DataFrame over
-``stream_parquet``, the one file source; ``start_memory`` is the one
-memory sink, and ``_run_to_exhaustion`` starts every availableNow run.
+``stream_parquet``, the one file source. ``start_parquet_log`` is the
+sensor's sink: it appends to the parquet log its cursor keeps. Every
+other stream is a one-shot replay: ``_run_to_exhaustion`` starts it into
+``start_memory``, the one memory sink.
 
 Scale stance: state is keyed by (entity_type, entity_id, update_id) — bounded by live
 updates, not event volume — and the watermark lets Spark evict keys older
@@ -24,10 +30,12 @@ survives a 100 TB event stream.
 
 from __future__ import annotations
 
+import atexit
 import contextlib
 import os
 import shutil
 import tempfile
+import threading
 import uuid
 from collections.abc import Callable
 
@@ -38,6 +46,7 @@ from databricks_observe_spark.functions.rounding import (
     round_half_up,
     sql_round_half_up,
 )
+from databricks_observe_spark.memo import memo
 from databricks_observe_spark.session import ensure_conf
 from databricks_observe_spark.sources.catalog_model import updates_of
 from databricks_observe_spark.sources.tables import (
@@ -104,12 +113,14 @@ def completed_updates(spark: SparkSession, sf_dir: str, glob: str) -> DataFrame:
     )
 
 
-def first_completed_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+def first_completed_stream(
+    spark: SparkSession, sf_dir: str, glob: str = "events.parquet"
+) -> DataFrame:
     """ST2 as a stream: emit each (entity, update) at most once on
     COMPLETED, exactly the sensor-cursor dedup (``completed_updates``).
     Idempotent restart: rerunning over the same files + checkpoint emits
     nothing new (at-most-once emission, ST4)."""
-    return completed_updates(spark, sf_dir, "events.parquet").select(
+    return completed_updates(spark, sf_dir, glob).select(
         "entity_type", "entity_id", "update_id", "ts"
     )
 
@@ -185,6 +196,31 @@ def start_memory(
     )
 
 
+def start_parquet_log(
+    frame: DataFrame, checkpoint_dir: str, log_dir: str
+) -> StreamingQuery:
+    """Start ``frame`` as an availableNow run that appends to the parquet
+    file sink at ``log_dir``, checkpointed at ``checkpoint_dir``. The
+    sink's ``_spark_metadata`` log commits each batch's files exactly
+    once, and a batch reader of ``log_dir`` sees only committed files."""
+    return (
+        frame.writeStream.format("parquet")
+        .outputMode("append")
+        .option("checkpointLocation", checkpoint_dir)
+        .option("path", log_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def _await_end(q: StreamingQuery, query: str) -> None:
+    """Wait for the availableNow run ``q`` to end; stop it and raise if it
+    has not ended within 300 s."""
+    if not q.awaitTermination(300):
+        q.stop()
+        raise TimeoutError(f"{query} did not finish its availableNow run within 300s")
+
+
 def _run_to_exhaustion(
     spark: SparkSession,
     sf_dir: str,
@@ -208,36 +244,79 @@ def _run_to_exhaustion(
     try:
         with _stream_confs(spark, confs):
             q = start_memory(stream(spark, sf_dir), ckpt, name, mode)
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                f"{query} did not finish its availableNow run within 300s"
-            )
+        _await_end(q, query)
         return finish(spark.table(name))
     finally:
         spark.catalog.dropTempView(name)
         shutil.rmtree(ckpt, ignore_errors=True)
 
 
-def streaming_first_completed_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver-checkable form of the ST2 stream: run the watermarked
-    exactly-once completion pipeline to exhaustion (availableNow) and
-    return the emitted key set.
+# (id(session), fixture dir, glob) -> (cursor directory, its lock): the
+# sensor's persisted cursors, removed at interpreter exit
+_CURSORS: dict[tuple[int, str, str], tuple[str, threading.Lock]] = {}
+
+
+def _cursor(spark: SparkSession, sf_dir: str, glob: str) -> tuple[str, threading.Lock]:
+    """The sensor cursor of ``(spark, sf_dir, glob)``: a directory that
+    holds its checkpoint and its parquet log, and the lock its ticks run
+    under (one availableNow run per checkpoint at a time)."""
+    return memo(
+        _CURSORS,
+        (id(spark), sf_dir, glob),
+        lambda: (
+            tempfile.mkdtemp(prefix="cursor_streaming_first_completed_"),
+            threading.Lock(),
+        ),
+    )
+
+
+@atexit.register
+def _remove_cursors() -> None:
+    """Remove every sensor cursor directory; registered as an exit hook."""
+    for root, _ in list(_CURSORS.values()):
+        shutil.rmtree(root, ignore_errors=True)
+    _CURSORS.clear()
+
+
+def streaming_first_completed_query(
+    spark: SparkSession, sf_dir: str, glob: str = "events.parquet"
+) -> DataFrame:
+    """Driver-checkable form of the ST2 sensor: one tick of the
+    watermarked exactly-once completion pipeline (availableNow), returning
+    the key set emitted over every tick so far.
+
+    The cursor persists across ticks, as the reference sensor's does
+    (dlt_sensor.py:43-46): each ``(spark, sf_dir, glob)`` keeps one
+    checkpoint and one append-mode parquet log (``start_parquet_log``).
+    A tick lists the feed, runs micro-batches over only the files its
+    checkpoint has not seen, and appends what they emit to the log; on an
+    unchanged feed it runs no micro-batch. The first tick replays the
+    whole history. The result is a batch read of the log. Files rewritten
+    in place under a live cursor are not re-read (the file source's rule,
+    as ``memo``'s: never mutate the fixture under a live context); a
+    refreshed feed needs new files or a new fixture directory.
 
     Output is the deterministic part of the stream — which (entity,
     update) keys completed — regardless of which concurrent poll row won
-    the dropDuplicates race, so it pairs with a batch SQL oracle.
+    the dropDuplicates race, so it pairs with a batch SQL oracle. The
+    ``distinct`` keeps set semantics when a key whose state the watermark
+    evicted is polled again in a later batch.
     """
-    # dropDuplicatesWithinWatermark emits a key the batch it first arrives
-    return _run_to_exhaustion(
-        spark,
-        sf_dir,
-        "streaming_first_completed",
-        first_completed_stream,
-        lambda t: t.select("entity_type", "entity_id", "update_id").distinct(),
-        _NO_DATA_BATCHES_OFF,
-        "append",
-    )
+    root, lock = _cursor(spark, sf_dir, glob)
+    log = os.path.join(root, "log")
+    stream = first_completed_stream(spark, sf_dir, glob)
+    with lock:
+        # dropDuplicatesWithinWatermark emits a key the batch it first
+        # arrives, so the trailing no-data batch would emit nothing
+        with _stream_confs(spark, _NO_DATA_BATCHES_OFF):
+            q = start_parquet_log(stream, os.path.join(root, "checkpoint"), log)
+        _await_end(q, "streaming_first_completed")
+        return (
+            spark.read.schema(stream.schema)
+            .parquet(log)
+            .select("entity_type", "entity_id", "update_id")
+            .distinct()
+        )
 
 
 STREAMING_FIRST_COMPLETED_SQL_SUFFIX = """

@@ -1,12 +1,22 @@
 from __future__ import annotations
 
 import ast
+import glob
+import os
+import subprocess
+import sys
 import tempfile
+import time
 from pathlib import Path
 
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQueryListener
 
 from databricks_observe_spark.operators.runs import first_completed
+from databricks_observe_spark.sources.catalog_model import updates_of
+from databricks_observe_spark.sources.tables import normalize_events_ts
 from databricks_observe_spark.streaming import state as ST
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -15,6 +25,7 @@ PACKAGE = Path(__file__).resolve().parent.parent / "databricks_observe_spark"
 STREAM_IO = {
     "writeStream": {
         ("streaming/state.py", "start_memory"),
+        ("streaming/state.py", "start_parquet_log"),
         ("streaming/state.py", "transition_log_stream"),
     },
     "readStream": {("streaming/state.py", "stream_parquet")},
@@ -39,6 +50,141 @@ def test_first_completed_stream_matches_batch(spark, tables):
     # the batch exactly-once summary (watermark drops nothing here: all
     # events fit one availableNow run)
     assert got == expected
+
+
+class MicroBatches(StreamingQueryListener):
+    """Counts the micro-batches the session's streams run."""
+
+    def __init__(self):
+        self.started = self.ended = self.batches = 0
+
+    def onQueryStarted(self, event):
+        self.started += 1
+
+    def onQueryProgress(self, event):
+        self.batches += 1
+
+    def onQueryTerminated(self, event):
+        self.ended += 1
+
+    def settled(self, timeout_s: float = 30.0) -> int:
+        """The batch count once every started stream has reported its end
+        (the listener bus delivers events asynchronously)."""
+        deadline = time.monotonic() + timeout_s
+        while self.ended < self.started:
+            assert time.monotonic() < deadline, "listener missed a query end"
+            time.sleep(0.01)
+        return self.batches
+
+
+def _split_events(feed: Path) -> tuple[Path, Path]:
+    """Split sf0.001's events by ``ts`` into two files: the earlier half
+    in the new directory ``feed``, the later half beside it, to be added
+    to the feed later. No row of the second file is older than the
+    watermark the first leaves."""
+    events = pq.read_table(f"{SF_DIR}/events.parquet")
+    cut = pc.sort_indices(events, [("ts", "ascending")])[len(events) // 2]
+    early = pc.less_equal(events["ts"], events["ts"][cut.as_py()])
+    feed.mkdir()
+    pq.write_table(events.filter(early), feed / "part-0.parquet")
+    later = feed.parent / "part-1.parquet"
+    pq.write_table(events.filter(pc.invert(early)), later)
+    return feed / "part-0.parquet", later
+
+
+def _keys(df) -> set[tuple]:
+    return {(r.entity_type, r.entity_id, r.update_id) for r in df.collect()}
+
+
+def test_sensor_cursor_reads_only_new_feed_files(spark, tables, tmp_path):
+    """The sensor keeps its cursor between ticks: a tick after a new feed
+    file sees the union, exactly as a fresh cursor replaying both files
+    and the batch ``first_completed`` do, and a tick on an unchanged feed
+    returns the same keys without running a micro-batch."""
+    feed = tmp_path / "feed"
+    first, later = _split_events(feed)
+    first_only = _keys(
+        first_completed(
+            {"updates": updates_of(normalize_events_ts(spark.read.parquet(str(first))))}
+        )
+    )
+
+    tick1 = _keys(ST.streaming_first_completed_query(spark, str(feed), "*.parquet"))
+    assert tick1 == first_only and tick1
+
+    os.rename(later, feed / later.name)
+    tick2 = _keys(ST.streaming_first_completed_query(spark, str(feed), "*.parquet"))
+    replay_dir = tmp_path / "replay"
+    replay_dir.mkdir()
+    for f in feed.iterdir():
+        (replay_dir / f.name).write_bytes(f.read_bytes())
+    replay = _keys(
+        ST.streaming_first_completed_query(spark, str(replay_dir), "*.parquet")
+    )
+    assert tick2 == replay == _keys(first_completed(tables))
+    assert tick2 > tick1
+
+    listener = MicroBatches()
+    spark.streams.addListener(listener)
+    try:
+        tick3 = _keys(
+            ST.streaming_first_completed_query(spark, str(feed), "*.parquet")
+        )
+        assert listener.settled() == 0
+    finally:
+        spark.streams.removeListener(listener)
+    assert tick3 == tick2
+
+
+def test_sensor_cursor_lifetime(spark, tables, tmp_path):
+    """Two concurrent ticks over one feed take turns on one cursor
+    directory, each returns the full key set, and they leave no temp
+    view; the exit hook removes every cursor directory."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    def footprint():
+        views = sum(1 for t in spark.catalog.listTables() if t.isTemporary)
+        cursors = glob.glob(
+            os.path.join(tempfile.gettempdir(), "cursor_streaming_first_completed_*")
+        )
+        return views, set(cursors)
+
+    feed = tmp_path / "feed"
+    feed.mkdir()
+    (feed / "events.parquet").write_bytes(Path(SF_DIR, "events.parquet").read_bytes())
+    views, before = footprint()
+    with ThreadPoolExecutor(2) as pool:
+        ticks = [
+            pool.submit(
+                lambda: _keys(ST.streaming_first_completed_query(spark, str(feed)))
+            )
+            for _ in range(2)
+        ]
+        results = [t.result(timeout=300) for t in ticks]
+    after_views, after = footprint()
+    assert after_views == views
+    assert len(after - before) == 1
+    assert results == [_keys(first_completed(tables))] * 2
+
+    ST._remove_cursors()
+    assert not (after - before) & footprint()[1]
+
+    # registered as an exit hook: a cursor made in a child process is gone
+    # once the child exits
+    child = subprocess.run(
+        [
+            sys.executable,
+            "-c",
+            "from databricks_observe_spark.streaming import state as ST; "
+            "print(ST._cursor(object(), 'feed', '*.parquet')[0])",
+        ],
+        capture_output=True,
+        text=True,
+        check=True,
+        cwd=PACKAGE.parent,
+    )
+    root = child.stdout.strip()
+    assert root.startswith(tempfile.gettempdir()) and not os.path.exists(root)
 
 
 def test_tumbling_stream_matches_batch(spark, tables):
@@ -302,19 +448,16 @@ def test_streaming_drift_psi_matches_batch_and_recovers_state(
 def test_run_to_exhaustion_queries_leave_no_view_or_checkpoint(spark, tables):
     """A run-to-exhaustion query drops its memory-sink view and removes its
     checkpoint directory, and the rows it returns survive both."""
-    import glob
-    import os
-
     def footprint():
         views = sum(1 for t in spark.catalog.listTables() if t.isTemporary)
         ckpts = glob.glob(
-            os.path.join(tempfile.gettempdir(), "ckpt_streaming_first_completed_*")
+            os.path.join(tempfile.gettempdir(), "ckpt_streaming_corpus_dedup_*")
         )
         return views, len(ckpts)
 
     before = footprint()
-    first = ST.streaming_first_completed_query(spark, SF_DIR).collect()
-    second = ST.streaming_first_completed_query(spark, SF_DIR).collect()
+    first = ST.streaming_corpus_dedup_query(spark, SF_DIR).collect()
+    second = ST.streaming_corpus_dedup_query(spark, SF_DIR).collect()
     assert footprint() == before
     assert sorted(first) == sorted(second) and len(first) > 0
 
@@ -323,9 +466,6 @@ def test_setup_warmup_stream_leaves_no_view_or_checkpoint(spark, tables, monkeyp
     """The setup phase's warm-up stream goes through the same
     run-to-exhaustion helper: with no index builders, two setup calls
     leave the temp-view and checkpoint-directory counts unchanged."""
-    import glob
-    import os
-
     from databricks_observe_spark import setup_phase
 
     def footprint():
@@ -379,12 +519,14 @@ def test_stream_io_only_in_harness():
 
 
 def test_warm_streaming_calls_read_no_footer(spark, tables, monkeypatch):
-    """Once each streaming query has run, a second call reads no Parquet
-    through Spark: every stream's reader schema comes from the file's
-    footer (``sources/tables.footer_schema``), read on the driver."""
+    """Once each streaming query has run, a second call makes Spark infer
+    no Parquet schema: every stream's reader schema comes from the file's
+    footer (``sources/tables.footer_schema``), read on the driver, and the
+    sensor reads its log with the stream's own schema."""
     from pyspark.sql import DataFrameReader
 
     from databricks_observe_spark import registry
+    from databricks_observe_spark.sources.tables import footer_schema
 
     streams = {
         name: query
@@ -395,16 +537,27 @@ def test_warm_streaming_calls_read_no_footer(spark, tables, monkeypatch):
     for query in streams.values():
         query(spark, SF_DIR)
 
-    reads = dict.fromkeys(streams, 0)
-    current = [None]
-    parquet = DataFrameReader.parquet
+    reads = dict.fromkeys([*streams, "probe"], 0)
+    current = ["probe"]
+    schema, parquet = DataFrameReader.schema, DataFrameReader.parquet
+
+    def declaring(self, *args, **kwargs):
+        self._declared_schema = True
+        return schema(self, *args, **kwargs)
 
     def counting(self, *paths, **options):
-        reads[current[0]] += 1
+        # a reader without a declared schema makes Spark infer one
+        reads[current[0]] += not getattr(self, "_declared_schema", False)
         return parquet(self, *paths, **options)
 
+    monkeypatch.setattr(DataFrameReader, "schema", declaring)
     monkeypatch.setattr(DataFrameReader, "parquet", counting)
+    events = f"{SF_DIR}/events.parquet"
+    spark.read.schema(footer_schema(events)).parquet(events)
+    assert reads["probe"] == 0
+    spark.read.parquet(events)
+    assert reads["probe"] == 1
     for name, query in streams.items():
         current[0] = name
         query(spark, SF_DIR)
-    assert reads == dict.fromkeys(streams, 0)
+    assert reads == {**dict.fromkeys(streams, 0), "probe": 1}

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import hashlib
 
+import pytest
 from pyspark.sql import functions as F
 
 from databricks_observe_spark.operators import multimodal as M, text as T
@@ -451,6 +452,38 @@ def test_textrank_keywords_on_empty_documents(tables):
     )
     assert rows == []
     assert compare(sdf, rows, con, T.TEXTRANK_KEYWORDS_SQL) == []
+
+
+# one-class corpora: (Spark documents frame, DuckDB documents clause)
+ONE_CLASS = {
+    "one_document": (lambda d: d.orderBy("doc_id").limit(1), "ORDER BY doc_id LIMIT 1"),
+    "target_language_only": (
+        lambda d: d.filter(F.col("lang") == T.DSIR_TARGET_LANG),
+        f"WHERE lang = '{T.DSIR_TARGET_LANG}'",
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(ONE_CLASS))
+def test_score_auc_on_one_class_documents(tables, case):
+    """A corpus with one class has no (positive, negative) pair to rank,
+    so ``auc_micro`` is NULL on both engines."""
+    from tests.conftest import SF_DIR
+    from tools.check_oracle import compare, oracle_con
+
+    subset, clause = ONE_CLASS[case]
+    fresh = {k: v for k, v in tables.items() if not k.startswith("_")}
+    fresh["documents"] = subset(tables["documents"])
+    sdf = T.score_auc(fresh)
+    rows = sdf.collect()
+    con = oracle_con(SF_DIR)
+    con.execute(
+        f"CREATE OR REPLACE VIEW documents AS"
+        f" SELECT * FROM '{SF_DIR}/documents.parquet' {clause}"
+    )
+    assert len(rows) == 1 and rows[0].n_pos * rows[0].n_neg == 0
+    assert rows[0].auc_micro is None
+    assert compare(sdf, rows, con, T.SCORE_AUC_SQL) == []
 
 
 def test_bm25_ranks_are_contract_shaped(tables):
