@@ -49,10 +49,18 @@ def _not_excluded(catalog_col: str = "catalog", schema_col: str = "schema") -> F
 
 def discovered_objects(t: dict[str, DataFrame]) -> DataFrame:
     """S1-S3 + P2 + A4: discovered (catalog, schema, table) triples,
-    exclusions applied, deduplicated."""
+    exclusions applied, deduplicated.
+
+    The dedup runs in one task: ``catalog_objects`` is the literal catalog
+    model, which at scale is a SHOW walk and so metastore-sized, not
+    data-sized. A single-partition child satisfies the aggregate's
+    distribution, so no exchange is planned.
+    """
     return (
         t["catalog_objects"]
         .filter(_not_excluded())
+        # metastore-sized (a SHOW walk): dedup in one task, no exchange
+        .coalesce(1)
         .dropDuplicates(["catalog", "schema", "table"])
     )
 
@@ -474,7 +482,9 @@ def discovered_objects_live(spark, sf_dir: str) -> DataFrame:
     reference's catalog-less objects. Against a metastore-backed session
     the identical chain walks ``spark.catalog.listCatalogs()`` /
     ``SHOW SCHEMAS`` / ``SHOW TABLES`` — SHOW output is metastore-sized,
-    so the frame stays broadcast-small at any corpus scale.
+    so the frame stays broadcast-small at any corpus scale. For the same
+    reason the dedup runs in one task: a single-partition child satisfies
+    the aggregate's distribution, so no exchange is planned.
 
     The caller prepares the session first (the registry does);
     ``sf_dir`` only completes the ``(spark, sf_dir)`` query signature.
@@ -486,8 +496,11 @@ def discovered_objects_live(spark, sf_dir: str) -> DataFrame:
         F.col("namespace").alias("schema"),
         F.col("viewName").alias("table"),
     )
-    return views.filter(_not_excluded()).dropDuplicates(
-        ["catalog", "schema", "table"]
+    return (
+        views.filter(_not_excluded())
+        # metastore-sized (SHOW VIEWS output): dedup in one task, no exchange
+        .coalesce(1)
+        .dropDuplicates(["catalog", "schema", "table"])
     )
 
 

@@ -85,18 +85,19 @@ def run_output_lookup(t: dict[str, DataFrame]) -> DataFrame:
     one entity's newest update row.
 
     The probe key is itself derived deterministically (min entity_id) so
-    the query is fixture-independent. Plan shape: the 1-row key frame
-    broadcasts; the updates scan is pruned by the hash-join probe, and
-    only one entity's rows ever sort. At scale this is the keyed
-    point-read every poll tick issues (see ``_poll_states``).
+    the query is fixture-independent. Plan shape: one stage. The non-NULL
+    rows sort by (entity_id, newest ts, newest event_id) into a single
+    ``TakeOrderedAndProject``: each task keeps a 1-row heap and the driver
+    merges them, so ``updates`` is scanned once and nothing shuffles or
+    broadcasts at any scale. At scale this is the keyed point-read every
+    poll tick issues (see ``_poll_states``).
     """
     from databricks_observe_spark.operators.runs import _ts_str
 
-    u = t["updates"]
-    target = u.agg(F.min("entity_id").alias("_probe_id"))
     return (
-        u.join(F.broadcast(target), on=F.col("entity_id") == F.col("_probe_id"))
-        .orderBy(F.desc("ts"), F.desc("event_id"))
+        t["updates"]
+        .filter(F.col("entity_id").isNotNull())
+        .orderBy(F.asc("entity_id"), F.desc("ts"), F.desc("event_id"))
         .limit(1)
         .select(
             "entity_type",

@@ -300,7 +300,11 @@ def streaming_first_completed_query(
     update) keys completed — regardless of which concurrent poll row won
     the dropDuplicates race, so it pairs with a batch SQL oracle. The
     ``distinct`` keeps set semantics when a key whose state the watermark
-    evicted is polled again in a later batch.
+    evicted is polled again in a later batch. It runs in one task: the log
+    holds one row per completed (entity, update), the size of the
+    reference's in-memory cursor, so it is metastore-sized, and a
+    single-partition child satisfies the aggregate's distribution without
+    an exchange.
     """
     root, lock = _cursor(spark, sf_dir, glob)
     log = os.path.join(root, "log")
@@ -315,6 +319,8 @@ def streaming_first_completed_query(
             spark.read.schema(stream.schema)
             .parquet(log)
             .select("entity_type", "entity_id", "update_id")
+            # cursor-sized (one row per completed key): distinct in one task
+            .coalesce(1)
             .distinct()
         )
 

@@ -49,6 +49,53 @@ def test_run_output_lookup_is_newest_row_of_min_entity(tables):
     assert (r.update_id, r.state) == (newest.update_id, newest.state)
 
 
+def test_run_output_lookup_on_hostile_updates(spark, tmp_path):
+    """A NULL entity id is never the probe key (its row is also the newest),
+    ``event_id`` breaks a ``ts`` tie within the min entity, an older row
+    with a larger ``event_id`` loses to ``ts``, and a later ``ts`` on a
+    larger entity is not picked. Spark matches the DuckDB oracle."""
+    import datetime as dt
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from databricks_observe_spark.sources.catalog_model import updates_of
+    from databricks_observe_spark.sources.tables import footer_schema, normalize_events_ts
+    from tools.check_oracle import compare
+
+    t0 = dt.datetime(2024, 1, 1)
+    rows = [  # (event_id, minutes after t0, user_id, event_type)
+        (1, 90, None, "purchase"),  # entity_id NULL, the newest row
+        (10, 30, 1, "click"),  # entity 101, tied on ts with event 20
+        (20, 30, 7, "purchase"),  # entity 101: the answer
+        (99, 0, 13, "view"),  # entity 101, older despite the larger event_id
+        (30, 60, 3, "signup"),  # entity 102, later than every 101 row
+    ]
+    events = pa.table(
+        {
+            "event_id": pa.array([r[0] for r in rows], pa.int64()),
+            "ts": pa.array([t0 + dt.timedelta(minutes=r[1]) for r in rows], pa.timestamp("us")),
+            "user_id": pa.array([r[2] for r in rows], pa.int64()),
+            "event_type": [r[3] for r in rows],
+            "value": [1.0] * len(rows),
+            "props": ["{}"] * len(rows),
+        }
+    )
+    path = str(tmp_path / "events.parquet")
+    pq.write_table(events, path)
+    updates = updates_of(
+        normalize_events_ts(spark.read.schema(footer_schema(path)).parquet(path))
+    )
+    sdf = C.run_output_lookup({"updates": updates})
+    got = sdf.collect()
+    assert [(r.entity_id, r.update_id, r.state) for r in got] == [("101", "u20", "COMPLETED")]
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{path}'")
+    assert compare(sdf, got, con, C._run_output_lookup_sql()) == []
+    con.close()
+
+
 class _RecordingWriter:
     def __init__(self):
         self.calls: dict = {}

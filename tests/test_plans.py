@@ -163,7 +163,24 @@ GATES: dict[str, Gate] = {
         ("Scan ExistingRDD", "BroadcastExchange"),
         {PYTHON: NONE},
     ),
-    "run_output_lookup_broadcasts_probe": Gate("run_output_lookup", ("BroadcastExchange",)),
+    # the point read is one stage: per-task 1-row heaps merged on the
+    # driver, over one scan of updates
+    "run_output_lookup_is_one_take_ordered": Gate(
+        "run_output_lookup",
+        ("TakeOrderedAndProject",),
+        {"Scan": ONE, "Exchange|BroadcastExchange": NONE},
+    ),
+    # metastore-sized dedups run in one task: the single partition below
+    # the aggregate satisfies its distribution, so nothing shuffles
+    "discovered_objects_dedups_in_one_task": Gate(
+        "discovered_objects", ("HashAggregate", "Coalesce 1"), {SHUFFLE: NONE}
+    ),
+    "discovered_objects_live_dedups_in_one_task": Gate(
+        "discovered_objects_live", ("HashAggregate", "Coalesce 1"), {SHUFFLE: NONE}
+    ),
+    "sensor_readback_dedups_in_one_task": Gate(
+        "streaming_first_completed", ("HashAggregate", "Coalesce 1"), {SHUFFLE: NONE}
+    ),
     "compaction_plan_reads_file_index_only": Gate(
         "compaction_plan", ("binaryFile",), {"Scan parquet": NONE}
     ),
@@ -540,3 +557,46 @@ def test_curation_pipeline_e2e_composes_without_redundant_shuffles(tables, surfa
         ),
         surface["curation_pipeline_e2e"].plan,
     )
+
+
+# the observe tick's queries, as perfbench's ``observe_tick`` workload runs
+# them, and the jobs each runs to materialize once warm: one stage-bearing
+# job per query, except the flagship's two dimension broadcasts: 10 in all
+OBSERVE_TICK_JOBS = {
+    "discovered_objects": 1,
+    "discovered_objects_live": 1,
+    "tables_enriched": 1,
+    "table_files_meta": 1,
+    "lineage_closure": 1,
+    "streaming_first_completed": 1,
+    "run_output_lookup": 1,
+    "flagship_us_customers": 3,
+}
+
+
+def test_observe_tick_job_budget(spark):
+    from databricks_observe_spark import registry
+    from tests.conftest import SF_DIR
+
+    def materialize(df):
+        df.write.format("noop").mode("overwrite").save()
+
+    sc = spark.sparkContext
+    queries = registry.queries()
+    for name in OBSERVE_TICK_JOBS:  # memo fills and the sensor's first replay
+        materialize(queries[name](spark, SF_DIR))
+    jobs = {}
+    try:
+        for name in OBSERVE_TICK_JOBS:
+            df = queries[name](spark, SF_DIR)
+            group = f"observe_tick_job_budget.{name}"
+            sc.setJobGroup(group, group)
+            materialize(df)
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            # the status store is fed by the asynchronous listener bus
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs == OBSERVE_TICK_JOBS

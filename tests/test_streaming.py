@@ -136,6 +136,63 @@ def test_sensor_cursor_reads_only_new_feed_files(spark, tables, tmp_path):
     assert tick3 == tick2
 
 
+def test_sensor_tick_keeps_set_semantics_across_reemission(spark, tmp_path):
+    """A key whose dedup state the watermark evicted is emitted again when
+    it is polled late: the cursor's log then holds it twice, and the tick
+    still returns it once, equal to the batch oracle's DISTINCT. The
+    sensor runs no no-data batch, and a batch evicts state after its
+    input, so it takes two filler ticks to evict the key: the first moves
+    the watermark past it, the second's batch drops its state."""
+    import datetime as dt
+
+    import duckdb
+    import pyarrow as pa
+
+    from databricks_observe_spark.sources.catalog_model import oracle_with_clause
+    from tools.check_oracle import compare
+
+    feed = tmp_path / "feed"
+    feed.mkdir()
+
+    def poll(name, event_id, hhmm, user_id):
+        pq.write_table(
+            pa.table(
+                {
+                    "event_id": pa.array([event_id], pa.int64()),
+                    "ts": pa.array(
+                        [dt.datetime(2024, 1, 1, *hhmm)], pa.timestamp("us")
+                    ),
+                    "user_id": pa.array([user_id], pa.int64()),
+                    "event_type": ["purchase"],
+                    "value": [1.0],
+                    "props": ["{}"],
+                }
+            ),
+            feed / name,
+        )
+        return ST.streaming_first_completed_query(spark, str(feed), "*.parquet")
+
+    key = ("pipeline", "pl-002", "u0")
+    fillers = {("pipeline", "pl-003", "u78"), ("pipeline", "pl-003", "u79")}
+    assert _keys(poll("b1.parquet", 211, (0, 0), 2)) == {key}
+    poll("b2.parquet", 500, (10, 0), 4)
+    assert _keys(poll("b3.parquet", 501, (10, 0), 4)) == {key} | fillers
+    # a late re-poll of the same (entity, update): event 422 % 211 == 0
+    tick = poll("b4.parquet", 422, (10, 1), 2)
+    root, _ = ST._cursor(spark, str(feed), "*.parquet")
+    logged = spark.read.parquet(os.path.join(root, "log")).select(
+        "entity_type", "entity_id", "update_id"
+    )
+    assert sorted(map(tuple, logged.collect())) == sorted([key, key, *fillers])
+    rows = tick.collect()
+    assert sorted(map(tuple, rows)) == sorted([key, *fillers])
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{feed}/*.parquet'")
+    sql = oracle_with_clause("updates") + ST.STREAMING_FIRST_COMPLETED_SQL_SUFFIX
+    assert compare(tick, rows, con, sql) == []
+    con.close()
+
+
 def test_sensor_cursor_lifetime(spark, tables, tmp_path):
     """Two concurrent ticks over one feed take turns on one cursor
     directory, each returns the full key set, and they leave no temp

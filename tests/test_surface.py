@@ -67,7 +67,6 @@ PLAN_ALLOWLIST: dict[str, dict[str, str]] = {
         "mixture_weights": "the corpus total over the per-lang counts",
         "mixture_weights_temperature": "the corpus total over the per-lang counts",
         "rate_anomaly": "global hour bounds over the per-type min/max",
-        "run_output_lookup": "the one-row probe key, combined map-side",
         "score_auc": "the rank window over the bounded milli-score grid",
         "score_auc_parts": "the rank window over the bounded milli-score grid",
         "sensor_cursor_roundtrip": "collects the per-key cursor into its one map row",
