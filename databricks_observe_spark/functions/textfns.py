@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from databricks_observe_spark.memo import index
-from databricks_observe_spark.sources.tables import fan_out
+from databricks_observe_spark.sources.tables import documents_split
 
 
 @index("doc_tokens")
@@ -25,13 +25,12 @@ def doc_tokens(t: dict[str, DataFrame]) -> DataFrame:
     Materialization matters: inside a higher-order ``transform`` the lambda
     is interpreted and would re-split the text once per element
     (O(tokens^2) per doc); over a plain array column each slice is O(k).
-    At scale this is "tokenize once, write, then derive". ``fan_out``
-    spreads the single-row-group fixture scan across cores so everything
-    derived from this index runs partition-parallel (no-op on a
-    well-split production scan).
+    At scale this is "tokenize once, write, then derive". It reads the
+    split memo (``sources/tables.py:documents_split``), so everything
+    derived from this index runs partition-parallel.
     """
     return (
-        fan_out(t["documents"]).select("doc_id", F.split("text", " ").alias("w"))
+        documents_split(t).select("doc_id", F.split("text", " ").alias("w"))
     ).localCheckpoint()
 
 

@@ -59,7 +59,7 @@ from databricks_observe_spark.functions.vectors import (
     tiled_cosine_pairs,
 )
 from databricks_observe_spark.memo import index
-from databricks_observe_spark.sources.tables import fan_out
+from databricks_observe_spark.sources.tables import documents_split
 
 N_MINHASH = 16
 N_BANDS = 4
@@ -104,7 +104,7 @@ def _shingled(t: dict[str, DataFrame]) -> DataFrame:
     # interpreted transform+slice lambda, bit-identical; see
     # textfns.shingle_regex_expr)
     return (
-        fan_out(t["documents"])
+        documents_split(t)
         .select("doc_id", F.explode(shingle_regex_expr(3)).alias("shingle"))
         .localCheckpoint()
     )
@@ -1012,7 +1012,7 @@ def _contam_grams(t: dict[str, DataFrame]) -> DataFrame:
     regex-explode pass is the only corpus-sized work in the
     contamination path."""
     return (
-        fan_out(t["documents"])
+        documents_split(t)
         .select("doc_id", F.explode(shingle_regex_expr(CONTAM_K)).alias("s"))
         .localCheckpoint()
     )
@@ -1352,12 +1352,11 @@ def normalized_dedup(t: dict[str, DataFrame]) -> DataFrame:
     exact_dedup's cost: one shuffle on a 16-byte digest).
 
     canonical = min doc_id per normalized digest; ``n_variants`` > 1 rows
-    are the removable near-exact duplicates. Still CPU-bound, so the
-    under-split fixture scan routes through ``fan_out`` like the other
-    heavy text ops — a no-op on a well-split production scan.
+    are the removable near-exact duplicates. Still CPU-bound, so it reads
+    the split memo (``documents_split``) like the other heavy text ops.
     """
     return (
-        fan_out(t["documents"])
+        documents_split(t)
         .select("doc_id", _norm_hash().alias("norm_hash"))
         .groupBy("norm_hash")
         .agg(

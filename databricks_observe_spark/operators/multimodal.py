@@ -27,6 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from databricks_observe_spark.functions.arrowmap import arrow_map
+from databricks_observe_spark.sources.tables import documents_split
 
 FEATURE_DIM = 8
 
@@ -36,13 +37,16 @@ _MEDIA_TYPE = (
 )
 
 
-def media_blobs(t: dict[str, DataFrame]) -> DataFrame:
-    """Synthetic media table: (doc_id, blob BINARY, media_type STRING).
+def media_blobs(docs: DataFrame) -> DataFrame:
+    """Synthetic media table over a ``documents`` frame: (doc_id, blob
+    BINARY, media_type STRING).
 
     Stands in for an ingested object-store listing; blob payload is the
-    utf-8 document text (deterministic, cross-engine reproducible).
+    utf-8 document text (deterministic, cross-engine reproducible). The
+    Python decode paths pass the split memo (``documents_split``) so their
+    CPU-bound stage runs on every core; the JVM passes read the scan.
     """
-    return t["documents"].select(
+    return docs.select(
         "doc_id",
         F.encode("text", "UTF-8").alias("blob"),
         F.expr(_MEDIA_TYPE).alias("media_type"),
@@ -56,7 +60,7 @@ def multimodal_meta(t: dict[str, DataFrame]) -> DataFrame:
     per-blob stats drive partition pruning and dedup (sha256 as content
     key) so expensive Python decoding touches unique content only.
     """
-    blobs = media_blobs(t)
+    blobs = media_blobs(t["documents"])
     return blobs.select(
         "doc_id",
         "media_type",
@@ -138,11 +142,7 @@ def media_features(t: dict[str, DataFrame]) -> DataFrame:
     oracle-checkable: the fake features are derived from sha256 digest
     bytes, which the SQL oracle recomputes from hex slices.
     """
-    # fan_out: the Python decode stage is the CPU-bound path — spread the
-    # under-split fixture scan across cores (no-op on a well-split scan)
-    from databricks_observe_spark.sources.tables import fan_out
-
-    feats = extract_features(fan_out(media_blobs(t)))
+    feats = extract_features(media_blobs(documents_split(t)))
     return feats.select(
         "doc_id",
         "media_type",
@@ -189,7 +189,7 @@ def frame_sample(t: dict[str, DataFrame]) -> DataFrame:
     those frames ever reach a decoder. Pure JVM sequence/explode — no
     Python, no bytes touched — and fully oracle-checked.
     """
-    vids = media_blobs(t).filter(F.col("media_type") == "video/mp4")
+    vids = media_blobs(t["documents"]).filter(F.col("media_type") == "video/mp4")
     meta = vids.select(
         "doc_id",
         F.length("blob").alias("n_bytes"),
@@ -246,7 +246,7 @@ def audio_chunking(t: dict[str, DataFrame]) -> DataFrame:
     the planned ranges ever reach a decoder, which is what makes 100 TB
     of audio tractable.
     """
-    auds = media_blobs(t).filter(F.col("media_type") == "audio/wav")
+    auds = media_blobs(t["documents"]).filter(F.col("media_type") == "audio/wav")
     step = CHUNK_MS - CHUNK_OVERLAP_MS
     meta = auds.select(
         "doc_id",
@@ -349,9 +349,7 @@ def image_resize(t: dict[str, DataFrame]) -> DataFrame:
     same definitions in SQL — is the whole Arrow path: binary columns into
     Python batches, byte-exact digests out, typed schema back to the JVM.
     """
-    from databricks_observe_spark.sources.tables import fan_out
-
-    imgs = fan_out(media_blobs(t).filter(F.col("media_type") == "image/png"))
+    imgs = media_blobs(documents_split(t)).filter(F.col("media_type") == "image/png")
     return arrow_map(
         imgs,
         _resize_batches,

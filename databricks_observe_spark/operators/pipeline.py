@@ -63,7 +63,7 @@ from databricks_observe_spark.operators.text import (
     stratified_keep,
     stratified_keep_sql,
 )
-from databricks_observe_spark.sources.tables import fan_out
+from databricks_observe_spark.sources.tables import documents_split
 
 # drop a train doc when more than half its distinct 4-grams collide with
 # the eval set (integer comparison n_overlap * 2 > n_shingles — no float
@@ -82,7 +82,7 @@ def curation_pipeline_e2e(
     gate can inspect the full un-truncated DAG (every join broadcast, no
     sort-merge fallback anywhere in the composition).
     """
-    s1 = normalized_survivors(fan_out(t["documents"]), "lang", *signal_cols())
+    s1 = normalized_survivors(documents_split(t), "lang", *signal_cols())
     s2 = s1.join(F.broadcast(near_dup_dropped(t)), on="doc_id", how="left_anti")
     s3 = s2.filter(reject_reason().isNull())
     contaminated = (

@@ -59,7 +59,7 @@ from databricks_observe_spark.functions.vectors import (
     tiled_cosine_pairs,
 )
 from databricks_observe_spark.memo import index
-from databricks_observe_spark.sources.tables import fan_out
+from databricks_observe_spark.sources.tables import embeddings_split
 
 N_QUERIES = 10  # vec_id < 10 are the query vectors
 TOP_K = 5
@@ -81,7 +81,7 @@ def _compact_ckpt(df: DataFrame) -> DataFrame:
     """localCheckpoint + size-derived coalesce for the memoized vector
     tables every query-time Arrow pass re-scans.
 
-    The build itself fans out across all cores (``fan_out``), but the
+    The build itself reads the split memo (``embeddings_split``), but the
     materialized corpus at test SF is a few thousand rows — re-reading it
     as 32 micro-partitions makes every downstream Arrow pass pay 32 task
     launches + 32 worker round-trips for microseconds of math each
@@ -122,7 +122,7 @@ def _doubled(t: dict[str, DataFrame]) -> DataFrame:
         return pd.Series(_np.sqrt(dot_rows(mat, mat)))
 
     return _compact_ckpt(
-        fan_out(t["embeddings"])
+        embeddings_split(t)
         .select(
             "vec_id",
             F.col("embedding").cast("array<double>").alias("v"),

@@ -6,14 +6,15 @@ Stands in for the reference's remote scans — ``spark.read.table`` at
 
 Like the reference, which never scans data to learn a shape, the batch
 loader and ``streaming/state.py:stream_parquet`` read with the schema of the
-parquet footer (``footer_schema``): nothing here collects, caches or runs a
-job, and Catalyst pushes predicates and prunes columns into the parquet
-reader for every downstream operator (SURVEY.md §4). ``events.ts``'s
-physical type has varied across fixture re-materializations
-(TIMESTAMP(NANOS) read as long, TIMESTAMP(MICROS) read as TIMESTAMP_NTZ) —
-we DETECT the layout and normalize to Spark's microsecond TIMESTAMP once
-at load so window/session operators and the DuckDB oracle agree
-(SURVEY.md §7 hard part 4).
+parquet footer (``footer_schema``): loading collects, caches and runs
+nothing, and Catalyst pushes predicates and prunes columns into the parquet
+reader for every downstream operator (SURVEY.md §4). The split memos
+(``fan_out``) are the one exception, and only on an under-split scan.
+``events.ts``'s physical type has varied across fixture
+re-materializations (TIMESTAMP(NANOS) read as long, TIMESTAMP(MICROS) read
+as TIMESTAMP_NTZ) — we DETECT the layout and normalize to Spark's
+microsecond TIMESTAMP once at load so window/session operators and the
+DuckDB oracle agree (SURVEY.md §7 hard part 4).
 """
 
 from __future__ import annotations
@@ -27,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.types import StructType
 
+from databricks_observe_spark.memo import index
 from databricks_observe_spark.session import ensure_conf
 
 TABLE_NAMES = (
@@ -139,24 +141,38 @@ def check_fixture_contract(tables: dict[str, DataFrame]) -> None:
 
 
 def fan_out(df: DataFrame) -> DataFrame:
-    """Raise a frame's partition count to the session's core count when the
-    physical scan under-splits — and ONLY then.
+    """``df`` spread across the session's cores when its scan under-splits
+    — and ONLY then; the builder of the split memos below.
 
     The fixtures are single-row-group parquet files, which a row-group-
     aligned reader cannot split: every downstream map stage (tokenize,
-    shingle, trigram, Arrow rescore) runs as ONE task no matter how many
-    cores the session has. CPU-heavy index builders route their input
-    through this helper so that work fans out across the machine.
-
-    At production scale a 100 TB table scans as thousands of splits, the
-    guard sees partitions >= cores, and this is a no-op — it never adds a
-    shuffle to a well-split scan. ``rdd.getNumPartitions()`` inspects the
-    physical plan without running a job, so the check itself is free.
+    shingle, regex scrub, Arrow decode) would run as ONE task no matter
+    how many cores the session has. With fewer scan partitions than
+    ``defaultParallelism``, the frame is round-robined to that width and
+    materialized with ``localCheckpoint``, so the shuffle runs once, at
+    build; what it holds is bounded by cores × one scan split. Otherwise
+    the frame comes back unchanged: a 100 TB table scans as thousands of
+    splits, so this is a no-op there — no shuffle, nothing held.
+    ``rdd.getNumPartitions()`` inspects the physical plan without running
+    a job, so the check itself is free.
     """
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= target:
         return df
-    return df.repartition(target)
+    return df.repartition(target).localCheckpoint()
+
+
+@index("documents_split")
+def documents_split(t: dict[str, DataFrame]) -> DataFrame:
+    """``documents`` through :func:`fan_out`, once per context: every
+    CPU-bound corpus pass, index build or query, reads this frame."""
+    return fan_out(t["documents"])
+
+
+@index("embeddings_split")
+def embeddings_split(t: dict[str, DataFrame]) -> DataFrame:
+    """``embeddings`` through :func:`fan_out`, once per context."""
+    return fan_out(t["embeddings"])
 
 
 def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:

@@ -410,7 +410,8 @@ def test_dedup_retention_keeps_best_member_per_cluster(tables):
 def test_normalized_dedup_catches_case_and_punct_variants(tables, spark):
     from databricks_observe_spark.operators import dedup as D
 
-    t2 = dict(tables)
+    # a new context: the derived indexes of ``tables`` describe its corpus
+    t2 = {k: v for k, v in tables.items() if not k.startswith("_")}
     t2["documents"] = spark.createDataFrame(
         [
             (1, "Hello,  World!"),

@@ -149,9 +149,24 @@ GATES: dict[str, Gate] = {
     "frame_sample_is_jvm_only": Gate(
         "frame_sample", counts={PYTHON: NONE, "Exchange": NONE}
     ),
-    # the only exchange allowed is fan_out's round-robin repartition
+    # one stage over the split memo: the corpus was spread once, at build
     "pii_redaction_is_single_scan": Gate(
-        "pii_redaction", counts={"hashpartitioning": NONE, PYTHON: NONE, "Scan": ONE}
+        "pii_redaction", counts={"Exchange": NONE, PYTHON: NONE, "Scan": ONE}
+    ),
+    "media_features_is_one_stage": Gate(
+        "media_features", ("MapInArrow",), {"Exchange": NONE, "Scan": ONE}
+    ),
+    # tf, df and the corpus count ride the memoized tf index: one scan, a
+    # projection and the per-doc top-3, whose exchange is the only one
+    "tfidf_keywords_reads_index_only": Gate(
+        "tfidf_keywords",
+        ("Exchange hashpartitioning(doc_id", "Scan ExistingRDD"),
+        {
+            "Scan": ONE,
+            SHUFFLE: ONE,
+            "BroadcastExchange": NONE,
+            "SinglePartition": NONE,
+        },
     ),
     # one banded join; verification is an inline filter on its output
     "simhash_pairs_single_join_inline_verify": Gate(
@@ -269,12 +284,13 @@ GATES: dict[str, Gate] = {
     "fuzzy_probe_stays_codegen_no_join": Gate(
         "fuzzy_match_probe", counts={JOIN: NONE, PYTHON: NONE}
     ),
-    # probe terms, df and dl broadcast onto the memoized tf index; the
-    # top-k is pushed below the exchange as a partial group limit
+    # probe terms and dl broadcast onto the memoized tf index, which
+    # carries df; the top-k is pushed below the exchange as a partial
+    # group limit
     "bm25_broadcasts_index_sides_and_pushes_topk": Gate(
         "bm25_scores",
         ("WindowGroupLimit", "Final", "Exchange", "WindowGroupLimit", "Partial"),
-        {"BroadcastHashJoin": (3, None), "NestedLoopJoin": (0, 1), PYTHON: NONE},
+        {"BroadcastHashJoin": (2, None), "NestedLoopJoin": (0, 1), PYTHON: NONE},
     ),
     # both pair sets come from the memoized indexes; the 1-row count
     # appends are the only nested-loop joins
@@ -559,44 +575,69 @@ def test_curation_pipeline_e2e_composes_without_redundant_shuffles(tables, surfa
     )
 
 
-# the observe tick's queries, as perfbench's ``observe_tick`` workload runs
-# them, and the jobs each runs to materialize once warm: one stage-bearing
-# job per query, except the flagship's two dimension broadcasts: 10 in all
-OBSERVE_TICK_JOBS = {
-    "discovered_objects": 1,
-    "discovered_objects_live": 1,
-    "tables_enriched": 1,
-    "table_files_meta": 1,
-    "lineage_closure": 1,
-    "streaming_first_completed": 1,
-    "run_output_lookup": 1,
-    "flagship_us_customers": 3,
+# each perfbench workload's queries and the jobs each runs to materialize
+# once warm. The observe tick runs one stage-bearing job per query, except
+# the flagship's two dimension broadcasts: 10 in all. A curation pass runs
+# one per map-only query and two per query with one shuffle (its map stage
+# and its result stage), reading the memoized indexes: 10 in all.
+JOB_BUDGETS = {
+    "observe_tick": {
+        "discovered_objects": 1,
+        "discovered_objects_live": 1,
+        "tables_enriched": 1,
+        "table_files_meta": 1,
+        "lineage_closure": 1,
+        "streaming_first_completed": 1,
+        "run_output_lookup": 1,
+        "flagship_us_customers": 3,
+    },
+    "curation": {
+        "exact_dedup": 2,
+        "near_dup_clusters": 2,
+        "ann_bruteforce_topk": 1,
+        "media_features": 1,
+        "tfidf_keywords": 2,
+        "text_stats": 1,
+        "pii_redaction": 1,
+    },
 }
 
 
-def test_observe_tick_job_budget(spark):
-    from databricks_observe_spark import registry
-    from tests.conftest import SF_DIR
-
-    def materialize(df):
-        df.write.format("noop").mode("overwrite").save()
-
-    sc = spark.sparkContext
-    queries = registry.queries()
-    for name in OBSERVE_TICK_JOBS:  # memo fills and the sensor's first replay
-        materialize(queries[name](spark, SF_DIR))
-    jobs = {}
+def jobs_run(sc, label: str, action) -> int:
+    """How many Spark jobs ``action()`` runs, counted in a job group."""
+    group = f"jobs_run.{label}"
     try:
-        for name in OBSERVE_TICK_JOBS:
-            df = queries[name](spark, SF_DIR)
-            group = f"observe_tick_job_budget.{name}"
-            sc.setJobGroup(group, group)
-            materialize(df)
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            # the status store is fed by the asynchronous listener bus
-            sc._jsc.sc().listenerBus().waitUntilEmpty()
-            jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+        sc.setJobGroup(group, group)
+        action()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    assert jobs == OBSERVE_TICK_JOBS
+    # the status store is fed by the asynchronous listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _job_budget(workload: str):
+    def test(spark):
+        from databricks_observe_spark import registry
+        from perfbench.workloads import WORKLOADS
+        from tests.conftest import SF_DIR
+
+        budget = JOB_BUDGETS[workload]
+        assert tuple(budget) == WORKLOADS[workload].queries
+
+        def materialize(name):
+            df = registry.queries()[name](spark, SF_DIR)
+            return lambda: df.write.format("noop").mode("overwrite").save()
+
+        for name in budget:  # memo fills and the sensor's first replay
+            materialize(name)()
+        sc = spark.sparkContext
+        jobs = {name: jobs_run(sc, name, materialize(name)) for name in budget}
+        assert jobs == budget
+
+    return test
+
+
+for _workload in JOB_BUDGETS:
+    globals()[f"test_{_workload}_job_budget"] = _job_budget(_workload)

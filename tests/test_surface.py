@@ -45,7 +45,6 @@ PLAN_ALLOWLIST: dict[str, dict[str, str]] = {
         "corpus_card": "the one-row distinct-text count joins the one-row rollup",
         "dedup_threshold_sweep": "two theta joins of the 10-row threshold grid onto bucket counts",
         "skew_report": "the one-row total/median stats join the 10 top keys",
-        "tfidf_keywords": "the one-row corpus document count joins the scored rows",
         "unigram_kl": "the one-row corpus token total joins the scored rows",
         "unigram_logprob": "the one-row corpus token total joins the scored rows",
         "vocab_coverage": "the one-row kth-frequency cut and the one-row total",
@@ -72,7 +71,6 @@ PLAN_ALLOWLIST: dict[str, dict[str, str]] = {
         "sensor_cursor_roundtrip": "collects the per-key cursor into its one map row",
         "skew_report": "the one-row total/median stats, combined map-side",
         "stratified_sample": "min over the per-lang counts, one row per lang",
-        "tfidf_keywords": "the one-row corpus document count",
         "unigram_kl": "the one-row corpus token total, combined map-side",
         "unigram_logprob": "the one-row corpus token total, combined map-side",
         "unimax_allocation": "the budget waterfill windows over the per-lang frame",

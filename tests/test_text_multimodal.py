@@ -77,7 +77,7 @@ def test_media_features_deterministic_batching(tables, spark):
     # deterministic: repartitioning must not change features
     rows2 = {
         r.doc_id: r
-        for r in M.extract_features(M.media_blobs(tables).repartition(7)).collect()
+        for r in M.extract_features(M.media_blobs(tables["documents"]).repartition(7)).collect()
     }
     for k in list(rows)[:20]:
         assert rows[k] == rows2[k].feature
@@ -454,6 +454,34 @@ def test_textrank_keywords_on_empty_documents(tables):
     assert compare(sdf, rows, con, T.TEXTRANK_KEYWORDS_SQL) == []
 
 
+def test_tf_idf_and_bm25_corpus_counts_on_a_null_text_document(tables):
+    """A document with NULL ``text`` has no tokens: tfidf's N counts it,
+    bm25's N does not, and both engines agree on each rule."""
+    from tests.conftest import SF_DIR
+    from tools.check_oracle import compare, oracle_con
+
+    null_id = tables["documents"].agg(F.min("doc_id")).first()[0]
+    fresh = {k: v for k, v in tables.items() if not k.startswith("_")}
+    fresh["documents"] = tables["documents"].withColumn(
+        "text", F.when(F.col("doc_id") != null_id, F.col("text"))
+    )
+    n_corpus = T._tfidf_tf_frame(fresh).first().n_corpus
+    assert n_corpus == T._bm25_index(fresh).first().n_docs + 1
+    con = oracle_con(SF_DIR)
+    con.execute(
+        "CREATE OR REPLACE VIEW documents AS SELECT * REPLACE"
+        f" (CASE WHEN doc_id <> {null_id} THEN text END AS text)"
+        f" FROM '{SF_DIR}/documents.parquet'"
+    )
+    for query, sql in (
+        (T.tfidf_keywords, T.TFIDF_KEYWORDS_SQL),
+        (T.bm25_scores, T.BM25_SCORES_SQL),
+    ):
+        sdf = query(fresh)
+        assert compare(sdf, sdf.collect(), con, sql) == [], query.__name__
+    con.close()
+
+
 # one-class corpora: (Spark documents frame, DuckDB documents clause)
 ONE_CLASS = {
     "one_document": (lambda d: d.orderBy("doc_id").limit(1), "ORDER BY doc_id LIMIT 1"),
@@ -542,14 +570,17 @@ def test_bm25_idf_log_rounding_margins_verified(tables):
     from databricks_observe_spark.operators.text import (
         BM25_QUERIES,
         _bm25_index,
+        _tfidf_tf_frame,
     )
 
-    dl, df_frame, stats = _bm25_index(tables)
-    n_docs = stats.collect()[0].n_docs
+    n_docs = _bm25_index(tables).first().n_docs
     probe_toks = {tok for _, toks in BM25_QUERIES for tok in toks}
     dfs = {
         r.df
-        for r in df_frame.filter(F.col("tok").isin(*probe_toks)).collect()
+        for r in _tfidf_tf_frame(tables)
+        .filter(F.col("tok").isin(*probe_toks))
+        .select("df")
+        .collect()
     }
     assert dfs, "probe terms must hit the fixture vocabulary"
     for df in dfs:
