@@ -12,6 +12,20 @@ static, so only ``get_spark`` sessions get it, not foreign sessions. The
 workers import that module from this package's parent directory, which the
 session puts on their ``PYTHONPATH``: a script that found the package
 through its own ``sys.path`` would otherwise start workers that cannot.
+
+The driver JVM gets a C2 budget sized to the engine's traffic
+(``JVM_OPTIONS``): a method reaches the optimizing compiler (tier 4) only
+after 4x HotSpot's default invocation counts. An observe tick is a burst of
+catalog, lineage and sensor queries over tiny frames, so most of its JVM
+code (Catalyst rules, the DAG scheduler, py4j dispatch) runs lukewarm. At
+the defaults, C2 compiler threads took ~40% of a steady pass's CPU
+(``tools/cpu_split.py``, 4 vCPU, sf0.01: 0.72 of 1.90 s on observe_tick,
+1.04 of 2.53 s on curation) and 16 s of the cold tick, compiling methods
+that never paid the compile back. The rule leaves alone what hot code
+needs: the back-edge (OSR) threshold, so a data loop still reaches C2 on
+time, and tiers 1-3. A C1-only JVM is no substitute: it slowed the sf0.1
+headline by more than half. The options are static, so only ``get_spark``
+sessions get them, not foreign sessions.
 """
 
 from __future__ import annotations
@@ -35,15 +49,25 @@ ENGINE_CONF = (
     ("spark.sql.legacy.parquet.nanosAsLong", "true"),
 )
 
+# HotSpot's tier-4 invocation thresholds, each 4x its default (5000, 600,
+# 15000); see the module docstring
+JVM_OPTIONS = (
+    "-XX:Tier4InvocationThreshold=20000",
+    "-XX:Tier4MinInvocationThreshold=2400",
+    "-XX:Tier4CompileThreshold=60000",
+)
+
 
 def tune(builder: SparkSession.Builder) -> SparkSession.Builder:
-    """Apply engine defaults to a builder (also used on foreign sessions)."""
+    """Apply the engine defaults and ``JVM_OPTIONS`` to our own sessions'
+    builder; ``ensure_conf`` sets the runtime-settable part on foreign ones."""
     for key, value in ENGINE_CONF:
         builder = builder.config(key, value)
     return (
         builder.config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.shuffle.partitions", "32")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.driver.extraJavaOptions", " ".join(JVM_OPTIONS))
         .config("spark.ui.enabled", "false")
         .config("spark.python.daemon.module", "databricks_observe_spark.worker_daemon")
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)

@@ -30,6 +30,15 @@ def tables(spark):
     return registry._ctx(spark, SF_DIR)
 
 
+def fresh_context(tables: dict, **swaps) -> dict:
+    """A new context over ``tables``' fixture with ``swaps`` in place of its
+    tables. It keeps none of the ``_`` memos (derived indexes and folded
+    scalars of the old tables), so every read builds from the swapped
+    ones; ``_sf_dir`` is an input, not a memo, and stays."""
+    kept = {k: v for k, v in tables.items() if not k.startswith("_") or k == "_sf_dir"}
+    return {**kept, **swaps}
+
+
 class Probe(NamedTuple):
     plan: str
     schema: StructType | None  # None when the query raised

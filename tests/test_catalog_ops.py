@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from databricks_observe_spark.operators import catalog_ops as C
+from tests.conftest import fresh_context
 
 
 def test_discovered_objects_exclusions(tables):
@@ -147,15 +148,17 @@ def test_schema_drift_statuses_on_synthetic_drift(tables, spark):
     # a doctored declared-side must surface each non-match status
     from databricks_observe_spark.operators import catalog_ops as C
 
-    t2 = dict(tables)
-    t2["information_schema_columns"] = spark.createDataFrame(
-        [
-            ("testdata", "main", "region", "r_regionkey", "string", None, 1),
-            ("testdata", "main", "region", "r_ghost", "int", None, 3),
-        ],
-        "table_catalog string, table_schema string, table_name string,"
-        " column_name string, data_type string, comment string,"
-        " ordinal_position int",
+    t2 = fresh_context(
+        tables,
+        information_schema_columns=spark.createDataFrame(
+            [
+                ("testdata", "main", "region", "r_regionkey", "string", None, 1),
+                ("testdata", "main", "region", "r_ghost", "int", None, 3),
+            ],
+            "table_catalog string, table_schema string, table_name string,"
+            " column_name string, data_type string, comment string,"
+            " ordinal_position int",
+        ),
     )
     rows = {(r.table, r.column): r.status for r in C.schema_drift(t2).collect()}
     assert rows[("region", "r_regionkey")] == "type_drift"
@@ -180,8 +183,7 @@ def test_schema_drift_compares_storage_classes(tables, tmp_path, ts_type, status
     pq.write_table(
         events.set_column(ts, "ts", events["ts"].cast(ts_type)), copy / "events.parquet"
     )
-    t2 = dict(tables)
-    t2["_sf_dir"] = str(copy)
+    t2 = fresh_context(tables, _sf_dir=str(copy))
     sdf = C.schema_drift(t2)
     rows = sdf.collect()
     assert {(r.table, r.column): r.status for r in rows}[("events", "ts")] == status
@@ -238,20 +240,23 @@ def test_observability_report_flags_drift_first(tables, spark):
     )
 
     doctored = [
-        ("testdata", "main", tbl, col, "string" if (tbl, col) == ("region", "r_regionkey") else typ, cm, o)
-        for (_, _, tbl, col, typ, cm, o) in [
-            (r[0], r[1], r[2], r[3], r[4], r[5], r[6])
-            for r in INFORMATION_SCHEMA_COLUMNS
-        ]
-    ]
-    t2 = dict(tables)
-    t2["information_schema_columns"] = spark.createDataFrame(
-        doctored, ", ".join(f"{c} string" if c != "ordinal_position" else f"{c} int"
-                            for c in INFORMATION_SCHEMA_COLUMNS_COLS)
+        (cat, sch, tbl, col, "string" if (tbl, col) == ("region", "r_regionkey") else typ, cm, o)
+        for (cat, sch, tbl, col, typ, cm, o) in INFORMATION_SCHEMA_COLUMNS
+    ] + [("testdata", "main", "region", "r_ghost", "int", None, 3)]
+    C.columns_schema(tables)  # the fixture catalog's memo, which t2 must not read
+    t2 = fresh_context(
+        tables,
+        information_schema_columns=spark.createDataFrame(
+            doctored, ", ".join(f"{c} string" if c != "ordinal_position" else f"{c} int"
+                                for c in INFORMATION_SCHEMA_COLUMNS_COLS)
+        ),
     )
-    rows = {r.table: r.health for r in C.observability_report(t2).collect()}
-    assert rows["region"] == "schema_drift"
-    assert all(h in ("ok", "compact") for tbl, h in rows.items() if tbl != "region")
+    rows = {r.table: r for r in C.observability_report(t2).collect()}
+    assert rows["region"].health == "schema_drift"
+    # table_profiles' schema side reads the doctored catalog, not a memo
+    # of the fixture's
+    assert rows["region"].n_columns == 3
+    assert all(r.health in ("ok", "compact") for tbl, r in rows.items() if tbl != "region")
 
 
 def test_zone_map_plan_semantics(tables):

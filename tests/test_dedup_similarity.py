@@ -4,6 +4,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from databricks_observe_spark.operators import dedup as D, similarity as S
+from tests.conftest import fresh_context
 
 
 def test_exact_dedup_partitions_corpus(tables):
@@ -379,8 +380,7 @@ def test_hash_split_stable_and_complete(tables):
     assert {r.split for r in rows} <= {"train", "val", "test"}
     # growth-stability: the assignment of a doc depends only on its id —
     # recomputing over a shrunk corpus must not move surviving docs
-    subset = dict(tables)
-    subset["documents"] = tables["documents"].filter("doc_id % 2 = 0")
+    subset = fresh_context(tables, documents=tables["documents"].filter("doc_id % 2 = 0"))
     sub = {r.doc_id: r.split for r in D.hash_split(subset).collect()}
     full = {r.doc_id: r.split for r in rows}
     assert all(full[d] == s for d, s in sub.items())
@@ -411,15 +411,17 @@ def test_normalized_dedup_catches_case_and_punct_variants(tables, spark):
     from databricks_observe_spark.operators import dedup as D
 
     # a new context: the derived indexes of ``tables`` describe its corpus
-    t2 = {k: v for k, v in tables.items() if not k.startswith("_")}
-    t2["documents"] = spark.createDataFrame(
-        [
-            (1, "Hello,  World!"),
-            (2, "hello world"),
-            (3, "HELLO WORLD."),
-            (4, "goodbye world"),
-        ],
-        "doc_id bigint, text string",
+    t2 = fresh_context(
+        tables,
+        documents=spark.createDataFrame(
+            [
+                (1, "Hello,  World!"),
+                (2, "hello world"),
+                (3, "HELLO WORLD."),
+                (4, "goodbye world"),
+            ],
+            "doc_id bigint, text string",
+        ),
     )
     rows = {r.canonical_doc_id: r for r in D.normalized_dedup(t2).collect()}
     # the three hello variants normalize to one digest, canonical = min id
@@ -484,8 +486,7 @@ def test_ann_recall_matches_ground_truth_overlap(tables):
 def test_vector_operators_on_empty_embeddings(tables, op):
     """An empty corpus has no queries, codebook, buckets or pairs: every
     vector operator returns 0 rows, as its SQL twin does."""
-    fresh = {k: v for k, v in tables.items() if not k.startswith("_")}
-    fresh["embeddings"] = tables["embeddings"].limit(0)
+    fresh = fresh_context(tables, embeddings=tables["embeddings"].limit(0))
     assert op(fresh).collect() == []
 
 
@@ -627,14 +628,16 @@ def test_lsh_dedup_recall_counts_are_consistent(tables):
 def test_lsh_dedup_recall_vacuous_on_pairless_corpus(spark, tables):
     """Empty ground truth (no doc pair shares a single shingle) must read
     as vacuous recall 10000, not a divide-by-zero or a 0."""
-    t2 = {k: v for k, v in tables.items() if not k.startswith("_")}
-    t2["documents"] = spark.createDataFrame(
-        [
-            (1, "alpha beta gamma delta epsilon", "en", "s", 10),
-            (2, "zeta eta theta iota kappa", "en", "s", 10),
-            (3, "mu nu xi omicron pi rho", "en", "s", 10),
-        ],
-        "doc_id bigint, text string, lang string, source string, n_chars bigint",
+    t2 = fresh_context(
+        tables,
+        documents=spark.createDataFrame(
+            [
+                (1, "alpha beta gamma delta epsilon", "en", "s", 10),
+                (2, "zeta eta theta iota kappa", "en", "s", 10),
+                (3, "mu nu xi omicron pi rho", "en", "s", 10),
+            ],
+            "doc_id bigint, text string, lang string, source string, n_chars bigint",
+        ),
     )
     (r,) = D.lsh_dedup_recall(t2).collect()
     assert r.n_true_pairs == 0
@@ -645,15 +648,17 @@ def test_lsh_dedup_recall_vacuous_on_pairless_corpus(spark, tables):
 def test_duplicated_spans_flags_verbatim_runs_only(spark, tables):
     """A 15-token run copied verbatim across two docs is flagged in both;
     a doc sharing vocabulary but no 15-token run is not flagged."""
-    t2 = {k: v for k, v in tables.items() if not k.startswith("_")}
     span = " ".join(f"tok{i}" for i in range(15))
-    t2["documents"] = spark.createDataFrame(
-        [
-            (1, "intro one two three " + span, "en", "s", 10),
-            (2, span + " outro four five six", "en", "s", 10),
-            (3, "tok0 tok1 unrelated tok5 tok9 filler " * 4, "en", "s", 10),
-        ],
-        "doc_id bigint, text string, lang string, source string, n_chars bigint",
+    t2 = fresh_context(
+        tables,
+        documents=spark.createDataFrame(
+            [
+                (1, "intro one two three " + span, "en", "s", 10),
+                (2, span + " outro four five six", "en", "s", 10),
+                (3, "tok0 tok1 unrelated tok5 tok9 filler " * 4, "en", "s", 10),
+            ],
+            "doc_id bigint, text string, lang string, source string, n_chars bigint",
+        ),
     )
     rows = {r.doc_id: r for r in D.duplicated_spans(t2).collect()}
     assert set(rows) == {1, 2}

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from databricks_observe_spark.functions.banding import recall_counts
 from databricks_observe_spark.operators import catalog_ops as C
+from tests.conftest import fresh_context
 
 
 def test_table_profiles_empty_table_still_yields_zero_row(tables):
@@ -20,8 +21,7 @@ def test_table_profiles_empty_table_still_yields_zero_row(tables):
     the groupBy; the static-name left join + coalesce must restore the
     reference COUNT(*) semantics: an empty table still profiles with
     row_count = 0."""
-    t2 = dict(tables)
-    t2["region"] = tables["region"].filter(F.lit(False))
+    t2 = fresh_context(tables, region=tables["region"].filter(F.lit(False)))
     rows = {r["table"]: r for r in C.table_profiles(t2).collect()}
     assert rows["region"].row_count == 0
     assert rows["region"].n_columns == 2  # catalog side unaffected

@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from databricks_observe_spark.operators import multimodal as M, text as T
+from tests.conftest import fresh_context
 
 
 def test_text_stats_invariants(tables):
@@ -371,10 +372,12 @@ def test_unigram_log_rounding_margins_verified(tables):
 def test_bpe_pair_counts_weighted_by_word_frequency(tables, spark):
     from databricks_observe_spark.operators import text as T
 
-    t2 = {k: v for k, v in tables.items() if not k.startswith("_")}
-    t2["documents"] = spark.createDataFrame(
-        [(1, "ab ab cd"), (2, "ab x")],  # 'x' too short for a pair
-        "doc_id bigint, text string",
+    t2 = fresh_context(
+        tables,
+        documents=spark.createDataFrame(
+            [(1, "ab ab cd"), (2, "ab x")],  # 'x' too short for a pair
+            "doc_id bigint, text string",
+        ),
     )
     rows = {(r.left_sym, r.right_sym): r.pair_count for r in T.bpe_pair_counts(t2).collect()}
     # 'ab' occurs 3 times -> pair (a,b)=3 ; 'cd' once -> (c,d)=1
@@ -430,8 +433,7 @@ def test_fuzzy_match_probe_is_reflexively_consistent(tables):
 def test_fuzzy_match_probe_on_empty_documents(tables):
     """An empty corpus has no probes and no matches: 0 rows, as its SQL
     twin's cross join with an empty probe set gives."""
-    fresh = {k: v for k, v in tables.items() if not k.startswith("_")}
-    fresh["documents"] = tables["documents"].limit(0)
+    fresh = fresh_context(tables, documents=tables["documents"].limit(0))
     assert T.fuzzy_match_probe(fresh).collect() == []
 
 
@@ -441,8 +443,7 @@ def test_textrank_keywords_on_empty_documents(tables):
     from tests.conftest import SF_DIR
     from tools.check_oracle import compare, oracle_con
 
-    fresh = {k: v for k, v in tables.items() if not k.startswith("_")}
-    fresh["documents"] = tables["documents"].limit(0)
+    fresh = fresh_context(tables, documents=tables["documents"].limit(0))
     sdf = T.textrank_keywords(fresh)
     rows = sdf.collect()
     con = oracle_con(SF_DIR)
@@ -461,9 +462,11 @@ def test_tf_idf_and_bm25_corpus_counts_on_a_null_text_document(tables):
     from tools.check_oracle import compare, oracle_con
 
     null_id = tables["documents"].agg(F.min("doc_id")).first()[0]
-    fresh = {k: v for k, v in tables.items() if not k.startswith("_")}
-    fresh["documents"] = tables["documents"].withColumn(
-        "text", F.when(F.col("doc_id") != null_id, F.col("text"))
+    fresh = fresh_context(
+        tables,
+        documents=tables["documents"].withColumn(
+            "text", F.when(F.col("doc_id") != null_id, F.col("text"))
+        ),
     )
     n_corpus = T._tfidf_tf_frame(fresh).first().n_corpus
     assert n_corpus == T._bm25_index(fresh).first().n_docs + 1
@@ -500,8 +503,7 @@ def test_score_auc_on_one_class_documents(tables, case):
     from tools.check_oracle import compare, oracle_con
 
     subset, clause = ONE_CLASS[case]
-    fresh = {k: v for k, v in tables.items() if not k.startswith("_")}
-    fresh["documents"] = subset(tables["documents"])
+    fresh = fresh_context(tables, documents=subset(tables["documents"]))
     sdf = T.score_auc(fresh)
     rows = sdf.collect()
     con = oracle_con(SF_DIR)
@@ -536,17 +538,19 @@ def test_bm25_favors_term_density(spark, tables):
     mentions them once among filler, under the same corpus stats."""
     from databricks_observe_spark.operators import text as T
 
+    filler = "alpha beta gamma delta " * 10
     # no derived index: they point at the REAL corpus, not the synthetic
     # one below
-    t2 = {k: v for k, v in tables.items() if not k.startswith("_")}
-    filler = "alpha beta gamma delta " * 10
-    t2["documents"] = spark.createDataFrame(
-        [
-            (1, "spark join merge spark join merge", "en", "s", 10),
-            (2, filler + "spark join merge", "en", "s", 10),
-            (3, filler.strip(), "en", "s", 10),
-        ],
-        "doc_id bigint, text string, lang string, source string, n_chars bigint",
+    t2 = fresh_context(
+        tables,
+        documents=spark.createDataFrame(
+            [
+                (1, "spark join merge spark join merge", "en", "s", 10),
+                (2, filler + "spark join merge", "en", "s", 10),
+                (3, filler.strip(), "en", "s", 10),
+            ],
+            "doc_id bigint, text string, lang string, source string, n_chars bigint",
+        ),
     )
     rows = {
         (r.query_id, r.doc_id): r.rank for r in T.bm25_scores(t2).collect()
